@@ -37,6 +37,9 @@ def _prepare(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # spark.sql.codegen.cache.maxEntries (build_session) is static and
+    # JVM-wide, so it cannot be set here: a plain session keeps Spark's
+    # default cache and recompiles generated classes on repeats.
 
 
 def entry(spark: SparkSession) -> DataFrame:

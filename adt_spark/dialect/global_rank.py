@@ -899,8 +899,15 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 return [t() for t in thunks]
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.util import inheritable_thread_target
+
+            # copies the caller's local properties (job group,
+            # description) and session tags into each worker thread, so
+            # the construction jobs stay in the caller's job group
+            inherit = inheritable_thread_target(spark)
             with ThreadPoolExecutor(max_workers=min(len(thunks), 8)) as ex:
-                return [f.result() for f in [ex.submit(t) for t in thunks]]
+                futures = [ex.submit(inherit(t)) for t in thunks]
+                return [f.result() for f in futures]
 
         splits_list = _run_parallel(
             [

@@ -66,6 +66,11 @@ passthrough, mirroring window_frames' refusal discipline):
   ORDER BY k NULLS LAST) AS __adt_drN FROM <ident>) <alias>`` with the
   injected column used ONLY inside OVER clauses.
 
+Every item holding a window call needs an explicit ``AS`` alias (an
+unaliased item is named after its text, which the rewrite changes).  A
+bare top-level ``*`` is emitted as ``<ident>.*``, so the joined-back
+``__kw_*`` columns never reach the output.
+
 Every window call must share one bare-column PARTITION BY and one
 underlying ORDER BY column (bare, or ``CAST((k) AS <type>)`` as the
 value-range split emits); frames must be RANGE-mode (or absent);
@@ -130,6 +135,7 @@ _CAST_KEY_RE = re.compile(
 )
 _SELECT_RE = re.compile(r"^\s*select\s", re.IGNORECASE)
 _FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
+_ALIAS_END = re.compile(r"\bas\s+([A-Za-z_]\w*|`[^`]+`)\s*$", re.IGNORECASE)
 _ORD_TAIL_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
 _ORD_TAIL_DIR = re.compile(r"\b(asc|desc)\s*$", re.IGNORECASE)
 _WRAP_RE = re.compile(
@@ -276,8 +282,8 @@ def compress_keyed_windows(sql: str) -> str | None:
             allowed = set(_FV_KEYWORDS)
             if key_col is not None:
                 allowed.add(key_col.lower())
-            if dr_name is not None:
-                allowed.add(dr_name.lower())
+            # the injected __adt_drN is not a column of the partials'
+            # source (FROM base), so an argument over it refuses too
             if idents - allowed:
                 return None
         if fn == "count" and args.strip() != "*" and not args.strip():
@@ -339,6 +345,15 @@ def compress_keyed_windows(sql: str) -> str | None:
     new_items = items
     for start, end, col in sorted(repls, reverse=True):
         new_items = new_items[:start] + col + new_items[end:]
+    parts = _split_top_level(new_items)
+    for part in parts:
+        m_part = _mask_literals(part)
+        # an unaliased item would be named after its rewritten text
+        if "__kw_w" in m_part and not _ALIAS_END.search(m_part):
+            return None
+    # a bare top-level * would also return the joined-back __kw_*
+    # columns: qualify it to the base table's columns
+    new_items = ",".join(f" {base}.*" if p.strip() == "*" else p for p in parts)
     if dr_name is not None and re.search(
         rf"\b{re.escape(dr_name)}\b", _mask_literals(new_items), re.IGNORECASE
     ):

@@ -21,19 +21,23 @@ def spark():
     # (long-lived processes that restart sessions would otherwise
     # accumulate per-applicationId checkpoint references)
     from adt_spark.operators.dedup import clear_dedup_state
+    from adt_spark.operators.multimodal import clear_multimodal_state
     from adt_spark.operators.quality import clear_quality_state
     from adt_spark.operators.sampling import clear_sampling_state
     from adt_spark.operators.similarity import clear_similarity_state
     from adt_spark.operators.text import clear_text_state
+    from adt_spark.streaming.events import clear_streaming_state
 
     for clear in (
         clear_dedup_state,
+        clear_multimodal_state,
         clear_quality_state,
         clear_sampling_state,
         clear_similarity_state,
         clear_text_state,
     ):
         clear()
+    clear_streaming_state(ctx.spark)
     ctx.spark.stop()
 
 

@@ -848,6 +848,41 @@ def test_two_order_state_actions_fused(spark, sf_dir, monkeypatch):
     assert not counts, f"construction ran {len(counts)} count() actions"
 
 
+def test_two_order_build_jobs_keep_job_group(spark, sf_dir):
+    """Building the two-order statement runs its split-bound samples
+    and per-pid state collects on worker threads; every job it submits
+    carries the caller's job group."""
+    from adt_spark.dialect.global_rank import maybe_rewrite_global_rank
+    from adt_spark.operators import sampling as S
+    from adt_spark.queries import tables
+
+    tables(spark, sf_dir)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        it = jsc.statusStore().jobsList(None).iterator()
+        out = {}
+        while it.hasNext():
+            j = it.next()
+            out[j.jobId()] = j
+        return out
+
+    before = set(jobs())
+    sc.setJobGroup("adt-build-group", "two-order build")
+    try:
+        out = maybe_rewrite_global_rank(spark, S._SQL_TWO_ORDERS_STMT)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out is not None
+    built = [j for i, j in jobs().items() if i not in before]
+    assert built, "the build submitted no jobs"
+    groups = [j.jobGroup().get() if j.jobGroup().isDefined() else None for j in built]
+    assert groups == ["adt-build-group"] * len(built), groups
+
+
 def test_bounds_sample_plans_top_k(spark):
     """r11 claim, machine-checked (ADVICE r11): _sample_split_bounds'
     one action is a hash top-k planned as TakeOrderedAndProject —

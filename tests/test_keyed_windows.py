@@ -119,13 +119,52 @@ REFUSALS = {
     # nondeterministic argument
     "nondet": "sum(v * rand()) OVER (PARTITION BY p ORDER BY k"
     " RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING)",
+    # first/last over the injected rank column, which the per-key
+    # partials' source (the base table) does not have
+    "fv_rank_col": "first_value(__adt_dr0) OVER (PARTITION BY p"
+    " ORDER BY __adt_dr0 RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING)",
+}
+
+#: sources other than the bare table: the dense-rank wrap that
+#: rewrite_window_frames emits for GROUPS frames (form B)
+REFUSAL_SOURCES = {
+    "fv_rank_col": "(SELECT *, dense_rank() OVER (PARTITION BY p ORDER BY k"
+    " NULLS LAST) AS __adt_dr0 FROM kw_matrix_t) _w",
 }
 
 
 @pytest.mark.parametrize("label", sorted(REFUSALS))
 def test_keyed_refusals(spark, label):
-    sql = f"SELECT rid, {REFUSALS[label]} AS x\nFROM kw_matrix_t"
+    source = REFUSAL_SOURCES.get(label, "kw_matrix_t")
+    sql = f"SELECT rid, {REFUSALS[label]} AS x\nFROM {source}"
     assert compress_keyed_windows(sql) is None
+
+
+_STAR_WINDOW = (
+    "sum(l_quantity) OVER (PARTITION BY l_returnflag ORDER BY l_linenumber"
+    " RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING)"
+)
+
+
+@pytest.mark.parametrize("alias", ["", " AS s"])
+def test_keyed_star_returns_base_columns(spark, sf_dir, alias):
+    """A top-level ``*`` returns the table's columns and the window,
+    never the joined-back ``__kw_*`` columns (ADVICE r12).  With an
+    alias the statement still compresses; without one it is refused,
+    since an unaliased item is named after its text, which the rewrite
+    changes.  Either way its columns and rows are the uncompressed
+    ones."""
+    from adt_spark import ADTContext
+    from adt_spark.queries import tables
+
+    tables(spark, sf_dir)
+    sql = f"SELECT *, {_STAR_WINDOW}{alias} FROM lineitem"
+    assert (compress_keyed_windows(sql) is not None) == bool(alias)
+    plain = spark.sql(sql)
+    got = ADTContext(spark=spark).sql(sql)
+    assert got.columns == plain.columns
+    cols = plain.columns
+    assert got.orderBy(*cols).collect() == plain.orderBy(*cols).collect()
 
 
 def test_keyed_refuses_where_tail(spark):

@@ -26,7 +26,6 @@ registry["q01_pricing_summary"].spark_fn(spark, sf_dir).count()
 st = spark.sparkContext.statusTracker()
 
 def run(name):
-    j0 = len(st.getJobIdsForGroup(None)) if False else None
     ids0 = set(st.getJobIdsForGroup())
     spark.sparkContext.setJobDescription(f"r12-measure: {name}")
     t0 = time.perf_counter()
