@@ -12,37 +12,38 @@ to the engine, so global windows are common in adt scripts;
 function set).
 
 This pass detects the sound shape and executes it through the
-generalized two-phase constructions in
-``adt_spark.operators.sampling`` (deterministic range pids → local
-windows → bounded offset collects re-entered as ≤n_parts-row
-broadcast joins; boundary-invariant output, oracled by the q_sql_*
-family):
+two-phase global-window planner,
+``adt_spark.operators.global_window.plan_global_windows``
+(deterministic range pids → local windows → bounded per-pid state
+re-entered as ≤n_parts-row broadcast joins; boundary-invariant
+output, oracled by the q_sql_* family), one ``OrderWindows`` per
+distinct order:
 
 - ranks: row_number / rank / dense_rank / percent_rank / cume_dist /
-  ntile(k) → ``attach_global_ranks``;
+  ntile(k);
 - running aggregates with the default peer-inclusive frame:
-  sum / count / min / max / avg (+ the round-10 variance family) →
-  ``attach_global_running_aggs``;
+  sum / count / min / max / avg (+ the round-10 variance family);
 - bounded-frame aggregates (round-11): sum / count / min / max /
   avg over ``ROWS BETWEEN a PRECEDING AND b FOLLOWING`` (either
-  bound may be CURRENT ROW; literal row counts) →
-  ``attach_global_bounded_aggs``;
+  bound may be CURRENT ROW, UNBOUNDED or strictly before / after the
+  current row; literal row counts);
 - offsets: lag / lead (literal j), including the round-11 3-arg
-  default-value form → ``attach_global_offsets``;
+  default-value form;
 - frame values with the default frame (round-10): first_value /
   last_value / nth_value(expr, literal n), plus round-11
-  ``first_value/last_value(x) IGNORE NULLS`` →
-  ``attach_global_first_last``.
+  ``first_value/last_value(x) IGNORE NULLS``;
+- whole-input scalar aggregates ``sum/count/min/max/avg(x) OVER ()``.
 
 Execution: the INNER BLOCK (everything below the projection —
 FROM body, WHERE, GROUP BY, HAVING, plus any CTE prefix) runs as its
 own statement; each supported unpartitioned window call becomes a
 pre-computed column over that result; the remaining projection /
 ORDER BY / LIMIT runs over the ranked temp view with the calls
-substituted.  Window calls that stay native (partitioned, OVER(),
-exotic frames — RANGE/GROUPS/non-literal ROWS bounds, bounded-frame
-variance, nth_value IGNORE NULLS, lag/lead IGNORE NULLS,
-non-literal offsets) are LEFT IN PLACE and evaluate over the view's
+substituted (the view is dropped once that statement is analysed).
+Window calls that stay native (partitioned, ranking and variance
+OVER (), exotic frames — RANGE/GROUPS/non-literal ROWS bounds,
+bounded-frame variance, nth_value IGNORE NULLS, lag/lead IGNORE
+NULLS, non-literal offsets) are LEFT IN PLACE and evaluate over the view's
 rows — the inner block's rows — unchanged.
 
 Scope (round-10, widened past the round-9 single-relation rule):
@@ -77,7 +78,6 @@ the fallback here is pass-through, never an error.
 from __future__ import annotations
 
 import itertools
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -716,338 +716,78 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         return F.expr(arg_src)
 
     # --- execute the two-phase constructions --------------------------
-    from adt_spark.operators.sampling import (
-        _assign_range_pids,
-        _bounded_boundary_rows,
-        _bounded_mark,
-        _bounded_tot_exprs,
-        _ranks_state_exprs,
-        _resolve_rank_parts,
-        _running_prims,
-        _running_state_exprs,
-        _sample_split_bounds,
-        attach_global_bounded_aggs,
-        attach_global_first_last,
-        attach_global_offsets,
-        attach_global_ranks,
-        attach_global_running_aggs,
-        attach_global_scalar_aggs,
+    from adt_spark.operators.global_window import (
+        OrderWindows,
+        plan_global_windows,
     )
 
     names = {}
     for i, c in enumerate(sorted(calls, key=lambda c: c["start"])):
         names[c["start"]] = f"_adt_gw{i}"
+
+    def _agg_arg(c):
+        return None if c["arg_src"] == "*" else _arg_col(c["arg_src"])
+
     try:
-        ranked = spark.sql(inner)
+        inner_df = spark.sql(inner)
         injected = set(key_alias.values()) | set(arg_alias.values())
         if any(
             c.startswith("_adt_") and c not in injected
-            for c in ranked.columns
+            for c in inner_df.columns
         ):
             return None  # reserved-prefix collision with the injected
             # helper columns (_adt_pid/_adt_wk*/…) — native path
         if group_mode:
             # GROUP mode: the inner block is a corpus-wide AGGREGATE
             # whose output is group-grain; the constructions hit it
-            # with several actions (count, bounds sample, offset
-            # collects, the final output), and recomputing the
-            # aggregation per action costs one corpus scan each.
-            # Cache the aggregate OUTPUT (never the raw corpus —
-            # row-mode inners stay uncached): MEMORY_AND_DISK spills,
-            # and even a corpus-grain GROUP BY's output is no larger
-            # than one of the scans it saves.  At most ONE cached
-            # inner is alive — the previous query's is released here.
+            # with several actions (bounds samples, state collects,
+            # the final output), and recomputing the aggregation per
+            # action costs one corpus scan each.  Cache the aggregate
+            # OUTPUT (never the raw corpus — row-mode inners stay
+            # uncached): MEMORY_AND_DISK spills, and even a
+            # corpus-grain GROUP BY's output is no larger than one of
+            # the scans it saves.  At most ONE cached inner is alive —
+            # the previous query's is released here.
             global _cached_inner
             if _cached_inner is not None:
                 try:
                     _cached_inner.unpersist()
                 except Exception:
                     pass
-            ranked = ranked.persist()
-            _cached_inner = ranked
-        # No count pass (round-11 optimization): the bounds sample is
-        # a fixed-size hash top-k (_sample_split_bounds), so nothing
-        # in the construction needs the inner row count any more —
-        # one full pass per statement removed outright (guide §1.2).
-        # ONE deterministic pid assignment per DISTINCT order, shared
-        # by every family's construction over that order (round-10:
-        # the assignment costs a key-pruned sampling scan — one per
-        # order, not one per family); families chain on the
-        # pid-carrying frame and earlier columns ride through.
-        # STATE FROM THE INNER, not the chain (round-11 optimization,
-        # guide §1.2/§2.4): every construction's driver-state action
-        # (bounds sample, per-pid counts/totals/boundaries) runs
-        # against a short-lineage twin of the INNER statement carrying
-        # the same pid assignment (pid is a pure function of the key;
-        # the chain is row-preserving, so state values are identical)
-        # — previously each later construction's state actions
-        # re-executed every earlier construction's windows and
-        # broadcast joins just to aggregate columns the inner already
-        # had (measured: the second order's bounds sample alone cost
-        # 0.94 s vs 0.12 s for the first at sf0.1).
-        inner_df = ranked
-        # scalar OVER () totals need no order/pid machinery at all
-        glob_group = [c for c in calls if c["family"] == "glob"]
-        if glob_group:
-            ranked = attach_global_scalar_aggs(
-                ranked,
-                [
-                    (
-                        c["fn"],
-                        None if c["arg_src"] == "*" else _arg_col(c["arg_src"]),
-                        names[c["start"]],
-                    )
-                    for c in glob_group
-                ],
-            )
+            inner_df = inner_df.persist()
+            _cached_inner = inner_df
+        # ONE pid assignment per DISTINCT order, shared by every
+        # family over that order (round-10: the assignment costs a
+        # key-pruned sampling scan — one per order, not one per
+        # family); scalar OVER () totals need no order at all
         by_order: dict[tuple, list] = {}
         for c in calls:
-            if c["family"] == "glob":
-                continue
-            by_order.setdefault(_order_ident(c["keys"]), []).append(c)
-        orders = sorted(by_order)
-        np_ = _resolve_rank_parts(spark, None)
-
-        # ------- phase A+B (round-12, r11 verdict item 2): hoist the
-        # per-order driver-state work out of the sequential attach
-        # chain.  A: sample every distinct order's split bounds
-        # concurrently (one top-k job each).  B: fuse each order's
-        # FLAT per-pid state aggregates (rank counts + running totals
-        # + bounded-frame totals) into composite groupBy collects and
-        # run them — plus the bounded-frame edge-row collects —
-        # concurrently across orders/families.  Each attach then
-        # receives its slice via pre_state instead of running its own
-        # serialized action; values are identical (same state twin,
-        # same expressions — the _*_state_exprs helpers are the very
-        # code the attaches run internally).  Families whose state the
-        # helpers do not cover (offsets, first/last, dense_rank's
-        # two-level pass) keep their internal state_src collect.
-        def _spec_bnd(c, a, b, name):
-            return (
-                c["fn"],
-                None if c["arg_src"] == "*" else _arg_col(c["arg_src"]),
-                a,
-                b,
-                name,
-            )
-
-        plans = {}
-        for order in orders:
+            if c["family"] != "glob":
+                by_order.setdefault(_order_ident(c["keys"]), []).append(c)
+        orders = []
+        for order in sorted(by_order):
             group_all = by_order[order]
-            keys = _key_cols(group_all[0]["keys"])
-            rank_group = [c for c in group_all if c["family"] == "rank"]
-            agg_run = [
-                c for c in group_all
-                if c["family"] == "agg" and c["frame"] is None
-            ]
-            agg_bnd = [
-                c for c in group_all
-                if c["family"] == "agg" and c["frame"] is not None
-            ]
-            # negative bounds (third wave): frame [lo, hi] with
-            # hi < 0 equals the [lo−hi, 0] aggregate at position
-            # pos+hi — compute the shifted-to-current inner frame,
-            # then globally LAG it by −hi (lo > 0 mirrors via
-            # LEAD); past the global edge the frame is empty, so
-            # the offset's NULL is exactly right (count coalesces
-            # to its empty-frame 0)
-            plain, shifted = [], []
-            for c in agg_bnd:
-                a, b = c["frame"]
-                if b is not None and b < 0:
-                    ia = None if a is None else a + b
-                    shifted.append((c, ia, 0, "lag", -b))
-                elif a is not None and a < 0:
-                    ib = None if b is None else a + b
-                    shifted.append((c, 0, ib, "lead", -a))
-                else:
-                    plain.append((c, a, b))
-            tmp_names = {
-                id(c): f"_adt_gws{k}"
-                for k, (c, _ia, _ib, _d, _s) in enumerate(shifted)
-            }
-            plans[order] = {
-                "keys": keys,
-                "rank": rank_group,
-                "rank_specs": [
-                    (c["fn"], names[c["start"]]) for c in rank_group
-                ],
-                "run": agg_run,
-                "run_specs": [
-                    (
-                        c["fn"],
-                        None if c["arg_src"] == "*" else _arg_col(c["arg_src"]),
-                        names[c["start"]],
-                    )
-                    for c in agg_run
-                ],
-                "plain_specs": [
-                    _spec_bnd(c, a, b, names[c["start"]]) for c, a, b in plain
-                ],
-                "shift": shifted,
-                "shift_specs": [
-                    _spec_bnd(c, ia, ib, tmp_names[id(c)])
-                    for c, ia, ib, _d, _s in shifted
-                ],
-                "tmp_names": tmp_names,
-                "off": [c for c in group_all if c["family"] == "off"],
-                "fln": [c for c in group_all if c["family"] == "fln"],
-            }
 
-        def _run_parallel(thunks: list):
-            if len(thunks) <= 1:
-                return [t() for t in thunks]
-            from concurrent.futures import ThreadPoolExecutor
+            def _fam(family, framed=None):
+                return [
+                    c for c in group_all
+                    if c["family"] == family
+                    and (framed is None or (c["frame"] is not None) == framed)
+                ]
 
-            from pyspark.util import inheritable_thread_target
-
-            # copies the caller's local properties (job group,
-            # description) and session tags into each worker thread, so
-            # the construction jobs stay in the caller's job group
-            inherit = inheritable_thread_target(spark)
-            with ThreadPoolExecutor(max_workers=min(len(thunks), 8)) as ex:
-                futures = [ex.submit(inherit(t)) for t in thunks]
-                return [f.result() for f in futures]
-
-        splits_list = _run_parallel(
-            [
-                (lambda o: lambda: _sample_split_bounds(
-                    inner_df, plans[o]["keys"], np_
-                ))(order)
-                for order in orders
-            ]
-        )
-        # state_src/pre_state ties contract (ADVICE r11): the twin's
-        # per-pid aggregates are tie-insensitive (counts/totals), but
-        # boundary-row and nth-value state reads row positions, which
-        # equal the chain's only under the repo's total-order tiebreak
-        # convention — the same convention those families already
-        # require for determinism on EITHER engine (their docstrings),
-        # so passing the twin adds no new requirement.
-        state_jobs: list = []
-        for order, splits in zip(orders, splits_list):
-            p = plans[order]
-            p["splits"] = splits
-            p["state_base"] = _assign_range_pids(
-                inner_df, p["keys"], n_parts=np_, splits=splits
-            )
-            comp_exprs = []
-            rank_exprs = (
-                _ranks_state_exprs(p["rank_specs"]) if p["rank"] else None
-            )
-            p["comp_serves_ranks"] = rank_exprs is not None
-            if rank_exprs is not None:
-                comp_exprs += rank_exprs
-            if p["run"]:
-                p["run_prims"] = _running_prims(inner_df, p["run_specs"])
-                comp_exprs += _running_state_exprs(p["run_prims"])
-            if comp_exprs:
-                def _comp_job(pl=p, exprs=comp_exprs):
-                    df_c = pl["state_base"].groupBy("_adt_pid").agg(*exprs)
-                    types = {f.name: f.dataType for f in df_c.schema.fields}
-                    return ("comp", pl, df_c.collect(), types)
-                state_jobs.append(_comp_job)
-            for kind, specs in (("plain", p["plain_specs"]),
-                                ("shift", p["shift_specs"])):
-                if not specs:
-                    continue
-                marked_sb = _bounded_mark(p["state_base"], p["keys"], specs)
-                if any(a is not None and a > 0 or b is not None and b > 0
-                       for _f, _c, a, b, _n in specs):
-                    def _bnd_job(pl=p, k=kind, ms=marked_sb, sp=specs):
-                        return (f"{k}_boundary", pl,
-                                _bounded_boundary_rows(ms, sp), None)
-                    state_jobs.append(_bnd_job)
-                if any(a is None or b is None for _f, _c, a, b, _n in specs):
-                    def _tot_job(pl=p, k=kind, ms=marked_sb, sp=specs):
-                        return (f"{k}_totals", pl,
-                                ms.groupBy("_adt_pid")
-                                .agg(*_bounded_tot_exprs(sp)).collect(), None)
-                    state_jobs.append(_tot_job)
-        for tag, pl, rows, extra in _run_parallel(state_jobs):
-            pl[tag] = (rows, extra) if extra is not None else rows
-
-        # ------- phase C: the sequential attach chain, state injected
-        for order in orders:
-            p = plans[order]
-            keys = p["keys"]
-            state_base = p["state_base"]
-            comp = p.get("comp")
-            ranked = _assign_range_pids(
-                ranked.drop("_adt_pid"), keys, n_parts=np_, splits=p["splits"]
-            )
-            if p["rank"]:
-                ranked = attach_global_ranks(
-                    ranked,
-                    keys,
-                    p["rank_specs"],
-                    state_src=state_base,
-                    pre_state=(
-                        comp[0]
-                        if comp is not None and p["comp_serves_ranks"]
-                        else None
-                    ),
-                )
-            if p["run"]:
-                ranked = attach_global_running_aggs(
-                    ranked,
-                    keys,
-                    p["run_specs"],
-                    state_src=state_base,
-                    pre_state=(comp[0], comp[1]) if comp is not None else None,
-                )
-            if p["plain_specs"]:
-                ranked = attach_global_bounded_aggs(
-                    ranked,
-                    keys,
-                    p["plain_specs"],
-                    state_src=state_base,
-                    pre_state=(
-                        p.get("plain_boundary"), p.get("plain_totals")
-                    ),
-                )
-            if p["shift_specs"]:
-                shifted = p["shift"]
-                tmp_names = p["tmp_names"]
-                ranked = attach_global_bounded_aggs(
-                    ranked,
-                    keys,
-                    p["shift_specs"],
-                    state_src=state_base,
-                    pre_state=(
-                        p.get("shift_boundary"), p.get("shift_totals")
-                    ),
-                )
-                # NOTE: this offsets call reads the _adt_gws* tmp
-                # columns produced by the bounded-agg step above —
-                # they exist only on the chain, so it cannot take
-                # the short-lineage state_src (its boundary collect
-                # stays on the chained frame; the shifted form is
-                # the only family member with that dependency)
-                ranked = attach_global_offsets(
-                    ranked,
-                    keys,
-                    [
-                        (d, F.col(tmp_names[id(c)]), s,
-                         names[c["start"]], None)
-                        for c, _ia, _ib, d, s in shifted
-                    ]
-                )
-                for c, _ia, _ib, _d, _s in shifted:
-                    if c["fn"] == "count":
-                        nm = names[c["start"]]
-                        ranked = ranked.withColumn(
-                            nm,
-                            F.coalesce(
-                                F.col(nm), F.lit(0).cast("long")
-                            ),
-                        )
-                ranked = ranked.drop(*tmp_names.values())
-            if p["off"]:
-                ranked = attach_global_offsets(
-                    ranked,
-                    keys,
-                    [
+            orders.append(
+                OrderWindows(
+                    _key_cols(group_all[0]["keys"]),
+                    ranks=[(c["fn"], names[c["start"]]) for c in _fam("rank")],
+                    running=[
+                        (c["fn"], _agg_arg(c), names[c["start"]])
+                        for c in _fam("agg", framed=False)
+                    ],
+                    bounded=[
+                        (c["fn"], _agg_arg(c), *c["frame"], names[c["start"]])
+                        for c in _fam("agg", framed=True)
+                    ],
+                    offsets=[
                         (
                             c["fn"],
                             _arg_col(c["arg_src"]),
@@ -1057,29 +797,29 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                             if c["default_src"] is None
                             else _arg_col(c["default_src"]),
                         )
-                        for c in p["off"]
+                        for c in _fam("off")
                     ],
-                    state_src=state_base,
-                )
-            if p["fln"]:
-                ranked = attach_global_first_last(
-                    ranked,
-                    keys,
-                    [
+                    first_last=[
                         (c["fn"], _arg_col(c["arg_src"]), c["n"],
                          names[c["start"]], c["ign"])
-                        for c in p["fln"]
+                        for c in _fam("fln")
                     ],
-                    state_src=state_base,
                 )
-        ranked = ranked.drop("_adt_pid")
+            )
+        ranked = plan_global_windows(
+            inner_df,
+            orders,
+            scalars=[
+                (c["fn"], _agg_arg(c), names[c["start"]])
+                for c in calls
+                if c["family"] == "glob"
+            ],
+        )
     except Exception:
         # a shape the textual scope check admitted but Spark cannot
         # evaluate in this position (ambiguous columns from a join FROM
         # body, aliases as keys, …) — fall back to the native path,
         # whose own analysis raises the real error
-        if os.environ.get("ADT_DEBUG_GLOBAL_RANK"):
-            raise  # debugging aid: surface the real construction error
         return None
     view = f"_adt_global_rank_{next(_view_counter)}"
     ranked.createOrReplaceTempView(view)
@@ -1137,3 +877,8 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         # outer-side resolution failure (qualified refs over a joined
         # FROM body, aggregate exprs in ORDER BY, …) — native path
         return None
+    finally:
+        # analysis has bound the view's plan into the returned frame
+        # (the same behaviour pyspark's spark.sql(..., df=...)
+        # formatter relies on), so the name can go on either path
+        spark.catalog.dropTempView(view)

@@ -34,8 +34,11 @@ Per-function equivalence (the pass refuses anything else):
   keep their type exactly.  DECIMAL sums widen their declared
   precision a second time (p+10 → p+20, capped 38) — VALUES are
   identical unless the single-level sum would overflow to NULL where
-  the two-level one still fits; same disclosure family as
-  ``rewrite_window_frames``'s subtraction RuntimeWarning.
+  the two-level one still fits.  FLOAT/DOUBLE sums re-associate (the
+  per-key partials change the fold order), so low-order bits can
+  differ; the pass emits a one-time RuntimeWarning when it compresses
+  a sum — same disclosure family as ``rewrite_window_frames``'s
+  subtraction RuntimeWarning.
 - ``count(e)`` / ``count(*)`` → ``COALESCE(sum(per-key count), 0)``:
   count over an empty frame is 0, sum over an empty frame is NULL —
   the COALESCE restores count's never-NULL contract.
@@ -89,6 +92,7 @@ from __future__ import annotations
 
 import os
 import re
+import warnings
 
 from adt_spark.dialect.window_frames import (
     _OVER_RE,
@@ -125,6 +129,33 @@ _FV_KEYWORDS = {
     "string", "smallint", "tinyint", "boolean", "day", "month", "year",
     "hour", "minute", "second", "true", "false",
 }
+
+_reassociation_warned = False
+
+
+def _warn_reassociation_once() -> None:
+    """One-time heads-up that a compressed ``sum`` (the form an
+    ``avg`` reaches this pass in, after ``rewrite_window_frames``)
+    re-associates its fold: per-key partial sums, then the window sum
+    over them — exact for integer/decimal arguments, but
+    FLOATING-POINT arguments can differ from the uncompressed window
+    in low-order bits.  A textual pass cannot see column types, so
+    the disclosure is unconditional; same family as
+    ``window_frames._warn_subtraction_once``."""
+    global _reassociation_warned
+    if _reassociation_warned:
+        return
+    _reassociation_warned = True
+    warnings.warn(
+        "keyed-window compression: sum()/avg() windows are evaluated "
+        "over per-key partial sums; results are exact for "
+        "integer/decimal arguments but may differ in low-order bits "
+        "for floating-point ones (see adt_spark/dialect/keyed_windows.py "
+        "docstring)",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
 
 _IDENT_ONLY = re.compile(r"^[A-Za-z_][A-Za-z_0-9]*$")
 _IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
@@ -369,6 +400,8 @@ def compress_keyed_windows(sql: str) -> str | None:
             f"(SELECT *, dense_rank() OVER (PARTITION BY {part_col} "
             f"ORDER BY {key_col} NULLS LAST) AS {dr_name} FROM ({grp})) __kw_g"
         )
+    if any(fn == "sum" for _s, _e, fn, *_rest in calls):
+        _warn_reassociation_once()
     win = (
         f"SELECT {part_col} AS __kw_jp, {key_col} AS __kw_jk, "
         f"{', '.join(win_sql)} FROM {win_src}"

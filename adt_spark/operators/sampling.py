@@ -1238,1738 +1238,6 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: floor for the two-phase global-window family's range-partition
-#: count (the effective default is tied to the session's shuffle
-#: parallelism — see _resolve_rank_parts).
-_RANK_PARTS = 32
-
-#: sampled keys per split bound (RangePartitioner uses 20/partition;
-#: a little more buys better balance at a still-bounded collect).
-_BOUND_SAMPLE_PER_PART = 32
-
-
-def _resolve_rank_parts(spark: SparkSession, n_parts: int | None) -> int:
-    """Default partition count for the global-window family: 2× the
-    session's shuffle parallelism (finer-grained pids smooth the
-    hash-collision imbalance of partitionBy(_adt_pid) onto reduce
-    tasks), floored at _RANK_PARTS.  Callers override per query.
-
-    Scale note: pid assignment tests each row against the interval
-    table with a broadcast join — O(n_parts) comparisons per row — so
-    n_parts in the 10²–10³ band is the sweet spot for the flat join;
-    past _TWO_LEVEL_PARTS the assignment routes TWO-LEVEL (√n super-
-    intervals, then an equi-join carrying one super's sub-intervals —
-    O(√n_parts) per row), so arbitrarily large partition counts stay
-    affordable."""
-    if n_parts is not None:
-        return max(1, int(n_parts))
-    try:
-        base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # pragma: no cover - conf always present
-        base = _RANK_PARTS
-    return max(_RANK_PARTS, 2 * base)
-
-
-#: past this many intervals, pid assignment routes TWO-LEVEL (the
-#: SemDeDup-router shape): a BNLJ over ~√n super-intervals, then a
-#: broadcast EQUI-join on the super id plus an exact-interval filter —
-#: per-row cost O(√n_parts) instead of O(n_parts), no higher-order
-#: functions (everything stays in codegen), plan still byte-stable in
-#: n_parts.  Below it, the flat BNLJ's comparison-only scan (no join
-#: amplification rows) is cheaper.
-_TWO_LEVEL_PARTS = 256
-
-#: sort-method inversion (asc window ↔ desc window over the same keys)
-_INVERT_ORDER = {
-    "asc": "desc", "desc": "asc",
-    "asc_nulls_first": "desc_nulls_last",
-    "asc_nulls_last": "desc_nulls_first",
-    "desc_nulls_first": "asc_nulls_last",
-    "desc_nulls_last": "asc_nulls_first",
-}
-
-
-def _norm_order_method(method: str) -> tuple[str, bool]:
-    """Column sort-method name → (direction, nulls_first) with Spark's
-    defaults (asc → NULLS FIRST, desc → NULLS LAST)."""
-    m = method.lower()
-    direction = "desc" if m.startswith("desc") else "asc"
-    if "nulls_first" in m:
-        nulls_first = True
-    elif "nulls_last" in m:
-        nulls_first = False
-    else:
-        nulls_first = direction == "asc"
-    return direction, nulls_first
-
-
-def _key_cmp(a, b, direction: str, nulls_first: bool) -> int:
-    """Driver-side comparison of two key VALUES under one sort spec —
-    the same total preorder Spark's ordering uses: NULL at the spec'd
-    edge, NaN greater than every non-null value (and equal to
-    itself)."""
-    if a is None or b is None:
-        if a is None and b is None:
-            return 0
-        first = -1 if nulls_first else 1
-        return first if a is None else -first
-
-    def _nan(v) -> bool:
-        return isinstance(v, float) and v != v
-
-    if _nan(a) or _nan(b):
-        base = 0 if (_nan(a) and _nan(b)) else (1 if _nan(a) else -1)
-    else:
-        base = 0 if a == b else (-1 if a < b else 1)
-    return base if direction == "asc" else -base
-
-
-def _tuple_key_cmp(specs: list[tuple[str, bool]]):
-    """Lexicographic comparator over key tuples for the sort specs."""
-
-    def cmp(x, y) -> int:
-        for (va, vb), (d, nf) in zip(zip(x, y), specs):
-            c = _key_cmp(va, vb, d, nf)
-            if c:
-                return c
-        return 0
-
-    return cmp
-
-
-def _sample_split_bounds(
-    df: DataFrame, order_cols: list, n_parts: int,
-) -> list[tuple]:
-    """SAMPLE ONCE → literal split bounds: one fixed-size uniform
-    sample of the order keys, driver-sorted under the exact engine
-    ordering, evenly spaced split tuples (≤ n_parts−1, consecutive
-    duplicates dropped — equal keys must share a partition anyway).
-    The bounds are plain Python values from here on, so pid assignment
-    is a PURE FUNCTION of the key: every downstream action sees the
-    same partitioning with nothing materialized (this replaces the
-    round-9 localCheckpoint boundary pin, which wrote the whole corpus
-    to executor disk per query).
-
-    Cost: ONE key-pruned pass (round-11 optimization — previously a
-    count pass sized a Bernoulli fraction, i.e. TWO passes per order
-    per query; guide §1.2 "remove unnecessary passes").  The sample is
-    the ``target`` rows with the smallest ``xxhash64(position, salt)``
-    — a top-k per scan partition (bounded heap) plus a bounded merge,
-    planned as TakeOrderedAndProject: no full sort, no count, driver
-    state O(target).  Hashing the row POSITION (monotonically
-    increasing id), not the key, keeps the selection uniform over ROWS
-    even under heavily duplicated keys.  Which rows are picked can
-    shift if the upstream partition layout shifts; bounds only steer
-    pid PLACEMENT, never values, so outputs are invariant (the same
-    contract the previous seeded Bernoulli sample had)."""
-    from functools import cmp_to_key
-
-    keys_df = df.select(
-        *[c.alias(f"_adt_k{i}") for i, (c, _d) in enumerate(order_cols)]
-    )
-    target = max(n_parts * _BOUND_SAMPLE_PER_PART, 256)
-    rows = keys_df.orderBy(
-        F.xxhash64(F.monotonically_increasing_id(), F.lit(1729))
-    ).limit(target).collect()
-    if not rows:
-        return []
-    vals = [tuple(r) for r in rows]
-    specs = [_norm_order_method(d) for _c, d in order_cols]
-    cmp = _tuple_key_cmp(specs)
-    vals.sort(key=cmp_to_key(cmp))
-    m = len(vals)
-    splits: list[tuple] = []
-    for i in range(1, n_parts):
-        cand = vals[min(m - 1, (i * m) // n_parts)]
-        if not splits or cmp(splits[-1], cand) < 0:
-            splits.append(cand)
-    return splits
-
-
-def _order_after_cond(key_col, bound_col, direction: str, nulls_first: bool):
-    """Column predicate: key strictly AFTER bound under one sort spec.
-    Never NULL (coalesced), so negation is sound; NaN semantics ride
-    Spark's own comparators (NaN greater than all, equal to itself) —
-    the same preorder _key_cmp applies on the driver."""
-    base = key_col > bound_col if direction == "asc" else key_col < bound_col
-    if nulls_first:
-        extra = bound_col.isNull() & key_col.isNotNull()
-    else:
-        extra = key_col.isNull() & bound_col.isNotNull()
-    return F.coalesce(extra | base, F.lit(False))
-
-
-def _lex_after_cond(key_cols: list, bound_cols: list, specs: list):
-    """Lexicographic key-after-bound over parallel column lists."""
-    out = None
-    eq_prefix = None
-    for (k, b), (d, nf) in zip(zip(key_cols, bound_cols), specs):
-        after_i = _order_after_cond(k, b, d, nf)
-        term = after_i if eq_prefix is None else (eq_prefix & after_i)
-        out = term if out is None else (out | term)
-        eq_i = k.eqNullSafe(b)
-        eq_prefix = eq_i if eq_prefix is None else (eq_prefix & eq_i)
-    return out
-
-
-def _assign_range_pids(
-    df: DataFrame, order_cols: list, n_parts: int | None = None,
-    splits: list | None = None,
-) -> DataFrame:
-    """The DETERMINISTIC RANGE PARTITIONER under the whole two-phase
-    global-window family: append ``_adt_pid`` such that (a) pid order
-    agrees with the key order — every key of pid p strictly precedes
-    every key of pid p+1, (b) equal keys (peers) always share a pid,
-    and (c) pid is a pure function of the key VALUE — no sampling
-    inside the plan, so separate actions (the bounded offset collects
-    and the final output) see the SAME partitioning without
-    materializing anything (round-10: replaces repartitionByRange +
-    localCheckpoint, which pinned Spark's nondeterministic sampled
-    boundaries by writing the whole corpus to executor disk).
-
-    Mechanics: split bounds from one seeded sample
-    (_sample_split_bounds) become a ≤ n_parts-row BOUNDS TABLE —
-    (pid, lo…, hi…, unbounded flags) — broadcast and interval-joined:
-    row → the unique pid with lo < key ≤ hi under the engine's exact
-    ordering (NULL placement and NaN included).  The bounds live in
-    broadcast DATA, never in the plan, so the plan is byte-stable in
-    n_parts (machine-checked in tests/test_plans.py); the join is a
-    BroadcastNestedLoopJoin costing O(n_parts) comparisons per row
-    (see _resolve_rank_parts for the scale ceiling and escape).
-
-    The local window downstream (partitionBy ``_adt_pid``) is the ONE
-    data shuffle any construction in this family pays.
-
-    Reuse contract: every attach_* helper SKIPS assignment when the
-    input already carries ``_adt_pid`` (and then leaves the column in
-    place) — sound only when that pid was assigned over the SAME
-    order keys, which is what the SQL rewrite guarantees when it
-    shares one assignment across families per distinct order.
-
-    ``splits`` (round-11 optimization): pre-computed split bounds from
-    ``_sample_split_bounds`` — pass the SAME list to assign identical
-    pids to two dataframes carrying the same keys (the SQL rewrite
-    samples bounds ONCE per distinct order from the short-lineage
-    inner statement, then applies them to both the chained output
-    frame and the state-source frame; sampling from the chained frame
-    would recompute every earlier construction's windows and joins
-    just to draw the sample)."""
-    import math
-
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    n_parts = _resolve_rank_parts(spark, n_parts)
-    if splits is None:
-        splits = _sample_split_bounds(df, order_cols, n_parts)
-    m = len(order_cols)
-    key_fields = df.select(
-        *[c.alias(f"_adt_k{i}") for i, (c, _d) in enumerate(order_cols)]
-    ).schema.fields
-    specs = [_norm_order_method(d) for _c, d in order_cols]
-    key_cols = [c for c, _d in order_cols]
-    nb = len(splits)
-    n_int = nb + 1
-
-    def _bounds_table(intervals: list, tag: str, id_name: str,
-                      extra_fields: list | None = None,
-                      extra_vals=None):
-        """(id, lo?, hi?) interval rows → a broadcastable DataFrame;
-        lo/hi None = unbounded.  ``tag`` keeps the two levels' column
-        names apart."""
-        fields = [
-            T.StructField(id_name, T.IntegerType(), False),
-            T.StructField(f"_adt_{tag}lo_unb", T.BooleanType(), False),
-            T.StructField(f"_adt_{tag}hi_unb", T.BooleanType(), False),
-        ]
-        for i, f in enumerate(key_fields):
-            fields.append(T.StructField(f"_adt_{tag}lo{i}", f.dataType, True))
-            fields.append(T.StructField(f"_adt_{tag}hi{i}", f.dataType, True))
-        for ef in extra_fields or []:
-            fields.append(ef)
-        rows = []
-        for idx, (ival_id, lo, hi) in enumerate(intervals):
-            row: list = [ival_id, lo is None, hi is None]
-            for i in range(m):
-                row += [
-                    None if lo is None else lo[i],
-                    None if hi is None else hi[i],
-                ]
-            if extra_vals is not None:
-                row += list(extra_vals[idx])
-            rows.append(tuple(row))
-        return spark.createDataFrame(rows, T.StructType(fields))
-
-    def _interval_cond(tag: str):
-        after_lo = _lex_after_cond(
-            key_cols, [F.col(f"_adt_{tag}lo{i}") for i in range(m)], specs
-        )
-        after_hi = _lex_after_cond(
-            key_cols, [F.col(f"_adt_{tag}hi{i}") for i in range(m)], specs
-        )
-        return (F.col(f"_adt_{tag}lo_unb") | after_lo) & (
-            F.col(f"_adt_{tag}hi_unb") | ~after_hi
-        )
-
-    def _drop_cols(tag: str) -> list[str]:
-        return (
-            [f"_adt_{tag}lo_unb", f"_adt_{tag}hi_unb"]
-            + [f"_adt_{tag}lo{i}" for i in range(m)]
-            + [f"_adt_{tag}hi{i}" for i in range(m)]
-        )
-
-    def _ival(p: int):
-        return (
-            p,
-            splits[p - 1] if p > 0 else None,
-            splits[p] if p < nb else None,
-        )
-
-    if n_int <= _TWO_LEVEL_PARTS:
-        # FLAT: one BNLJ over all intervals — O(n_int) comparisons per
-        # row, no join amplification; right up to a few hundred parts
-        bounds = _bounds_table([_ival(p) for p in range(n_int)], "", "_adt_bpid")
-        return (
-            df.join(F.broadcast(bounds), _interval_cond(""), "inner")
-            .withColumnRenamed("_adt_bpid", "_adt_pid")
-            .drop(*_drop_cols(""))
-        )
-
-    # TWO-LEVEL (the SemDeDup-router shape, similarity.py): ~√n SUPER-
-    # intervals route by BNLJ, then a broadcast EQUI-join on the super
-    # id carries only that super's ~√n sub-intervals to each row and
-    # the exact-interval residual picks the one pid — O(2√n) work per
-    # row, everything a codegen-friendly join (no HOFs), plan still
-    # byte-stable in n_parts
-    S = int(math.ceil(math.sqrt(n_int)))
-    supers = []
-    for s in range(0, n_int, S):
-        end = min(s + S, n_int)  # pids [s, end)
-        supers.append(
-            (
-                s // S,
-                splits[s - 1] if s > 0 else None,
-                splits[end - 1] if end < n_int else None,
-            )
-        )
-    sup = _bounds_table(supers, "s", "_adt_bspid")
-    routed = (
-        df.join(F.broadcast(sup), _interval_cond("s"), "inner")
-        .withColumnRenamed("_adt_bspid", "_adt_spid")
-        .drop(*_drop_cols("s"))
-    )
-    subs = [_ival(p) for p in range(n_int)]
-    sub = _bounds_table(
-        subs,
-        "",
-        "_adt_bpid",
-        extra_fields=[T.StructField("_adt_bspid2", T.IntegerType(), False)],
-        extra_vals=[(p // S,) for p in range(n_int)],
-    )
-    cond = (F.col("_adt_spid") == F.col("_adt_bspid2")) & _interval_cond("")
-    return (
-        routed.join(F.broadcast(sub), cond, "inner")
-        .withColumnRenamed("_adt_bpid", "_adt_pid")
-        .drop("_adt_spid", "_adt_bspid2", *_drop_cols(""))
-    )
-
-
-def _broadcast_pid_join(ranged: DataFrame, rows: list, schema) -> DataFrame:
-    """Attach per-pid driver state (offsets / boundary arrays) as a
-    ≤ n_parts-row BROADCAST JOIN on ``_adt_pid`` — the round-10
-    replacement for the create_map literal patch maps, so boundary
-    state is DATA and the plan stays byte-stable in n_parts.  The
-    first schema column must be ``_adt_jpid int``; the join is inner
-    and provably row-preserving (the rows cover every pid the data
-    produced — they were derived from it)."""
-    spark = ranged.sparkSession
-    state = spark.createDataFrame(rows, schema)
-    return ranged.join(
-        F.broadcast(state), F.col("_adt_pid") == F.col("_adt_jpid"), "inner"
-    ).drop("_adt_jpid")
-
-
-def _ranks_state_exprs(ranks: list[tuple[str, str]]) -> list | None:
-    """attach_global_ranks' flat per-pid driver-state aggregate
-    expressions, or None when dense_rank forces the two-level
-    key-grouped pass (round-12: exported so the SQL rewrite can FUSE
-    every family's per-pid state into one composite groupBy per order
-    — guide §1.2, r11 verdict item 2; the aliases are exactly what
-    the attach reads back from ``pre_state`` rows)."""
-    if any(fn == "dense_rank" for fn, _ in ranks):
-        return None
-    return [F.count(F.lit(1)).alias("cnt")]
-
-
-def attach_global_ranks(
-    df: DataFrame,
-    order_cols: list,
-    ranks: list[tuple[str, str]],
-    n_parts: int | None = None,
-    state_src: DataFrame | None = None,
-    pre_state: list | None = None,
-) -> DataFrame:
-    """The GENERALIZED two-phase global-rank construction (round-9:
-    the SQL surface's ``row_number()/rank()/dense_rank() OVER (ORDER
-    BY …)`` rewrite routes here, and ``q_global_rank_chars`` is its
-    oracled instance): append one column per requested ranking
-    function, global over ``order_cols``, WITHOUT Spark's
-    single-partition WindowExec cliff.
-
-    ``order_cols``: (Column, direction) pairs, direction one of
-    ``asc | desc | asc_nulls_last | desc_nulls_first | …`` (any
-    Column sort-method name) — the SAME key expressions drive the
-    range partitioner and the local window, which is what makes
-    offset+local exact.  ``ranks``: list of (fn, out_name) with
-    fn ∈ {row_number, rank, dense_rank, percent_rank, cume_dist,
-    ntile(K)} — the distribution family derives from the same
-    offsets plus the driver-known total: percent_rank =
-    (rank−1)/(n−1), cume_dist = global ≤-count / n (the local
-    ≤-count is a RANGE UNBOUNDED..CURRENT window), ntile from the
-    global row_number with SQL:2016 bucket sizing.
-
-    Exactness: the range partitioner places equal keys in ONE
-    partition, so peer groups never straddle a boundary —
-    - row_number / rank: global = (#rows in earlier partitions)
-      + local;
-    - dense_rank: global = (#distinct keys in earlier partitions)
-      + local.
-    Both offset kinds come from ONE bounded collect (≤ ``n_parts``
-    rows of (cnt, distinct-cnt), computed via a keys-grouped
-    aggregate so NULL keys count as a group — count_distinct would
-    drop them).  Partition boundaries are computed ONCE from a seeded
-    sample and pid is a pure function of the key (_assign_range_pids)
-    — nothing O(data) materializes, and the offsets re-enter as a
-    ≤ n_parts-row broadcast join, never as plan literals (round-10;
-    both properties machine-checked in tests/test_plans.py).  The
-    OUTPUT is boundary-invariant (q_global_rank_chars's cross-engine
-    hash is the proof).
-
-    Typing contract: the rank family returns BIGINT deliberately —
-    native Spark's IntegerType overflows past 2³¹ rows, exactly the
-    regime this construction exists for (DataFusion's row_number is
-    UInt64, datafusion-functions-window); the oracled q_sql_* queries
-    pin the same CASTs on both engines.
-
-    Scale shape: ONE pid-keyed shuffle for the local window + two
-    key-pruned sampling scans + a ≤n_parts-row collect; no
-    single-partition exchange, no checkpoint (plan-checked).
-
-    ``state_src`` (round-11 optimization, shared by the whole attach
-    family): an alternative dataframe with the SAME ROWS as ``df``
-    and a ``_adt_pid`` assigned from the SAME split bounds, used for
-    every driver-state aggregation instead of ``df``.  The SQL
-    rewrite passes the short-lineage inner statement here when ``df``
-    is a chained frame carrying earlier constructions — the state
-    values are identical (pid is a pure function of the key and the
-    chain is row-preserving), but the state action no longer
-    recomputes every earlier order's windows and broadcast joins.
-    """
-    from pyspark.sql import Window as W
-
-    sort_cols = [getattr(c, d)() for c, d in order_cols]
-    bare_cols = [c for c, _d in order_cols]
-    made_pid = "_adt_pid" not in df.columns
-    ranged = (
-        _assign_range_pids(df, order_cols, n_parts)
-        if made_pid
-        else df
-    )
-    src = state_src if state_src is not None else ranged
-    need_dense = any(fn == "dense_rank" for fn, _ in ranks)
-    key_names = [f"_adt_k{i}" for i in range(len(order_cols))]
-    # pre_state (round-12): the caller already ran the per-pid state
-    # aggregate (possibly fused with other families' expressions into
-    # ONE composite collect — _ranks_state_exprs supplies the exprs);
-    # only the flat (no-dense_rank) shape is fusable.
-    if pre_state is not None:
-        per_key = pre_state
-    else:
-        per_key = (
-            src.select(
-                F.col("_adt_pid"),
-                *[c.alias(n) for c, n in zip(bare_cols, key_names)],
-            )
-            .groupBy("_adt_pid", *key_names)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("_adt_pid")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.count(F.lit(1)).alias("dcnt"),
-            )
-            .collect()
-            if need_dense
-            else src.groupBy("_adt_pid").agg(
-                *_ranks_state_exprs(ranks)
-            ).collect()
-        )
-    counts = {int(r._adt_pid): int(r.cnt) for r in per_key}
-    dcounts = (
-        {int(r._adt_pid): int(r.dcnt) for r in per_key} if need_dense else {}
-    )
-    row_off, dense_off, acc, dacc = {}, {}, 0, 0
-    for pid in sorted(counts):
-        row_off[pid] = acc
-        acc += counts[pid]
-        if need_dense:
-            dense_off[pid] = dacc
-            dacc += dcounts[pid]
-
-    # offsets as a ≤n_parts-row broadcast table, NOT plan literals
-    ranged = _broadcast_pid_join(
-        ranged,
-        [
-            (pid, row_off[pid], dense_off.get(pid, 0))
-            for pid in sorted(counts)
-        ],
-        "_adt_jpid int, _adt_roff long, _adt_doff long",
-    )
-
-    w = W.partitionBy("_adt_pid").orderBy(*sort_cols)
-    n_total = acc
-
-    def _global(local_fn, off_name: str):
-        return F.col(off_name) + local_fn().over(w)
-
-    out = ranged
-    for fn, name in ranks:
-        if fn in ("row_number", "rank", "dense_rank"):
-            off = "_adt_doff" if fn == "dense_rank" else "_adt_roff"
-            col = _global(getattr(F, fn), off).cast("long")
-        elif fn == "percent_rank":
-            # (global_rank − 1) / (n − 1); 0.0 for a single row — both
-            # engines' definition.  Integer-derived double division:
-            # bit-identical across engines.
-            if n_total <= 1:
-                col = F.lit(0.0)
-            else:
-                col = (
-                    (_global(F.rank, "_adt_roff") - F.lit(1)).cast("double")
-                    / F.lit(float(n_total - 1))
-                )
-        elif fn == "cume_dist":
-            # (#rows with key ≤ current key) / n: the local ≤-count is
-            # a RANGE UNBOUNDED..CURRENT count (peers included), made
-            # global with the same row offsets
-            local_le = F.count(F.lit(1)).over(
-                w.rangeBetween(W.unboundedPreceding, W.currentRow)
-            )
-            col = (F.col("_adt_roff") + local_le).cast("double") / F.lit(
-                float(n_total)
-            )
-        elif fn.startswith("ntile"):
-            # ntile(k) from the global row_number and the driver-known
-            # total: the first (n mod k) buckets hold ceil(n/k) rows
-            # (SQL:2016 semantics, both engines)
-            k = int(fn[len("ntile("):-1])
-            rn = _global(F.row_number, "_adt_roff")
-            q, r = divmod(n_total, k)
-            if q == 0:
-                col = rn.cast("long")  # fewer rows than buckets
-            else:
-                boundary = r * (q + 1)
-                col = (
-                    F.when(
-                        rn <= F.lit(boundary),
-                        F.ceil(rn.cast("double") / F.lit(float(q + 1))),
-                    ).otherwise(
-                        F.lit(r)
-                        + F.ceil(
-                            (rn - F.lit(boundary)).cast("double")
-                            / F.lit(float(q))
-                        )
-                    )
-                ).cast("long")
-        else:
-            raise ValueError(f"unsupported global ranking function {fn!r}")
-        out = out.withColumn(name, col)
-    return out.drop("_adt_roff", "_adt_doff", *(["_adt_pid"] if made_pid else []))
-
-
-_RUNNING_VARIANCE_FNS = {
-    "var_pop", "var_samp", "variance",
-    "stddev", "stddev_pop", "stddev_samp",
-}
-
-
-def _running_prims(df: DataFrame, aggs: list[tuple]) -> list[tuple]:
-    """attach_global_running_aggs' primitive (fn, Column) list — avg
-    decomposes into sum+count, the variance family into (sum, sum of
-    squares, count) over the exact/double moment base.  Shared by the
-    attach itself and the SQL rewrite's fused state collector
-    (round-12), so the two can never drift."""
-
-    def _moment_base(col):
-        t = df.select(col.alias("_adt_x")).schema["_adt_x"].dataType
-        name = t.simpleString()
-        return col.cast(
-            "bigint"
-            if name in ("tinyint", "smallint", "int", "bigint", "boolean")
-            else "double"
-        )
-
-    prims: list[tuple] = []
-    for fn, col, _name in aggs:
-        if fn == "avg":
-            prims += [("sum", col), ("count", col)]
-        elif fn in _RUNNING_VARIANCE_FNS:
-            base = _moment_base(col)
-            prims += [("sum", base), ("sum", base * base), ("count", col)]
-        else:
-            prims.append((fn, col))
-    return prims
-
-
-def _running_state_exprs(prims: list[tuple]) -> list:
-    """The per-pid totals aggregate expressions for ``prims`` —
-    aliases are exactly what attach_global_running_aggs reads back
-    from ``pre_state`` rows (fusable into a composite collect)."""
-    out = []
-    for i, (fn, col) in enumerate(prims):
-        if fn == "count":
-            e = F.count(F.lit(1)) if col is None else F.count(col)
-        else:
-            e = getattr(F, fn)(col)
-        out.append(e.alias(f"_adt_t{i}"))
-    return out
-
-
-def attach_global_running_aggs(
-    df: DataFrame,
-    order_cols: list,
-    aggs: list[tuple],
-    n_parts: int | None = None,
-    state_src: DataFrame | None = None,
-    pre_state: tuple | None = None,
-) -> DataFrame:
-    """Two-phase GLOBAL RUNNING AGGREGATES — ``sum/count/min/max/avg
-    (expr) OVER (ORDER BY …)`` with the default (RANGE UNBOUNDED
-    PRECEDING .. CURRENT ROW) frame, without the single-partition
-    WindowExec cliff (the running-total sibling of
-    ``attach_global_ranks``; the SQL surface routes here too).
-
-    ``aggs``: list of (fn, expr_col_or_None, out_name) — ``None``
-    means ``count(*)``.  Construction: range-partition on the order
-    keys, aggregate each partition's TOTALS (one bounded ≤n_parts-row
-    collect), prefix-combine them per function (sum/count add, min/
-    max fold, avg decomposes into sum+count), then combine each
-    partition's offset with a LOCAL running aggregate over the RANGE
-    frame (peers share a partition under the range partitioner, so
-    the peer-inclusive default-frame semantics survive the split
-    exactly — including single-key ORDER BYs with ties).
-
-    Round-10 moment family: ``var_pop / var_samp / variance /
-    stddev / stddev_pop / stddev_samp`` decompose into (sum, sum of
-    squares, count) prefix-combined moments and the closed form
-    ``(S2 − S1²/n) / (n | n−1)`` clamped at 0 (both engines' natives
-    cannot go negative), sqrt for the stddev forms.  Integer
-    arguments square in BIGINT, so S1/S2/n are EXACT and the one
-    float expression is bit-identical to any engine evaluating the
-    same closed form (the q_sql oracle spells it verbatim); float
-    arguments carry the module's re-association caveat AND the
-    moment-vs-Welford algorithm difference vs native Spark — same
-    contract as the EXCLUDE variance rewrite
-    (dialect/window_frames.py).
-
-    NULL discipline matches the engines': a running sum/min/max is
-    NULL until the first non-null argument, so the combine is
-    ``CASE WHEN local IS NULL THEN offset ELSE coalesce(offset, 0) +
-    local`` for sums and null-skipping least/greatest for min/max.
-
-    Exactness caveat (the EXCLUDE-subtraction rule): per-partition
-    totals re-associate the fold, so floating-point arguments can
-    differ in low-order bits from a strictly sequential oracle —
-    exact for integer/decimal arguments (the corpus convention).
-
-    Typing (round-10): every offset column carries the SPARK SCHEMA
-    type of its partition total (sum → Spark's sum result type, min/
-    max → the input column's own type), and avg casts to the native
-    window avg's result type — so the rewrite's output dtypes equal
-    native execution's, decimals included (the round-9 Python-value
-    type inspection widened int32 to bigint; ADVICE r9).
-
-    Scale shape: ONE pid-keyed shuffle for the local window + two
-    key-pruned sampling scans + a ≤n_parts-row totals collect whose
-    prefix combine re-enters as a broadcast join (never plan
-    literals); no single-partition exchange, no checkpoint
-    (plan-checked).
-    """
-    from pyspark.sql import Window as W
-    from pyspark.sql import types as T
-
-    sort_cols = [getattr(c, d)() for c, d in order_cols]
-    made_pid = "_adt_pid" not in df.columns
-    ranged = (
-        _assign_range_pids(df, order_cols, n_parts)
-        if made_pid
-        else df
-    )
-
-    _VARIANCE_FNS = _RUNNING_VARIANCE_FNS
-
-    def _moment_base(col):
-        """The squared-moment working type: BIGINT for integral
-        arguments (exact S1/S2 — the cross-engine-exact case), DOUBLE
-        otherwise (documented caveat).  Kept in sync with
-        _running_prims (the shared primitive builder)."""
-        t = df.select(col.alias("_adt_x")).schema["_adt_x"].dataType
-        name = t.simpleString()
-        return col.cast(
-            "bigint"
-            if name in ("tinyint", "smallint", "int", "bigint", "boolean")
-            else "double"
-        )
-
-    # per-partition totals for every needed primitive (avg = sum+cnt,
-    # variance family = sum + sum-of-squares + count)
-    prims = _running_prims(df, aggs)
-    # pre_state (round-12): (rows, {alias: dtype}) from the caller's
-    # fused composite collect (_running_state_exprs supplies the
-    # exprs); else state_src — see attach_global_ranks — same rows,
-    # same pids, short lineage; totals identical by construction
-    if pre_state is not None:
-        totals_rows, tot_types = pre_state
-    else:
-        totals_df = (
-            state_src if state_src is not None else ranged
-        ).groupBy("_adt_pid").agg(*_running_state_exprs(prims))
-        tot_types = {f.name: f.dataType for f in totals_df.schema.fields}
-        totals_rows = totals_df.collect()
-    totals = {int(r._adt_pid): r for r in totals_rows}
-    pids = sorted(totals)
-
-    def _prefix_offsets(i: int, fn: str) -> dict:
-        """pid → exclusive-prefix combination of partition totals."""
-        offs, acc = {}, None
-        for pid in pids:
-            offs[pid] = acc
-            v = totals[pid][f"_adt_t{i}"]
-            if v is None:
-                continue
-            if acc is None:
-                acc = v
-            elif fn in ("sum", "count"):
-                acc = acc + v
-            elif fn == "min":
-                acc = v if v < acc else acc
-            else:  # max
-                acc = v if v > acc else acc
-        return offs
-
-    # ONE broadcast state table for every primitive's prefix offsets,
-    # typed from the totals' own Spark schema (exact dtype round-trip)
-    fields = [T.StructField("_adt_jpid", T.IntegerType(), False)]
-    per_pid: dict[int, list] = {pid: [pid] for pid in pids}
-    for i, (fn, _col) in enumerate(prims):
-        offs = _prefix_offsets(i, fn)
-        fields.append(
-            T.StructField(f"_adt_o{i}", tot_types[f"_adt_t{i}"], True)
-        )
-        for pid in pids:
-            per_pid[pid].append(offs[pid])
-    ranged = _broadcast_pid_join(
-        ranged, [tuple(per_pid[p]) for p in pids], T.StructType(fields)
-    )
-
-    w = (
-        W.partitionBy("_adt_pid")
-        .orderBy(*sort_cols)
-        .rangeBetween(W.unboundedPreceding, W.currentRow)
-    )
-    out = ranged
-    pi = 0
-    for fn, col, name in aggs:
-        if fn == "avg":
-            s_off = F.col(f"_adt_o{pi}")
-            s_zero = F.lit(0).cast(tot_types[f"_adt_t{pi}"])
-            c_off = F.col(f"_adt_o{pi + 1}")
-            pi += 2
-            local_s = F.sum(col).over(w)
-            local_c = F.count(col).over(w)
-            num = F.when(local_s.isNull(), s_off).otherwise(
-                F.coalesce(s_off, s_zero) + local_s
-            )
-            den = F.coalesce(c_off, F.lit(0)) + local_c
-            # native window avg result type (double for integrals,
-            # decimal(p+4, s+4) for decimals) — schema-only probe
-            avg_t = df.select(F.avg(col).alias("_adt_x")).schema[
-                "_adt_x"
-            ].dataType
-            combined = F.when(den > 0, (num / den).cast(avg_t)).otherwise(
-                F.lit(None).cast(avg_t)
-            )
-        elif fn in _VARIANCE_FNS:
-            base = _moment_base(col)
-            offs3 = [F.col(f"_adt_o{pi + k}") for k in range(3)]
-            zeros = [
-                F.lit(0).cast(tot_types[f"_adt_t{pi + k}"]) for k in range(2)
-            ]
-            pi += 3
-            locs = [F.sum(base).over(w), F.sum(base * base).over(w)]
-            s1, s2 = [
-                F.when(loc.isNull(), off).otherwise(
-                    F.coalesce(off, z) + loc
-                )
-                for loc, off, z in zip(locs, offs3, zeros)
-            ]
-            n = F.coalesce(offs3[2], F.lit(0)) + F.count(col).over(w)
-            # the ONE float expression — spelled identically in the
-            # DuckDB oracle, so integer-argument results hash-match
-            nd = n.cast("double")
-            s1d, s2d = s1.cast("double"), s2.cast("double")
-            m = s2d - (s1d * s1d) / nd
-            if fn in ("var_pop", "stddev_pop"):
-                v = F.when(n >= 1, F.greatest(F.lit(0.0), m / nd))
-            else:
-                v = F.when(
-                    n >= 2, F.greatest(F.lit(0.0), m / (nd - F.lit(1.0)))
-                )
-            combined = F.sqrt(v) if fn.startswith("stddev") else v
-        else:
-            off = F.col(f"_adt_o{pi}")
-            zero = F.lit(0).cast(tot_types[f"_adt_t{pi}"])
-            pi += 1
-            if fn == "count":
-                local = (
-                    F.count(F.lit(1)) if col is None else F.count(col)
-                ).over(w)
-                combined = F.coalesce(off, zero) + local
-            elif fn == "sum":
-                local = F.sum(col).over(w)
-                # offset+local widens decimal(p,s) to (p+1,s); cast
-                # back to the native sum type (same overflow contract)
-                combined = F.when(local.isNull(), off).otherwise(
-                    F.coalesce(off, zero) + local
-                ).cast(tot_types[f"_adt_t{pi - 1}"])
-            else:
-                # least/greatest skip NULLs: off-only, local-only, and
-                # both-NULL cases all reduce to the running min/max
-                local = getattr(F, fn)(col).over(w)
-                combined = (F.least if fn == "min" else F.greatest)(
-                    off, local
-                )
-        out = out.withColumn(name, combined)
-    return out.drop(
-        *[f"_adt_o{i}" for i in range(len(prims))],
-        *(["_adt_pid"] if made_pid else []),
-    )
-
-
-def attach_global_offsets(
-    df: DataFrame,
-    order_cols: list,
-    offsets: list[tuple],
-    n_parts: int | None = None,
-    state_src: DataFrame | None = None,
-) -> DataFrame:
-    """Two-phase GLOBAL OFFSET functions — ``lag/lead(expr[, j]) OVER
-    (ORDER BY …)`` without the single-partition WindowExec cliff (the
-    third member of the family: ranks, running aggregates, offsets —
-    together the whole unpartitioned-window surface a ported script
-    uses; ``lag(price) OVER (ORDER BY ts)`` is the canonical
-    time-series delta).
-
-    ``offsets``: list of (fn, expr_col, j, out_name[, default_col]),
-    fn ∈ {lag, lead}, j ≥ 1 a literal; the optional 5th element is
-    the 3-arg form's DEFAULT VALUE column (round-11, closing the r10
-    verdict's residue): it replaces the result exactly where the
-    global j-offset row DOES NOT EXIST (before the global head /
-    past the global tail) — never where the offset row's value is
-    merely NULL, matching both engines' 3-arg semantics.
-    Construction: range-repartition on the order keys; each partition
-    computes its LOCAL lag/lead (parallel); only the first/last j
-    rows of each partition miss their value, and those come from the
-    neighbor partitions' TAILS/HEADS — collected once, ≤ n_parts ×
-    max(j) rows of driver state, re-entered as per-pid ARRAY columns
-    through a ≤ n_parts-row broadcast join (round-10: boundary values
-    are DATA, never plan literals, and the array element type is the
-    offset expression's own Spark type — an int32 argument patches
-    back as int32).  The existence test is the patch-index bound
-    itself: the boundary array holds min(j, rows-beyond-the-edge)
-    values, so an out-of-range patch index IS the global edge (no
-    extra state).  Values are carried verbatim (no arithmetic), so
-    the rewrite is exact for every data type; like both engines'
-    native lag/lead, the output is deterministic when the ORDER BY is
-    a total order (the corpus convention's tiebreak rule).
-
-    Scale shape: ONE pid-keyed shuffle feeding two partitioned
-    windows (local offset + the boundary row_number) + two key-pruned
-    sampling scans + a bounded boundary collect; no single-partition
-    exchange, no checkpoint (plan-checked).
-    """
-    from pyspark.sql import Window as W
-    from pyspark.sql import types as T
-
-    sort_cols = [getattr(c, d)() for c, d in order_cols]
-    # normalize to the 5-field form (default_col None = 2-arg)
-    offsets = [(tuple(c) + (None,))[:5] for c in offsets]
-    big_j = max(j for _f, _c, j, _n, _d in offsets)
-    # evaluate every offset expression as a concrete column FIRST so
-    # the boundary collect and the local window read identical values
-    with_exprs = df
-    expr_names = []
-    for i, (_fn, col, _j, _name, _d) in enumerate(offsets):
-        with_exprs = with_exprs.withColumn(f"_adt_e{i}", col)
-        expr_names.append(f"_adt_e{i}")
-    made_pid = "_adt_pid" not in df.columns
-    ranged = (
-        _assign_range_pids(with_exprs, order_cols, n_parts)
-        if made_pid
-        else with_exprs
-    )
-    e_types = {n: ranged.schema[n].dataType for n in expr_names}
-    w_pid = W.partitionBy("_adt_pid").orderBy(*sort_cols)
-    w_pid_desc = W.partitionBy("_adt_pid").orderBy(
-        *[getattr(c, _INVERT_ORDER[d])() for c, d in order_cols]
-    )
-    rn = F.row_number().over(w_pid)
-    rnd = F.row_number().over(w_pid_desc)
-    marked = ranged.withColumn("_adt_rn", rn).withColumn("_adt_rnd", rnd)
-    # state_src: see attach_global_ranks — the boundary rows are
-    # identical on the short-lineage twin (same rows, same pids, same
-    # order), requires every offset expression to resolve on it
-    if state_src is not None:
-        marked_s = state_src
-        for i, (_fn, col, _j, _name, _d) in enumerate(offsets):
-            marked_s = marked_s.withColumn(f"_adt_e{i}", col)
-        marked_s = marked_s.withColumn("_adt_rn", rn).withColumn(
-            "_adt_rnd", rnd
-        )
-    else:
-        marked_s = marked
-    boundary = (
-        marked_s.filter(
-            (F.col("_adt_rn") <= big_j) | (F.col("_adt_rnd") <= big_j)
-        )
-        .select("_adt_pid", "_adt_rn", "_adt_rnd", *expr_names)
-        .collect()
-    )
-    pids = sorted({int(r._adt_pid) for r in boundary})
-    # per-pid ordered head (first big_j rows) and tail (last big_j)
-    heads: dict[int, list] = {p: [] for p in pids}
-    tails: dict[int, list] = {p: [] for p in pids}
-    for r in sorted(boundary, key=lambda r: (r._adt_pid, r._adt_rn)):
-        p = int(r._adt_pid)
-        if int(r._adt_rn) <= big_j:
-            heads[p].append(r)
-        if int(r._adt_rnd) <= big_j:
-            tails[p].append(r)  # ascending position within the tail
-    # prefix tails: the last big_j GLOBAL values before each
-    # partition's start; suffix heads: the first big_j after its end
-    prefix: dict[int, list] = {}
-    acc: list = []
-    for p in pids:
-        prefix[p] = acc[-big_j:]
-        acc = (acc + tails[p])[-big_j:]
-    suffix: dict[int, list] = {}
-    acc = []
-    for p in reversed(pids):
-        suffix[p] = acc[:big_j]
-        acc = (heads[p] + acc)[:big_j]
-
-    # boundary values re-enter as per-pid TYPED ARRAY columns through
-    # one broadcast join — element type = the expression's own Spark
-    # type, so values round-trip exactly (no Python-value inspection)
-    fields = [T.StructField("_adt_jpid", T.IntegerType(), False)]
-    arr_names = []
-    for i, (fn, _col, _j, _name, _d) in enumerate(offsets):
-        fields.append(
-            T.StructField(
-                f"_adt_arr{i}",
-                T.ArrayType(e_types[f"_adt_e{i}"], True),
-                False,
-            )
-        )
-        arr_names.append(f"_adt_arr{i}")
-    rows = []
-    for p in pids:
-        row: list = [p]
-        for i, (fn, _col, _j, _name, _d) in enumerate(offsets):
-            src = prefix if fn == "lag" else suffix
-            row.append([getattr(r, f"_adt_e{i}") for r in src[p]])
-        rows.append(tuple(row))
-    marked = _broadcast_pid_join(marked, rows, T.StructType(fields))
-
-    out = marked
-    for i, (fn, _col, j, name, default_col) in enumerate(offsets):
-        e = F.col(f"_adt_e{i}")
-        arr = F.col(f"_adt_arr{i}")
-        if fn == "lag":
-            local = F.lag(e, j).over(w_pid)
-            idx = F.size(arr) - F.lit(j) + F.col("_adt_rn")
-            edge = (F.col("_adt_rn") <= j) & (idx < 1)
-            patched = F.when(
-                (F.col("_adt_rn") <= j) & (idx >= 1),
-                F.element_at(arr, idx),
-            ).otherwise(local)
-        else:
-            local = F.lead(e, j).over(w_pid)
-            idx = F.lit(j) - F.col("_adt_rnd") + F.lit(1)
-            edge = (F.col("_adt_rnd") <= j) & (idx > F.size(arr))
-            patched = F.when(
-                (F.col("_adt_rnd") <= j) & (idx <= F.size(arr)),
-                F.element_at(arr, idx),
-            ).otherwise(local)
-        if default_col is not None:
-            # 3-arg form: the default replaces the value ONLY past the
-            # GLOBAL edge (offset row nonexistent) — the patch-index
-            # bound encodes existence exactly (see docstring), so a
-            # NULL VALUE at an existing offset row stays NULL
-            patched = F.when(edge, default_col).otherwise(patched)
-        out = out.withColumn(name, patched)
-    return out.drop(
-        "_adt_rn", "_adt_rnd", *expr_names, *arr_names,
-        *(["_adt_pid"] if made_pid else []),
-    )
-
-
-def attach_global_first_last(
-    df: DataFrame,
-    order_cols: list,
-    calls: list[tuple],
-    n_parts: int | None = None,
-    state_src: DataFrame | None = None,
-) -> DataFrame:
-    """Two-phase GLOBAL FRAME-VALUE functions — ``first_value /
-    last_value / nth_value(expr[, n]) OVER (ORDER BY …)`` with the
-    default peer-inclusive frame (RANGE UNBOUNDED PRECEDING ..
-    CURRENT ROW, RESPECT NULLS) without the single-partition
-    WindowExec cliff (round-10, closing the family: ranks, running
-    aggregates, offsets, frame values — the full unpartitioned-window
-    surface DataFusion runs parallel, datafusion-functions-window /
-    Cargo.lock:1818; SQL pass-through main.rs:116).
-
-    ``calls``: list of (fn, expr_col, n_or_None, out_name[,
-    ignore_nulls]); n is the literal 1-based position for nth_value,
-    None otherwise; the optional 5th element (default False) selects
-    IGNORE NULLS for first_value / last_value (round-11, closing the
-    r10 verdict's residue; nth_value IGNORE NULLS stays native —
-    documented pass-through).  Under the default frame the calls
-    reduce to:
-
-    - first_value — the frame always starts at row 1, so the result
-      is ONE value: the globally first row's expr (a single typed
-      literal from a ≤ n_parts-row rn=1 collect);
-    - first_value IGNORE NULLS — ONE value again (the globally first
-      NON-NULL expr, located by a per-pid min-position collect), but
-      gated per row on whether the frame has reached it: result = v*
-      where the global peer-inclusive ≤-count ≥ g* (its global
-      position), else NULL — the same broadcast row-offset + local
-      RANGE-count guard nth_value uses (the verdict's "running
-      non-null-count" reduces to this: counting non-nulls before g*
-      is zero and after g* is ≥ 1 exactly when the frame covers g*);
-    - last_value — the frame ends at the current row's LAST PEER, and
-      the range partitioner keeps peers in one pid, so the LOCAL
-      peer-inclusive ``last`` over the pid window is already exact —
-      no patching at all;
-    - last_value IGNORE NULLS — the local peer-inclusive
-      ``last(ignorenulls)`` covers every in-pid frame row, and any
-      local non-null beats every earlier pid's value; where it is
-      NULL the answer is the latest non-null in EARLIER pids — a
-      per-pid prefix fold of the ≤ n_parts-row last-non-null collect,
-      re-entered through the same broadcast pid join (coalesce of the
-      two is exact);
-    - nth_value(e, n) — the frame holds the first ``global ≤-count``
-      rows, so the result is the global n-th row's expr where that
-      count ≥ n, else NULL; the value comes from one bounded lookup
-      (prefix counts locate the owning pid and local position), the
-      guard from the same broadcast row-offset join the rank family
-      uses.
-
-    Values are carried verbatim and literals cast to the expression's
-    own Spark type — dtypes equal native execution's.  Ties: like
-    native Spark/DataFusion, the picked peer is deterministic only
-    under a total order (the corpus convention's tiebreak rule).
-
-    Scale shape: ONE pid-keyed shuffle for the local window + two
-    key-pruned sampling scans + bounded collects (≤ n_parts rows,
-    plus one 1-row lookup per nth_value); no single-partition
-    exchange, no checkpoint (plan-checked in tests/test_plans.py).
-    """
-    from pyspark.sql import Window as W
-    from pyspark.sql import types as T
-
-    # normalize to the 5-field form (ignore_nulls False = RESPECT)
-    calls = [(tuple(c) + (False,))[:5] for c in calls]
-    sort_cols = [getattr(c, d)() for c, d in order_cols]
-    with_exprs = df
-    expr_names = []
-    for i, (_fn, col, _n, _name, _ign) in enumerate(calls):
-        with_exprs = with_exprs.withColumn(f"_adt_e{i}", col)
-        expr_names.append(f"_adt_e{i}")
-    made_pid = "_adt_pid" not in df.columns
-    ranged = (
-        _assign_range_pids(with_exprs, order_cols, n_parts)
-        if made_pid
-        else with_exprs
-    )
-    e_types = {n: ranged.schema[n].dataType for n in expr_names}
-    w = W.partitionBy("_adt_pid").orderBy(*sort_cols)
-    wr = w.rangeBetween(W.unboundedPreceding, W.currentRow)
-    need_first = any(
-        fn == "first_value" and not ign for fn, _c, _n, _nm, ign in calls
-    )
-    need_first_in = any(
-        fn == "first_value" and ign for fn, _c, _n, _nm, ign in calls
-    )
-    need_last_in = any(
-        fn == "last_value" and ign for fn, _c, _n, _nm, ign in calls
-    )
-    need_nth = any(fn == "nth_value" for fn, _c, _n, _nm, _i in calls)
-    need_counts = need_nth or need_first_in or need_last_in
-
-    work = ranged
-    helper_cols = [] if not made_pid else ["_adt_pid"]
-    # state_src: see attach_global_ranks — same rows, same pids,
-    # short lineage; the per-pid stats and the nth-value lookup are
-    # identical on the twin (requires total-order determinism for the
-    # row_number, the family's documented ties contract)
-    if state_src is not None:
-        work_s = state_src
-        for i, (_fn, col, _n, _name, _ign) in enumerate(calls):
-            work_s = work_s.withColumn(f"_adt_e{i}", col)
-    else:
-        work_s = None
-    if need_first or need_counts:
-        work = work.withColumn("_adt_rn", F.row_number().over(w))
-        helper_cols.append("_adt_rn")
-        if work_s is not None:
-            work_s = work_s.withColumn("_adt_rn", F.row_number().over(w))
-    if work_s is None:
-        work_s = work
-
-    # ONE bounded per-pid stats collect for every call kind (round-11
-    # optimization, guide §1.2 "remove unnecessary passes": previously
-    # the head row, the per-pid counts, each IGNORE NULLS first and
-    # each IGNORE NULLS last paid its OWN aggregation action — up to
-    # 3 + n_calls full passes per statement; all of them are per-pid
-    # aggregates over the same frame, so one composite groupBy serves
-    # them all).  min_by/max_by with a null-when-null-arg ordering key
-    # skip null arguments exactly like the previous isNotNull filters
-    # (measured: null ordering keys are ignored, the selected value
-    # itself may be NULL only for the RESPECT-NULLS head).
-    first_idx = [
-        i for i, (fn, _c, _n, _nm, ign) in enumerate(calls)
-        if fn == "first_value" and not ign
-    ]
-    first_in_idx = [
-        i for i, (fn, _c, _n, _nm, ign) in enumerate(calls)
-        if fn == "first_value" and ign
-    ]
-    last_in_idx = [
-        i for i, (fn, _c, _n, _nm, ign) in enumerate(calls)
-        if fn == "last_value" and ign
-    ]
-    stats: dict[int, object] = {}
-    if need_first or need_counts:
-        agg_exprs = [F.count(F.lit(1)).alias("cnt")]
-        for i in first_idx:
-            agg_exprs.append(
-                F.min_by(f"_adt_e{i}", "_adt_rn").alias(f"_adt_h{i}")
-            )
-        for i in first_in_idx:
-            nn_rn = F.when(
-                F.col(f"_adt_e{i}").isNotNull(), F.col("_adt_rn")
-            )
-            agg_exprs.append(F.min(nn_rn).alias(f"_adt_fnr{i}"))
-            agg_exprs.append(
-                F.min_by(f"_adt_e{i}", nn_rn).alias(f"_adt_fnv{i}")
-            )
-        for i in last_in_idx:
-            nn_rn = F.when(
-                F.col(f"_adt_e{i}").isNotNull(), F.col("_adt_rn")
-            )
-            agg_exprs.append(
-                F.max_by(f"_adt_e{i}", nn_rn).alias(f"_adt_lnv{i}")
-            )
-        stats = {
-            int(r._adt_pid): r
-            for r in work_s.groupBy("_adt_pid").agg(*agg_exprs).collect()
-        }
-
-    firsts: dict[int, object] = {}
-    if need_first and stats:
-        # the global first row lives in the smallest non-empty pid
-        hp = min(stats)
-        firsts = {i: stats[hp][f"_adt_h{i}"] for i in first_idx}
-
-    row_off: dict[int, int] = {}
-    n_total = 0
-    counts: dict[int, int] = {}
-    if need_counts:
-        counts = {p: int(r.cnt) for p, r in stats.items()}
-        for pid in sorted(counts):
-            row_off[pid] = n_total
-            n_total += counts[pid]
-        if need_nth or need_first_in:
-            work = _broadcast_pid_join(
-                work,
-                [(p, row_off[p]) for p in sorted(counts)],
-                "_adt_jpid int, _adt_roff long",
-            )
-            helper_cols.append("_adt_roff")
-
-    # ignore-nulls firsts: (global position, value) of the globally
-    # first NON-NULL expr — the smallest pid with a non-null hit
-    firsts_nn: dict[int, tuple[int, object]] = {}
-    for i in first_in_idx:
-        for p in sorted(stats):
-            rn0 = stats[p][f"_adt_fnr{i}"]
-            if rn0 is not None:
-                firsts_nn[i] = (
-                    row_off[p] + int(rn0), stats[p][f"_adt_fnv{i}"]
-                )
-                break
-
-    # ignore-nulls lasts: per-pid LAST non-null value, prefix-folded
-    # into "latest non-null in EARLIER pids", re-entered as one
-    # ≤ n_parts-row broadcast join (typed per call)
-    if need_last_in:
-        last_idx = last_in_idx
-        lastv: dict[int, dict[int, object]] = {}
-        for i in last_idx:
-            lastv[i] = {
-                p: stats[p][f"_adt_lnv{i}"]
-                for p in stats
-                if stats[p][f"_adt_lnv{i}"] is not None
-            }
-        fields = [T.StructField("_adt_jpid", T.IntegerType(), False)]
-        for i in last_idx:
-            fields.append(
-                T.StructField(f"_adt_pnn{i}", e_types[f"_adt_e{i}"], True)
-            )
-            helper_cols.append(f"_adt_pnn{i}")
-        rows = []
-        acc: dict[int, object] = {i: None for i in last_idx}
-        for p in sorted(counts):
-            rows.append(tuple([p] + [acc[i] for i in last_idx]))
-            for i in last_idx:
-                if p in lastv[i]:
-                    acc[i] = lastv[i][p]
-        work = _broadcast_pid_join(work, rows, T.StructType(fields))
-
-    out = work
-    for i, (fn, _col, n, name, ign) in enumerate(calls):
-        e = F.col(f"_adt_e{i}")
-        t = e_types[f"_adt_e{i}"]
-        if fn == "last_value" and not ign:
-            col_out = F.last(e, ignorenulls=False).over(wr)
-        elif fn == "last_value":
-            # any in-frame local non-null is later than every earlier
-            # pid's row; otherwise the latest non-null in earlier pids
-            col_out = F.coalesce(
-                F.last(e, ignorenulls=True).over(wr),
-                F.col(f"_adt_pnn{i}"),
-            )
-        elif fn == "first_value" and not ign:
-            col_out = F.lit(firsts.get(i)).cast(t)
-        elif fn == "first_value":
-            g_star, v_star = firsts_nn.get(i, (None, None))
-            if g_star is None:
-                col_out = F.lit(None).cast(t)
-            else:
-                global_le = F.col("_adt_roff") + F.count(F.lit(1)).over(wr)
-                col_out = F.when(
-                    global_le >= F.lit(g_star), F.lit(v_star).cast(t)
-                ).otherwise(F.lit(None).cast(t))
-        elif fn == "nth_value":
-            val = None
-            if n_total >= n:
-                pid_star = max(p for p in row_off if row_off[p] < n)
-                hit = (
-                    work_s.filter(
-                        (F.col("_adt_pid") == pid_star)
-                        & (F.col("_adt_rn") == n - row_off[pid_star])
-                    )
-                    .select(f"_adt_e{i}")
-                    .collect()
-                )
-                val = hit[0][0] if hit else None
-            global_le = F.col("_adt_roff") + F.count(F.lit(1)).over(wr)
-            col_out = F.when(
-                global_le >= F.lit(n), F.lit(val).cast(t)
-            ).otherwise(F.lit(None).cast(t))
-        else:
-            raise ValueError(f"unsupported frame-value function {fn!r}")
-        out = out.withColumn(name, col_out)
-    return out.drop(*helper_cols, *expr_names)
-
-
-def _bounded_mark(frame: DataFrame, order_cols: list, aggs: list[tuple]) -> DataFrame:
-    """``frame`` (already pid-assigned) + the concrete ``_adt_e{i}``
-    argument columns (count(*) rides a literal 1) + the ascending /
-    descending per-pid row numbers — the working shape of BOTH
-    attach_global_bounded_aggs' chain frame and its driver-state twin
-    (one builder, so the two can never drift; round-12 also hands it
-    to the SQL rewrite's parallel state precompute)."""
-    from pyspark.sql import Window as W
-
-    sort_cols = [getattr(c, d)() for c, d in order_cols]
-    out = frame
-    for i, (_fn, col, _a, _b, _name) in enumerate(aggs):
-        out = out.withColumn(f"_adt_e{i}", F.lit(1) if col is None else col)
-    w_pid = W.partitionBy("_adt_pid").orderBy(*sort_cols)
-    w_pid_desc = W.partitionBy("_adt_pid").orderBy(
-        *[getattr(c, _INVERT_ORDER[d])() for c, d in order_cols]
-    )
-    return out.withColumn(
-        "_adt_rn", F.row_number().over(w_pid)
-    ).withColumn("_adt_rnd", F.row_number().over(w_pid_desc))
-
-
-def _bounded_boundary_rows(marked_s: DataFrame, aggs: list[tuple]) -> list:
-    """The ≤ n_parts × (max_a+max_b)-row edge collect feeding
-    attach_global_bounded_aggs' patch arrays (``pre_state[0]``), or
-    [] when every frame side is unbounded/zero."""
-    max_a = max((a for _f, _c, a, _b, _n in aggs if a is not None), default=0)
-    max_b = max((b for _f, _c, _a, b, _n in aggs if b is not None), default=0)
-    if max_a == 0 and max_b == 0:
-        return []
-    expr_names = [f"_adt_e{i}" for i in range(len(aggs))]
-    return (
-        marked_s.filter(
-            (F.col("_adt_rn") <= max_b) | (F.col("_adt_rnd") <= max_a)
-        )
-        .select("_adt_pid", "_adt_rn", "_adt_rnd", *expr_names)
-        .collect()
-    )
-
-
-def _bounded_tot_exprs(aggs: list[tuple]) -> list:
-    """Per-pid totals aggregate expressions for the unbounded frame
-    sides (``pre_state[1]`` rows / the fused composite collect) —
-    aliases are exactly what attach_global_bounded_aggs reads back;
-    [] when no side is unbounded.  Aggregates the RAW argument
-    expressions (count(*) rides a literal 1), so the fused composite
-    needs no _adt_e/_adt_rn preparation at all."""
-    tot_exprs, tot_keys = [], []
-    for i, (fn, c, a, b, _name) in enumerate(aggs):
-        if a is not None and b is not None:
-            continue
-        for prim in (["sum", "count"] if fn == "avg" else [fn]):
-            key = (i, prim)
-            if key in tot_keys:
-                continue
-            tot_keys.append(key)
-            e = F.lit(1) if c is None else c
-            agg_e = F.count(e) if prim == "count" else getattr(F, prim)(e)
-            tot_exprs.append(agg_e.alias(f"_adt_t_{prim}{i}"))
-    return tot_exprs
-
-
-def attach_global_bounded_aggs(
-    df: DataFrame,
-    order_cols: list,
-    aggs: list[tuple],
-    n_parts: int | None = None,
-    state_src: DataFrame | None = None,
-    pre_state: tuple | None = None,
-) -> DataFrame:
-    """Two-phase GLOBAL BOUNDED-FRAME aggregates — ``sum/count/min/
-    max/avg(expr) OVER (ORDER BY … ROWS BETWEEN a PRECEDING AND b
-    FOLLOWING)`` (including the a..CURRENT ROW and CURRENT ROW..b
-    forms) without the single-partition WindowExec cliff (round-11,
-    the r10 verdict's #2: the global moving average is the most
-    common remaining unpartitioned shape in ported analytics —
-    DataFusion runs it parallel, ``datafusion-functions-window``,
-    Cargo.lock:1818; SQL pass-through main.rs:116).
-
-    ``aggs``: list of (fn, expr_col_or_None, a, b, out_name) with
-    a, b ≥ 0 literal row counts or ``None`` for an UNBOUNDED side
-    (round-11 second wave: ``ROWS BETWEEN UNBOUNDED PRECEDING AND b
-    FOLLOWING``, ``a PRECEDING AND UNBOUNDED FOLLOWING``, and the
-    row-exclusive cumulative ``UNBOUNDED PRECEDING AND CURRENT ROW``
-    — which differs from the family's default RANGE frame under tied
-    keys, so it needs this ROW-space construction).  An unbounded
-    side's out-of-partition contribution is the exclusive
-    prefix/suffix FOLD of the per-pid totals (the running-aggregate
-    family's offsets, in row space), re-entered as one typed scalar
-    per pid through the same broadcast join the edge arrays use.
-    (``None`` expr means ``count(*)``, carried as a literal-1 column
-    so one machinery serves all.)
-
-    Construction: a ROWS frame bounded by (a, b) covers global
-    positions [pos−a, pos+b]; after the deterministic range
-    partitioning, the LOCAL window ``rowsBetween(−a, b)`` covers
-    exactly the frame's in-partition part, and only the first a rows
-    / last b rows of each partition miss values — the last a global
-    rows before the partition (earlier pids' tails) and the first b
-    after it (later pids' heads), the same ≤ n_parts × (a+b)-row
-    boundary collect the offset family uses.  The missing part is
-    always a CONTIGUOUS EDGE SLICE of those arrays, so the driver
-    pre-folds SUFFIX-aggregate arrays (left side: element k = agg of
-    the last k boundary values, k ≤ a) and PREFIX-aggregate arrays
-    (right side, k ≤ b) per call, re-entered through one ≤ n_parts-row
-    broadcast join — each row then picks ONE element
-    (``element_at(arr, m+1)``, m = the clamped missing-row count) and
-    null-skippingly combines it with the local window value: sums/
-    counts add, min/max fold via least/greatest, avg decomposes into
-    sum+count.  No HOFs, no per-row folds — everything stays in
-    whole-stage codegen.
-
-    NULL discipline matches the engines': sum/min/max over a frame
-    with no non-null argument are NULL (the identity element of every
-    pre-folded array is NULL at k=0; counts use 0), and count(expr)
-    counts non-nulls only.
-
-    Exactness: values are carried verbatim and the combine is the
-    same ± fold both engines run, so integer/decimal arguments are
-    exact; float arguments re-associate (left-fold + local + right-
-    fold instead of one sequential fold) — the module's documented
-    caveat, same as the running-aggregate family.  Output dtypes are
-    typed from Spark's own schema (sum → sum result type, avg → the
-    native window avg type, min/max → the input type).
-
-    Scale shape: ONE pid-keyed shuffle feeding the local windows (all
-    partitioned by pid — one exchange) + two key-pruned sampling
-    scans + one bounded boundary collect (≤ n_parts × (max_a+max_b)
-    rows); per-row state is O(a+b) broadcast array elements, nothing
-    O(data) materializes, no single-partition exchange, no checkpoint
-    (plan-checked in tests/test_plans.py).
-    """
-    from pyspark.sql import Window as W
-    from pyspark.sql import types as T
-
-    sort_cols = [getattr(c, d)() for c, d in order_cols]
-    max_a = max((a for _f, _c, a, _b, _n in aggs if a is not None), default=0)
-    max_b = max((b for _f, _c, _a, b, _n in aggs if b is not None), default=0)
-    need_totals = any(
-        a is None or b is None for _f, _c, a, b, _n in aggs
-    )
-
-    # concrete expr columns + per-pid row numbers via the shared
-    # builder (_bounded_mark — one construction for the chain frame,
-    # the state twin and the rewrite's parallel precompute)
-    expr_names = [f"_adt_e{i}" for i in range(len(aggs))]
-    made_pid = "_adt_pid" not in df.columns
-    ranged = _assign_range_pids(df, order_cols, n_parts) if made_pid else df
-    marked = _bounded_mark(ranged, order_cols, aggs)
-    e_types = {n: marked.schema[n].dataType for n in expr_names}
-    # result types from Spark's own schema (dtype parity contract)
-    sum_types = {
-        n: marked.select(F.sum(F.col(n)).alias("_adt_x")).schema[
-            "_adt_x"
-        ].dataType
-        for n in expr_names
-    }
-    avg_types = {
-        n: marked.select(F.avg(F.col(n)).alias("_adt_x")).schema[
-            "_adt_x"
-        ].dataType
-        for n in expr_names
-    }
-
-    w_pid = W.partitionBy("_adt_pid").orderBy(*sort_cols)
-    # state_src: see attach_global_ranks — boundary rows and per-pid
-    # totals are identical on the short-lineage twin
-    if state_src is not None:
-        marked_s = _bounded_mark(state_src, order_cols, aggs)
-    else:
-        marked_s = marked
-    helper_cols = ["_adt_rn", "_adt_rnd"] + (
-        ["_adt_pid"] if made_pid else []
-    )
-
-    # which primitives each call needs, per side (avg = sum + count)
-    def _prims(fn: str) -> list[str]:
-        return ["sum", "count"] if fn == "avg" else [fn]
-
-    def _fold(prim: str, vals: list):
-        nn = [v for v in vals if v is not None]
-        if prim == "count":
-            return len(nn)
-        if not nn:
-            return None
-        if prim == "sum":
-            out = nn[0]
-            for v in nn[1:]:
-                out = out + v
-            return out
-        return min(nn) if prim == "min" else max(nn)
-
-    def _combine(prim: str, x, y):
-        if x is None:
-            return y
-        if y is None:
-            return x
-        if prim in ("sum", "count"):
-            return x + y
-        return min(x, y) if prim == "min" else max(x, y)
-
-    def _state_type(prim: str, n: str):
-        if prim == "count":
-            return T.LongType()
-        if prim == "sum":
-            return sum_types[n]
-        return e_types[n]
-
-    need_patch = max_a > 0 or max_b > 0
-    patch_cols: list[str] = []
-    fields = [T.StructField("_adt_jpid", T.IntegerType(), False)]
-    specs: list[tuple] = []  # array specs: (name, side, prim, i, depth)
-    uspecs: list[tuple] = []  # scalar specs: (name, side, prim, i)
-    pids: list[int] = []
-    prefix: dict[int, list] = {}
-    suffix: dict[int, list] = {}
-
-    if need_patch:
-        # pre_state (round-12): (boundary_rows, totals_rows) from the
-        # caller's parallel precompute (_bounded_boundary_rows /
-        # _bounded_tot_exprs on the state twin)
-        boundary = (
-            pre_state[0]
-            if pre_state is not None and pre_state[0] is not None
-            else _bounded_boundary_rows(marked_s, aggs)
-        )
-        pids = sorted({int(r._adt_pid) for r in boundary})
-        heads: dict[int, list] = {p: [] for p in pids}
-        tails: dict[int, list] = {p: [] for p in pids}
-        for r in sorted(boundary, key=lambda r: (r._adt_pid, r._adt_rn)):
-            p = int(r._adt_pid)
-            if int(r._adt_rn) <= max_b:
-                heads[p].append(r)
-            if int(r._adt_rnd) <= max_a:
-                tails[p].append(r)
-        # prefix[p]: last max_a GLOBAL rows before p (ascending);
-        # suffix[p]: first max_b GLOBAL rows after p (ascending) —
-        # the offset family's fold
-        acc: list = []
-        for p in pids:
-            prefix[p] = acc[-max_a:] if max_a else []
-            acc = (acc + tails[p])[-max_a:] if max_a else []
-        acc = []
-        for p in reversed(pids):
-            suffix[p] = acc[:max_b]
-            acc = (heads[p] + acc)[:max_b]
-
-    # unbounded-side state: per-pid TOTALS per needed (call, prim),
-    # exclusive prefix/suffix-folded into one typed scalar per pid
-    # (the running-aggregate family's offsets, in row space)
-    luoff: dict[tuple, dict[int, object]] = {}
-    ruoff: dict[tuple, dict[int, object]] = {}
-    if need_totals:
-        totals_rows = (
-            pre_state[1]
-            if pre_state is not None and pre_state[1] is not None
-            else marked_s.groupBy("_adt_pid")
-            .agg(*_bounded_tot_exprs(aggs))
-            .collect()
-        )
-        totals = {int(r._adt_pid): r for r in totals_rows}
-        pids = sorted(set(pids) | set(totals))
-        for i, (fn, _c, a, b, _name) in enumerate(aggs):
-            for prim in _prims(fn):
-                if a is None:
-                    offs, acc_v = {}, None
-                    for p in pids:
-                        offs[p] = acc_v
-                        acc_v = _combine(
-                            prim, acc_v, totals[p][f"_adt_t_{prim}{i}"]
-                        )
-                    luoff[(i, prim)] = offs
-                if b is None:
-                    offs, acc_v = {}, None
-                    for p in reversed(pids):
-                        offs[p] = acc_v
-                        acc_v = _combine(
-                            prim, acc_v, totals[p][f"_adt_t_{prim}{i}"]
-                        )
-                    ruoff[(i, prim)] = offs
-
-    for i, (fn, _c, a, b, _name) in enumerate(aggs):
-        for prim in _prims(fn):
-            for side, bound, store in (("l", a, luoff), ("r", b, ruoff)):
-                if bound is None:
-                    nm = f"_adt_{side}u_{prim}{i}"
-                    uspecs.append((nm, side, prim, i))
-                    fields.append(
-                        T.StructField(
-                            nm, _state_type(prim, f"_adt_e{i}"), True
-                        )
-                    )
-                    patch_cols.append(nm)
-                elif bound > 0:
-                    nm = f"_adt_{side}_{prim}{i}"
-                    specs.append((nm, side, prim, i, bound))
-                    fields.append(
-                        T.StructField(
-                            nm,
-                            T.ArrayType(
-                                _state_type(prim, f"_adt_e{i}"), True
-                            ),
-                            False,
-                        )
-                    )
-                    patch_cols.append(nm)
-
-    if len(fields) > 1:
-        rows = []
-        for p in pids:
-            row: list = [p]
-            s_i, u_i = 0, 0
-            for fld in fields[1:]:
-                if isinstance(fld.dataType, T.ArrayType):
-                    _nm, side, prim, i, depth = specs[s_i]
-                    s_i += 1
-                    src = prefix[p] if side == "l" else suffix[p]
-                    vals = [getattr(r, f"_adt_e{i}") for r in src]
-                    vals = vals[-depth:] if side == "l" else vals[:depth]
-                    if side == "l":
-                        # element k+1 = agg of last k values
-                        arr = [
-                            _fold(prim, vals[len(vals) - k:] if k else [])
-                            for k in range(0, len(vals) + 1)
-                        ]
-                    else:
-                        # element k+1 = agg of first k values
-                        arr = [
-                            _fold(prim, vals[:k])
-                            for k in range(0, len(vals) + 1)
-                        ]
-                    row.append(arr)
-                else:
-                    _nm, side, prim, i = uspecs[u_i]
-                    u_i += 1
-                    store = luoff if side == "l" else ruoff
-                    row.append(store[(i, prim)][p])
-            rows.append(tuple(row))
-        marked = _broadcast_pid_join(marked, rows, T.StructType(fields))
-
-    def _edge_val(side: str, prim: str, i: int, a: int, b: int):
-        """The missing-edge contribution column for one call side:
-        element_at(arr, m+1) with m = clamped missing-row count."""
-        nm = f"_adt_{side}_{prim}{i}"
-        arr = F.col(nm)
-        if side == "l":
-            need = F.lit(a) - F.col("_adt_rn") + F.lit(1)
-            cond = F.col("_adt_rn") <= a
-        else:
-            need = F.lit(b) - F.col("_adt_rnd") + F.lit(1)
-            cond = F.col("_adt_rnd") <= b
-        m = F.when(cond, F.least(need, F.size(arr) - 1)).otherwise(F.lit(0))
-        return F.element_at(arr, (m + 1).cast("int"))
-
-    def _patch_val(side: str, prim: str, i: int, a, b, null_t):
-        """The out-of-partition contribution column for one call
-        side: the broadcast SCALAR for an unbounded side, the edge
-        array's element for a finite side > 0, a typed NULL for a
-        zero side."""
-        bound = a if side == "l" else b
-        if bound is None:
-            return F.col(f"_adt_{side}u_{prim}{i}")
-        if bound > 0:
-            return _edge_val(side, prim, i, a, b)
-        return F.lit(None).cast(null_t)
-
-    out = marked
-    for i, (fn, col, a, b, name) in enumerate(aggs):
-        e = F.col(f"_adt_e{i}")
-        en = f"_adt_e{i}"
-        lo_loc = W.unboundedPreceding if a is None else -a
-        hi_loc = W.unboundedFollowing if b is None else b
-        wloc = w_pid.rowsBetween(lo_loc, hi_loc)
-        sum_t = sum_types[en]
-        zero = F.lit(0).cast(sum_t)
-
-        def _sum3(local, i=i, a=a, b=b, zero=zero, sum_t=sum_t):
-            lv = _patch_val("l", "sum", i, a, b, sum_t)
-            rv = _patch_val("r", "sum", i, a, b, sum_t)
-            return F.when(
-                local.isNull() & lv.isNull() & rv.isNull(),
-                F.lit(None).cast(sum_t),
-            ).otherwise(
-                F.coalesce(local.cast(sum_t), zero)
-                + F.coalesce(lv, zero)
-                + F.coalesce(rv, zero)
-            ).cast(sum_t)
-
-        def _cnt3(i=i, a=a, b=b, en=en, wloc=wloc):
-            local = F.count(F.col(en)).over(wloc)
-            # count state is never null-by-value (identity 0); the
-            # coalesce only restores count's non-nullable dtype, which
-            # element_at's / the scalar field's nullable signature
-            # would otherwise widen
-            lc = F.coalesce(
-                _patch_val("l", "count", i, a, b, T.LongType()), F.lit(0)
-            )
-            rc = F.coalesce(
-                _patch_val("r", "count", i, a, b, T.LongType()), F.lit(0)
-            )
-            return local + lc + rc
-
-        if fn == "sum":
-            combined = _sum3(F.sum(e).over(wloc))
-        elif fn == "count":
-            combined = _cnt3()
-        elif fn == "avg":
-            num = _sum3(F.sum(e).over(wloc))
-            den = _cnt3()
-            avg_t = avg_types[en]
-            combined = F.when(
-                den > 0, (num / den).cast(avg_t)
-            ).otherwise(F.lit(None).cast(avg_t))
-        elif fn in ("min", "max"):
-            local = getattr(F, fn)(e).over(wloc)
-            lv = _patch_val("l", fn, i, a, b, e_types[en])
-            rv = _patch_val("r", fn, i, a, b, e_types[en])
-            combined = (F.least if fn == "min" else F.greatest)(
-                local, lv, rv
-            )
-        else:
-            raise ValueError(f"unsupported bounded-frame aggregate {fn!r}")
-        out = out.withColumn(name, combined)
-    return out.drop(*helper_cols, *expr_names, *patch_cols)
-
-
-def attach_global_scalar_aggs(
-    df: DataFrame, aggs: list[tuple],
-) -> DataFrame:
-    """Whole-input SCALAR window aggregates — ``sum/count/min/max/avg
-    (expr) OVER ()`` — without the single-partition WindowExec cliff
-    (round-11 second wave: Spark plans an empty OVER() as a
-    SinglePartition window over the WHOLE input, yet the value is one
-    scalar; the ratio-to-total projection ``x / sum(x) OVER ()`` is
-    the canonical ported-analytics shape, and the complement forms
-    the moving-start UBF rewrite emits carry the same ``OVER
-    (PARTITION-only)`` totals — DataFusion evaluates both without a
-    cliff, datafusion-functions-window, Cargo.lock:1818).
-
-    ``aggs``: list of (fn, expr_col_or_None, out_name); ``None`` expr
-    = count(*).  Construction: ONE parallel partial+final aggregation
-    (Spark's own groupBy-less agg — map-side combine, no shuffle of
-    data rows), a 1-row collect, and the values re-enter as TYPED
-    LITERALS (the aggregate output's own Spark schema — sum/avg/count
-    native result types, min/max the input type).  No pid machinery,
-    no shuffle, nothing O(data) driver-side.
-
-    Exactness: whole-input aggregation is the same fold both engines
-    run for integer/decimal arguments; float sums re-associate
-    (partial aggregation) — the family's documented caveat."""
-    with_exprs = df
-    agg_exprs = []
-    for i, (fn, col, _name) in enumerate(aggs):
-        e = F.lit(1) if col is None else col
-        with_exprs = with_exprs.withColumn(f"_adt_e{i}", e)
-        c = F.col(f"_adt_e{i}")
-        agg_exprs.append(
-            (F.count(c) if fn == "count" else getattr(F, fn)(c)).alias(
-                f"_adt_g{i}"
-            )
-        )
-    # no state_src twin (round-12, ADVICE r11): the SQL rewrite
-    # attaches scalar OVER () aggregates on the bare inner BEFORE any
-    # chaining, so ``df`` already IS the short-lineage frame
-    row_df = with_exprs.agg(*agg_exprs)
-    g_types = {f.name: f.dataType for f in row_df.schema.fields}
-    row = row_df.collect()[0]
-    out = with_exprs
-    for i, (_fn, _col, name) in enumerate(aggs):
-        out = out.withColumn(
-            name, F.lit(row[f"_adt_g{i}"]).cast(g_types[f"_adt_g{i}"])
-        )
-    return out.drop(*[f"_adt_e{i}" for i in range(len(aggs))])
-
-
 @register(
     "q_global_rank_chars",
     oracle="""
@@ -2990,7 +1258,7 @@ def q_global_rank_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase construction that scales:
 
     1. range-partition on the total-order key (n_chars, doc_id) via
-       the DETERMINISTIC bounds partitioner (_assign_range_pids:
+       the DETERMINISTIC bounds partitioner (global_window._assign_range_pids:
        sample once → literal split bounds → broadcast interval join),
        so partitions are balanced and partition i's keys all precede
        partition i+1's;
@@ -3015,11 +1283,17 @@ def q_global_rank_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition exchange anywhere (plan-checked: the only
     Window is partitioned).
     """
+    from adt_spark.operators.global_window import OrderWindows, plan_global_windows
+
     docs = tables(spark, sf_dir)["documents"]
-    return attach_global_ranks(
+    return plan_global_windows(
         docs.select("doc_id", F.col("n_chars").cast("long").alias("n_chars")),
-        [(F.col("n_chars"), "asc"), (F.col("doc_id"), "asc")],
-        [("row_number", "rnk")],
+        [
+            OrderWindows(
+                [(F.col("n_chars"), "asc"), (F.col("doc_id"), "asc")],
+                ranks=[("row_number", "rnk")],
+            )
+        ],
     ).select("doc_id", "n_chars", "rnk")
 
 
@@ -3047,7 +1321,7 @@ def q_sql_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     which ranks in parallel; Spark's native plan is a
     single-partition WindowExec).  The statement here is EXACTLY what
     the oracle runs, but executed through the dialect rewrite
-    (``dialect/global_rank.py`` → ``attach_global_ranks``): the same
+    (``dialect/global_rank.py`` → ``global_window._attach_ranks``): the same
     text a user would feed ``ADTContext.sql``.  The oracle proves the
     rewrite end-to-end — all three ranking functions, a DESC key, a
     tiebreak column, and a pushed-down WHERE — and the plan check in
@@ -3360,7 +1634,7 @@ def q_sql_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sum(x) OVER (ORDER BY …)``, which Spark executes on ONE task).
     The statement here is EXACTLY what the oracle runs, executed
     through the dialect rewrite (``dialect/global_rank.py`` →
-    ``attach_global_running_aggs``): sum / count(*) / avg on the
+    ``global_window._attach_running``): sum / count(*) / avg on the
     two-key total order, plus a single-key max whose TIES exercise
     the peer-inclusive default RANGE frame across the split (the
     max's order differs from the others', proving the per-family
@@ -3399,7 +1673,7 @@ def q_sql_global_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics a curriculum/packing analysis writes as deltas in a
     global order, single-partition in native Spark.  The statement is
     EXACTLY what the oracle runs, executed through the dialect
-    rewrite (``dialect/global_rank.py`` → ``attach_global_offsets``):
+    rewrite (``dialect/global_rank.py`` → ``global_window._attach_offsets``):
     a bare lag, the same lag inside an arithmetic expression (span
     substitution under composition), and a lead with an explicit
     offset of 3 (boundary rows patch from neighbor-partition heads
@@ -3442,7 +1716,7 @@ def q_sql_global_firstlast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cargo.lock:1818) and native Spark puts on ONE task.  The
     statement is EXACTLY what the oracle runs, executed through the
     dialect rewrite (``dialect/global_rank.py`` →
-    ``attach_global_first_last``): under the default peer-inclusive
+    ``global_window._attach_first_last``): under the default peer-inclusive
     frame first_value is the global head (one typed literal),
     last_value is the purely LOCAL peer-group tail (range partitioner
     co-locates peers — no patching at all), and nth_value guards the
@@ -3489,7 +1763,7 @@ def q_sql_moving_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     datafusion-functions-window, Cargo.lock:1818; SQL pass-through
     main.rs:116).  The statement is EXACTLY what the oracle runs,
     executed through the dialect rewrite (``dialect/global_rank.py``
-    → ``attach_global_bounded_aggs``): a trailing sum (j PRECEDING ..
+    → ``global_window._attach_bounded``): a trailing sum (j PRECEDING ..
     CURRENT ROW), a centered avg (PRECEDING .. FOLLOWING), a
     forward-looking min (CURRENT ROW .. FOLLOWING), and the
     abbreviated ROWS j PRECEDING count — every supported bound shape
@@ -3530,7 +1804,7 @@ def q_sql_offsets_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global edge (offset row nonexistent) — never where an
     existing offset row's value is merely NULL — which the
     construction reads off the boundary-array patch index itself
-    (``attach_global_offsets``; the array holds min(j, rows-beyond-
+    (``global_window._attach_offsets``; the array holds min(j, rows-beyond-
     the-edge) values, so an out-of-range index IS the edge).  The
     statement is EXACTLY what the oracle runs; lag 2-deep and lead
     5-deep cross partition boundaries at both global ends."""
@@ -3667,7 +1941,7 @@ def q_sql_cumulative_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     FOLD of per-pid totals (one bounded ≤ n_parts-row collect)
     re-entered as a typed broadcast scalar — the running-aggregate
     family's offsets in row space — while the finite side keeps the
-    edge-array patch (``attach_global_bounded_aggs``).  The statement
+    edge-array patch (``global_window._attach_bounded``).  The statement
     is EXACTLY what the oracle runs; the plan check pins no
     SinglePartition Window."""
     from adt_spark.dialect.global_rank import maybe_rewrite_global_rank
@@ -3712,8 +1986,8 @@ def q_sql_shifted_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     Construction: the value of a shifted frame is the
     SHIFTED-TO-CURRENT frame's value at the shifted position, so the
     executor chains two existing attachments on ONE pid assignment —
-    ``attach_global_bounded_aggs`` for the [lo−hi, 0] inner
-    aggregate, then ``attach_global_offsets`` lag/lead by |hi| — and
+    ``global_window._attach_bounded`` for the [lo−hi, 0] inner
+    aggregate, then ``global_window._attach_offsets`` lag/lead by |hi| — and
     the offset's global-edge NULL is exactly the empty frame's value
     (count coalesces to its empty-frame 0).  The statement is EXACTLY
     what the oracle runs; plan check pins no SinglePartition
@@ -3748,7 +2022,7 @@ def q_sql_ratio_to_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans an empty OVER() as a SinglePartition window over the
     whole input; the rewrite computes ONE parallel partial+final
     aggregation (no data shuffle), collects the single row, and
-    substitutes typed literals (``attach_global_scalar_aggs``) — the
+    substitutes typed literals (``global_window._attach_scalars``) — the
     share division then runs at scan speed.  Integer sums are exact,
     so the one double division is bit-identical cross-engine.  The
     statement is EXACTLY what the oracle runs, with a call composed

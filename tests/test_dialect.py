@@ -483,53 +483,107 @@ def test_global_rank_rewrite_distribution_family(spark, sf_dir):
     )
 
 
-@pytest.mark.parametrize("seed", [7, 23, 91])
-def test_attach_global_ranks_matches_native_on_ties_and_nulls(spark, seed):
-    """attach_global_ranks vs Spark's own single-partition windows on
-    seeded random data with heavy TIES and NULL keys — all six
-    functions, ASC and DESC: the two-phase construction must be
-    value-identical to the native plan it replaces (range
-    partitioning co-locates peers, NULLs included — Spark places the
-    null group at one edge and the partitioner uses the same sort)."""
+def _global_window_case(spark, case):
+    """(frame of id / k / v, n_parts) for the planner-vs-native
+    comparison: an int seeds heavy key TIES and NULL keys at the
+    default partition count; ``k_mod_37`` is 200 rows with k = id % 37
+    over 4 pids, so every family's state crosses multi-pid edges."""
     import random
 
     from pyspark.sql import functions as F
 
-    from adt_spark.operators.sampling import attach_global_ranks
-
-    rng = random.Random(seed)
+    if case == "k_mod_37":
+        return spark.range(200).select(
+            F.col("id"),
+            (F.col("id") % 37).alias("k"),
+            F.when(F.col("id") % 5 != 0, F.col("id")).alias("v"),
+        ), 4
+    rng = random.Random(case)
     rows = [
         (i, rng.choice([None, 0, 1, 2, 3, 3, 3, 7]), rng.randint(0, 4))
         for i in range(rng.randint(30, 120))
     ]
     df = spark.createDataFrame(rows, "id int, k int, w int")
-    df.createOrReplaceTempView("grk_t")
-    for direction, sql_dir in (("asc", ""), ("desc", " DESC")):
-        got = attach_global_ranks(
-            df,
-            [(F.col("k"), direction), (F.col("id"), "asc")],
-            [
-                ("row_number", "rn"),
-                ("rank", "rk"),
-                ("dense_rank", "dr"),
-                ("percent_rank", "pr"),
-                ("cume_dist", "cd"),
-                ("ntile(3)", "nt"),
-            ],
-        ).select("id", "rn", "rk", "dr", "pr", "cd", "nt")
-        want = spark.sql(
-            f"SELECT id, "
-            f"CAST(row_number() OVER (ORDER BY k{sql_dir}, id) AS BIGINT) rn, "
-            f"CAST(rank() OVER (ORDER BY k{sql_dir}, id) AS BIGINT) rk, "
-            f"CAST(dense_rank() OVER (ORDER BY k{sql_dir}, id) AS BIGINT) dr, "
-            f"CAST(percent_rank() OVER (ORDER BY k{sql_dir}, id) AS DOUBLE) pr, "
-            f"CAST(cume_dist() OVER (ORDER BY k{sql_dir}, id) AS DOUBLE) cd, "
-            f"CAST(ntile(3) OVER (ORDER BY k{sql_dir}, id) AS BIGINT) nt "
-            f"FROM grk_t"
+    return df.select(
+        "id", "k", F.when(F.col("id") % 4 != 0, F.col("w")).alias("v")
+    ), None
+
+
+@pytest.mark.parametrize("case", [7, 23, 91, "k_mod_37"])
+def test_attach_global_ranks_matches_native_on_ties_and_nulls(spark, case):
+    """The global-window planner vs Spark's own single-partition
+    ``Window.orderBy`` windows on data with heavy TIES and NULL keys
+    and values, ASC and DESC: every family — all six ranking
+    functions, running aggregates, bounded and shifted ROWS frames,
+    lag/lead (with a default), first/last/nth (IGNORE NULLS included)
+    — must be value-identical to the native plan it replaces (range
+    partitioning co-locates peers, NULLs included — Spark places the
+    null group at one edge and the partitioner uses the same sort).
+    The id tiebreak makes the order total, as the row-position
+    families require."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from adt_spark.operators.global_window import (
+        OrderWindows,
+        plan_global_windows,
+    )
+
+    df, n_parts = _global_window_case(spark, case)
+    v = F.col("v")
+    for direction in ("asc", "desc"):
+        keys = [(F.col("k"), direction), (F.col("id"), "asc")]
+        w = Window.orderBy(getattr(F.col("k"), direction)(), F.col("id"))
+        native = {
+            "rn": F.row_number().over(w).cast("long"),
+            "rk": F.rank().over(w).cast("long"),
+            "dr": F.dense_rank().over(w).cast("long"),
+            "pr": F.percent_rank().over(w),
+            "cd": F.cume_dist().over(w),
+            "nt": F.ntile(3).over(w).cast("long"),
+            "rs": F.sum(v).over(w),
+            "ra": F.avg(v).over(w),
+            "rc": F.count(F.lit(1)).over(w),
+            "rm": F.min(v).over(w),
+            "bs": F.sum(v).over(w.rowsBetween(-2, 3)),
+            "bc": F.count(F.lit(1)).over(
+                w.rowsBetween(Window.unboundedPreceding, 1)
+            ),
+            "bm": F.min(v).over(w.rowsBetween(-4, Window.unboundedFollowing)),
+            "bx": F.max(v).over(w.rowsBetween(-3, -1)),
+            "ba": F.avg(v).over(w.rowsBetween(1, 2)),
+            "l1": F.lag(v, 1).over(w),
+            "l3": F.lead(v, 3, -1).over(w),
+            "fv": F.first(v).over(w),
+            "lv": F.last(v).over(w),
+            "nv": F.nth_value(v, 5).over(w),
+            "fvn": F.first(v, ignorenulls=True).over(w),
+            "lvn": F.last(v, ignorenulls=True).over(w),
+        }
+        order = OrderWindows(
+            keys,
+            ranks=[("row_number", "rn"), ("rank", "rk"), ("dense_rank", "dr"),
+                   ("percent_rank", "pr"), ("cume_dist", "cd"),
+                   ("ntile(3)", "nt")],
+            running=[("sum", v, "rs"), ("avg", v, "ra"), ("count", None, "rc"),
+                     ("min", v, "rm")],
+            bounded=[("sum", v, 2, 3, "bs"), ("count", None, None, 1, "bc"),
+                     ("min", v, 4, None, "bm"), ("max", v, 3, -1, "bx"),
+                     ("avg", v, -1, 2, "ba")],
+            offsets=[("lag", v, 1, "l1"), ("lead", v, 3, "l3", F.lit(-1))],
+            first_last=[("first_value", v, None, "fv"),
+                        ("last_value", v, None, "lv"),
+                        ("nth_value", v, 5, "nv"),
+                        ("first_value", v, None, "fvn", True),
+                        ("last_value", v, None, "lvn", True)],
         )
+        got = plan_global_windows(df, [order], n_parts=n_parts).select(
+            "id", *native
+        )
+        want = df.select("id", *[c.alias(n) for n, c in native.items()])
         g = sorted(tuple(r) for r in got.collect())
-        w = sorted(tuple(r) for r in want.collect())
-        assert g == w, f"seed={seed} dir={direction}"
+        w_rows = sorted(tuple(r) for r in want.collect())
+        assert g == w_rows, f"case={case} dir={direction}"
 
 
 def test_global_rank_rewrite_url_table(spark):
@@ -649,7 +703,7 @@ def test_global_rewrite_preserves_native_dtypes(spark):
     column's own type (the round-9 Python-value inspection widened
     int32→bigint), sum returns Spark's sum result type, avg the
     native avg type (decimal included).  The rank family stays BIGINT
-    by documented contract (attach_global_ranks docstring) and is
+    by documented contract (global_window._attach_ranks docstring) and is
     pinned by CASTs in the oracled queries, so it is absent here.
     Values must match too."""
     import datetime
@@ -811,12 +865,27 @@ def test_global_rewrite_reserved_prefix_falls_back(spark):
     assert got == [(1, 1), (2, 2)]
 
 
-def test_two_order_state_actions_fused(spark, sf_dir, monkeypatch):
+@pytest.mark.parametrize(
+    "stmt, n_collects",
+    [
+        ("_SQL_TWO_ORDERS_STMT", 4),
+        ("_SQL_RANK_STMT", 2),
+        ("_SQL_OFFSETS_STMT", 2),
+        ("_SQL_FIRSTLAST_STMT", 3),
+    ],
+    ids=["two_orders", "dense_rank", "offsets", "first_last"],
+)
+def test_two_order_state_actions_fused(
+    spark, sf_dir, monkeypatch, stmt, n_collects
+):
     """Round-12 (r11 verdict item 2): per statement the rewrite runs
     ONE bounds sample + ONE fused composite per-pid state collect per
     distinct order — the two-order statement submits exactly 4 driver
     collects (previously 5: the rank and running families each paid
-    their own state aggregation action)."""
+    their own state aggregation action).  The other pins: dense_rank's
+    two-level state (sample + one keyed collect), lag/lead (sample +
+    one edge collect), first/last/nth (sample + one stats collect +
+    one nth-row lookup)."""
     from adt_spark.dialect.global_rank import maybe_rewrite_global_rank
     from adt_spark.operators import sampling as S
     from adt_spark.queries import tables
@@ -840,9 +909,11 @@ def test_two_order_state_actions_fused(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(cls, "collect", counting)
     monkeypatch.setattr(cls, "count", counting_count)
-    out = maybe_rewrite_global_rank(spark, S._SQL_TWO_ORDERS_STMT)
+    out = maybe_rewrite_global_rank(spark, getattr(S, stmt))
     assert out is not None
-    assert len(calls) == 4, f"expected 4 driver collects, got {len(calls)}"
+    assert len(calls) == n_collects, (
+        f"expected {n_collects} driver collects, got {len(calls)}"
+    )
     # r11 claim, machine-checked (ADVICE r11): the bounds sample is
     # count-free — no count() action anywhere in the construction
     assert not counts, f"construction ran {len(counts)} count() actions"
@@ -889,13 +960,13 @@ def test_bounds_sample_plans_top_k(spark):
     bounded heap per partition, no full sort, no count pass."""
     from pyspark.sql import functions as F
 
-    from adt_spark.operators import sampling as S
+    from adt_spark.operators import global_window as G
 
     df = spark.range(1000).select(
         (F.col("id") % 13).alias("k"), F.col("id").alias("v")
     )
     keys_df = df.select(F.col("k").alias("_adt_k0"))
-    target = max(4 * S._BOUND_SAMPLE_PER_PART, 256)
+    target = max(4 * G._BOUND_SAMPLE_PER_PART, 256)
     sample = keys_df.orderBy(
         F.xxhash64(F.monotonically_increasing_id(), F.lit(1729))
     ).limit(target)
@@ -903,55 +974,91 @@ def test_bounds_sample_plans_top_k(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_attach_pre_state_paths_equal_internal(spark):
-    """The round-12 ``pre_state`` injection (fused/parallel driver
-    state) must be value-identical to each attach family's internal
-    state action — same rows, same dtypes, ties and multi-pid edges
-    included."""
+def _job_ids(spark) -> set:
+    """Ids of every job the JVM status store has seen, once the
+    listener bus has drained."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    it = jsc.statusStore().jobsList(None).iterator()
+    out = set()
+    while it.hasNext():
+        out.add(it.next().jobId())
+    return out
+
+
+def test_global_window_attach_submits_no_jobs(spark):
+    """The planner's state phase runs every driver action up front;
+    the attach phase — every family's attach function over that
+    precomputed state, chained over two orders — only builds the plan
+    and submits no Spark job."""
     from pyspark.sql import functions as F
 
-    from adt_spark.operators import sampling as S
+    from adt_spark.operators import global_window as G
 
     df = spark.range(200).select(
-        (F.col("id") % 37).alias("k"), F.col("id").alias("v")
+        F.col("id"),
+        (F.col("id") % 37).alias("k"),
+        F.when(F.col("id") % 5 != 0, F.col("id")).alias("v"),
     )
-    keys = [(F.col("k"), "asc"), (F.col("v"), "asc")]
-    np_ = 4
-    splits = S._sample_split_bounds(df, keys, np_)
-    base = S._assign_range_pids(df, keys, n_parts=np_, splits=splits)
-
-    rank_specs = [("row_number", "rn"), ("rank", "rk")]
-    run_specs = [("sum", F.col("v"), "s"), ("avg", F.col("v"), "a")]
-    prims = S._running_prims(df, run_specs)
-    comp_df = base.groupBy("_adt_pid").agg(
-        *S._ranks_state_exprs(rank_specs), *S._running_state_exprs(prims)
-    )
-    types = {f.name: f.dataType for f in comp_df.schema.fields}
-    rows = comp_df.collect()
-
-    def _sorted(frame):
-        return frame.orderBy("k", "v").collect()
-
-    assert _sorted(
-        S.attach_global_ranks(base, keys, rank_specs, pre_state=rows)
-    ) == _sorted(S.attach_global_ranks(base, keys, rank_specs))
-    assert _sorted(
-        S.attach_global_running_aggs(
-            base, keys, run_specs, pre_state=(rows, types)
-        )
-    ) == _sorted(S.attach_global_running_aggs(base, keys, run_specs))
-
-    bnd_specs = [
-        ("sum", F.col("v"), 2, 3, "b1"),
-        ("count", None, None, 1, "b2"),
-        ("min", F.col("v"), 4, None, "b3"),
+    v = F.col("v")
+    orders = [
+        G.OrderWindows(
+            [(F.col("k"), "asc"), (F.col("id"), "asc")],
+            ranks=[("dense_rank", "dr"), ("ntile(3)", "nt")],
+            running=[("sum", v, "rs"), ("stddev", v, "sd")],
+            bounded=[("sum", v, 2, 3, "bs"), ("min", v, None, 1, "bm")],
+            offsets=[("lag", v, 2, "l2"), ("lead", v, 1, "l1", F.lit(0))],
+            first_last=[("first_value", v, None, "fv"),
+                        ("nth_value", v, 7, "nv"),
+                        ("first_value", v, None, "fvn", True),
+                        ("last_value", v, None, "lvn", True)],
+        ),
+        G.OrderWindows(
+            [(F.col("id"), "desc")],
+            ranks=[("row_number", "rn")],
+            running=[("count", None, "rc")],
+        ),
     ]
-    marked = S._bounded_mark(base, keys, bnd_specs)
-    pre = (
-        S._bounded_boundary_rows(marked, bnd_specs),
-        marked.groupBy("_adt_pid").agg(*S._bounded_tot_exprs(bnd_specs))
-        .collect(),
+    scalars = [("sum", v, "tot")]
+    splits, state = G._gather_state(df, orders, scalars, 4)
+    before = _job_ids(spark)
+    out = G._chain(df, orders, scalars, splits, state)
+    assert _job_ids(spark) == before, "an attach function submitted a job"
+    rows = out.orderBy("id").collect()
+    assert [r.rn for r in rows] == list(range(200, 0, -1))
+    assert {r.tot for r in rows} == {sum(i for i in range(200) if i % 5)}
+
+
+def test_global_rank_rewrite_drops_its_temp_view(spark, sf_dir):
+    """The rewrite's ``_adt_global_rank_N`` view is dropped once the
+    outer statement is analysed — on the rewritten path and on the
+    fallback path (an outer statement that does not resolve over the
+    view) — and the returned frames still execute."""
+    from adt_spark import ADTContext
+    from adt_spark.dialect.global_rank import maybe_rewrite_global_rank
+    from adt_spark.operators import sampling as S
+    from adt_spark.queries import tables
+
+    tables(spark, sf_dir)
+    ctx = ADTContext(spark=spark)
+    # the construction succeeds, but `a.doc_id` cannot resolve over
+    # the unaliased view of a JOIN body, so the outer query falls back
+    fallback = (
+        "SELECT a.doc_id, row_number() OVER (ORDER BY a.n_chars, a.doc_id) "
+        "AS rn FROM documents a "
+        "JOIN (SELECT doc_id AS d2 FROM documents) b ON a.doc_id = b.d2"
     )
-    assert _sorted(
-        S.attach_global_bounded_aggs(base, keys, bnd_specs, pre_state=pre)
-    ) == _sorted(S.attach_global_bounded_aggs(base, keys, bnd_specs))
+    assert maybe_rewrite_global_rank(spark, fallback) is None
+    assert maybe_rewrite_global_rank(spark, S._SQL_RANK_STMT) is not None
+    frames = {q: ctx.sql(q) for q in (S._SQL_RANK_STMT, fallback)}
+    names = [
+        r.table_name
+        for r in ctx.sql(
+            "SELECT table_name FROM information_schema.tables"
+        ).collect()
+    ]
+    assert not [n for n in names if n.startswith("_adt_global_rank_")], names
+    for q, frame in frames.items():
+        assert sorted(map(tuple, frame.collect())) == sorted(
+            map(tuple, spark.sql(q).collect())
+        ), q

@@ -186,3 +186,30 @@ def test_keyed_env_kill_switch(spark, monkeypatch):
         )
         is None
     )
+
+
+def test_keyed_sum_warns_reassociation_once(monkeypatch):
+    """Compressing a sum re-associates its fold (per-key partials), so
+    the pass discloses it once with a RuntimeWarning; a min-only
+    statement compresses silently."""
+    import warnings
+
+    from adt_spark.dialect import keyed_windows
+
+    monkeypatch.setattr(keyed_windows, "_reassociation_warned", False)
+    min_only = (
+        "SELECT rid, min(v) OVER (PARTITION BY p ORDER BY k RANGE "
+        "BETWEEN 1 PRECEDING AND CURRENT ROW) AS m FROM kw_matrix_t"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert compress_keyed_windows(min_only) is not None
+    summed = (
+        "SELECT rid, sum(v) OVER (PARTITION BY p ORDER BY k RANGE "
+        "BETWEEN 1 PRECEDING AND CURRENT ROW) AS s FROM kw_matrix_t"
+    )
+    with pytest.warns(RuntimeWarning, match="per-key partial sums"):
+        assert compress_keyed_windows(summed) is not None
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert compress_keyed_windows(summed) is not None

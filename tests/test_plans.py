@@ -1471,34 +1471,36 @@ def test_global_window_family_plan_flat_in_n_parts(spark, sf_dir):
     the whole range-partitioned corpus per query)."""
     from pyspark.sql import functions as F
 
-    from adt_spark.operators.sampling import (
-        attach_global_bounded_aggs,
-        attach_global_first_last,
-        attach_global_offsets,
-        attach_global_ranks,
-        attach_global_running_aggs,
+    from adt_spark.operators.global_window import (
+        OrderWindows,
+        plan_global_windows,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "n_chars"
     )
     keys = [(F.col("n_chars"), "asc"), (F.col("doc_id"), "asc")]
+
+    def one_order(np, **families):
+        return plan_global_windows(
+            docs, [OrderWindows(keys, **families)], n_parts=np
+        )
+
     builders = {
-        "ranks": lambda np: attach_global_ranks(
-            docs, keys, [("row_number", "rn"), ("dense_rank", "dr")],
-            n_parts=np,
+        "ranks": lambda np: one_order(
+            np, ranks=[("row_number", "rn"), ("dense_rank", "dr")],
         ),
-        "aggs": lambda np: attach_global_running_aggs(
-            docs, keys,
-            [("sum", F.col("n_chars"), "s"), ("avg", F.col("n_chars"), "a")],
-            n_parts=np,
+        "aggs": lambda np: one_order(
+            np,
+            running=[("sum", F.col("n_chars"), "s"),
+                     ("avg", F.col("n_chars"), "a")],
         ),
-        "offsets": lambda np: attach_global_offsets(
-            docs, keys, [("lag", F.col("n_chars"), 2, "l")], n_parts=np
+        "offsets": lambda np: one_order(
+            np, offsets=[("lag", F.col("n_chars"), 2, "l")]
         ),
-        "firstlast": lambda np: attach_global_first_last(
-            docs, keys,
-            [
+        "firstlast": lambda np: one_order(
+            np,
+            first_last=[
                 ("first_value", F.col("n_chars"), None, "fv"),
                 ("last_value", F.col("n_chars"), None, "lv"),
                 ("nth_value", F.col("n_chars"), 5, "nv"),
@@ -1506,37 +1508,32 @@ def test_global_window_family_plan_flat_in_n_parts(spark, sf_dir):
                 ("first_value", F.col("n_chars"), None, "fvn", True),
                 ("last_value", F.col("n_chars"), None, "lvn", True),
             ],
-            n_parts=np,
         ),
         # round-11: bounded-frame aggregates (suffix/prefix-folded
         # boundary arrays are broadcast data like the offset family's)
-        "bounded": lambda np: attach_global_bounded_aggs(
-            docs, keys,
-            [
+        "bounded": lambda np: one_order(
+            np,
+            bounded=[
                 ("sum", F.col("n_chars"), 6, 0, "ts"),
                 ("avg", F.col("n_chars"), 3, 3, "ca"),
                 ("min", F.col("doc_id"), 0, 4, "nm"),
                 ("count", None, 9, 0, "tc"),
             ],
-            n_parts=np,
         ),
         # round-11: 3-arg lag/lead (default past the global edge)
-        "offsets_default": lambda np: attach_global_offsets(
-            docs, keys,
-            [("lag", F.col("n_chars"), 2, "l2", F.lit(-1))],
-            n_parts=np,
+        "offsets_default": lambda np: one_order(
+            np, offsets=[("lag", F.col("n_chars"), 2, "l2", F.lit(-1))],
         ),
         # round-11 second wave: unbounded sides (totals scalars mixed
         # with edge arrays in one broadcast state table)
-        "bounded_unbounded": lambda np: attach_global_bounded_aggs(
-            docs, keys,
-            [
+        "bounded_unbounded": lambda np: one_order(
+            np,
+            bounded=[
                 ("sum", F.col("n_chars"), None, 0, "cs"),
                 ("min", F.col("n_chars"), None, 2, "m1"),
                 ("max", F.col("n_chars"), 3, None, "m2"),
                 ("count", None, None, None, "nt"),
             ],
-            n_parts=np,
         ),
     }
     for name, build in builders.items():
@@ -1683,7 +1680,10 @@ def test_range_pid_two_level_route(spark, sf_dir):
     byte-stable in n_parts and free of SinglePartition exchanges."""
     from pyspark.sql import functions as F
 
-    from adt_spark.operators.sampling import attach_global_ranks
+    from adt_spark.operators.global_window import (
+        OrderWindows,
+        plan_global_windows,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "n_chars"
@@ -1691,8 +1691,10 @@ def test_range_pid_two_level_route(spark, sf_dir):
     keys = [(F.col("n_chars"), "asc"), (F.col("doc_id"), "asc")]
 
     def build(np):
-        return attach_global_ranks(
-            docs, keys, [("row_number", "rn"), ("dense_rank", "dr")],
+        return plan_global_windows(
+            docs,
+            [OrderWindows(keys, ranks=[("row_number", "rn"),
+                                       ("dense_rank", "dr")])],
             n_parts=np,
         )
 
