@@ -317,7 +317,8 @@ def spread(df: DataFrame) -> DataFrame:
     helper is safe to leave in the scale path.
 
     Partition-count probe: the REAL scan partition count via
-    ``df.rdd.getNumPartitions()``, memoized per (session, plan hash).
+    ``df.rdd.getNumPartitions()``, memoized per (session, plan, input
+    files) in the session memo registry (``operators/memo.py``).
     File count is NOT a valid proxy — Spark bin-packs small files
     (``files.openCostInBytes``) so 64 tiny files can plan as 2 scan
     partitions, which would wrongly skip the fan-out exactly when the
@@ -325,19 +326,13 @@ def spread(df: DataFrame) -> DataFrame:
     verdict watch-item) now happens ONCE per distinct plan per
     session, not per call.
     """
+    from adt_spark.operators.memo import memoize
+
     target = df.sparkSession.sparkContext.defaultParallelism
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    n = _SPREAD_MEMO.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _SPREAD_MEMO[key] = n
+    n = memoize(df.sparkSession, df, "spread", lambda: df.rdd.getNumPartitions())
     if n < target:
         return df.repartition(target)
     return df
-
-
-#: (applicationId, plan hash) → scan partition count (spread probe)
-_SPREAD_MEMO: dict[tuple[str, int], int] = {}
 
 
 def _sf_dir_signature(sf_dir: str) -> tuple:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 # MinHash parameters: 12 permutations → 4 bands × 3 rows.
@@ -56,48 +57,18 @@ _SHINGLE_SQL = """
 """
 
 
-#: (applicationId, documents-plan hash) → materialized shingle table.
-#: The shingle derivation is shared by every near-dup operator
-#: (jaccard, minhash, components, canonical pick); memoizing ONE
-#: materialized copy per session+corpus replaces round 1's leaky
-#: pattern (each operator `.cache()`-ing an identical plan and relying
-#: on CacheManager plan-matching for reuse, with nothing ever
-#: unpersisted — verdict item 5).  ``clear_dedup_state()`` releases
-#: everything explicitly for long-lived sessions.
-_SHINGLE_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
-def clear_dedup_state() -> None:
-    """Release all memoized dedup intermediates (shingle tables and
-    component labels).  Their checkpoint blocks are then reclaimed by
-    the ContextCleaner once unreferenced."""
-    _SHINGLE_MEMO.clear()
-    _PAIRS_MEMO.clear()
-    _CC_LABELS_MEMO.clear()
-    _GRAMS_MEMO.clear()
-    _RARITY_MEMO.clear()
-    _POSTINGS_MEMO.clear()
-    _LSH_MEMO.clear()
-
-
-#: (applicationId, documents-plan hash) → materialized positional
-#: {k}-gram hash table (doc_id, i, gram).  Shared by the two substring
-#: operators: the inventory consumer (mask) and the inventory itself
-#: (repeats) — at scale the gram table is computed ONCE per corpus and
-#: every "memorized span" pass reuses it.
-_GRAMS_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
 def _positional_grams(docs: DataFrame, k: int) -> DataFrame:
     """doc_id, i (1-based window start), gram (md5 of the k-token
     window) — materialized via localCheckpoint and memoized per
-    session+corpus, same lifecycle discipline as _shingle_arrays."""
+    session+corpus, same lifecycle discipline as _shingle_arrays.
+    Shared by the two substring operators (the inventory and its
+    mask), so the gram table is computed ONCE per corpus."""
+    return memoize(docs.sparkSession, docs, ("grams", k), lambda: _grams_build(docs, k))
+
+
+def _grams_build(docs: DataFrame, k: int) -> DataFrame:
     from adt_spark.context import spread
 
-    key = (docs.sparkSession.sparkContext.applicationId, docs.semanticHash() * 31 + k)
-    memo = _GRAMS_MEMO.get(key)
-    if memo is not None:
-        return memo
     toks = F.split(F.col("text"), " ")
     # Guard docs shorter than k tokens (same discipline as
     # _shingle_arrays): Spark's sequence(1, 0) yields the DESCENDING
@@ -115,14 +86,12 @@ def _positional_grams(docs: DataFrame, k: int) -> DataFrame:
             ),
         ),
     ).otherwise(F.expr("array()").cast("array<struct<i:int,gram:string>>"))
-    out = (
+    return (
         spread(docs)
         .select("doc_id", F.explode(windows).alias("g"))
         .select("doc_id", "g.i", "g.gram")
         .localCheckpoint(eager=False)
     )
-    _GRAMS_MEMO[key] = out
-    return out
 
 
 def _shingle_arr_expr():
@@ -173,25 +142,18 @@ def _shingle_arrays(docs: DataFrame) -> DataFrame:
     (MEMORY_AND_DISK blocks, lineage truncated) materializes once;
     the memo gives every near-dup operator the same copy, and unlike
     ``cache()`` the blocks are released as soon as the memo entry is
-    dropped (``clear_dedup_state``) — no CacheManager residue.  On a
+    dropped (``memo.clear()``) — no CacheManager residue.  On a
     cluster substitute a reliable ``checkpoint()`` if executor loss
     must be survivable.  ``spread`` fans the shingling itself out
     to all cores (single-row-group inputs otherwise serialize it).
     """
     from adt_spark.context import spread
 
-    key = (docs.sparkSession.sparkContext.applicationId, docs.semanticHash())
-    memo = _SHINGLE_MEMO.get(key)
-    if memo is not None:
-        return memo
-
-    out = (
+    return memoize(docs.sparkSession, docs, "shingles", lambda: (
         spread(docs)
         .select("doc_id", _shingle_arr_expr().alias("shingle_arr"))
         .localCheckpoint(eager=False)
-    )
-    _SHINGLE_MEMO[key] = out
-    return out
+    ))
 
 
 def _shingles(docs: DataFrame) -> DataFrame:
@@ -231,39 +193,17 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) → materialized verified near-dup pairs.
-#: Shared by dedup_components / dedup_canonical_pick; see
-#: _SHINGLE_MEMO for the lifecycle rationale.
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-#: (applicationId, docs-plan hash) → materialized rarity-ordered
-#: hot-capped shingle arrays (doc_id, n, arr_filt).  The
-#: document-frequency count + rarity sort is the expensive common
-#: stem of every prefix-filtered similarity join (Jaccard,
-#: containment); the THRESHOLD-specific prefix is a cheap projection
-#: each consumer adds on top.
-_RARITY_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-#: (applicationId, docs-plan hash) → materialized FULL-posting
-#: explode of the rarity arrays (doc_id, n, ps) — the indexed-larger
-#: side of the containment prefix join (threshold-independent, unlike
-#: the prefix explodes, so it is shareable and worth materializing).
-_POSTINGS_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
 def _full_postings(docs: DataFrame) -> DataFrame:
     """(doc_id, n, len, pos, ps): one row per hot-capped posting
     occurrence with its 0-based position in the rarity order and the
-    array length — memoized per session+corpus (see _SHINGLE_MEMO for
-    the lifecycle rationale).  Positions feed PPJoin's positional
-    filter (Xiao et al. 2008, public): both sides' arrays share one
-    global (df, shingle) sort, so a match at positions (pa, pb)
-    bounds the whole intersection by min(lenA − pa, lenB − pb)."""
-    key = (docs.sparkSession.sparkContext.applicationId, docs.semanticHash())
-    memo = _POSTINGS_MEMO.get(key)
-    if memo is not None:
-        return memo
-    out = (
+    array length — memoized per session+corpus (see _shingle_arrays
+    for the lifecycle rationale): the indexed-larger side of the
+    containment prefix join is threshold-independent, unlike the
+    prefix explodes, so it is shareable.  Positions feed PPJoin's
+    positional filter (Xiao et al. 2008, public): both sides' arrays
+    share one global (df, shingle) sort, so a match at positions
+    (pa, pb) bounds the whole intersection by min(lenA − pa, lenB − pb)."""
+    return memoize(docs.sparkSession, docs, "postings", lambda: (
         _rarity_arrays(docs)
         .select(
             "doc_id",
@@ -272,15 +212,17 @@ def _full_postings(docs: DataFrame) -> DataFrame:
             F.posexplode("arr_filt").alias("pos", "ps"),
         )
         .localCheckpoint(eager=False)
-    )
-    _POSTINGS_MEMO[key] = out
-    return out
+    ))
 
 
 def _rarity_arrays(docs: DataFrame) -> DataFrame:
     """doc_id, n (full distinct-shingle count), arr_filt (hot-capped
     shingles ordered rarest-first), arr_hash (xxhash64 of each
-    shingle, same order) — memoized per session+corpus.
+    shingle, same order) — memoized per session+corpus: the
+    document-frequency count + rarity sort is the expensive common
+    stem of every prefix-filtered similarity join (Jaccard,
+    containment); each consumer adds its threshold-specific prefix
+    as a cheap projection on top.
 
     arr_hash exists for the verify fast path: ``array_intersect`` on
     string arrays hashes ~30-byte objects per element per pair, which
@@ -295,16 +237,16 @@ def _rarity_arrays(docs: DataFrame) -> DataFrame:
     hash count ≥ the true intersection; gates OR in ``NOT hclean``
     so the astronomically-rare colliding doc is simply sent to the
     exact verify instead of being trusted to the fast path."""
-    key = (docs.sparkSession.sparkContext.applicationId, docs.semanticHash())
-    memo = _RARITY_MEMO.get(key)
-    if memo is not None:
-        return memo
+    return memoize(docs.sparkSession, docs, "rarity", lambda: _rarity_build(docs))
+
+
+def _rarity_build(docs: DataFrame) -> DataFrame:
     pre = _shingle_arrays(docs)
     sh = pre.select("doc_id", F.explode("shingle_arr").alias("shingle"))
     sizes = pre.select("doc_id", F.size("shingle_arr").alias("n"))
     dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     filt = sh.join(dfc, ["shingle"]).filter(F.col("df") <= _MAX_POSTING)
-    out = (
+    return (
         filt.groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("ordered"))
         .join(sizes, ["doc_id"])
@@ -317,13 +259,11 @@ def _rarity_arrays(docs: DataFrame) -> DataFrame:
         .select("doc_id", "n", "arr_filt", "arr_hash", "hclean")
         .localCheckpoint(eager=False)
     )
-    _RARITY_MEMO[key] = out
-    return out
 
 
 
 #: the verified Jaccard near-dup pairs as reusable oracle CTEs — the
-#: DuckDB twin of _PAIRS_MEMO (shared by dedup_ngram_jaccard and the
+#: DuckDB twin of the memoized Spark pairs (shared by dedup_ngram_jaccard and the
 #: cross-source matrix, exactly as the Spark side shares the memo).
 _JACCARD_PAIRS_CTES = f"""sh AS ({_SHINGLE_SQL}),
     filtered AS (
@@ -381,10 +321,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays — identical semantics to the inverted-index formulation
     and to the DuckDB oracle.
     """
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _PAIRS_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
+    # memoized: dedup_components / dedup_canonical_pick and the recall
+    # eval consume the same verified pairs
+    return memoize(spark, sf_dir, "pairs", lambda: _jaccard_pairs(spark, sf_dir))
+
+
+def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables(spark, sf_dir)["documents"]
     # Per-doc hot-capped shingle array ordered rarest-first (shared
     # memoized stem), plus the Jaccard-specific exact prefix:
@@ -447,7 +389,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         >= F.lit(_T_NUM) * (F.col("na") + F.col("nb"))
     ) | ~F.col("hc_a") | ~F.col("hc_b")
     jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    out = (
+    return (
         cand.join(fa, ["doc_a"])
         .join(fb, ["doc_b"])
         .filter(hash_ok)
@@ -459,8 +401,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stage never re-runs the PPJoin pipeline
         .localCheckpoint(eager=False)
     )
-    _PAIRS_MEMO[memo_key] = out
-    return out
 
 
 @register(
@@ -888,26 +828,22 @@ def band_keys_projection(df: DataFrame) -> DataFrame:
     )
 
 
-#: (applicationId, dhash-plan hash) → (signatures, candidate pairs).
-#: dedup_minhash_lsh, its calibration auditor AND the recall eval all
-#: consume the same banding pipeline; memoizing the materialized
-#: (sigs, cands) pair means the band-bucket shuffle runs once per
-#: session+corpus instead of once per consuming operator.
-_LSH_MEMO: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
+def _lsh_candidates(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(signatures, candidate pairs) from the banded minhash index over
+    ``docs``' shingle digests — the ONE banding pipeline
+    dedup_minhash_lsh, its calibration auditor and dedup_minhash_recall
+    share (a band-count or key-derivation change must move all three
+    together).  Signatures and band keys are materialized via
+    localCheckpoint (tiny; re-deriving the 12 folds per consuming plan
+    appearance measured much slower) and the pair is memoized per
+    session+corpus, so the band-bucket shuffle runs once, not once per
+    consuming operator."""
+    return memoize(docs.sparkSession, docs, "lsh", lambda: _lsh_build(
+        _dhash_arrays(_shingle_arrays(docs))
+    ))
 
 
-def _lsh_candidates(dhash: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(signatures, candidate pairs) from the banded minhash index —
-    the ONE banding pipeline dedup_minhash_lsh, its calibration
-    auditor and dedup_minhash_recall share (a band-count or
-    key-derivation change must move all three together).  Signatures
-    and band keys are materialized via localCheckpoint (tiny;
-    re-deriving the 12 folds per consuming plan appearance measured
-    much slower) and the pair is memoized per session+corpus."""
-    key = (dhash.sparkSession.sparkContext.applicationId, dhash.semanticHash())
-    memo = _LSH_MEMO.get(key)
-    if memo is not None:
-        return memo
+def _lsh_build(dhash: DataFrame) -> tuple[DataFrame, DataFrame]:
     sigs = (
         dhash.filter(F.size("dhash_arr") > 0)
         .select("doc_id", *_minhash_sig_cols())
@@ -927,7 +863,6 @@ def _lsh_candidates(dhash: DataFrame) -> tuple[DataFrame, DataFrame]:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    _LSH_MEMO[key] = (sigs, cands)
     return sigs, cands
 
 
@@ -996,7 +931,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables(spark, sf_dir)["documents"]
     pre = _shingle_arrays(docs)
-    _sigs, cands = _lsh_candidates(_dhash_arrays(pre))
+    _sigs, cands = _lsh_candidates(docs)
     # Verification: equi-join the candidate pairs against the cached
     # arrays; exact common-shingle count = intersection size (arrays
     # are distinct), exact integer arithmetic → the 0.8 gate is
@@ -1268,24 +1203,17 @@ _PAIRS_SQL = f"""
 """
 
 
-#: (applicationId, sf_dir) → converged component-label DataFrame.
-#: The iterated min-propagation is the most expensive stage of the
-#: dedup pipeline; memoizing the (localCheckpoint-materialized) label
-#: table lets dedup_canonical_pick — and repeated dedup_components
-#: runs — reuse it instead of re-deriving shingles → PPJoin → CC from
-#: scratch (round-1 verdict item 6).  Holding the DataFrame reference
-#: keeps its checkpoint blocks alive; entries die with the session
-#: (applicationId key), so nothing leaks across Spark applications.
-_CC_LABELS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """node → converged min-label over the verified Jaccard-pair
-    graph (edge-touched subgraph only), memoized per session+sf_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _CC_LABELS_MEMO.get(key)
-    if memo is not None:
-        return memo
+    graph (edge-touched subgraph only), memoized per session+sf_dir:
+    the iterated min-propagation is the most expensive stage of the
+    dedup pipeline, and dedup_canonical_pick — and repeated
+    dedup_components runs — reuse the label table instead of
+    re-deriving shingles → PPJoin → CC from scratch."""
+    return memoize(spark, sf_dir, "cc_labels", lambda: _cc_labels_build(spark, sf_dir))
+
+
+def _cc_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1325,7 +1253,6 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             "connected-components label propagation did not converge in "
             "20 rounds (component diameter > 20?) — raise the round cap"
         )
-    _CC_LABELS_MEMO[key] = labels
     return labels
 
 
@@ -2088,7 +2015,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables(spark, sf_dir)["documents"]
     pre = _shingle_arrays(docs)
-    sigs, cands = _lsh_candidates(_dhash_arrays(pre))
+    sigs, cands = _lsh_candidates(docs)
     pa = pre.select(F.col("doc_id").alias("doc_a"), F.col("shingle_arr").alias("arr_a"))
     pb = pre.select(F.col("doc_id").alias("doc_b"), F.col("shingle_arr").alias("arr_b"))
     both = cands.join(pa, ["doc_a"]).join(pb, ["doc_b"])
@@ -2182,7 +2109,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables(spark, sf_dir)["documents"]
     truth = dedup_ngram_jaccard(spark, sf_dir)
-    _sigs, cands = _lsh_candidates(_dhash_arrays(_shingle_arrays(docs)))
+    _sigs, cands = _lsh_candidates(docs)
     j = truth.join(cands.withColumn("caught", F.lit(1)), ["doc_a", "doc_b"], "left")
     s = F.col("bucket_lo")
     miss1 = F.lit(1.0) - s * s * s

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 
@@ -433,20 +434,6 @@ def _synth_resized(d: int):
     )
 
 
-#: (applicationId, sf_dir) -> materialized phash fingerprint table.
-#: The Arrow decode+hash pass is the expensive stem every phash
-#: consumer (hamming pairs, the media pipeline) shares — computed once
-#: per session+corpus, same lifecycle discipline as
-#: dedup._SHINGLE_MEMO.  Release with clear_multimodal_state().
-_PHASH_MEMO: dict[tuple[str, str], "DataFrame"] = {}
-
-
-def clear_multimodal_state() -> None:
-    """Release memoized multimodal intermediates (checkpoint blocks
-    are reclaimed by the ContextCleaner once unreferenced)."""
-    _PHASH_MEMO.clear()
-
-
 @register(
     "mm_phash",
     oracle=f"""
@@ -472,17 +459,12 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream dedup joins on the hash halves (band the 64 bits for
     Hamming-radius candidates exactly like dedup_simhash).
     """
-    import numpy as np
-
-    from adt_spark.context import spread
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _PHASH_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    out = _phash_plan(spark, sf_dir).localCheckpoint(eager=False)
-    _PHASH_MEMO[memo_key] = out
-    return out
+    # the Arrow decode+hash pass is the expensive stem every phash
+    # consumer (hamming pairs, the media pipeline) shares: materialized
+    # once per session+corpus
+    return memoize(spark, sf_dir, "phash", lambda: (
+        _phash_plan(spark, sf_dir).localCheckpoint(eager=False)
+    ))
 
 
 def _phash_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

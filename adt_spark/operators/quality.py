@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 #: Shingle width for decontamination (published pipelines use 8–13-gram
@@ -431,12 +432,6 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus-LM quality scoring: per-doc mean unigram probability
 # ---------------------------------------------------------------------------
 
-#: (applicationId, sf_dir) → (toked, uni, bcnt) — the shared corpus-LM
-#: stems (tokenized docs; unigram counts; bigram counts), each
-#: localCheckpointed.  Release with clear_quality_state().
-_LM_MEMO: dict = {}
-
-
 def _lm_pairs_expr():
     """Adjacent (pos, w1, w2) structs over a ``_ts`` token-array column
     — the ONE copy of the bigram construction (sequence(1,0) DESCENDS,
@@ -458,19 +453,19 @@ def _lm_pairs_expr():
 def _lm_stems(spark: SparkSession, sf_dir: str):
     """(toked, uni, bcnt): tokenized documents (doc_id, source, _ts),
     unigram counts (token, cu) and bigram counts (w1, w2, cb) —
-    memoized per session+corpus (the dedup._SHINGLE_MEMO discipline)
+    each localCheckpointed and memoized per session+corpus
     and shared by text_unigram_prob / text_bigram_lm_score (here) and
     q_mixture_doremi_weights / q_select_learnable_docs (sampling.py),
     which previously each re-tokenized and re-counted the corpus per
     call.  The count tables are the two heavy uniform shuffles of the
     whole LM family; computing them once per session is the same
     measured win as the PQ codes memo."""
+    return memoize(spark, sf_dir, "lm_stems", lambda: _lm_stems_build(spark, sf_dir))
+
+
+def _lm_stems_build(spark: SparkSession, sf_dir: str):
     from adt_spark.context import spread
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _LM_MEMO.get(key)
-    if memo is not None:
-        return memo
     docs = tables(spark, sf_dir)["documents"]
     toked = (
         spread(docs)
@@ -489,9 +484,7 @@ def _lm_stems(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).alias("cb"))
         .localCheckpoint(eager=False)
     )
-    memo = (toked, uni, bcnt)
-    _LM_MEMO[key] = memo
-    return memo
+    return toked, uni, bcnt
 
 
 @register(
@@ -1423,23 +1416,9 @@ def quality_weaklabel_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two token shuffles; plan-shape tests assert on the
     un-checkpointed ``_weaklabel_build``.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _WEAKLABEL_MEMO.get(key)
-    if memo is None:
-        memo = _weaklabel_build(spark, sf_dir).localCheckpoint(eager=False)
-        _WEAKLABEL_MEMO[key] = memo
-    return memo
-
-
-#: (applicationId, sf_dir) → localCheckpointed classifier scores.
-_WEAKLABEL_MEMO: dict = {}
-
-
-def clear_quality_state() -> None:
-    """Release memoized quality intermediates (checkpoint blocks are
-    reclaimed by the ContextCleaner once unreferenced)."""
-    _WEAKLABEL_MEMO.clear()
-    _LM_MEMO.clear()
+    return memoize(spark, sf_dir, "weaklabel", lambda: (
+        _weaklabel_build(spark, sf_dir).localCheckpoint(eager=False)
+    ))
 
 
 def weak_label_col() -> "F.Column":

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 #: lang → (hex threshold on md5 prefix, repeat factor).  '40'/256 ≈ 25%
@@ -315,17 +316,14 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected.
 
     The output is localCheckpointed and memoized per session+corpus
-    (the _CODES_MEMO discipline): q_dsir_resample consumes the stem
+    (the PQ codes discipline): q_dsir_resample consumes the stem
     TWICE (the 1-row max and the per-doc join), so without the memo
     every consumer re-ran both token shuffles; plan-shape tests
     assert on the un-checkpointed ``_dsir_weights_build``.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _DSIR_W_MEMO.get(key)
-    if memo is None:
-        memo = _dsir_weights_build(spark, sf_dir).localCheckpoint(eager=False)
-        _DSIR_W_MEMO[key] = memo
-    return memo
+    return memoize(spark, sf_dir, "dsir_weights", lambda: (
+        _dsir_weights_build(spark, sf_dir).localCheckpoint(eager=False)
+    ))
 
 
 def _dsir_weights_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,17 +380,6 @@ def _dsir_weights_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight.alias("weight"),
         (weight > F.lit(1.0)).alias("selected"),
     )
-
-
-#: (applicationId, sf_dir) → localCheckpointed q_dsir_weights output
-#: (one row per document: doc_id, n_tokens, weight, selected).
-_DSIR_W_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_sampling_state() -> None:
-    """Release memoized sampling intermediates (checkpoint blocks are
-    reclaimed by the ContextCleaner once unreferenced)."""
-    _DSIR_W_MEMO.clear()
 
 
 #: 2^52 — 13 md5 hex chars as an exact-in-double integer, so

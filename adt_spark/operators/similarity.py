@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 _DIM = 64
@@ -557,21 +558,15 @@ def _exact_topk_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint; {_N_QUERIES}×{_TOP_K} rows) — the ground truth
     of every cosine recall eval AND ann_topk_bruteforce's output:
     without the memo each of the four consumers re-ran the
-    query×corpus cosine scan (the _L2_TRUTH_MEMO discipline)."""
-    tk = (spark.sparkContext.applicationId, sf_dir)
-    memo = _COSINE_TOPK_MEMO.get(tk)
-    if memo is not None:
-        return memo
+    query×corpus cosine scan (the _true_l2_topk discipline)."""
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    out = (
+    return memoize(spark, sf_dir, "cosine_topk", lambda: (
         _scored_query_pairs(spark, sf_dir)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rn")
         .localCheckpoint(eager=False)
-    )
-    _COSINE_TOPK_MEMO[tk] = out
-    return out
+    ))
 
 
 def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1349,86 +1344,32 @@ _SEM_T = 0.45
 #: tests can shrink it to force the multi-block path on small data)
 _SEM_BLOCK_ROWS = 100_000
 
-#: (applicationId, sf_dir, sem_k) → (materialized assignment⋈vector,
-#: size map); sem_k = the ADT_SEM_K scale knob (0 = oracled default).
-#: Release with clear_similarity_state() for long-lived sessions.
-_SEM_ASSIGNED_MEMO: dict[tuple[str, str, int], tuple[DataFrame, dict]] = {}
-
-#: (applicationId, sf_dir) → {vec_id: [double]} below the call-time bound
-#: max(_KM_K, _PQ_K+_PQ_NQ, _N_CELLS) —
-#: the ONE bounded driver collect behind every centroid/codebook/query
-#: literal in this module (k-means seeds, PQ anchors, ADC queries, IVF
-#: cells).  Each consumer previously ran its own filter+collect job;
-#: at sf0.1 that was one extra ~0.5 s Spark job per ANN query, and the
-#: rows are identical by construction (same _vec_double cast of the
-#: same scan).  Bounded: bound × _DIM doubles — kilobytes at any
-#: corpus size, the documented driver boundary.
-_SMALL_VECS_MEMO: dict[tuple[str, str], dict[int, list[float]]] = {}
-
-#: (applicationId, sf_dir, variant) → localCheckpointed PQ codes table.
-#: "plain" (vec_id + 4 codes) is shared by ann_pq_adc_topk and — via
-#: its call — ann_pq_recall; "cell" (plus the IVF cell) by
-#: ann_ivf_pq_topk and ann_ivfpq_recall.  The encode projection is a
-#: large codegen'd expression (16 cell-dot folds + 16 sub-argmins over
-#: literal codebooks): compiling and running it once per session+corpus
-#: instead of once per consuming query is the same discipline as
-#: dedup._SHINGLE_MEMO (measured: the recall evals re-ran the whole
-#: encode at bench time).
-_CODES_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-#: same keys → the UN-checkpointed codes projection.  localCheckpoint
-#: wraps the plan immediately (even eager=False), so the memoized copy
-#: prints as Scan ExistingRDD — plan-shape tests assert the fused
-#: zero-join encode on THIS builder instead.
-_CODES_PLAN: dict[tuple[str, str, str], DataFrame] = {}
-
-#: (applicationId, sf_dir) → localCheckpointed exact squared-L2 top-k
-#: (k rows per bounded query — tiny) shared by ann_pq_recall and
-#: ann_ivfpq_recall.
-_L2_TRUTH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-#: (applicationId, sf_dir) → localCheckpointed exact cosine top-k
-#: (query_id, neighbor_id, cosine, rn) — the shared ground truth of
-#: the cosine recall evals and ann_topk_bruteforce's output.
-_COSINE_TOPK_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-#: (applicationId, sf_dir) → trained PQ codebook {cid: full-dim vec}
-#: (K×dim doubles — kilobytes of driver model state, the Lloyd
-#: pattern) shared by every PQ encode/search/eval consumer.
-_PQ_CB_MEMO: dict[tuple[str, str], dict[int, list[float]]] = {}
-
-
 def _small_vecs(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
+    """{vec_id: [double]} below max(_KM_K, _PQ_K+_PQ_NQ, _N_CELLS) —
+    the ONE bounded driver collect behind every centroid/codebook/query
+    literal in this module (k-means seeds, PQ anchors, ADC queries, IVF
+    cells), memoized per session+corpus.  Each consumer previously ran
+    its own filter+collect job; at sf0.1 that was one extra ~0.5 s
+    Spark job per ANN query, and the rows are identical by
+    construction (same _vec_double cast of the same scan).  Bounded:
+    bound × _DIM doubles — kilobytes at any corpus size, the
+    documented driver boundary."""
     # the bound is computed at CALL time from the governing constants
     # (they are defined later in the module, and a hardcoded copy here
     # would fail silently through the consumers' `if k in small`
     # guards if any constant grew)
     n = max(_KM_K, _PQ_K + _PQ_NQ, _N_CELLS)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _SMALL_VECS_MEMO.get(key)
-    if memo is None:
+
+    def collect() -> dict[int, list[float]]:
         v = tables(spark, sf_dir)["embeddings"].select(
             "vec_id", _vec_double().alias("vec")
         )
-        memo = {
+        return {
             int(r.vec_id): list(r.vec)
             for r in v.filter(F.col("vec_id") < n).collect()
         }
-        _SMALL_VECS_MEMO[key] = memo
-    return memo
 
-
-def clear_similarity_state() -> None:
-    """Release memoized similarity intermediates (checkpoint blocks
-    are reclaimed by the ContextCleaner once unreferenced)."""
-    _COSINE_TOPK_MEMO.clear()
-    _SEM_ASSIGNED_MEMO.clear()
-    _SMALL_VECS_MEMO.clear()
-    _CODES_MEMO.clear()
-    _CODES_PLAN.clear()
-    _L2_TRUTH_MEMO.clear()
-    _PQ_CB_MEMO.clear()
-    _IVF_CELLS_MEMO.clear()
+    return memoize(spark, sf_dir, "small_vecs", collect)
 
 
 #: largest ADT_SEM_K served by literal centroids: beyond this the
@@ -1774,15 +1715,7 @@ def _sem_block_input(spark: SparkSession, sf_dir: str):
     # assignment after ADT_SEM_CELLS changes (round-8 review finding 4)
     sem_cells = int(os.environ.get("ADT_SEM_CELLS", str(_N_CELLS)))
 
-    # Session memo (same lifecycle discipline as dedup._SHINGLE_MEMO):
-    # the Lloyd pass + vector join is the dominant cost and is
-    # identical across calls, so the materialized checkpoint and the
-    # k-row size map are computed once per (session, corpus, k).
-    memo_key = (spark.sparkContext.applicationId, sf_dir, sem_k, sem_cells)
-    memo = _SEM_ASSIGNED_MEMO.get(memo_key)
-    if memo is not None:
-        assigned, csz = memo
-    else:
+    def assign() -> tuple[DataFrame, dict]:
         emb = tables(spark, sf_dir)["embeddings"].select(
             "vec_id", _vec_double().alias("vec")
         )
@@ -1826,7 +1759,13 @@ def _sem_block_input(spark: SparkSession, sf_dir: str):
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
-        _SEM_ASSIGNED_MEMO[memo_key] = (assigned, csz)
+        return assigned, csz
+
+    # Session memo: the Lloyd pass + vector join is the dominant cost
+    # and is identical across calls, so the materialized checkpoint and
+    # the k-row size map are computed once per (session, corpus, k,
+    # router width).
+    assigned, csz = memoize(spark, sf_dir, ("sem_assigned", sem_k, sem_cells), assign)
     nblk = {c: max(1, math.ceil(n / _SEM_BLOCK_ROWS)) for c, n in csz.items()}
     multi_block = any(b > 1 for b in nblk.values())
 
@@ -2450,18 +2389,18 @@ def _pq_trained_codebooks(spark: SparkSession, sf_dir: str) -> dict[int, list[fl
     projection; the only shuffle is the (m, cid, pos)-keyed mean
     aggregate — M×K×{SUB} groups, partial+final; driver state is
     K×dim doubles (kilobytes at any corpus size), memoized per
-    session+corpus like the Lloyd centroids.
+    session+corpus like the Lloyd centroids, and shared by every PQ
+    encode/search/eval consumer.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _PQ_CB_MEMO.get(key)
-    if memo is not None:
-        return memo
+    return memoize(spark, sf_dir, "pq_cb", lambda: _pq_train(spark, sf_dir))
+
+
+def _pq_train(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
     anchors = {k: cv for k, cv in _small_vecs(spark, sf_dir).items() if k < _PQ_K}
     cb = {cid: list(cv) for cid, cv in anchors.items()}  # empty-cell fill
     sums = _pq_train_sums(spark, sf_dir, anchors)
     for r in sums.collect():  # bounded: ≤ M×K×SUB rows (2048 doubles at K=32)
         cb[int(r.cid)][int(r.m) * _PQ_SUB + int(r.pos)] = float(r.val)
-    _PQ_CB_MEMO[key] = cb
     return cb
 
 
@@ -2579,16 +2518,15 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = _small_vecs(spark, sf_dir)
     anchors = _pq_trained_codebooks(spark, sf_dir)
     queries = {k: small[k] for k in range(_PQ_K, _PQ_K + _PQ_NQ) if k in small}
-    ck = (spark.sparkContext.applicationId, sf_dir, "plain")
-    codes = _CODES_MEMO.get(ck)
-    if codes is None:
-        raw = _pq_encode(v, anchors).select(
-            "vec_id", "code_0", "code_1", "code_2", "code_3"
-        )
-        _CODES_PLAN[ck] = raw
-        codes = raw.localCheckpoint(eager=False)
-        _CODES_MEMO[ck] = codes
-
+    # the encode projection is a large codegen'd expression (16 cell-dot
+    # folds + 16 sub-argmins over literal codebooks): compiled and run
+    # once per session+corpus, not once per consuming query (measured:
+    # the recall evals re-ran the whole encode at bench time)
+    codes = memoize(spark, sf_dir, ("codes", "plain"), lambda: (
+        _pq_encode(v, anchors)
+        .select("vec_id", "code_0", "code_1", "code_2", "code_3")
+        .localCheckpoint(eager=False)
+    ))
     return _adc_topk(codes, anchors, queries)
 
 
@@ -2722,10 +2660,10 @@ def _true_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark twin of _TRUE_L2_TOPK_CTE; same in-order per-element fold,
     same (tdist, vec_id) tiebreak).  Memoized: k rows per bounded
     query, computed once per session+corpus."""
-    tk = (spark.sparkContext.applicationId, sf_dir)
-    memo = _L2_TRUTH_MEMO.get(tk)
-    if memo is not None:
-        return memo
+    return memoize(spark, sf_dir, "l2_truth", lambda: _true_l2_build(spark, sf_dir))
+
+
+def _true_l2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = tables(spark, sf_dir)["embeddings"].select(
         "vec_id", _vec_double().alias("vec")
     )
@@ -2765,14 +2703,12 @@ def _true_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
     w = W.partitionBy("query_id").orderBy("tdist", "neighbor_id")
-    out = (
+    return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= _PQ_TOPK)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
-    _L2_TRUTH_MEMO[tk] = out
-    return out
 
 
 #: dot over the already-DOUBLE ``v.vec`` arrays (the _PQ_CTES cast) —
@@ -2939,24 +2875,29 @@ def _ivf_codes_with(
     encoding fused into ONE zero-shuffle projection of one scan,
     localCheckpointed per session+corpus+tag — so each quantizer's
     corpus is assigned and encoded exactly once."""
+    return memoize(spark, sf_dir, ("codes", tag), lambda: (
+        _ivf_codes_plan(spark, sf_dir, cells).localCheckpoint(eager=False)
+    ))
+
+
+def _ivf_codes_plan(
+    spark: SparkSession, sf_dir: str, cells: dict[int, list[float]]
+) -> DataFrame:
+    """The un-checkpointed encode behind _ivf_codes_with.
+    localCheckpoint wraps the plan immediately (even eager=False), so
+    the memoized copy prints as Scan ExistingRDD — plan-shape tests
+    assert the fused zero-join encode on this builder instead."""
     from adt_spark.context import spread
 
-    ck = (spark.sparkContext.applicationId, sf_dir, tag)
-    codes = _CODES_MEMO.get(ck)
-    if codes is None:
-        v = spread(
-            tables(spark, sf_dir)["embeddings"].select(
-                "vec_id", _vec_double().alias("vec")
-            )
+    v = spread(
+        tables(spark, sf_dir)["embeddings"].select(
+            "vec_id", _vec_double().alias("vec")
         )
-        anchors = _pq_trained_codebooks(spark, sf_dir)
-        raw = _ivf_encode(v, cells, anchors).select(
-            "vec_id", "cell", "code_0", "code_1", "code_2", "code_3"
-        )
-        _CODES_PLAN[ck] = raw
-        codes = raw.localCheckpoint(eager=False)
-        _CODES_MEMO[ck] = codes
-    return codes
+    )
+    anchors = _pq_trained_codebooks(spark, sf_dir)
+    return _ivf_encode(v, cells, anchors).select(
+        "vec_id", "cell", "code_0", "code_1", "code_2", "code_3"
+    )
 
 
 def _ivf_encode(
@@ -3567,22 +3508,18 @@ def emb_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _km_assign(v, cents).select("vec_id", "cluster_id")
 
 
-#: (applicationId, sf_dir) → trained IVF coarse-quantizer centroids
-#: {cid: full-dim vec} — N_CELLS×dim doubles of memoized driver model
-#: state (the _PQ_CB_MEMO twin for the coarse quantizer).
-_IVF_CELLS_MEMO: dict[tuple[str, str], dict[int, list[float]]] = {}
-
 def _ivf_trained_cells(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
     """TRAIN the IVF coarse quantizer — one exact mean update from
     the anchor cells under the SAME cosine assignment the search
     operators use (_ivf_cell_argmin), closing ann_ivf_probe's 'swap
     in trained k-means centroids at deployment' promise: means in the
     tie-free floor(x·2⁴⁰) fixed point, empty cells keep their anchor,
-    N_CELLS×dim doubles of memoized driver state."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _IVF_CELLS_MEMO.get(key)
-    if memo is not None:
-        return memo
+    N_CELLS×dim doubles of memoized driver state (the
+    _pq_trained_codebooks twin for the coarse quantizer)."""
+    return memoize(spark, sf_dir, "ivf_cells", lambda: _ivf_train(spark, sf_dir))
+
+
+def _ivf_train(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
     cells = {
         k: cv for k, cv in _small_vecs(spark, sf_dir).items() if k < _N_CELLS
     }
@@ -3590,7 +3527,6 @@ def _ivf_trained_cells(spark: SparkSession, sf_dir: str) -> dict[int, list[float
     for r in _ivf_train_sums(spark, sf_dir, cells).collect():
         # bounded: N_CELLS×dim rows
         cb[int(r.cell)][int(r.pos)] = float(r.m)
-    _IVF_CELLS_MEMO[key] = cb
     return cb
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from adt_spark.context import spread
 from adt_spark.operators.dedup import _SHINGLE_SQL
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 # Shared stopword profile (tiny, deterministic; used by quality + langid).
@@ -369,23 +370,6 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_TRAIN_ROUNDS = 4
 
-#: (applicationId, sf_dir) → trained merge rows — K tuples of driver
-#: state (the whole point of the bounded-iteration design), so the
-#: encoder doesn't re-run the K training rounds per call.
-_BPE_MERGES_MEMO: dict[tuple[str, str], list] = {}
-
-#: (applicationId, sf_dir) → localCheckpointed encoded vocab
-#: (word, n_sym) — the fixpoint rounds run once per session+corpus,
-#: not once per text_bpe_encode call (the _CODES_MEMO discipline).
-_BPE_ENC_MEMO: dict[tuple[str, str], "DataFrame"] = {}
-
-
-def clear_text_state() -> None:
-    """Release memoized text-operator state (merge tables, encoded
-    vocab; checkpoint blocks are reclaimed once unreferenced)."""
-    _BPE_MERGES_MEMO.clear()
-    _BPE_ENC_MEMO.clear()
-
 
 @register(
     "text_bpe_train_merges",
@@ -425,14 +409,12 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_bpe_train.py pins a K=32 run to the sequential
     Python reference AND asserts its round count ≪ K).
     """
-    mk = (spark.sparkContext.applicationId, sf_dir)
-    memo = _BPE_MERGES_MEMO.get(mk)
-    if memo is not None:
-        return spark.createDataFrame(
-            memo, "rank int, left string, right string, pair_count bigint"
-        )
-    merges, _rounds = _bpe_train(spark, sf_dir, _BPE_TRAIN_ROUNDS)
-    _BPE_MERGES_MEMO[mk] = merges
+    # the trained merge rows (K tuples of driver state, the whole point
+    # of the bounded-iteration design) are memoized, so the encoder
+    # doesn't re-run the K training rounds per call
+    merges = memoize(spark, sf_dir, "bpe_merges", lambda: (
+        _bpe_train(spark, sf_dir, _BPE_TRAIN_ROUNDS)[0]
+    ))
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count bigint"
     )
@@ -757,9 +739,8 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = tables(spark, sf_dir)["documents"]
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    mk = (spark.sparkContext.applicationId, sf_dir)
-    vocab_enc = _BPE_ENC_MEMO.get(mk)
-    if vocab_enc is None:
+
+    def encode_vocab() -> DataFrame:
         merges_df = text_bpe_train_merges(spark, sf_dir).select(
             "rank", "left", "right"
         )
@@ -771,8 +752,11 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "word", F.concat(chars, F.array(F.lit("</w>"))).alias("syms")
         )
         enc, _rounds = _bpe_apply_merges(enc0, merges_df)
-        vocab_enc = enc.select("word", F.size("syms").alias("n_sym"))
-        _BPE_ENC_MEMO[mk] = vocab_enc
+        return enc.select("word", F.size("syms").alias("n_sym"))
+
+    # the encoded vocab (word, n_sym) is memoized: the fixpoint rounds
+    # run once per session+corpus, not once per call
+    vocab_enc = memoize(spark, sf_dir, "bpe_enc", encode_vocab)
     return (
         tok.join(vocab_enc, "word")
         .groupBy("doc_id")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
 
@@ -120,39 +121,24 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _open_events_stream(spark, os.path.join(sf_dir, "events.parquet"))
 
 
-#: memory-sink tables and scratch dirs created by drained streams —
-#: callers need the returned table alive, so cleanup is an explicit
-#: hook (mirroring dedup.clear_dedup_state) for long-lived sessions
-#: that re-run streaming operators.
-_SINK_TABLES: list[str] = []
-_SCRATCH_DIRS: list[str] = []
-
-
-def clear_streaming_state(spark: SparkSession) -> None:
-    """Drop every memory-sink table and scratch directory accumulated
-    by prior streaming-operator invocations in this session."""
-    import shutil
-
-    for name in _SINK_TABLES:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-    _SINK_TABLES.clear()
-    for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _SCRATCH_DIRS.clear()
-
-
 def _drain_to_memory(df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
+    """Run ``df`` to completion into a memory sink and return the sink
+    table.  The caller needs the table alive, so it is held in the
+    session memo registry, whose ``clear()`` drops the view."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _SINK_TABLES.append(name)
-    return spark.table(name)
+
+    def drain() -> DataFrame:
+        q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return spark.table(name)
+
+    return memoize(
+        spark, None, ("stream_sink", name), drain,
+        release=lambda: spark.catalog.dropTempView(name),
+    )
 
 
 @register("streaming_events_sliding", oracle=None, tags=("streaming",))
@@ -361,6 +347,7 @@ def streaming_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     native Delta reader (rows-only check; test_streaming.py pins the
     round-trip against the oracle-checked batch rollup).
     """
+    import shutil
     import tempfile
 
     from adt_spark.sources.delta_native import read_delta_native
@@ -368,7 +355,11 @@ def streaming_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tables(spark, sf_dir)
     out_dir = tempfile.mkdtemp(prefix="stream_delta_")
-    _SCRATCH_DIRS.append(out_dir)
+    # the returned table reads from out_dir: held until memo.clear()
+    memoize(
+        spark, None, ("stream_scratch", out_dir), lambda: out_dir,
+        release=lambda: shutil.rmtree(out_dir, ignore_errors=True),
+    )
     target = os.path.join(out_dir, "hourly_rollup")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

@@ -453,30 +453,17 @@ def main() -> None:
     # RUN START is folded into the anchor key, and cold-start runs
     # anchor separately from memo-warm ones instead of reading as
     # host band.
-    # Round-12 (r11 verdict item 4): the token now covers EVERY memo
-    # family, not just dedup_semantic's — one bit per module-level
-    # *_MEMO dict (sorted by attribute name) of the module defining
-    # the query, '1' = non-empty at timed-run start.  Coarse by
-    # module, but suite order is fixed, so warmth — and therefore the
-    # token — is deterministic run-to-run; queries in memo-free
-    # modules keep an empty token.  One-time effect: dedup_semantic's
-    # token format changes, so its anchor resets once this round.
+    # Round-12 (r11 verdict item 4): the token covers EVERY memo
+    # family of the module defining the query — the sorted names of
+    # its stems that hold a session-memo-registry entry at timed-run
+    # start.  Coarse by module, but suite order is fixed, so warmth —
+    # and therefore the token — is deterministic run-to-run; a query
+    # whose module holds no entry keeps an empty token.
     def _memo_token(name: str) -> str:
-        try:
-            import importlib
+        from adt_spark.operators.memo import warm_stems
 
-            mod = importlib.import_module(
-                registry[name].spark_fn.__module__
-            )
-            bits = "".join(
-                "1" if getattr(mod, attr) else "0"
-                for attr in sorted(dir(mod))
-                if attr.endswith("_MEMO")
-                and isinstance(getattr(mod, attr), dict)
-            )
-            return f"+m{bits}" if bits else ""
-        except Exception:
-            return ""
+        stems = warm_stems(registry[name].spark_fn.__module__)
+        return f"+m{','.join(stems)}" if stems else ""
 
     memo_tokens: dict[str, str] = {}
     for name in names:

@@ -16,28 +16,11 @@ def spark():
 
     ctx = ADTContext(app_name="adt-spark-tests")
     yield ctx.spark
-    # release memoized localCheckpointed state BEFORE stopping the
-    # session — the teardown hook the clear_* functions exist for
-    # (long-lived processes that restart sessions would otherwise
-    # accumulate per-applicationId checkpoint references)
-    from adt_spark.operators.dedup import clear_dedup_state
-    from adt_spark.operators.multimodal import clear_multimodal_state
-    from adt_spark.operators.quality import clear_quality_state
-    from adt_spark.operators.sampling import clear_sampling_state
-    from adt_spark.operators.similarity import clear_similarity_state
-    from adt_spark.operators.text import clear_text_state
-    from adt_spark.streaming.events import clear_streaming_state
+    # release the memo registry BEFORE stopping the session: its
+    # entries hold checkpoint references, sink views and scratch dirs
+    from adt_spark.operators import memo
 
-    for clear in (
-        clear_dedup_state,
-        clear_multimodal_state,
-        clear_quality_state,
-        clear_sampling_state,
-        clear_similarity_state,
-        clear_text_state,
-    ):
-        clear()
-    clear_streaming_state(ctx.spark)
+    memo.clear()
     ctx.spark.stop()
 
 

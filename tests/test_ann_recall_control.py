@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from adt_spark.operators import memo
 from adt_spark.operators import similarity as S
 from adt_spark.queries import tables
 
@@ -99,7 +100,7 @@ def test_sem_k_distributed_path(spark, sf_dir, monkeypatch):
     run green on top of it.  Cell-confined (nprobe=1) assignment is
     deliberately different clustering semantics, so this is a
     self-consistency pin, not an oracle."""
-    S.clear_similarity_state()
+    memo.clear()
     try:
         monkeypatch.setenv("ADT_SEM_K", "80")
         assert 80 > S._SEM_K_LITERAL_MAX
@@ -123,7 +124,7 @@ def test_sem_k_distributed_path(spark, sf_dir, monkeypatch):
         n = REGISTRY["dedup_semantic"].spark_fn(spark, sf_dir).count()
         assert 0 <= n <= total
     finally:
-        S.clear_similarity_state()
+        memo.clear()
 
 
 def test_sem_k_scale_knob(spark, sf_dir, monkeypatch):
@@ -135,7 +136,7 @@ def test_sem_k_scale_knob(spark, sf_dir, monkeypatch):
     is the unset default; a different k is genuinely different
     SemDeDup semantics, so this is a self-consistency pin, not an
     oracle."""
-    S.clear_similarity_state()
+    memo.clear()
     try:
         monkeypatch.setenv("ADT_SEM_K", "8")
         assigned, _both, _multi = S._sem_block_input(spark, sf_dir)
@@ -153,7 +154,7 @@ def test_sem_k_scale_knob(spark, sf_dir, monkeypatch):
         n = REGISTRY["dedup_semantic"].spark_fn(spark, sf_dir).count()
         assert 0 <= n <= total
     finally:
-        S.clear_similarity_state()
+        memo.clear()
 
 
 def test_sem_cells_two_level_router(spark, sf_dir, monkeypatch):
@@ -164,7 +165,7 @@ def test_sem_cells_two_level_router(spark, sf_dir, monkeypatch):
     large-C configuration the verdict asked to be exercised.  Like
     the distributed-k pin, cell-confined routing is deliberately
     approximate, so this is self-consistency, not an oracle."""
-    S.clear_similarity_state()
+    memo.clear()
     try:
         monkeypatch.setenv("ADT_SEM_K", "80")
         monkeypatch.setenv("ADT_SEM_CELLS", "128")
@@ -184,4 +185,4 @@ def test_sem_cells_two_level_router(spark, sf_dir, monkeypatch):
         n = REGISTRY["dedup_semantic"].spark_fn(spark, sf_dir).count()
         assert 0 <= n <= total
     finally:
-        S.clear_similarity_state()
+        memo.clear()

@@ -1039,11 +1039,11 @@ def test_ivf_pq_single_scan_no_joins(spark, sf_dir):
     assert "WindowGroupLimit" in plan
     # the memoized codes table hides its plan behind Scan ExistingRDD
     # (localCheckpoint wraps immediately) — assert the fused zero-join
-    # encode on the UN-checkpointed builder the memo keeps for tests
+    # encode on the UN-checkpointed builder the memo fill also calls
     from adt_spark.operators import similarity as sim
 
-    ck = (spark.sparkContext.applicationId, sf_dir, "cell")
-    encode_plan = _formatted(sim._CODES_PLAN[ck])
+    cells = sim._ivf_trained_cells(spark, sf_dir)
+    encode_plan = _formatted(sim._ivf_codes_plan(spark, sf_dir, cells))
     for j in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
               "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert j not in encode_plan
@@ -1188,8 +1188,6 @@ def test_quality_filtered_reuses_memo_broadcast_threshold(spark, sf_dir):
     no Generate node — so the training shuffles never re-run), and
     under 100×-scale stats the ONLY surviving hash-broadcast is the
     forced per-source threshold model table."""
-    from adt_spark.operators.quality import _WEAKLABEL_MEMO
-
     plan = _formatted(_q(spark, sf_dir, "pipeline_quality_filtered"))
     assert "Generate" not in plan  # no token explode re-derivation
     assert len(set(re.findall(r"\((\d+)\) Scan ExistingRDD", plan))) >= 1

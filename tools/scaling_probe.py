@@ -258,18 +258,14 @@ def main() -> None:
         # after releasing them — the second number approximates true
         # driver-side state on a real cluster
         point["_heap_with_memos_mb"] = round(driver_heap_mb(spark), 1)
-        from adt_spark.operators.dedup import clear_dedup_state
-        from adt_spark.operators.quality import clear_quality_state
-        from adt_spark.operators.similarity import clear_similarity_state
-        from adt_spark.operators.text import clear_text_state
+        from adt_spark.operators import memo
 
-        # quality's _LM_MEMO holds three localCheckpointed stems per
-        # (session, corpus) — text_bigram_lm_score (a FAMILIES member)
-        # populates it, and leaving it live would both bias
+        # every memo goes, the LM stems included: text_bigram_lm_score
+        # (a FAMILIES member) fills three localCheckpointed stems per
+        # (session, corpus), and leaving them live would both bias
         # _heap_after_clear_mb and accumulate across the 1x/3x/10x
         # points (round-7 ADVICE item 2)
-        clear_dedup_state(), clear_similarity_state(), clear_text_state()
-        clear_quality_state()
+        memo.clear()
         time.sleep(3)  # let the ContextCleaner reclaim checkpoint blocks
         point["_heap_after_clear_mb"] = round(driver_heap_mb(spark), 1)
 
@@ -284,17 +280,14 @@ def main() -> None:
             # k-SWEEP at the LARGEST corpus: 10x the k at a fixed
             # corpus must leave driver heap flat — the literal path
             # would grow both the seed collect and the plan with k.
-            from adt_spark.operators.similarity import (
-                _SEM_K_LITERAL_MAX,
-                clear_similarity_state,
-            )
+            from adt_spark.operators.similarity import _SEM_K_LITERAL_MAX
 
             base_k = max(_SEM_K_LITERAL_MAX + 16, (BASE_VECS * mult) // 25)
             ks = [base_k]
             if mult == mults[-1]:
                 ks = sorted({_SEM_K_LITERAL_MAX + 16, base_k // 3, base_k})
             for dk in ks:
-                clear_similarity_state()
+                memo.clear()
                 os.environ["ADT_SEM_K"] = str(dk)
                 label = (
                     "dedup_semantic_distributed_k"
@@ -309,7 +302,7 @@ def main() -> None:
                     )
                 finally:
                     os.environ.pop("ADT_SEM_K", None)
-            clear_similarity_state()
+            memo.clear()
 
             # round-9 (verdict item 1): the TWO-LEVEL router — C
             # forced past the literal ceiling so cell anchors stay a
@@ -327,7 +320,7 @@ def main() -> None:
 
                 cs = [_SEM_CELLS_LITERAL_MAX * 2, _SEM_CELLS_LITERAL_MAX * 16]
                 for dc in cs:
-                    clear_similarity_state()
+                    memo.clear()
                     os.environ["ADT_SEM_K"] = str(base_k)
                     os.environ["ADT_SEM_CELLS"] = str(dc)
                     label = f"dedup_semantic_two_level_c{dc}"
@@ -341,7 +334,7 @@ def main() -> None:
                     finally:
                         os.environ.pop("ADT_SEM_K", None)
                         os.environ.pop("ADT_SEM_CELLS", None)
-                clear_similarity_state()
+                memo.clear()
 
         results[f"{mult}x"] = point
 
