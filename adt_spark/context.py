@@ -284,8 +284,10 @@ class ADTContext:
                 walk(kids.apply(i), depth + 1)
 
         walk(plan, 0)
-        return self.spark.createDataFrame(
-            [("Plan with Metrics", "\n".join(lines))], "plan_type string, plan string"
+        return local_frame(
+            self.spark,
+            [("Plan with Metrics", "\n".join(lines))],
+            "plan_type string, plan string",
         )
 
     # -- table registration (reference: listing.rs / deltatable.rs) ------
@@ -299,6 +301,100 @@ class ADTContext:
         as temp views (TESTDATA.md layout: ``{dir}/{table}.parquet``).
         """
         register_sf_tables(self.spark, sf_dir)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built table (``rows``: tuples in schema order) as an
+    Arrow LOCAL RELATION — the analog of DataFusion's ``MemTable`` /
+    ``VALUES``, record batches held in the engine process.
+    ``schema``: a DDL string or a ``StructType``.
+
+    Why not ``spark.createDataFrame(rows, schema)``: from a Python
+    list that plans a Python RDD (``parallelize`` plus the identity
+    ``map`` ``RDD._reserialize`` adds), so every execution of the table
+    — every broadcast of a bounds or state table, every ``.first()`` of
+    a DML result — runs a job of ``defaultParallelism`` Python-worker
+    tasks.  From a ``pyarrow.Table`` Spark plans a ``LocalRelation``
+    below ``spark.sql.execution.arrow.localRelationThreshold`` and a
+    JVM-decoded Arrow RDD above it; neither starts a Python worker.
+    Broadcasting a local relation runs JVM-only tasks, and collecting
+    one (``.first()`` of a DML result) submits no job at all.
+
+    Values mean what they mean on the list path: a naive ``datetime``
+    in a TIMESTAMP column (nested ones included) is local time, a naive
+    one in TIMESTAMP_NTZ is wall-clock time.  The local time is read by
+    ``datetime.astimezone`` — the list path's instant for every local
+    time that names one instant.  Inside a DST fold or gap the list
+    path's ``mktime`` answer depends on libc state; ``astimezone``
+    honours ``fold``, so a collected TIMESTAMP (``fromInternal`` marks
+    the second pass through a repeated hour ``fold=1``) re-enters as
+    the same instant.
+
+    Known limit (PySpark's Arrow conversion, pyarrow < 17): a NULL
+    MAP whose values are TIMESTAMPs reads back as an empty map."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    names = schema.names
+    cols: list[list] = [[] for _ in names]
+    for row in rows:
+        for col, v in zip(cols, row, strict=True):
+            col.append(v)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = [
+        pa.array(
+            [_ltz_to_micros(f.dataType, v) for v in col]
+            if _has_ltz(f.dataType)
+            else col,
+            type=at.type,
+        )
+        for f, col, at in zip(schema.fields, cols, arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
+
+
+def _has_ltz(dt) -> bool:
+    """Whether a Spark type holds a (local-time) TIMESTAMP anywhere."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.TimestampType):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _has_ltz(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _has_ltz(dt.keyType) or _has_ltz(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_has_ltz(f.dataType) for f in dt.fields)
+    return False
+
+
+def _ltz_to_micros(dt, v):
+    """``v`` with every TIMESTAMP value as UTC epoch microseconds
+    (naive = local time, aware = its offset); pyarrow types the
+    integers as ``timestamp('us', tz='UTC')``."""
+    from pyspark.sql import types as T
+
+    if v is None:
+        return None
+    if isinstance(dt, T.TimestampType):
+        return dt.toInternal(v if v.tzinfo else v.astimezone())
+    if isinstance(dt, T.ArrayType):
+        return [_ltz_to_micros(dt.elementType, x) for x in v]
+    if isinstance(dt, T.MapType):
+        return {
+            _ltz_to_micros(dt.keyType, k): _ltz_to_micros(dt.valueType, x)
+            for k, x in v.items()
+        }
+    if isinstance(dt, T.StructType):
+        return tuple(
+            _ltz_to_micros(f.dataType, x) for f, x in zip(dt.fields, v, strict=True)
+        )
+    return v
 
 
 def spread(df: DataFrame) -> DataFrame:

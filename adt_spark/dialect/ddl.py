@@ -45,6 +45,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from adt_spark.context import local_frame
+
 #: table name -> list of (column, ascending) declared via WITH ORDER.
 DECLARED_ORDERS: dict[str, list[tuple[str, bool]]] = {}
 
@@ -207,10 +209,10 @@ def execute_create_external_table(spark: SparkSession, sql: str) -> DataFrame:
     if spec["if_not_exists"] and spec["name"] in [
         t.name for t in spark.catalog.listTables()
     ]:
-        return spark.createDataFrame([], "result string")
+        return local_frame(spark, [], "result string")
     if spec["unbounded"]:
         _register_unbounded(spark, spec)
-        return spark.createDataFrame([], "result string")
+        return local_frame(spark, [], "result string")
     df = register_table(
         spark,
         spec["name"],
@@ -238,7 +240,7 @@ def execute_create_external_table(spark: SparkSession, sql: str) -> DataFrame:
         # and lets Catalyst elide matching downstream per-partition
         # sorts (the Spark analog of with_file_sort_order).
         df.sortWithinPartitions(*sort_exprs).createOrReplaceTempView(spec["name"])
-    return spark.createDataFrame([], "result string")
+    return local_frame(spark, [], "result string")
 
 
 #: formats Spark's file-stream source supports (the others are

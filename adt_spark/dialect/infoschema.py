@@ -35,6 +35,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from adt_spark.context import local_frame
+
 _REF_RE = re.compile(r"\binformation_schema\s*\.\s*(\w+)", re.IGNORECASE)
 
 _KNOWN = {"tables", "views", "columns", "schemata", "df_settings"}
@@ -85,21 +87,25 @@ def _catalog_snapshot(spark: SparkSession):
 
 def materialize_information_schema(spark: SparkSession) -> None:
     tables_rows, views_rows, columns_rows = _catalog_snapshot(spark)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         tables_rows,
         "table_catalog string, table_schema string, table_name string, table_type string",
     ).createOrReplaceTempView("information_schema_tables")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         views_rows,
         "table_catalog string, table_schema string, table_name string, definition string",
     ).createOrReplaceTempView("information_schema_views")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         columns_rows,
         "table_catalog string, table_schema string, table_name string, "
         "column_name string, ordinal_position bigint, column_default string, "
         "is_nullable string, data_type string",
     ).createOrReplaceTempView("information_schema_columns")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (getattr(d, "catalog", None) or "spark_catalog", d.name)
             for d in spark.catalog.listDatabases()
@@ -112,8 +118,8 @@ def materialize_information_schema(spark: SparkSession) -> None:
     settings["spark.sql.shuffle.partitions"] = spark.conf.get(
         "spark.sql.shuffle.partitions"
     )
-    spark.createDataFrame(
-        sorted(settings.items()), "name string, value string"
+    local_frame(
+        spark, sorted(settings.items()), "name string, value string"
     ).createOrReplaceTempView("information_schema_df_settings")
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.context import local_frame
 from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
@@ -1112,8 +1113,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         math.ceil(n / _COS_BLOCK_ROWS),
         1,
     )
-    pairs = spark.createDataFrame(
-        [(i, j) for i in range(b_blocks) for j in range(i, b_blocks)], "i int, j int"
+    pairs = local_frame(
+        spark,
+        [(i, j) for i in range(b_blocks) for j in range(i, b_blocks)],
+        "i int, j int",
     )
     blocks = emb.select("vec_id", "embedding").withColumn(
         "blk", (F.col("vec_id") % b_blocks).cast("int")

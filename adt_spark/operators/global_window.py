@@ -8,13 +8,19 @@ the same SQL with a parallel sort + streaming evaluation
 main.rs:116).  This module rebuilds the whole unpartitioned-window
 surface as a TWO-PHASE construction:
 
-1. a DETERMINISTIC range partitioner (``_assign_range_pids``) puts
+1. a DETERMINISTIC range partitioner (``_range_pid_assigner``) puts
    every key of pid p strictly before every key of pid p+1, peers in
    one pid;
 2. each family evaluates its window LOCALLY per pid (a partitioned
    window — parallel), and the part a pid cannot see (rows in earlier
    / later pids) comes from bounded per-pid DRIVER STATE re-entered as
    a ≤ n_parts-row broadcast join, never as plan literals.
+
+Both the bounds and the per-pid state are Arrow local relations
+(``context.local_frame``): the optimized plan reads them as
+``LocalRelation``, so broadcasting one runs JVM-only tasks (a
+Python-list ``createDataFrame`` planned a Python RDD, and every
+execution of the statement ran Python-worker tasks per table).
 
 Families: ranks (row_number / rank / dense_rank / percent_rank /
 cume_dist / ntile), running aggregates with the default frame
@@ -34,7 +40,8 @@ function (``_dense_rank_state``, ``_bounded_state``,
 actions that are not a flat per-pid aggregate.
 
 ``plan_global_windows`` is the one entry point: it samples every
-order's split bounds, assigns pids, runs every state action
+order's split bounds, builds each order's pid assigner once (for the
+state base and the chained frame alike), runs every state action
 concurrently under the caller's job group, then chains the attach
 functions.  The one state gathered while chaining is the lag/lead
 over SHIFTED ROWS frames, which reads columns only the chained frame
@@ -58,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from adt_spark.context import local_frame
 
 __all__ = ["OrderWindows", "plan_global_windows"]
 
@@ -233,35 +242,39 @@ def _lex_after_cond(key_cols: list, bound_cols: list, specs: list):
     return out
 
 
-def _assign_range_pids(
-    df: DataFrame, order_cols: list, splits: list[tuple],
-) -> DataFrame:
+def _range_pid_assigner(df: DataFrame, order_cols: list, splits: list[tuple]):
     """The DETERMINISTIC RANGE PARTITIONER under the whole two-phase
-    global-window family: append ``_adt_pid`` such that (a) pid order
-    agrees with the key order — every key of pid p strictly precedes
-    every key of pid p+1, (b) equal keys (peers) always share a pid,
-    and (c) pid is a pure function of the key VALUE — no sampling
-    inside the plan, so separate actions (the state collects and the
-    final output) see the SAME partitioning without materializing
-    anything (round-10: replaces repartitionByRange +
-    localCheckpoint, which pinned Spark's nondeterministic sampled
-    boundaries by writing the whole corpus to executor disk).
+    global-window family → ``assign(frame)``, which appends ``_adt_pid``
+    such that (a) pid order agrees with the key order — every key of
+    pid p strictly precedes every key of pid p+1, (b) equal keys
+    (peers) always share a pid, and (c) pid is a pure function of the
+    key VALUE — no sampling inside the plan, so separate actions (the
+    state collects and the final output) see the SAME partitioning
+    without materializing anything (round-10: replaces
+    repartitionByRange + localCheckpoint, which pinned Spark's
+    nondeterministic sampled boundaries by writing the whole corpus to
+    executor disk).
 
     Mechanics: ``splits`` — the bounds ``_sample_split_bounds`` drew
     once — become a ≤ n_parts-row BOUNDS TABLE — (pid, lo…, hi…,
-    unbounded flags) — broadcast and interval-joined: row → the unique
-    pid with lo < key ≤ hi under the engine's exact ordering (NULL
-    placement and NaN included).  The bounds live in broadcast DATA,
-    never in the plan, so the plan is byte-stable in n_parts
-    (machine-checked in tests/test_plans.py); the join is a
-    BroadcastNestedLoopJoin costing O(n_parts) comparisons per row
-    (see _resolve_rank_parts for the scale ceiling and escape).
+    unbounded flags) — built as an Arrow local relation
+    (``context.local_frame``: broadcasting it starts no Python worker),
+    broadcast and interval-joined: row → the unique pid with
+    lo < key ≤ hi under the engine's exact ordering (NULL placement and
+    NaN included).  The bounds live in broadcast DATA, never in the
+    plan, so the plan is byte-stable in n_parts (machine-checked in
+    tests/test_plans.py); the join is a BroadcastNestedLoopJoin costing
+    O(n_parts) comparisons per row (see _resolve_rank_parts for the
+    scale ceiling and escape).
 
-    The SAME splits applied to two frames carrying the same rows give
-    identical pids: the planner assigns them once on the short-lineage
-    base its state actions read, and once on the chained output frame
-    (sampling the chained frame would recompute every earlier
-    construction's windows and joins just to draw the sample).
+    ``df`` types the bounds; the bounds table(s) and the interval
+    condition are built ONCE per order and ``assign`` applies them to
+    any frame carrying ``df``'s key columns.  The same splits on two
+    frames carrying the same rows give identical pids: the planner
+    assigns them on the short-lineage base its state actions read, and
+    on the chained output frame (sampling the chained frame would
+    recompute every earlier construction's windows and joins just to
+    draw the sample).
 
     The local window downstream (partitionBy ``_adt_pid``) is the ONE
     data shuffle any construction in this family pays."""
@@ -302,7 +315,7 @@ def _assign_range_pids(
             if extra_vals is not None:
                 row += list(extra_vals[idx])
             rows.append(tuple(row))
-        return spark.createDataFrame(rows, T.StructType(fields))
+        return local_frame(spark, rows, T.StructType(fields))
 
     def _interval_cond(tag: str):
         after_lo = _lex_after_cond(
@@ -333,8 +346,9 @@ def _assign_range_pids(
         # FLAT: one BNLJ over all intervals — O(n_int) comparisons per
         # row, no join amplification; right up to a few hundred parts
         bounds = _bounds_table([_ival(p) for p in range(n_int)], "", "_adt_bpid")
-        return (
-            df.join(F.broadcast(bounds), _interval_cond(""), "inner")
+        cond = _interval_cond("")
+        return lambda frame: (
+            frame.join(F.broadcast(bounds), cond, "inner")
             .withColumnRenamed("_adt_bpid", "_adt_pid")
             .drop(*_drop_cols(""))
         )
@@ -357,22 +371,20 @@ def _assign_range_pids(
             )
         )
     sup = _bounds_table(supers, "s", "_adt_bspid")
-    routed = (
-        df.join(F.broadcast(sup), _interval_cond("s"), "inner")
-        .withColumnRenamed("_adt_bspid", "_adt_spid")
-        .drop(*_drop_cols("s"))
-    )
-    subs = [_ival(p) for p in range(n_int)]
+    sup_cond = _interval_cond("s")
     sub = _bounds_table(
-        subs,
+        [_ival(p) for p in range(n_int)],
         "",
         "_adt_bpid",
         extra_fields=[T.StructField("_adt_bspid2", T.IntegerType(), False)],
         extra_vals=[(p // S,) for p in range(n_int)],
     )
-    cond = (F.col("_adt_spid") == F.col("_adt_bspid2")) & _interval_cond("")
-    return (
-        routed.join(F.broadcast(sub), cond, "inner")
+    sub_cond = (F.col("_adt_spid") == F.col("_adt_bspid2")) & _interval_cond("")
+    return lambda frame: (
+        frame.join(F.broadcast(sup), sup_cond, "inner")
+        .withColumnRenamed("_adt_bspid", "_adt_spid")
+        .drop(*_drop_cols("s"))
+        .join(F.broadcast(sub), sub_cond, "inner")
         .withColumnRenamed("_adt_bpid", "_adt_pid")
         .drop("_adt_spid", "_adt_bspid2", *_drop_cols(""))
     )
@@ -383,11 +395,12 @@ def _broadcast_pid_join(ranged: DataFrame, rows: list, schema) -> DataFrame:
     ≤ n_parts-row BROADCAST JOIN on ``_adt_pid`` — the round-10
     replacement for the create_map literal patch maps, so boundary
     state is DATA and the plan stays byte-stable in n_parts.  The
-    first schema column must be ``_adt_jpid int``; the join is inner
-    and provably row-preserving (the rows cover every pid the data
-    produced — they were derived from it)."""
-    spark = ranged.sparkSession
-    state = spark.createDataFrame(rows, schema)
+    state is an Arrow local relation (``context.local_frame``), so
+    broadcasting it starts no Python worker.  The first schema column must be
+    ``_adt_jpid int``; the join is inner and provably row-preserving
+    (the rows cover every pid the data produced — they were derived
+    from it)."""
+    state = local_frame(ranged.sparkSession, rows, schema)
     return ranged.join(
         F.broadcast(state), F.col("_adt_pid") == F.col("_adt_jpid"), "inner"
     ).drop("_adt_jpid")
@@ -1639,38 +1652,44 @@ def _run_parallel(spark: SparkSession, thunks: list) -> list:
         return [f.result() for f in futures]
 
 
+def _sampled_pid_assigner(df: DataFrame, order_cols: list, n_parts: int):
+    """One order's split bounds, sampled, and its pid assigner."""
+    splits = _sample_split_bounds(df, order_cols, n_parts)
+    return _range_pid_assigner(df, order_cols, splits)
+
+
 def _gather_state(
     df: DataFrame, orders: list[OrderWindows], scalars: list, n_parts: int | None,
 ) -> tuple[list, dict]:
     """The STATE phase — every driver action of the family except the
-    shifted frames' offsets (see ``_chain``) → (splits per order,
-    {job key: state}).
+    shifted frames' offsets (see ``_chain``) → (pid assigner per
+    order, {job key: state}).
 
     Two concurrent waves (round-12, r11 verdict item 2): A samples
-    every order's split bounds (one top-k job each); B runs every
-    order's state — the FUSED flat per-pid aggregate (rank counts +
-    running totals + unbounded-frame totals: one composite groupBy
-    collect per order) and each family's state function — all at
-    once.  Every action reads the pid-assigned SHORT-LINEAGE base
-    (``df`` itself + the order's pids), never the chained frame: pid
-    is a pure function of the key and the chain is row-preserving, so
-    state values are identical, while a chained-frame action would
-    re-execute every earlier construction's windows and broadcast
-    joins (measured round-11: the second order's bounds sample alone
-    cost 0.94 s vs 0.12 s for the first at sf0.1).  No count pass: the
-    bounds sample is a fixed-size hash top-k, so nothing needs the
-    input's row count."""
+    every order's split bounds (one top-k job each) and builds its pid
+    assigner; B runs every order's state — the FUSED flat per-pid
+    aggregate (rank counts + running totals + unbounded-frame totals:
+    one composite groupBy collect per order) and each family's state
+    function — all at once.  Every action reads the pid-assigned
+    SHORT-LINEAGE base (``df`` itself + the order's pids), never the
+    chained frame: pid is a pure function of the key and the chain is
+    row-preserving, so state values are identical, while a
+    chained-frame action would re-execute every earlier construction's
+    windows and broadcast joins (measured round-11: the second order's
+    bounds sample alone cost 0.94 s vs 0.12 s for the first at sf0.1).
+    No count pass: the bounds sample is a fixed-size hash top-k, so
+    nothing needs the input's row count."""
     spark = df.sparkSession
     np_ = _resolve_rank_parts(spark, n_parts)
-    splits = _run_parallel(
+    assigners = _run_parallel(
         spark,
-        [partial(_sample_split_bounds, df, o.order_cols, np_) for o in orders],
+        [partial(_sampled_pid_assigner, df, o.order_cols, np_) for o in orders],
     )
     jobs: dict = {}
     if scalars:
         jobs["scalars"] = partial(_scalar_state, df, scalars)
-    for k, (o, sp) in enumerate(zip(orders, splits)):
-        base = _assign_range_pids(df, o.order_cols, sp)
+    for k, (o, assign) in enumerate(zip(orders, assigners)):
+        base = assign(df)
         exprs = (
             _ranks_per_pid_exprs(o.ranks)
             + _running_per_pid_exprs(base, o.running)
@@ -1688,20 +1707,21 @@ def _gather_state(
             jobs[k, "first_last"] = partial(
                 _first_last_state, base, o.order_cols, o.first_last
             )
-    return splits, dict(zip(jobs, _run_parallel(spark, list(jobs.values()))))
+    return assigners, dict(zip(jobs, _run_parallel(spark, list(jobs.values()))))
 
 
 def _chain(
     df: DataFrame, orders: list[OrderWindows], scalars: list,
-    splits: list, state: dict,
+    assigners: list, state: dict,
 ) -> DataFrame:
     """The ATTACH phase: scalar totals on ``df``, then per order the
-    pid assignment (same splits as the state base) and each family's
-    attach function, chained — earlier orders' columns ride through."""
+    pid assignment (the assigner the state base used) and each
+    family's attach function, chained — earlier orders' columns ride
+    through."""
     out = _attach_scalars(df, scalars, state["scalars"]) if scalars else df
-    for k, (o, sp) in enumerate(zip(orders, splits)):
+    for k, (o, assign) in enumerate(zip(orders, assigners)):
         keys = o.order_cols
-        ranged = _assign_range_pids(out, keys, sp)
+        ranged = assign(out)
         per_pid = state.get((k, "per_pid"), ([], {}))
         if o.ranks:
             ranged = _attach_ranks(
@@ -1754,5 +1774,5 @@ def plan_global_windows(
     builds the plan (``_chain``); the result is a lazy frame whose
     execution is the ONE pid-keyed shuffle per order."""
     scalars = list(scalars)
-    splits, state = _gather_state(df, orders, scalars, n_parts)
-    return _chain(df, orders, scalars, splits, state)
+    assigners, state = _gather_state(df, orders, scalars, n_parts)
+    return _chain(df, orders, scalars, assigners, state)

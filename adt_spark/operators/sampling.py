@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.context import local_frame
 from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
@@ -50,7 +51,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan at any scale.
     """
     docs = tables(spark, sf_dir)["documents"]
-    rates = spark.createDataFrame(_MIX, "lang string, thresh string, repeats int")
+    rates = local_frame(spark, _MIX, "lang string, thresh string, repeats int")
     return (
         docs.join(F.broadcast(rates), "lang")
         .filter(
@@ -1245,7 +1246,7 @@ def q_global_rank_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase construction that scales:
 
     1. range-partition on the total-order key (n_chars, doc_id) via
-       the DETERMINISTIC bounds partitioner (global_window._assign_range_pids:
+       the DETERMINISTIC bounds partitioner (global_window._range_pid_assigner:
        sample once → literal split bounds → broadcast interval join),
        so partitions are balanced and partition i's keys all precede
        partition i+1's;

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from adt_spark.context import local_frame
 from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
@@ -1783,7 +1784,8 @@ def _sem_block_input(spark: SparkSession, sf_dir: str):
     nblk_map = F.create_map(
         *chain.from_iterable((F.lit(c), F.lit(b)) for c, b in nblk.items())
     )
-    bpairs = spark.createDataFrame(
+    bpairs = local_frame(
+        spark,
         [
             (c, i, j)
             for c, b in nblk.items()
@@ -2430,7 +2432,7 @@ def emb_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in range(_PQ_M)
         for pos in range(_PQ_SUB)
     ]
-    return spark.createDataFrame(rows, "m int, cid int, pos int, val double")
+    return local_frame(spark, rows, "m int, cid int, pos int, val double")
 
 
 #: ADC query count (vec_ids _PQ_K .. _PQ_K+_PQ_NQ-1).  8, not 2: the
@@ -3590,7 +3592,7 @@ def ann_ivf_train_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid in sorted(cb)
         for pos in range(_DIM)
     ]
-    return spark.createDataFrame(rows, "cid int, pos int, val double")
+    return local_frame(spark, rows, "cid int, pos int, val double")
 
 
 @register(

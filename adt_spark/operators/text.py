@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from adt_spark.context import spread
+from adt_spark.context import local_frame, spread
 from adt_spark.operators.dedup import _SHINGLE_SQL
 from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
@@ -415,8 +415,8 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = memoize(spark, sf_dir, "bpe_merges", lambda: (
         _bpe_train(spark, sf_dir, _BPE_TRAIN_ROUNDS)[0]
     ))
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count bigint"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, pair_count bigint"
     )
 
 

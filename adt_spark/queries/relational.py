@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adt_spark.context import local_frame
 from adt_spark.queries import register, tables
 
 # Exact money math: cast the clean 2-dp doubles to DECIMAL before any
@@ -1008,8 +1009,10 @@ def q_values_inline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-memory VALUES table joined to a fact table (reference's
     ``CREATE TABLE AS VALUES`` surface; broadcast by construction)."""
     t = tables(spark, sf_dir)
-    lookup = spark.createDataFrame(
-        [("O", "open"), ("F", "filled"), ("P", "pending")], ["status", "code"]
+    lookup = local_frame(
+        spark,
+        [("O", "open"), ("F", "filled"), ("P", "pending")],
+        "status string, code string",
     )
     return (
         t["orders"]

@@ -27,6 +27,8 @@ import pyarrow.ipc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from adt_spark.context import local_frame
+
 
 def _ipc_paths(location: str) -> list[str]:
     location = location.removeprefix("file://")
@@ -81,7 +83,7 @@ def read_arrow_ipc_distributed(spark: SparkSession, location: str) -> DataFrame:
     if not paths:
         raise FileNotFoundError(f"no Arrow IPC files at {location}")
     schema = from_arrow_schema(_open_reader(paths[0]).schema)
-    paths_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+    paths_df = local_frame(spark, [(p,) for p in paths], "path string").repartition(
         min(len(paths), 64)
     )
 

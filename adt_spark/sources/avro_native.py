@@ -40,6 +40,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from adt_spark.context import local_frame
+
 _MAGIC = b"Obj\x01"
 _SYNC = b"\x9aadt-spark-avro\x9b"  # 16 bytes, fixed (deterministic output)
 assert len(_SYNC) == 16
@@ -514,8 +516,8 @@ def read_avro_native(spark: SparkSession, location: str) -> DataFrame:
         raise AvroError("top-level Avro schema must be a record")
     arrow_schema = to_arrow_schema(spark_schema)
 
-    paths_df = spark.createDataFrame(
-        [(p,) for p in files], "path string"
+    paths_df = local_frame(
+        spark, [(p,) for p in files], "path string"
     ).repartition(min(len(files), spark.sparkContext.defaultParallelism))
 
     def decode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:

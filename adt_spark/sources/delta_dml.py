@@ -32,6 +32,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from adt_spark.context import local_frame
+
 _DELETE = re.compile(
     r"^\s*DELETE\s+FROM\s+delta\.`(?P<path>[^`]+)`\s+WHERE\s+(?P<pred>.+?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -276,15 +278,15 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
 
     if m := _DELETE.match(sql):
         version, n = delete_where(spark, m.group("path"), m.group("pred"))
-        return spark.createDataFrame(
-            [(n, version)], "num_affected_rows bigint, version bigint"
+        return local_frame(
+            spark, [(n, version)], "num_affected_rows bigint, version bigint"
         )
     if m := _UPDATE.match(sql):
         version, n = update_where(
             spark, m.group("path"), m.group("pred"), _split_assignments(m.group("sets"))
         )
-        return spark.createDataFrame(
-            [(n, version)], "num_affected_rows bigint, version bigint"
+        return local_frame(
+            spark, [(n, version)], "num_affected_rows bigint, version bigint"
         )
     if m := _OPTIMIZE.match(sql):
         from adt_spark.sources.delta_native_write import (
@@ -296,18 +298,19 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
         if cols := m.group("cols"):
             zcols = [c.strip().strip("`") for c in cols.split(",")]
             version = optimize_zorder(spark, path, zcols)
-            return spark.createDataFrame(
-                [(version, ",".join(zcols))], "version bigint, zorder_by string"
+            return local_frame(
+                spark, [(version, ",".join(zcols))], "version bigint, zorder_by string"
             )
         version = optimize_compact(spark, path)
-        return spark.createDataFrame([(version,)], "version bigint")
+        return local_frame(spark, [(version,)], "version bigint")
     if m := _RESTORE.match(sql):
         from adt_spark.sources.delta_native_write import restore_table
 
         version, n_added, n_removed = restore_table(
             spark, m.group("path"), int(m.group("version"))
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(version, n_added, n_removed)],
             "version bigint, num_restored_files bigint, num_removed_files bigint",
         )
@@ -315,7 +318,8 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
         from adt_spark.sources.delta_native_write import describe_history
 
         rows = describe_history(spark, m.group("path"))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(r["version"], r["timestamp"], r["operation"], r["operationParameters"])
              for r in rows],
             "version bigint, timestamp bigint, operation string, "
@@ -324,7 +328,7 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
     if m := _VACUUM.match(sql):
         hours = float(m.group("hours")) if m.group("hours") else 168.0
         deleted = vacuum(spark, m.group("path"), retain_hours=hours)
-        return spark.createDataFrame([(len(deleted),)], "num_files_deleted bigint")
+        return local_frame(spark, [(len(deleted),)], "num_files_deleted bigint")
     if m := _DETAIL.match(sql):
         from adt_spark.sources.delta_native import replay_snapshot
 
@@ -332,7 +336,8 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
         snap = replay_snapshot(spark, path)
         n_files = len(snap.files)
         size = sum(snap.file_sizes.get(p, 0) for p in snap.files)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     "delta",
@@ -354,7 +359,7 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
         from adt_spark.sources.delta_native_write import convert_to_delta
 
         version = convert_to_delta(spark, m.group("path"))
-        return spark.createDataFrame([(version,)], "version bigint")
+        return local_frame(spark, [(version,)], "version bigint")
     if m := _CLONE.match(sql):
         from adt_spark.sources.delta_native_write import shallow_clone
 
@@ -364,17 +369,15 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
             m.group("dst"),
             int(m.group("version")) if m.group("version") else None,
         )
-        return spark.createDataFrame(
-            [(version, n_files)], "version bigint, num_referenced_files bigint"
+        return local_frame(
+            spark, [(version, n_files)], "version bigint, num_referenced_files bigint"
         )
     if m := _TBLPROPS.match(sql):
         from adt_spark.sources.delta_native import replay_snapshot
 
         snap = replay_snapshot(spark, m.group("path"))
         props = sorted((snap.configuration or {}).items())
-        return spark.createDataFrame(
-            props or [("", "")], "key string, value string"
-        ).filter("key != '' OR value != ''")
+        return local_frame(spark, props, "key string, value string")
     if m := _SET_TBLPROPS.match(sql):
         from adt_spark.sources.delta_native_write import set_tblproperties
 
@@ -384,15 +387,17 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
                 f"no 'key'='value' pairs in SET TBLPROPERTIES: {m.group('props')!r}"
             )
         version = set_tblproperties(spark, m.group("path"), props)
-        return spark.createDataFrame([(version,)], "version bigint")
+        return local_frame(spark, [(version,)], "version bigint")
     if m := _ADD_CONSTRAINT.match(sql):
         from adt_spark.sources.delta_native_write import add_constraint
 
         version = add_constraint(
             spark, m.group("path"), m.group("name"), m.group("expr").strip()
         )
-        return spark.createDataFrame(
-            [(version, m.group("name").lower())], "version bigint, constraint string"
+        return local_frame(
+            spark,
+            [(version, m.group("name").lower())],
+            "version bigint, constraint string",
         )
     if m := _DROP_CONSTRAINT.match(sql):
         from adt_spark.sources.delta_native_write import drop_constraint
@@ -403,7 +408,9 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
             m.group("name"),
             if_exists=bool(m.group("if_exists")),
         )
-        return spark.createDataFrame(
-            [(version, m.group("name").lower())], "version bigint, constraint string"
+        return local_frame(
+            spark,
+            [(version, m.group("name").lower())],
+            "version bigint, constraint string",
         )
     raise ValueError(f"not a delta DML statement: {sql!r}")

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adt_spark.context import local_frame
+
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 #: classic single-file checkpoint: N.checkpoint.parquet
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -659,8 +661,8 @@ def read_delta_native(
     out_cols = [f.name for f in data_fields] + part_cols
 
     if not snap.files:
-        return spark.createDataFrame(
-            [], T.StructType(data_fields + [part_fields[c] for c in part_cols])
+        return local_frame(
+            spark, [], T.StructType(data_fields + [part_fields[c] for c in part_cols])
         )
     # id-mode resolution: the column-mapping spec requires files to be
     # written with BOTH the physical column name and the parquet field
@@ -738,8 +740,8 @@ def read_delta_native(
         parts.append(_with_partition_cols(df, pvals, part_fields, out_cols))
 
     if not parts:  # every file skipped by statistics
-        return spark.createDataFrame(
-            [], T.StructType(data_fields + [part_fields[c] for c in part_cols])
+        return local_frame(
+            spark, [], T.StructType(data_fields + [part_fields[c] for c in part_cols])
         )
     out = parts[0]
     for p in parts[1:]:
@@ -850,8 +852,8 @@ def _apply_deletion_vector(
         # large DV: millions of literals would blow up the expression
         # tree/driver — broadcast left-anti join against a positions
         # DataFrame instead (plan size O(1) in the DV cardinality)
-        pos_df = spark.createDataFrame(
-            [(int(p),) for p in positions], "__pos bigint"
+        pos_df = local_frame(
+            spark, [(int(p),) for p in positions], "__pos bigint"
         )
         df = df.join(F.broadcast(pos_df), "__pos", "left_anti")
     return df.drop("__pos")
@@ -1008,7 +1010,7 @@ def table_changes(
             )
 
     if not parts:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -51,6 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from adt_spark.context import local_frame
 from adt_spark.sources.delta_native import (
     _hadoop_fs,
     _is_url,
@@ -2369,7 +2370,7 @@ def add_constraint(spark, location: str, name: str, expr: str) -> int:
     # resolve the expression against the schema (analysis error = bad
     # column / syntax) on an empty frame — no data read
     try:
-        spark.createDataFrame([], snap.schema).filter(F.expr(expr)).schema
+        local_frame(spark, [], snap.schema).filter(F.expr(expr)).schema
     except Exception as exc:
         raise DeltaWriteError(
             f"constraint {name!r} does not resolve against the table "

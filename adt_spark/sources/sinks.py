@@ -33,6 +33,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from adt_spark.context import local_frame
+
 #: sink format name → (spark write format, default options)
 _WRITE_FORMATS = {
     "parquet": ("parquet", {}),
@@ -307,7 +309,7 @@ def execute_copy(spark: SparkSession, sql: str, run_query) -> DataFrame:
         )
     finally:
         df.unpersist()
-    return spark.createDataFrame([(n,)], "count bigint")
+    return local_frame(spark, [(n,)], "count bigint")
 
 
 def write_bucketed(

@@ -586,6 +586,65 @@ def test_attach_global_ranks_matches_native_on_ties_and_nulls(spark, case):
         assert g == w_rows, f"case={case} dir={direction}"
 
 
+@pytest.mark.parametrize("key", ["ts", "d"])
+def test_global_window_temporal_keys_match_native(spark, key):
+    """TIMESTAMP and DATE order keys (NULLs included) through the
+    planner vs native ``Window.orderBy``: their split bounds and their
+    per-pid lag/lead and first/last state travel through Arrow local
+    relations, so every value must come back as the same instant."""
+    import datetime
+    import random
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from adt_spark.operators.global_window import (
+        OrderWindows,
+        plan_global_windows,
+    )
+
+    rng = random.Random(41)
+    t0 = datetime.datetime(2024, 3, 9, 22, 0, 0, 250000)
+    rows = []
+    for i in range(160):
+        ts = None if i % 11 == 0 else t0 + datetime.timedelta(
+            minutes=rng.choice([0, 15, 45, 60, 90, 1440, 2880]) * rng.randint(0, 5),
+            microseconds=rng.choice([0, 1, 999999]),
+        )
+        rows.append((i, ts, None if ts is None or i % 7 == 0 else ts.date()))
+    df = spark.createDataFrame(rows, "id int, ts timestamp, d date")
+    v = F.col("ts")
+    for direction in ("asc", "desc_nulls_first"):
+        k = getattr(F.col(key), direction)()
+        w = Window.orderBy(k, F.col("id"))
+        native = {
+            "rn": F.row_number().over(w).cast("long"),
+            "rk": F.rank().over(w).cast("long"),
+            "dr": F.dense_rank().over(w).cast("long"),
+            "l1": F.lag(v, 1).over(w),
+            "l3": F.lead(v, 3).over(w),
+            "fv": F.first(v).over(w),
+            "lv": F.last(v).over(w),
+            "lvn": F.last(v, ignorenulls=True).over(w),
+        }
+        order = OrderWindows(
+            [(F.col(key), direction), (F.col("id"), "asc")],
+            ranks=[("row_number", "rn"), ("rank", "rk"), ("dense_rank", "dr")],
+            offsets=[("lag", v, 1, "l1"), ("lead", v, 3, "l3")],
+            first_last=[("first_value", v, None, "fv"),
+                        ("last_value", v, None, "lv"),
+                        ("last_value", v, None, "lvn", True)],
+        )
+        got = plan_global_windows(df, [order], n_parts=5).select("id", *native)
+        want = df.select("id", *[c.alias(n) for n, c in native.items()])
+        assert [(f.name, f.dataType) for f in got.schema.fields] == [
+            (f.name, f.dataType) for f in want.schema.fields
+        ]
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), f"key={key} dir={direction}"
+
+
 def test_global_rank_rewrite_url_table(spark):
     """URL tables (`fmt.`/path`` — the reference's enable_url_table
     surface) work as the single relation of a global-rank rewrite,

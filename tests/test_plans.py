@@ -1461,7 +1461,7 @@ def test_sql_global_offsets_no_single_partition_window(spark, sf_dir):
 def test_global_window_family_plan_flat_in_n_parts(spark, sf_dir):
     """Round-10: the two-phase global-window family's partition
     bounds, prefix offsets, and boundary arrays are broadcast DATA
-    (createDataFrame + pid join), never plan literals — 8× the
+    (local relations + pid join), never plan literals — 8× the
     partition count must leave the optimized plan byte-comparable
     (the round-9 construction embedded O(n_parts·j) create_map
     literals).  And nothing O(data) may materialize: no Scan
@@ -1539,8 +1539,9 @@ def test_global_window_family_plan_flat_in_n_parts(spark, sf_dir):
         p64 = _formatted(build(64))
         # the corpus reaches the window straight from the parquet scan
         # (the round-9 localCheckpoint replaced it with a materialized
-        # RDD scan); the only ExistingRDD scans allowed are the tiny
-        # _adt_* broadcast state tables (createDataFrame plans as one)
+        # RDD scan); the tiny _adt_* broadcast state tables plan as
+        # LocalTableScan, so no ExistingRDD scan is expected — any
+        # that appears must at least be an _adt_* state table
         assert "Scan parquet" in p8, name
         for m in re.finditer(
             r"\(\d+\) Scan ExistingRDD(?:\s*\[codegen[^\]]*\])?\s*\n"
