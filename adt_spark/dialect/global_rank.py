@@ -51,7 +51,9 @@ Scope (round-10, widened past the round-9 single-relation rule):
 - one top-level SELECT; the FROM body may be a relation, a
   ``fmt.`path``` URL table, a parenthesized derived table (GROUP
   BY / join / anything inside), or a top-level JOIN chain; a WITH
-  prefix is carried verbatim onto the inner statement;
+  prefix is carried verbatim onto the inner statement (split off by
+  ``window_frames._main_query_start``, the splitter the keyed-window
+  compression shares);
 - a top-level GROUP BY [HAVING] is supported when every projection
   item is a bare column, an explicit ``expr AS alias``, or exactly
   one rewritable window call with an alias (window keys/args may
@@ -83,7 +85,12 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from adt_spark.dialect.window_frames import _mask_literals, _match_paren
+from adt_spark.dialect.window_frames import (
+    _blank_parens,
+    _main_query_start,
+    _mask_literals,
+    _match_paren,
+)
 
 __all__ = ["maybe_rewrite_global_rank"]
 
@@ -180,22 +187,6 @@ def _split_top_comma_spans(s: str) -> list[tuple[int, int]]:
 
 def _split_top_commas(s: str) -> list[str]:
     return [s[a:b] for a, b in _split_top_comma_spans(s)]
-
-
-def _blank_parens(s: str) -> str:
-    """Blank everything inside parentheses (positions preserved) so
-    depth-0 keyword scans cannot see subquery / CTE-body innards."""
-    out, depth = [], 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-            out.append("(")
-        elif ch == ")":
-            depth -= 1
-            out.append(")")
-        else:
-            out.append(ch if depth == 0 else " ")
-    return "".join(out)
 
 
 def _parse_order_keys(masked_body: str, src_body: str):
@@ -397,15 +388,11 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         return None
 
     # --- statement shape ---------------------------------------------
+    main_start = _main_query_start(masked)
+    if main_start is None:
+        return None
+    cte_src = sql[:main_start]
     blanked = _blank_parens(masked)
-    cte_src = ""
-    main_start = 0
-    if re.match(r"\s*with\b", blanked, re.IGNORECASE):
-        ms = re.search(r"\bselect\b", blanked, re.IGNORECASE)
-        if ms is None:
-            return None
-        cte_src = sql[: ms.start()]
-        main_start = ms.start()
     body_blanked = blanked[main_start:]
     if _BLOCKERS_TOP.search(body_blanked):
         return None

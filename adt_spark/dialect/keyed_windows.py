@@ -69,6 +69,17 @@ passthrough, mirroring window_frames' refusal discipline):
   ORDER BY k NULLS LAST) AS __adt_drN FROM <ident>) <alias>`` with the
   injected column used ONLY inside OVER clauses.
 
+Either form may follow a ``WITH <cte>[, <cte>…]`` prefix, and its
+source identifier may then name a CTE or a table.  The prefix is
+carried verbatim onto the compressed statement and the main query
+passes the same gates; the split is ``window_frames._main_query_start``,
+the one splitter the global-rank pass uses too.  Two prefixes refuse:
+
+- ``WITH RECURSIVE`` — a recursive CTE is not a plain relation;
+- any ``_NONDET`` function anywhere in the prefix — the compressed
+  statement reads its source twice (once for the per-key partials,
+  once for the join-back), so both reads must see the same rows.
+
 Every item holding a window call needs an explicit ``AS`` alias (an
 unaliased item is named after its text, which the rewrite changes).  A
 bare top-level ``*`` is emitted as ``<ident>.*``, so the joined-back
@@ -98,6 +109,7 @@ from adt_spark.dialect.window_frames import (
     _OVER_RE,
     _PRE_RE,
     _call_before_over,
+    _main_query_start,
     _mask_literals,
     _match_paren,
     _split_top_level,
@@ -165,6 +177,7 @@ _CAST_KEY_RE = re.compile(
     re.IGNORECASE,
 )
 _SELECT_RE = re.compile(r"^\s*select\s", re.IGNORECASE)
+_RECURSIVE_RE = re.compile(r"\s*with\s+recursive\b", re.IGNORECASE)
 _FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
 _ALIAS_END = re.compile(r"\bas\s+([A-Za-z_]\w*|`[^`]+`)\s*$", re.IGNORECASE)
 _ORD_TAIL_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
@@ -215,9 +228,20 @@ def compress_keyed_windows(sql: str) -> str | None:
     refuses (callers fall back to the uncompressed text)."""
     if os.environ.get("ADT_KEYED_WINDOWS", "1").lower() in ("0", "false", "off"):
         return None
+    masked = _mask_literals(sql)
+    start = _main_query_start(masked)
+    if start is None:
+        return None
+    prefix, sql = sql[:start], sql[start:]
+    m_prefix, masked = masked[:start], masked[start:]
+    if _RECURSIVE_RE.match(m_prefix):
+        return None
+    # the compressed statement reads its source twice (partials and
+    # join-back): both reads must see the same rows
+    if {t.lower() for t in _IDENT_RE.findall(m_prefix)} & _NONDET:
+        return None
     if not _SELECT_RE.match(sql):
         return None
-    masked = _mask_literals(sql)
     depths = _depths(masked)
 
     # --- split SELECT items / FROM source -------------------------------
@@ -407,7 +431,7 @@ def compress_keyed_windows(sql: str) -> str | None:
         f"{', '.join(win_sql)} FROM {win_src}"
     )
     return (
-        f"SELECT {new_items.strip()}\n"
+        f"{prefix}SELECT {new_items.strip()}\n"
         f"FROM {base} LEFT JOIN ({win}) __kw_w\n"
         f"  ON {base}.{part_col} <=> __kw_w.__kw_jp "
         f"AND {base}.{key_col} <=> __kw_w.__kw_jk"

@@ -385,6 +385,40 @@ def _mask_literals(sql: str) -> str:
     return "".join(out)
 
 
+def _blank_parens(s: str) -> str:
+    """Blank everything inside parentheses (positions preserved) so
+    depth-0 keyword scans cannot see subquery / CTE-body innards."""
+    out, depth = [], 0
+    for ch in s:
+        if ch == "(":
+            depth += 1
+            out.append("(")
+        elif ch == ")":
+            depth -= 1
+            out.append(")")
+        else:
+            out.append(ch if depth == 0 else " ")
+    return "".join(out)
+
+
+_WITH_RE = re.compile(r"\s*with\b", re.IGNORECASE)
+
+
+def _main_query_start(masked: str) -> int | None:
+    """Offset of the main query in a literal-MASKED statement: 0
+    without a leading ``WITH``; after a ``WITH <cte>[, <cte>…]`` prefix,
+    the first top-level ``SELECT`` (CTE bodies and column lists are
+    blanked, so their SELECTs do not count); None when a WITH prefix
+    has no top-level SELECT after it.  ``sql[:start]`` is the prefix,
+    carried verbatim by the passes that split on it (global_rank,
+    keyed_windows)."""
+    blanked = _blank_parens(masked)
+    if not _WITH_RE.match(blanked):
+        return 0
+    ms = re.search(r"\bselect\b", blanked, re.IGNORECASE)
+    return ms.start() if ms else None
+
+
 def _match_paren(s: str, open_pos: int) -> int:
     """Index of the ')' matching s[open_pos] == '(' (masked input)."""
     depth = 0

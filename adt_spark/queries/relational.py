@@ -1116,6 +1116,25 @@ def q_ordered_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the EXCLUDE/GROUPS family's source: lineitem's keys with an
+#: exact-integer quantity — one CTE text for the Spark statements and
+#: their DuckDB oracles
+_LI_QTY_CTE = """
+    WITH t AS (
+      SELECT l_orderkey, l_linenumber, l_returnflag,
+             CAST(l_quantity AS BIGINT) AS qty
+      FROM lineitem
+    )"""
+#: the same source over orders: a DATE order key and an integer value
+_OD_CTE = """
+    WITH t AS (
+      SELECT o_orderkey, o_orderstatus,
+             CAST(o_orderdate AS DATE) AS od,
+             o_orderkey % 97 AS okm
+      FROM orders
+    )"""
+
+
 @register(
     "q_window_groups_frame",
     oracle="""
@@ -1135,55 +1154,42 @@ def q_ordered_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "groups_frame"),
 )
 def q_window_groups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPS-frame emulation (SURVEY gap G6: Spark has no GROUPS
-    BETWEEN): ``GROUPS 1 PRECEDING AND 1 FOLLOWING`` ≡ a RANGE frame
-    of ±1 over the peer-group index, i.e. ``dense_rank()`` of the
-    ORDER BY key.  Two window passes over the SAME partitioning+sort —
-    Catalyst plans one shuffle and one sort, the second Window reuses
-    the ordering.  (DuckDB also lacks GROUPS mode; the oracle runs the
-    identical construction, pinning the recipe cross-engine.)
-
-    Round-12 (guide §2.5/§2.6): evaluated over the distinct
-    (l_returnflag, qty) grain — dense_rank over rows ordered by qty
-    equals row-rank over the DISTINCT qtys, and the RANGE ±1 frame in
-    dr-space selects whole peer groups, so sum(qty) over the frame is
-    the windowed sum of per-key sums.  One parallel groupBy replaces
-    the 3-task full-data window; the ~|flags × qtys| result broadcasts
-    back (same contract as dialect/keyed_windows.py).
+    """``GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING`` (SURVEY gap G6:
+    Spark parses no GROUPS frame) through the raw-SQL dialect path:
+    ``rewrite_window_frames`` turns it into a RANGE ±1 frame over the
+    injected peer-group index ``dense_rank()`` of the ORDER BY key, and
+    the keyed-window compression (dialect/keyed_windows.py, form B
+    under a WITH prefix) recomputes that index and the windowed sum
+    over the distinct (l_returnflag, qty) grain — dense_rank over rows
+    ordered by qty equals row-rank over the DISTINCT qtys — then fans
+    the result back with one null-safe outer join.  DuckDB 1.0 has no
+    GROUPS mode, so the oracle spells the same construction out by
+    hand; running that text here would evaluate its CTE's dense_rank
+    as a 3-task full-data window in front of the grain.
     """
-    li = tables(spark, sf_dir)["lineitem"]
-    qty = F.col("l_quantity").cast("long")
-    base = li.select(
-        "l_orderkey", "l_linenumber", qty.alias("qty"), "l_returnflag"
+    tables(spark, sf_dir)
+    return _sql_frames(
+        spark,
+        f"""{_LI_QTY_CTE}
+    SELECT l_orderkey, l_linenumber,
+           CAST(sum(qty) OVER (PARTITION BY l_returnflag ORDER BY qty
+                GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS BIGINT) AS grp_sum
+    FROM t
+    """,
     )
-    w_rank = W.partitionBy("l_returnflag").orderBy("qty")
-    w_groups = W.partitionBy("l_returnflag").orderBy("dr").rangeBetween(-1, 1)
-    keyed = (
-        base.groupBy("l_returnflag", "qty")
-        .agg(F.sum("qty").alias("__kw_ksum"))
-        .withColumn("dr", F.dense_rank().over(w_rank))
-        .withColumn("grp_sum", F.sum("__kw_ksum").over(w_groups))
-        .select(
-            F.col("l_returnflag").alias("__kw_rf"),
-            F.col("qty").alias("__kw_qty"),
-            "grp_sum",
-        )
-    )
-    return base.join(
-        keyed,
-        base["l_returnflag"].eqNullSafe(keyed["__kw_rf"])
-        & base["qty"].eqNullSafe(keyed["__kw_qty"]),
-        "left",
-    ).select("l_orderkey", "l_linenumber", "grp_sum")
 
 
 def _sql_frames(spark: SparkSession, sql: str) -> DataFrame:
-    """Run raw frame-grammar SQL through the EXCLUDE/UBF rewriter and
-    then the round-12 keyed-window compression (evaluate RANGE windows
-    over the distinct (partition, order-key) grain — guide §2.5/§2.6;
-    equivalence contract and refusal gates in
-    adt_spark/dialect/keyed_windows.py; ROWS-frame statements pass
-    through compression untouched)."""
+    """Run raw frame-grammar SQL — the window family's own text, its
+    ``WITH t AS (…)`` prefix included: the oracle itself, or the
+    adt-script spelling where DuckDB 1.0 needs another (GROUPS frames,
+    non-straddling EXCLUDE) — through the GROUPS/EXCLUDE/UBF
+    rewriter and then the round-12 keyed-window compression (evaluate
+    RANGE windows over the distinct (partition, order-key) grain —
+    guide §2.5/§2.6; equivalence contract, accepted WITH prefixes and
+    refusal gates in adt_spark/dialect/keyed_windows.py; ROWS-frame
+    statements pass through compression untouched).  The CTE lives in
+    the statement, so no temp view is left in the session catalog."""
     from adt_spark.dialect.keyed_windows import compress_keyed_windows
     from adt_spark.dialect.window_frames import rewrite_window_frames
 
@@ -1195,16 +1201,7 @@ _EXCL_FRAME = (
     "PARTITION BY l_returnflag ORDER BY qty "
     "RANGE BETWEEN 5 PRECEDING AND 5 FOLLOWING"
 )
-
-
-@register(
-    "q_window_exclude",
-    oracle=f"""
-    WITH t AS (
-      SELECT l_orderkey, l_linenumber, l_returnflag,
-             CAST(l_quantity AS BIGINT) AS qty
-      FROM lineitem
-    )
+_EXCL_SQL = f"""{_LI_QTY_CTE}
     SELECT l_orderkey, l_linenumber,
            CAST(sum(qty) OVER ({_EXCL_FRAME} EXCLUDE CURRENT ROW) AS BIGINT)
              AS sum_excl_current,
@@ -1213,14 +1210,16 @@ _EXCL_FRAME = (
            CAST(sum(qty) OVER ({_EXCL_FRAME} EXCLUDE TIES) AS BIGINT)
              AS sum_excl_ties
     FROM t
-    """,
-    tags=("window", "exclude"),
-)
+    """
+
+
+@register("q_window_exclude", oracle=_EXCL_SQL, tags=("window", "exclude"))
 def q_window_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame EXCLUDE emulation (SURVEY §2.B windows; DataFusion
-    48 frames support EXCLUDE, Spark has none — COVERAGE.md documents
-    the subtract-the-excluded-rows workaround; this query proves it
-    against DuckDB's native EXCLUDE):
+    """Window frame EXCLUDE (SURVEY §2.B windows; DataFusion 48 frames
+    support EXCLUDE, Spark has none) through the raw-SQL rewrite,
+    graded against DuckDB's native EXCLUDE on the identical text.  The
+    rewriter subtracts the excluded rows from the unmodified frame
+    (COVERAGE.md documents the workaround):
 
     - ``EXCLUDE CURRENT ROW`` ≡ frame_sum − qty
     - ``EXCLUDE GROUP``       ≡ frame_sum − peer_sum, where peer_sum
@@ -1228,57 +1227,15 @@ def q_window_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
       ROW`` (exactly the ORDER-BY peer group)
     - ``EXCLUDE TIES``        ≡ frame_sum − peer_sum + qty
 
-    SQL semantics note: an empty exclusion result is NULL (sum over
-    zero rows), so subtractions go through a null-safe guard only
-    where the frame can empty out — with a ±5 RANGE the frame always
-    contains the peer group, so frame_sum ≥ peer_sum > 0 here.
-
-    Round-12 (guide §2.5/§2.6): both windows are evaluated over the
-    distinct (l_returnflag, qty) grain — a RANGE frame's membership
-    is a pure function of the key values, so frame_sum is the
-    windowed sum of per-key sums and peer_sum IS the per-key sum (the
-    [0, 0] frame is exactly the peer group; no second window at all).
-    One parallel groupBy replaces the 3-task full-data window; the
-    ~|flags × qtys| result broadcasts back (same contract as
-    dialect/keyed_windows.py).
+    with count guards reproducing SQL's NULL over an emptied frame.
+    Every window is then evaluated over the distinct (l_returnflag,
+    qty) grain by the keyed-window compression under the WITH prefix —
+    a RANGE frame's membership is a pure function of the key values —
+    and broadcast back (machine-checked, test_plans.py::
+    test_exclude_family_keyed_compression).
     """
-    li = tables(spark, sf_dir)["lineitem"]
-    qty = F.col("l_quantity").cast("long")
-    base = li.select(
-        "l_orderkey", "l_linenumber", "l_returnflag", qty.alias("qty")
-    )
-    w = W.partitionBy("l_returnflag").orderBy("qty")
-    keyed = (
-        base.groupBy("l_returnflag", "qty")
-        .agg(F.sum("qty").alias("peer_sum"))
-        .withColumn("frame_sum", F.sum("peer_sum").over(w.rangeBetween(-5, 5)))
-        .select(
-            F.col("l_returnflag").alias("__kw_rf"),
-            F.col("qty").alias("__kw_qty"),
-            "frame_sum",
-            "peer_sum",
-        )
-    )
-    joined = base.join(
-        keyed,
-        base["l_returnflag"].eqNullSafe(keyed["__kw_rf"])
-        & base["qty"].eqNullSafe(keyed["__kw_qty"]),
-        "left",
-    )
-    frame_sum = F.col("frame_sum")
-    peer_sum = F.col("peer_sum")
-    excl_current = frame_sum - F.col("qty")
-    excl_group = frame_sum - peer_sum
-    return joined.select(
-        "l_orderkey",
-        "l_linenumber",
-        # sum over an emptied frame is NULL in SQL; mirror that
-        F.when(excl_current == 0, F.lit(None)).otherwise(excl_current)
-        .alias("sum_excl_current"),
-        F.when(excl_group == 0, F.lit(None)).otherwise(excl_group)
-        .alias("sum_excl_group"),
-        (frame_sum - peer_sum + F.col("qty")).alias("sum_excl_ties"),
-    )
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _EXCL_SQL)
 
 
 _MM_F1 = (
@@ -1296,19 +1253,13 @@ _MM_SELECT = f"""SELECT l_orderkey, l_linenumber,
        last_value(qty) OVER ({_MM_F2} EXCLUDE GROUP) AS lv_excl_group"""
 
 
-@register(
-    "q_window_exclude_minmax",
-    oracle=f"""
-    WITH t AS (
-      SELECT l_orderkey, l_linenumber, l_returnflag,
-             CAST(l_quantity AS BIGINT) AS qty
-      FROM lineitem
-    )
+_MM_SQL = f"""{_LI_QTY_CTE}
     {_MM_SELECT}
     FROM t
-    """,
-    tags=("window", "exclude"),
-)
+    """
+
+
+@register("q_window_exclude_minmax", oracle=_MM_SQL, tags=("window", "exclude"))
 def q_window_exclude_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCLUDE GROUP/TIES under min/max/first_value/last_value through
     the RAW-SQL split-frame rewrite itself (DataFusion 48 accepts
@@ -1328,14 +1279,8 @@ def q_window_exclude_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 — over the distinct (l_returnflag, qty) grain and
     broadcast-joins back (0.8 s; dialect/keyed_windows.py).
     """
-    li = tables(spark, sf_dir)["lineitem"]
-    li.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("qty"),
-    ).createOrReplaceTempView("adt_wx_minmax_t")
-    return _sql_frames(spark, f"{_MM_SELECT}\nFROM adt_wx_minmax_t")
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _MM_SQL)
 
 
 _RX_F1 = (
@@ -1355,19 +1300,13 @@ _RX_SELECT = f"""SELECT l_orderkey, l_linenumber,
          AS sum_excl_cur"""
 
 
-@register(
-    "q_window_exclude_rows",
-    oracle=f"""
-    WITH t AS (
-      SELECT l_orderkey, l_linenumber, l_returnflag,
-             CAST(l_quantity AS BIGINT) AS qty
-      FROM lineitem
-    )
+_RX_SQL = f"""{_LI_QTY_CTE}
     {_RX_SELECT}
     FROM t
-    """,
-    tags=("window", "exclude"),
-)
+    """
+
+
+@register("q_window_exclude_rows", oracle=_RX_SQL, tags=("window", "exclude"))
 def q_window_exclude_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCLUDE CURRENT ROW over **ROWS** frames on
     min/max/first_value/last_value (row-space split-frame rewrite:
@@ -1383,17 +1322,8 @@ def q_window_exclude_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning and sort, so Catalyst plans ONE exchange + ONE sort
     (machine-checked, test_plans.py::test_exclude_rows_single_exchange).
     """
-    from adt_spark.dialect.window_frames import rewrite_window_frames
-
-    li = tables(spark, sf_dir)["lineitem"]
-    li.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("qty"),
-    ).createOrReplaceTempView("adt_wx_rows_t")
-    sql = f"{_RX_SELECT}\nFROM adt_wx_rows_t"
-    return spark.sql(rewrite_window_frames(sql))
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _RX_SQL)
 
 
 _NX_ORD = "PARTITION BY l_returnflag ORDER BY qty, l_orderkey, l_linenumber "
@@ -1431,12 +1361,7 @@ _NX_SELECT_ORACLE = f"""SELECT l_orderkey, l_linenumber,
 
 @register(
     "q_window_exclude_noop",
-    oracle=f"""
-    WITH t AS (
-      SELECT l_orderkey, l_linenumber, l_returnflag,
-             CAST(l_quantity AS BIGINT) AS qty
-      FROM lineitem
-    )
+    oracle=f"""{_LI_QTY_CTE}
     {_NX_SELECT_ORACLE}
     FROM t
     """,
@@ -1470,17 +1395,8 @@ def q_window_exclude_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing frames bounded (they predate the pass and already
     measure the bounded plan).
     """
-    from adt_spark.dialect.window_frames import rewrite_window_frames
-
-    li = tables(spark, sf_dir)["lineitem"]
-    li.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("qty"),
-    ).createOrReplaceTempView("adt_wx_noop_t")
-    sql = f"{_NX_SELECT_SPARK}\nFROM adt_wx_noop_t"
-    return spark.sql(rewrite_window_frames(sql))
+    tables(spark, sf_dir)
+    return _sql_frames(spark, f"{_LI_QTY_CTE}\n    {_NX_SELECT_SPARK}\n    FROM t\n    ")
 
 
 _VR_ORD = "PARTITION BY l_returnflag ORDER BY qty "
@@ -1508,19 +1424,13 @@ _VR_SELECT = f"""SELECT l_orderkey, l_linenumber,
          2 FOLLOWING EXCLUDE TIES) AS BIGINT) AS cnt_xt"""
 
 
-@register(
-    "q_window_exclude_range_value",
-    oracle=f"""
-    WITH t AS (
-      SELECT l_orderkey, l_linenumber, l_returnflag,
-             CAST(l_quantity AS BIGINT) AS qty
-      FROM lineitem
-    )
+_VR_SQL = f"""{_LI_QTY_CTE}
     {_VR_SELECT}
     FROM t
-    """,
-    tags=("window", "exclude"),
-)
+    """
+
+
+@register("q_window_exclude_range_value", oracle=_VR_SQL, tags=("window", "exclude"))
 def q_window_exclude_range_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCLUDE GROUP/TIES on the order-statistic family over
     value-offset RANGE frames with an INTEGER order key — the round-6
@@ -1542,14 +1452,8 @@ def q_window_exclude_range_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same statement.  The oracle is the IDENTICAL text on DuckDB's
     native EXCLUDE, conformant on straddling frames.
     """
-    li = tables(spark, sf_dir)["lineitem"]
-    li.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("qty"),
-    ).createOrReplaceTempView("adt_wx_vrng_t")
-    return _sql_frames(spark, f"{_VR_SELECT}\nFROM adt_wx_vrng_t")
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _VR_SQL)
 
 
 _DVR_ORD = "PARTITION BY o_orderstatus ORDER BY od "
@@ -1577,20 +1481,13 @@ _DVR_SELECT = f"""SELECT o_orderkey,
          EXCLUDE TIES) AS BIGINT) AS cnt_xt"""
 
 
-@register(
-    "q_window_exclude_range_date",
-    oracle=f"""
-    WITH t AS (
-      SELECT o_orderkey, o_orderstatus,
-             CAST(o_orderdate AS DATE) AS od,
-             o_orderkey % 97 AS okm
-      FROM orders
-    )
+_DVR_SQL = f"""{_OD_CTE}
     {_DVR_SELECT}
     FROM t
-    """,
-    tags=("window", "exclude"),
-)
+    """
+
+
+@register("q_window_exclude_range_date", oracle=_DVR_SQL, tags=("window", "exclude"))
 def q_window_exclude_range_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCLUDE GROUP/TIES on the order-statistic family over RANGE
     frames with ``INTERVAL DAY`` offsets and a DATE order key — the
@@ -1611,14 +1508,8 @@ def q_window_exclude_range_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same newly-parsed interval frames.  The oracle is the
     IDENTICAL text on DuckDB's native EXCLUDE.
     """
-    o = tables(spark, sf_dir)["orders"]
-    o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.col("o_orderdate").cast("date").alias("od"),
-        (F.col("o_orderkey") % 97).alias("okm"),
-    ).createOrReplaceTempView("adt_wx_drng_t")
-    return _sql_frames(spark, f"{_DVR_SELECT}\nFROM adt_wx_drng_t")
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _DVR_SQL)
 
 
 _MVR_ORD = "PARTITION BY o_orderstatus ORDER BY od "
@@ -1639,20 +1530,13 @@ _MVR_SELECT = f"""SELECT o_orderkey,
          PRECEDING AND CURRENT ROW EXCLUDE GROUP) AS BIGINT) AS sum_y_xg"""
 
 
-@register(
-    "q_window_exclude_range_month",
-    oracle=f"""
-    WITH t AS (
-      SELECT o_orderkey, o_orderstatus,
-             CAST(o_orderdate AS DATE) AS od,
-             o_orderkey % 97 AS okm
-      FROM orders
-    )
+_MVR_SQL = f"""{_OD_CTE}
     {_MVR_SELECT}
     FROM t
-    """,
-    tags=("window", "exclude"),
-)
+    """
+
+
+@register("q_window_exclude_range_month", oracle=_MVR_SQL, tags=("window", "exclude"))
 def q_window_exclude_range_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCLUDE over RANGE frames with ``INTERVAL MONTH/YEAR`` offsets
     on a DATE order key — the round-11 adjudication of the r10
@@ -1672,14 +1556,8 @@ def q_window_exclude_range_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the IDENTICAL text on DuckDB's native EXCLUDE,
     conformant on straddling frames (measured, month-end clamp dates
     included in the local matrix)."""
-    o = tables(spark, sf_dir)["orders"]
-    o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.col("o_orderdate").cast("date").alias("od"),
-        (F.col("o_orderkey") % 97).alias("okm"),
-    ).createOrReplaceTempView("adt_wx_mrng_t")
-    return _sql_frames(spark, f"{_MVR_SELECT}\nFROM adt_wx_mrng_t")
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _MVR_SQL)
 
 
 _UF_ORD = "PARTITION BY rf ORDER BY qty, l_orderkey, l_linenumber "
@@ -1709,13 +1587,11 @@ _UF_SELECT = f"""SELECT l_orderkey, l_linenumber,
          UNBOUNDED FOLLOWING) AS lv_far"""
 
 
-@register(
-    "q_window_unbounded_following",
-    oracle=f"""
+#: grouped to UNIQUE (l_orderkey, l_linenumber): the synthetic
+#: lineitem has duplicate key pairs, and a tied ROWS order is
+#: nondeterministic on every engine (and under the reversal)
+_UF_SQL = f"""
     WITH t AS (
-      -- grouped to UNIQUE (l_orderkey, l_linenumber): the synthetic
-      -- lineitem has duplicate key pairs, and a tied ROWS order is
-      -- nondeterministic on every engine (and under the reversal)
       SELECT l_orderkey, l_linenumber,
              min(l_returnflag) AS rf,
              CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
@@ -1726,9 +1602,10 @@ _UF_SELECT = f"""SELECT l_orderkey, l_linenumber,
     )
     {_UF_SELECT}
     FROM t
-    """,
-    tags=("window", "frames"),
-)
+    """
+
+
+@register("q_window_unbounded_following", oracle=_UF_SQL, tags=("window", "frames"))
 def q_window_unbounded_following(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving-start ``ROWS … AND UNBOUNDED FOLLOWING`` frames on every
     rewritable aggregate family, through the raw-SQL rewriter
@@ -1766,27 +1643,8 @@ def q_window_unbounded_following(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical plan; integer args keep the subtraction exact
     (queries/__init__.py rule 1).
     """
-    from adt_spark.dialect.window_frames import rewrite_window_frames
-
-    li = tables(spark, sf_dir)["lineitem"]
-    g = (
-        li.groupBy("l_orderkey", "l_linenumber")
-        .agg(
-            F.min("l_returnflag").alias("rf"),
-            F.sum(F.col("l_quantity").cast("long")).alias("qty"),
-        )
-    )
-    g.select(
-        "l_orderkey",
-        "l_linenumber",
-        "rf",
-        "qty",
-        F.when(F.col("l_linenumber") % 3 == 0, F.lit(None).cast("long"))
-        .otherwise(F.col("qty"))
-        .alias("nqty"),
-    ).createOrReplaceTempView("adt_wx_ubf_t")
-    sql = f"{_UF_SELECT}\nFROM adt_wx_ubf_t"
-    return spark.sql(rewrite_window_frames(sql))
+    tables(spark, sf_dir)
+    return _sql_frames(spark, _UF_SQL)
 
 
 @register(

@@ -213,3 +213,118 @@ def test_keyed_sum_warns_reassociation_once(monkeypatch):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert compress_keyed_windows(summed) is not None
+
+
+# --- WITH prefixes: carried verbatim, main query gated as above -------
+
+_CTE = "WITH s AS (SELECT * FROM kw_matrix_t) "
+
+
+@pytest.mark.parametrize("label", sorted(CASES))
+def test_keyed_equivalence_under_cte(spark, kw_table, label):
+    sql = f"{_CTE}SELECT rid, {CASES[label]} AS x\nFROM s"
+    plain, keyed = _both(spark, sql)
+    assert plain == keyed
+
+
+CTE_STATEMENTS = {
+    # GROUPS frame: rewrite_window_frames wraps the main query in its
+    # dense-rank subquery over the CTE name (form B)
+    "groups_form_b": f"{_CTE}SELECT rid, sum(v) OVER (PARTITION BY p"
+    " ORDER BY k GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS x FROM s",
+    # the main query reads the second of two CTEs
+    "two_ctes": "WITH s AS (SELECT * FROM kw_matrix_t WHERE rid < 14),"
+    " u AS (SELECT rid, p, k, v * 2 AS v FROM s)"
+    " SELECT rid, min(v) OVER (PARTITION BY p ORDER BY k RANGE BETWEEN"
+    " 1 PRECEDING AND 2 FOLLOWING) AS x, count(*) OVER (PARTITION BY p"
+    " ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS c"
+    " FROM u",
+    # a CTE column list renames the source's columns
+    "column_list": "WITH s (rid, pp, kk, vv) AS (SELECT rid, p, k, v FROM"
+    " kw_matrix_t) SELECT rid, max(vv) OVER (PARTITION BY pp ORDER BY kk"
+    " RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS x FROM s",
+}
+
+
+@pytest.mark.parametrize("label", sorted(CTE_STATEMENTS))
+def test_keyed_equivalence_cte_shapes(spark, kw_table, label):
+    plain, keyed = _both(spark, CTE_STATEMENTS[label])
+    assert plain == keyed
+
+
+_CTE_WINDOW = (
+    "sum(v) OVER (PARTITION BY p ORDER BY k RANGE BETWEEN 1 PRECEDING"
+    " AND 1 FOLLOWING) AS x"
+)
+#: a CTE-body literal that holds ``) SELECT`` and a compressible
+#: decoy; the real main query has a WHERE tail
+_LITERAL_DECOY = (
+    "WITH s AS (SELECT *, ') SELECT rid, " + _CTE_WINDOW + " FROM s'"
+    " AS note FROM kw_matrix_t) SELECT rid, " + _CTE_WINDOW
+    + " FROM s WHERE v > 0"
+)
+
+CTE_REFUSALS = {
+    "recursive": "WITH RECURSIVE s AS (SELECT * FROM kw_matrix_t)"
+    f" SELECT rid, {_CTE_WINDOW} FROM s",
+    # the compressed statement reads the CTE twice (partials, join-back)
+    "rand_in_body": "WITH s AS (SELECT rid, p, k, v * rand() AS v FROM"
+    f" kw_matrix_t) SELECT rid, {_CTE_WINDOW} FROM s",
+    "where_tail": f"{_CTE}SELECT rid, {_CTE_WINDOW} FROM s WHERE v > 0",
+    "literal_select": _LITERAL_DECOY,
+}
+
+
+@pytest.mark.parametrize("label", sorted(CTE_REFUSALS))
+def test_keyed_cte_refusals(label):
+    assert compress_keyed_windows(CTE_REFUSALS[label]) is None
+
+
+def test_with_prefix_split_masks_literals():
+    """The shared splitter finds the main query's SELECT, not the one
+    inside a CTE-body literal."""
+    from adt_spark.dialect.window_frames import _main_query_start, _mask_literals
+
+    start = _main_query_start(_mask_literals(_LITERAL_DECOY))
+    assert _LITERAL_DECOY[start:].startswith("SELECT rid, sum(v)")
+    assert _LITERAL_DECOY[:start].rstrip().endswith("FROM kw_matrix_t)")
+    assert _main_query_start("SELECT 1") == 0
+    assert _main_query_start("WITH s AS (SELECT 1)") is None
+
+
+#: the registry's WITH-sourced window oracles that the pass compresses
+#: (the other window members use ROWS frames, which it refuses)
+_COMPRESSED_ORACLES = (
+    "q_window_exclude",
+    "q_window_groups_frame",
+    "q_window_exclude_minmax",
+    "q_window_exclude_range_value",
+    "q_window_exclude_range_date",
+    "q_window_exclude_range_month",
+)
+
+
+@pytest.mark.parametrize("name", _COMPRESSED_ORACLES)
+def test_with_oracles_compress(name):
+    """Keeps the compression from being dropped silently: each oracle
+    starts with ``WITH`` and still comes out of ``translate_sql``
+    evaluated over the key grain."""
+    from adt_spark.dialect.translate import translate_sql
+    from adt_spark.queries import load_all
+
+    oracle = load_all()[name].oracle
+    assert oracle.lstrip().upper().startswith("WITH")
+    assert "__kw_w" in translate_sql(oracle)
+
+
+def test_window_family_leaves_no_views(spark, sf_dir):
+    """The window family runs its CTE text, so building its queries
+    leaves no ``adt_wx_*`` temp view in the session catalog."""
+    from adt_spark.queries import load_all
+
+    reg = load_all()
+    for name in sorted(n for n in reg if n.startswith("q_window_")):
+        reg[name].spark_fn(spark, sf_dir)
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("adt_wx_")
+    ]

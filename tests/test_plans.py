@@ -255,6 +255,29 @@ def test_groups_frame_keyed_compression(spark, sf_dir):
     assert plan.count("Window") >= 2
 
 
+def test_cte_groups_frame_keyed_compression(spark, sf_dir):
+    """A ``GROUPS BETWEEN`` statement over a CTE, through
+    ``ADTContext.sql``: the keyed-window compression carries the WITH
+    prefix, so both the injected dense_rank and the windowed sum run
+    over the distinct (partition, key) grain, joined back once."""
+    from adt_spark import ADTContext
+    from adt_spark.queries import tables
+
+    tables(spark, sf_dir)
+    plan = _formatted(
+        ADTContext(spark=spark).sql(
+            "WITH t AS (SELECT l_orderkey, l_returnflag, "
+            "CAST(l_quantity AS BIGINT) AS qty FROM lineitem) "
+            "SELECT l_orderkey, sum(qty) OVER (PARTITION BY l_returnflag "
+            "ORDER BY qty GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS s "
+            "FROM t"
+        )
+    )
+    _assert_windows_over_aggregates(plan)
+    assert "Join LeftOuter" in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_ordered_array_agg_no_window(spark, sf_dir):
     """q_ordered_array_agg: the ORDER BY emulation is array-local
     after one groupBy shuffle — no Window operator, no extra sort
