@@ -90,6 +90,7 @@ from adt_spark.dialect.window_frames import (
     _main_query_start,
     _mask_literals,
     _match_paren,
+    _strip_comments,
 )
 
 __all__ = ["maybe_rewrite_global_rank"]
@@ -371,7 +372,7 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
     """Execute ``sql`` through the two-phase global-window
     constructions when it matches the sound shape (module docstring);
     None when it does not (caller falls back to plain ``spark.sql``)."""
-    stripped = sql.rstrip()
+    stripped = _strip_comments(sql).rstrip()
     if stripped.endswith(";"):
         stripped = stripped[:-1]
     sql = stripped

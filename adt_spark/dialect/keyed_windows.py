@@ -113,6 +113,7 @@ from adt_spark.dialect.window_frames import (
     _mask_literals,
     _match_paren,
     _split_top_level,
+    _strip_comments,
 )
 
 #: frame-mode keyword at top level of an OVER body; bounds are NOT
@@ -228,6 +229,7 @@ def compress_keyed_windows(sql: str) -> str | None:
     refuses (callers fall back to the uncompressed text)."""
     if os.environ.get("ADT_KEYED_WINDOWS", "1").lower() in ("0", "false", "off"):
         return None
+    sql = _strip_comments(sql)
     masked = _mask_literals(sql)
     start = _main_query_start(masked)
     if start is None:

@@ -158,7 +158,8 @@ windows, other aggregates) passes through with its semantics intact.
 Anything outside the sound cases raises ``NotImplementedError`` with
 the DataFrame recipe to use instead — a loud error, never a silently
 different result.  All scanning is literal-masked so quoted strings
-are never touched.
+are never touched, and comments (other than ``/*+ … */`` hints) are
+blanked before any rewrite splices the statement's pieces together.
 
 Numeric-exactness boundary (a textual rewrite cannot see column
 types, so this is documented rather than guarded): the subtraction
@@ -362,27 +363,67 @@ def _pin_null_order(order_src: str) -> str:
     return ", ".join(out)
 
 
-def _mask_literals(sql: str) -> str:
-    """Same-length copy with single-quoted literal bodies blanked, so
-    keyword/paren scanning can't be fooled by quoted text.  Offsets in
-    the mask are offsets in the original."""
-    out = list(sql)
-    in_str = False
+#: what opens a literal or a comment
+_LIT_OR_COMMENT_RE = re.compile(r"'|--|/\*")
+
+
+def _literal_and_comment_spans(sql: str) -> list[tuple[int, int, bool]]:
+    """(start, end, is_comment) of every single-quoted literal body
+    and every ``--`` / ``/* */`` comment, in order.  A quote inside a
+    comment opens no literal, and ``--`` inside a literal is no
+    comment."""
+    spans = []
+    n = len(sql)
     i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            if in_str and i + 1 < len(sql) and sql[i + 1] == "'":
-                out[i] = out[i + 1] = " "
-                i += 2
-                continue
-            in_str = not in_str
-            i += 1
-            continue
-        if in_str:
-            out[i] = " "
-        i += 1
+    while m := _LIT_OR_COMMENT_RE.search(sql, i):
+        i, tok = m.start(), m.group()
+        if tok == "'":
+            j = sql.find("'", i + 1)
+            while j >= 0 and sql.startswith("''", j):
+                j = sql.find("'", j + 2)
+            j = n if j < 0 else j
+            spans.append((i + 1, j, False))
+            i = j + 1
+        else:
+            end = sql.find("\n" if tok == "--" else "*/", i + 2)
+            end = n if end < 0 else end + (0 if tok == "--" else 2)
+            spans.append((i, end, True))
+            i = end
+    return spans
+
+
+def _blank_spans(sql: str, spans) -> str:
+    """``sql`` with each (start, end) span replaced by as many blanks."""
+    out, last = [], 0
+    for start, end in spans:
+        out += [sql[last:start], " " * (end - start)]
+        last = end
+    out.append(sql[last:])
     return "".join(out)
+
+
+def _mask_literals(sql: str) -> str:
+    """Same-length copy with single-quoted literal bodies and whole
+    comments blanked, so keyword/paren scanning can't be fooled by
+    quoted or commented text.  Offsets in the mask are offsets in the
+    original."""
+    return _blank_spans(
+        sql, [(a, b) for a, b, _ in _literal_and_comment_spans(sql)]
+    )
+
+
+def _strip_comments(sql: str) -> str:
+    """``sql`` with every comment but a ``/*+ … */`` hint blanked.
+    The passes splice pieces of the statement into new text, and a
+    ``--`` comment spliced before text that was on its next line would
+    swallow that text; the rows a statement returns never depend on
+    its comments.  A comment-free statement comes back unchanged."""
+    if "--" not in sql and "/*" not in sql:
+        return sql
+    return _blank_spans(sql, [
+        (a, b) for a, b, is_comment in _literal_and_comment_spans(sql)
+        if is_comment and not sql.startswith("/*+", a)
+    ])
 
 
 def _blank_parens(s: str) -> str:
@@ -633,7 +674,7 @@ def rewrite_window_frames(sql: str) -> str:
     evaluation; plain user UBF frames (where every rewritten column's
     consistency caveat is the pre-existing tied-ROWS nondeterminism,
     documented on `_rewrite_moving_start_ubf`) get the O(n) forms."""
-    return _rewrite_groups_exclude(_rewrite_moving_start_ubf(sql))
+    return _rewrite_groups_exclude(_rewrite_moving_start_ubf(_strip_comments(sql)))
 
 
 def _rewrite_groups_exclude(sql: str) -> str:

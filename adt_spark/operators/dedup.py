@@ -70,7 +70,7 @@ def _positional_grams(docs: DataFrame, k: int) -> DataFrame:
 def _grams_build(docs: DataFrame, k: int) -> DataFrame:
     from adt_spark.context import spread
 
-    toks = F.split(F.col("text"), " ")
+    toks = F.col("_toks")
     # Guard docs shorter than k tokens (same discipline as
     # _shingle_arrays): Spark's sequence(1, 0) yields the DESCENDING
     # [1, 0] — not empty — so the unguarded transform would evaluate
@@ -88,21 +88,34 @@ def _grams_build(docs: DataFrame, k: int) -> DataFrame:
         ),
     ).otherwise(F.expr("array()").cast("array<struct<i:int,gram:string>>"))
     return (
-        spread(docs)
+        _tokenized(spread(docs))
         .select("doc_id", F.explode(windows).alias("g"))
         .select("doc_id", "g.i", "g.gram")
         .localCheckpoint(eager=False)
     )
 
 
-def _shingle_arr_expr():
-    """The distinct word-3-gram shingle array of ``text`` as ONE
-    column expression — the single definition of "what a shingle is",
-    shared by the memoized batch pipeline (_shingle_arrays) and the
+def _tokenized(docs: DataFrame) -> DataFrame:
+    """doc_id plus ``_toks`` = split(text, ' ') in its own projection:
+    the token array every gram builder's lambdas read as a column.
+    Spark evaluates a lambda body once per array element and hoists
+    nothing out of it, so a ``split(text)`` inside the body re-splits
+    the whole document per gram (O(tokens²) per document).  Every
+    builder reads ``_toks`` more than once, so CollapseProject keeps
+    this projection below the transform instead of inlining it."""
+    return docs.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
+
+
+def _shingle_arr_expr(toks):
+    """The distinct word-3-gram shingle array of the token-array
+    column ``toks`` (``_tokenized``'s ``_toks``) as ONE column
+    expression — the single definition of "what a shingle is", shared
+    by the memoized batch pipeline (_shingle_arrays) and the
     streaming band projection (band_keys_projection): a width /
     normalization change moves both, so ingest-time near-dup flagging
-    can never silently diverge from the nightly batch dedup."""
-    toks = F.split(F.col("text"), " ")
+    can never silently diverge from the nightly batch dedup.  ``toks``
+    must be a column, never ``split(text)`` itself: the lambda reads
+    it three times per gram."""
     return F.when(
         F.size(toks) >= 3,
         F.array_distinct(
@@ -134,12 +147,17 @@ def _shingle_arrays(docs: DataFrame) -> DataFrame:
     """doc_id → distinct word-3-gram shingle array (materialized,
     memoized per session+corpus).
 
-    The 3-gram array (_shingle_arr_expr) is built in one projection
-    and **materialized via localCheckpoint**.  Without a
-    hard barrier Catalyst collapses the projection into downstream
-    Generate/aggregate expressions and re-evaluates the whole
-    transform+array_distinct per consuming expression — quadratic in
-    doc length (measured 95s vs 0.9s at sf0.1).  ``localCheckpoint``
+    Two hazards, one per side of the 3-gram projection
+    (_shingle_arr_expr).  Below it, the text is split once into the
+    ``_toks`` column (``_tokenized``): split inside the transform
+    lambda re-split the whole document three times per gram (shingle
+    stage 1.28 s → 0.29 s on 5000-document perfbench corpora, 4 cores).
+    Above it, the array is **materialized via localCheckpoint**.
+    Without a hard barrier Catalyst collapses the projection into
+    downstream Generate/aggregate expressions and re-evaluates the
+    whole transform+array_distinct per consuming expression —
+    quadratic in doc length (measured 95s vs 0.9s at sf0.1).
+    ``localCheckpoint``
     (MEMORY_AND_DISK blocks, lineage truncated) materializes once;
     the memo gives every near-dup operator the same copy, and unlike
     ``cache()`` the blocks are released as soon as the memo entry is
@@ -151,8 +169,8 @@ def _shingle_arrays(docs: DataFrame) -> DataFrame:
     from adt_spark.context import spread
 
     return memoize(docs.sparkSession, docs, "shingles", lambda: (
-        spread(docs)
-        .select("doc_id", _shingle_arr_expr().alias("shingle_arr"))
+        _tokenized(spread(docs))
+        .select("doc_id", _shingle_arr_expr(F.col("_toks")).alias("shingle_arr"))
         .localCheckpoint(eager=False)
     ))
 
@@ -817,10 +835,15 @@ def band_keys_projection(df: DataFrame) -> DataFrame:
     projection over each arriving micro-batch.  Every derivation step
     is the SHARED definition (_shingle_arr_expr → _dhash_expr →
     _minhash_sig_cols → _band_key_cols), so batch and stream cannot
-    diverge."""
+    diverge.
+
+    A document has a shingle iff it has 3 tokens, so the empty-array
+    filter reads ``_toks``: a filter on ``dhash_arr`` is pushed below
+    its projection with a second copy of the whole shingle lambda."""
     sigs = (
-        df.select("doc_id", _dhash_expr(_shingle_arr_expr()).alias("dhash_arr"))
-        .filter(F.size("dhash_arr") > 0)
+        _tokenized(df)
+        .filter(F.size("_toks") >= 3)
+        .select("doc_id", _dhash_expr(_shingle_arr_expr(F.col("_toks"))).alias("dhash_arr"))
         .select("doc_id", *_minhash_sig_cols())
     )
     return sigs.select(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adt_spark.context import local_frame, spread
-from adt_spark.operators.dedup import _SHINGLE_SQL
+from adt_spark.operators.dedup import _SHINGLE_SQL, _tokenized
 from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
@@ -291,9 +291,11 @@ def _winnow_rows(docs: DataFrame) -> DataFrame:
     text_winnowing_fingerprints, factored so the property tests can
     drive it over CONSTRUCTED documents and machine-check the paper's
     guarantee (any shared run of ≥ w+k−1 tokens yields at least one
-    shared fingerprint hash)."""
-    toks = F.split("text", " ")
-    with_g = docs.select(
+    shared fingerprint hash).  The gram lambda reads the staged
+    ``_toks`` column (``_tokenized``), never ``split(text)``, and the
+    selection lambda reads the staged ``grams`` column."""
+    toks = F.col("_toks")
+    with_g = _tokenized(docs).select(
         "doc_id",
         (F.size(toks) - F.lit(2)).alias("ng"),
         F.transform(

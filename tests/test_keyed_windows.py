@@ -292,6 +292,70 @@ def test_with_prefix_split_masks_literals():
     assert _main_query_start("WITH s AS (SELECT 1)") is None
 
 
+# --- comments: an apostrophe in a comment opens no literal ------------
+
+_GROUPS_ITEM = (
+    "sum(v) OVER (PARTITION BY p ORDER BY k GROUPS BETWEEN 1 PRECEDING"
+    " AND 1 FOLLOWING) AS x"
+)
+#: (commented statement, the same statement without its comment)
+COMMENTED = {
+    "groups_line_comment": (
+        f"SELECT rid, {_GROUPS_ITEM} -- it's\nFROM kw_matrix_t",
+        f"SELECT rid, {_GROUPS_ITEM}\nFROM kw_matrix_t",
+    ),
+    "items_line_comment": (
+        f"SELECT rid, {_CTE_WINDOW} -- it's x\nFROM kw_matrix_t",
+        f"SELECT rid, {_CTE_WINDOW}\nFROM kw_matrix_t",
+    ),
+    "cte_body_comment": (
+        "WITH s AS (SELECT * -- the source's rows\nFROM kw_matrix_t)"
+        f" SELECT rid, {_CTE_WINDOW} FROM s",
+        f"{_CTE}SELECT rid, {_CTE_WINDOW} FROM s",
+    ),
+    "block_comment_before_from": (
+        f"SELECT rid, {_GROUPS_ITEM} /* it's */ FROM kw_matrix_t",
+        f"SELECT rid, {_GROUPS_ITEM} FROM kw_matrix_t",
+    ),
+    "trailing_comment_groups": (
+        f"SELECT rid, {_GROUPS_ITEM} FROM kw_matrix_t -- it's",
+        f"SELECT rid, {_GROUPS_ITEM} FROM kw_matrix_t",
+    ),
+}
+
+
+@pytest.mark.parametrize("label", sorted(COMMENTED))
+def test_commented_statements_rewrite(spark, kw_table, label):
+    """A commented statement rewrites and compresses like its
+    comment-free twin and returns the same rows."""
+    commented, plain = COMMENTED[label]
+    rewritten = rewrite_window_frames(commented)
+    compressed = compress_keyed_windows(rewritten)
+    assert compressed is not None, rewritten
+    want = spark.sql(rewrite_window_frames(plain)).orderBy("rid").collect()
+    assert spark.sql(compressed).orderBy("rid").collect() == want
+
+
+def test_comments_mask_without_literal_flip():
+    """``_mask_literals`` blanks whole comments; a quote inside one
+    opens no literal and ``--`` inside a literal is no comment.
+    ``_strip_comments`` keeps hints and leaves comment-free text
+    untouched."""
+    from adt_spark.dialect.window_frames import _mask_literals, _strip_comments
+
+    src = "a -- it's\nb /* x ' */ 'c -- d' FROM /* open"
+    assert _mask_literals(src) == (
+        "a        \nb           '      ' FROM        "
+    )
+    assert _strip_comments(src) == (
+        "a        \nb           'c -- d' FROM        "
+    )
+    hinted = "SELECT /*+ BROADCAST(t) */ a FROM t"
+    assert _strip_comments(hinted) == hinted
+    plain = "SELECT 'it''s' AS a, b - 1 FROM t"
+    assert _strip_comments(plain) is plain
+
+
 #: the registry's WITH-sourced window oracles that the pass compresses
 #: (the other window members use ROWS frames, which it refuses)
 _COMPRESSED_ORACLES = (

@@ -1111,6 +1111,72 @@ def test_winnowing_single_projection(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(…)`` in a plan string, up to
+    its matching paren: the body, then the lambda variables."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, j = 1, m.end()
+        while depth and j < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        out.append(plan[m.end():j - 1])
+    return out
+
+
+def test_token_split_staged_outside_lambdas(spark, monkeypatch):
+    """Spark evaluates a lambda body once per array element and hoists
+    nothing out of it, so ``split(text)`` inside a gram lambda
+    re-splits the whole document per gram.  Every token-gram builder
+    projects the token array first and its lambdas read that column;
+    winnowing's selection lambda reads the staged ``grams`` column
+    rather than an inlined copy of the gram transform.  The memoized
+    builders checkpoint their frame, so their plans are taken from
+    the frame handed to ``localCheckpoint``."""
+    from adt_spark.operators.dedup import (
+        _SUB_K,
+        _positional_grams,
+        _shingle_arrays,
+        band_keys_projection,
+    )
+    from adt_spark.operators.text import _winnow_rows
+
+    docs = spark.createDataFrame(
+        [(1, "plan guard " + " ".join(f"w{i}" for i in range(12))),
+         (2, "plan guard short")],
+        "doc_id long, text string",
+    )
+    checkpointed = []
+    real = type(docs).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", capture)
+    _shingle_arrays(docs)
+    _positional_grams(docs, _SUB_K)
+    assert len(checkpointed) == 2, "memo hit: the builders did not run"
+    frames = {
+        "_shingle_arrays": checkpointed[0],
+        "_positional_grams": checkpointed[1],
+        "band_keys_projection": band_keys_projection(docs),
+        "_winnow_rows": _winnow_rows(docs),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, f"{name}: no lambda in the plan"
+        assert not [b for b in bodies if "split(" in b], (
+            f"{name}: a lambda body re-splits the text\n{plan}"
+        )
+        if name == "_winnow_rows":
+            selection = [b for b in bodies if "array_min(" in b]
+            assert selection and all(
+                "md5(" not in b and "element_at(grams#" in b for b in selection
+            ), f"grams inlined into the selection lambda\n{plan}"
+
+
 def test_cdc_chunks_single_agg_no_joins(spark, sf_dir):
     """dedup_cdc_chunks claims boundary detection + chunk assembly are
     one array-land projection: no join operators, no window, and the

@@ -325,6 +325,88 @@ def test_positional_grams_short_docs(spark):
     assert sorted(by_doc[2]) == list(range(1, 12 - _SUB_K + 2))
 
 
+def _inline_split_shingle_arr():
+    """The shingle array as it was built before the token array was
+    staged: ``split(text)`` inside the transform lambda.  Kept here
+    only as the reference the staged builders must reproduce."""
+    from pyspark.sql import functions as F
+
+    toks = F.split(F.col("text"), " ")
+    return F.when(
+        F.size(toks) >= 3,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - 2),
+                lambda i: F.concat_ws(
+                    " ",
+                    F.element_at(toks, i),
+                    F.element_at(toks, i + 1),
+                    F.element_at(toks, i + 2),
+                ),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def test_staged_shingles_match_inline_split(spark):
+    """Staging the token array changes no shingle array (element for
+    element, in array_distinct's first-seen order) and no band key,
+    on the edge documents: empty, NULL, 1/2/3 tokens, repeated
+    3-grams, double spaces, a trailing space."""
+    from pyspark.sql import functions as F
+
+    from adt_spark.operators.dedup import (
+        _band_key_cols,
+        _dhash_expr,
+        _minhash_sig_cols,
+        _shingle_arrays,
+        band_keys_projection,
+    )
+
+    texts = [
+        "",
+        None,
+        "one",
+        "one two",
+        "one two three",
+        "a b c a b c a b c d a b",
+        "x  y z  x y",
+        "p q r s ",
+        " lead and  trail ",
+        " ".join(f"t{i % 7}" for i in range(40)),
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+
+    want = {
+        r.doc_id: r.shingle_arr
+        for r in docs.select(
+            "doc_id", _inline_split_shingle_arr().alias("shingle_arr")
+        ).collect()
+    }
+    got = {r.doc_id: r.shingle_arr for r in _shingle_arrays(docs).collect()}
+    assert got == want
+    assert want[5] == ["a b c", "b c a", "c a b", "b c d", "c d a", "d a b"]
+    assert want[6] == ["x  y", " y z", "y z ", "z  x", " x y"]
+
+    def by_doc(rows):
+        out = {}
+        for r in rows:
+            out.setdefault(r.doc_id, []).append(r.band_key)
+        return out
+
+    inline_bands = (
+        docs.select("doc_id", _dhash_expr(_inline_split_shingle_arr()).alias("dhash_arr"))
+        .filter(F.size("dhash_arr") > 0)
+        .select("doc_id", *_minhash_sig_cols())
+        .select("doc_id", F.explode(F.array(*_band_key_cols())).alias("band_key"))
+    )
+    got_bands = by_doc(band_keys_projection(docs).collect())
+    assert got_bands == by_doc(inline_bands.collect())
+    assert sorted(got_bands) == [4, 5, 6, 7, 8, 9]
+
+
 def test_file_skipping_typed_comparisons():
     """Review finding: timestamp stats use the 'T' separator while SQL
     literals use a space, and decimal stats are strings — raw string
