@@ -10,4 +10,6 @@ closes the flagged gaps:
   Spark lacks (``date_bin``, ``strpos``, ``array_has_all`` …).
 - ``translate``  — light textual rewrites for PostgreSQL operators
   Spark SQL does not parse (``~`` regex match, ``::`` casts).
+- ``sqltext``    — the one SQL text scanner (literals, comments, paren
+  depth) every textual pass, the DML/COPY parsers and the DDL share.
 """

@@ -46,6 +46,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from adt_spark.context import local_frame
+from adt_spark.dialect.sqltext import _comma_spans, _mask_literals
 
 #: table name -> list of (column, ascending) declared via WITH ORDER.
 DECLARED_ORDERS: dict[str, list[tuple[str, bool]]] = {}
@@ -130,21 +131,10 @@ def parse_create_external_table(sql: str) -> dict | None:
     head = body[: stored.start()].strip()
     cols_m = re.match(r"^\((?P<cols>.*)\)\s*$", head, re.DOTALL)
     if cols_m:
-        cols = []
-        depth = 0
-        token = ""
-        for ch in cols_m.group("cols"):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                cols.append(token)
-                token = ""
-            else:
-                token += ch
-        if token.strip():
-            cols.append(token)
+        body_cols = cols_m.group("cols")
+        cols = [body_cols[a:b] for a, b in _comma_spans(_mask_literals(body_cols))]
+        if not cols[-1].strip():
+            cols.pop()  # a trailing comma, or no columns at all
         fields = []
         for col in cols:
             parts = col.strip().split(None, 1)

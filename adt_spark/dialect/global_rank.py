@@ -52,7 +52,7 @@ Scope (round-10, widened past the round-9 single-relation rule):
   ``fmt.`path``` URL table, a parenthesized derived table (GROUP
   BY / join / anything inside), or a top-level JOIN chain; a WITH
   prefix is carried verbatim onto the inner statement (split off by
-  ``window_frames._main_query_start``, the splitter the keyed-window
+  ``sqltext._main_query_start``, the splitter the keyed-window
   compression shares);
 - a top-level GROUP BY [HAVING] is supported when every projection
   item is a bare column, an explicit ``expr AS alias``, or exactly
@@ -85,11 +85,13 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from adt_spark.dialect.window_frames import (
+from adt_spark.dialect.sqltext import (
     _blank_parens,
+    _comma_spans,
     _main_query_start,
     _mask_literals,
     _match_paren,
+    _star_item,
     _strip_comments,
 )
 
@@ -156,10 +158,6 @@ _BLOCKERS_TOP = re.compile(
     r"\b(union|intersect|except|distinct|recursive)\b", re.IGNORECASE
 )
 
-#: a projection item that is `*` or `alias.*` (ADVICE r9: reject ANY
-#: top-level star, not just a leading one)
-_STAR_ITEM_RE = re.compile(r"^\s*(?:[A-Za-z_]\w*\s*\.\s*)?\*\s*$")
-
 #: explicit `expr AS alias` tail (GROUP-mode non-window items)
 _AS_ALIAS_RE = re.compile(r"\s+as\s+(?P<alias>[A-Za-z_]\w*)\s*$", re.IGNORECASE)
 
@@ -169,25 +167,6 @@ _view_counter = itertools.count()
 #: released when the next rewrite caches its own; a previous query's
 #: result DataFrame consumed after that recomputes — correct, uncached)
 _cached_inner = None
-
-
-def _split_top_comma_spans(s: str) -> list[tuple[int, int]]:
-    """(start, end) spans of depth-0 comma-separated parts."""
-    spans, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            spans.append((start, i))
-            start = i + 1
-    spans.append((start, len(s)))
-    return spans
-
-
-def _split_top_commas(s: str) -> list[str]:
-    return [s[a:b] for a, b in _split_top_comma_spans(s)]
 
 
 def _parse_order_keys(masked_body: str, src_body: str):
@@ -200,7 +179,7 @@ def _parse_order_keys(masked_body: str, src_body: str):
     carried textually (masked twin checked for window/subquery
     tokens)."""
     keys = []
-    for a, b in _split_top_comma_spans(masked_body):
+    for a, b in _comma_spans(masked_body):
         mpart, spart = masked_body[a:b], src_body[a:b]
         m = _KEY_RE.match(mpart)
         if m:
@@ -445,14 +424,13 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
     ):
         return None
 
-    # --- projection items (ANY top-level star is rejected) -----------
+    # --- projection items (ANY top-level star is rejected, ADVICE r9) --
     sel_masked = masked[sel_span[0] : sel_span[1]]
     item_spans = [
-        (sel_span[0] + a, sel_span[0] + b)
-        for a, b in _split_top_comma_spans(sel_masked)
+        (sel_span[0] + a, sel_span[0] + b) for a, b in _comma_spans(sel_masked)
     ]
     for a, b in item_spans:
-        if _STAR_ITEM_RE.match(masked[a:b]):
+        if _star_item(masked[a:b]):
             return None  # would leak the injected _adt_g* columns
 
     # --- collect rewritable window calls ------------------------------
@@ -494,6 +472,12 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 if om is None:
                     continue  # plain (non-window) call — native
                 nulls_tok = (om.group("nulls") or "").lower()
+                # the arguments, split on the mask: a quoted or nested
+                # comma never splits one
+                parts = [
+                    sql[open_pos + 1 + a : open_pos + 1 + b]
+                    for a, b in _comma_spans(masked[open_pos + 1 : arg_close])
+                ]
                 over_open = arg_close + 1 + om.end() - 1
                 spec_close_g = _match_paren(masked, over_open)
                 if (
@@ -510,7 +494,6 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                         continue  # variance OVER () — native
                     if not _arg_guard(masked, open_pos, arg_close):
                         return None
-                    parts = _split_top_commas(sql[open_pos + 1 : arg_close])
                     if len(parts) != 1:
                         continue
                     calls.append(
@@ -528,7 +511,6 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 if not _arg_guard(masked, open_pos, arg_close):
                     return None  # nested window/subquery in the argument
                 fn = m.group(group).lower()
-                parts = _split_top_commas(sql[open_pos + 1 : arg_close])
                 j = n = None
                 ign = nulls_tok == "ignore"
                 default_src = None

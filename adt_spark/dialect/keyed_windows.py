@@ -72,7 +72,7 @@ passthrough, mirroring window_frames' refusal discipline):
 Either form may follow a ``WITH <cte>[, <cte>…]`` prefix, and its
 source identifier may then name a CTE or a table.  The prefix is
 carried verbatim onto the compressed statement and the main query
-passes the same gates; the split is ``window_frames._main_query_start``,
+passes the same gates; the split is ``sqltext._main_query_start``,
 the one splitter the global-rank pass uses too.  Two prefixes refuse:
 
 - ``WITH RECURSIVE`` — a recursive CTE is not a plain relation;
@@ -105,15 +105,21 @@ import os
 import re
 import warnings
 
-from adt_spark.dialect.window_frames import (
-    _OVER_RE,
-    _PRE_RE,
-    _call_before_over,
+from adt_spark.dialect.sqltext import (
+    _comma_spans,
     _main_query_start,
     _mask_literals,
     _match_paren,
-    _split_top_level,
+    _star_item,
     _strip_comments,
+    _top_level_matches,
+)
+from adt_spark.dialect.window_frames import (
+    _FROM_RE,
+    _OVER_RE,
+    _PRE_RE,
+    _SELECT_RE,
+    _call_before_over,
 )
 
 #: frame-mode keyword at top level of an OVER body; bounds are NOT
@@ -177,9 +183,7 @@ _CAST_KEY_RE = re.compile(
     r"[A-Za-z_0-9(),\s]+\)$",
     re.IGNORECASE,
 )
-_SELECT_RE = re.compile(r"^\s*select\s", re.IGNORECASE)
 _RECURSIVE_RE = re.compile(r"\s*with\s+recursive\b", re.IGNORECASE)
-_FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
 _ALIAS_END = re.compile(r"\bas\s+([A-Za-z_]\w*|`[^`]+`)\s*$", re.IGNORECASE)
 _ORD_TAIL_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
 _ORD_TAIL_DIR = re.compile(r"\b(asc|desc)\s*$", re.IGNORECASE)
@@ -190,19 +194,6 @@ _WRAP_RE = re.compile(
     r"\s*\)\s*[A-Za-z_][\w]*$",
     re.IGNORECASE,
 )
-
-
-def _depths(masked: str) -> list[int]:
-    """Paren depth BEFORE each character of the masked string."""
-    out = []
-    d = 0
-    for ch in masked:
-        out.append(d)
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-    return out
 
 
 def _order_parts(o_txt: str):
@@ -242,20 +233,14 @@ def compress_keyed_windows(sql: str) -> str | None:
     # join-back): both reads must see the same rows
     if {t.lower() for t in _IDENT_RE.findall(m_prefix)} & _NONDET:
         return None
-    if not _SELECT_RE.match(sql):
-        return None
-    depths = _depths(masked)
 
     # --- split SELECT items / FROM source -------------------------------
-    from_m = None
-    for m in _FROM_RE.finditer(masked):
-        if depths[m.start()] == 0:
-            from_m = m
-            break
-    if from_m is None:
+    sel_m = _SELECT_RE.match(masked, len(masked) - len(masked.lstrip()))
+    froms = _top_level_matches(masked, _FROM_RE)
+    if sel_m is None or not froms:
         return None
-    sel_end = _SELECT_RE.match(sql).end()
-    items = sql[sel_end : from_m.start()]
+    from_m = froms[0]
+    items = sql[sel_m.end() : from_m.start()]
     source = sql[from_m.end() :].strip()
 
     dr_name = None
@@ -284,12 +269,8 @@ def compress_keyed_windows(sql: str) -> str | None:
         over_close = _match_paren(m_items, over_open)
         body = items[over_open + 1 : over_close]
         m_body = _mask_literals(body)
-        b_depths = _depths(m_body)
-        fm = None
-        for cand in _MODE_RE.finditer(m_body):
-            if b_depths[cand.start()] == 0:
-                fm = cand
-                break
+        modes = _top_level_matches(m_body, _MODE_RE)
+        fm = modes[0] if modes else None
         frame_txt = None
         pre = body
         if fm:
@@ -311,7 +292,7 @@ def compress_keyed_windows(sql: str) -> str | None:
         ucol = None
         if pm.group("o") is not None:
             o_txt = pre[pm.start("o") : pm.end("o")].strip()
-            if len(_split_top_level(o_txt)) != 1:
+            if len(_comma_spans(_mask_literals(o_txt))) != 1:
                 return None  # composite ORDER BY — grain is not one key
             ucol = _order_parts(o_txt)
             if ucol is None:
@@ -402,15 +383,20 @@ def compress_keyed_windows(sql: str) -> str | None:
     new_items = items
     for start, end, col in sorted(repls, reverse=True):
         new_items = new_items[:start] + col + new_items[end:]
-    parts = _split_top_level(new_items)
-    for part in parts:
-        m_part = _mask_literals(part)
+    m_new = _mask_literals(new_items)
+    spans = _comma_spans(m_new)
+    for a, b in spans:
         # an unaliased item would be named after its rewritten text
-        if "__kw_w" in m_part and not _ALIAS_END.search(m_part):
+        if "__kw_w" in m_new[a:b] and not _ALIAS_END.search(m_new[a:b]):
             return None
     # a bare top-level * would also return the joined-back __kw_*
     # columns: qualify it to the base table's columns
-    new_items = ",".join(f" {base}.*" if p.strip() == "*" else p for p in parts)
+    out_items = []
+    for a, b in spans:
+        star = _star_item(m_new[a:b])
+        bare = star is not None and star.group("qualifier") is None
+        out_items.append(f" {base}.*" if bare else new_items[a:b])
+    new_items = ",".join(out_items)
     if dr_name is not None and re.search(
         rf"\b{re.escape(dr_name)}\b", _mask_literals(new_items), re.IGNORECASE
     ):

@@ -4,13 +4,21 @@ does not parse (reference dialect: crates/core/src/context.rs:29).
 Deliberately light: Spark 4 natively parses almost the whole surface
 (``::`` casts, ``ILIKE``, ``IS DISTINCT FROM``, lateral joins …), so
 only the PostgreSQL regex-match operators need translation.  The
-rewrites are token-aware enough to skip string literals so a ``~``
-inside a literal is untouched.
+rewrites read the statement through ``sqltext``'s scanner, so a ``~``
+inside a string literal or a comment is untouched.
 """
 
 from __future__ import annotations
 
 import re
+
+from adt_spark.dialect.sqltext import (
+    _comma_spans,
+    _literal_segments,
+    _mask_literals,
+    _match_paren,
+    _strip_comments,
+)
 
 # expr ~ 'pat'   → expr RLIKE 'pat'
 # expr !~ 'pat'  → NOT (expr RLIKE 'pat')
@@ -18,34 +26,8 @@ import re
 _TILDE = re.compile(r"[ \t]*(?P<neg>!)?~(?P<ci>\*)?[ \t]*")
 
 
-def _split_on_literals(sql: str) -> list[tuple[str, bool]]:
-    """Split SQL into (chunk, is_string_literal) segments."""
-    parts: list[tuple[str, bool]] = []
-    buf: list[str] = []
-    in_str = False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            if in_str and i + 1 < len(sql) and sql[i + 1] == "'":
-                buf.append("''")
-                i += 2
-                continue
-            buf.append(ch)
-            parts.append(("".join(buf), in_str))
-            buf = []
-            in_str = not in_str
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    if buf:
-        parts.append(("".join(buf), in_str))
-    return parts
-
-
 def _rewrite_regex_ops(sql: str) -> str:
-    segments = _split_on_literals(sql)
+    segments = _literal_segments(sql)
     out: list[str] = []
     for idx, (chunk, is_lit) in enumerate(segments):
         if is_lit:
@@ -114,7 +96,7 @@ def _convert_similar_pattern(body: str) -> str:
 
 
 def _rewrite_similar_to(sql: str) -> str:
-    segments = _split_on_literals(sql)
+    segments = _literal_segments(sql)
     out: list[str] = []
     for idx, (chunk, is_lit) in enumerate(segments):
         if is_lit:
@@ -182,7 +164,7 @@ _NAME_RE = re.compile(
 
 
 def _rewrite_names(sql: str) -> str:
-    segments = _split_on_literals(sql)
+    segments = _literal_segments(sql)
     out = []
     for chunk, is_lit in segments:
         if is_lit:
@@ -209,51 +191,6 @@ def _rewrite_names(sql: str) -> str:
 # range() as a scalar stays a documented gap: its Spark spelling is the
 # FROM-position range TVF, and a textual rewrite cannot tell the two
 # apart safely.
-
-
-def _scan_literal(s: str, i: int) -> int:
-    """``s[i]`` is an opening quote; return the index one past the
-    closing quote (SQL '' escapes respected)."""
-    j = i + 1
-    while j < len(s):
-        if s[j] == "'":
-            if j + 1 < len(s) and s[j + 1] == "'":
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return len(s)
-
-
-def _split_call_args(s: str) -> list[str]:
-    """Split an argument string at top-level commas (paren- and
-    literal-aware)."""
-    args: list[str] = []
-    depth = 0
-    i = 0
-    buf: list[str] = []
-    while i < len(s):
-        ch = s[i]
-        if ch == "'":
-            j = _scan_literal(s, i)
-            buf.append(s[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        args.append(tail)
-    return args
 
 
 def _is_string_literal(arg: str) -> bool:
@@ -351,45 +288,35 @@ _CALL_RE = re.compile(
 
 
 def _rewrite_calls(s: str) -> str:
+    masked = _mask_literals(s)
     out: list[str] = []
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if ch == "'":
-            j = _scan_literal(s, i)
-            out.append(s[i:j])
-            i = j
-            continue
-        m = _CALL_RE.match(s, i)
-        if m and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] in "_.$")):
-            # find the matching close paren, literal-aware
-            depth = 1
-            j = m.end()
-            while j < len(s) and depth:
-                c = s[j]
-                if c == "'":
-                    j = _scan_literal(s, j)
-                    continue
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                j += 1
-            inner = _rewrite_calls(s[m.end() : j - 1])  # nested calls first
-            repl = _CALL_HANDLERS[m.group(1).lower()](_split_call_args(inner))
-            if repl is None:
-                out.append(s[i : m.end()] + inner + ")")
-            else:
-                out.append(repl)
-            i = j
-            continue
-        out.append(ch)
-        i += 1
+    last = 0
+    for m in _CALL_RE.finditer(masked):
+        i = m.start()
+        if i < last or (i and (masked[i - 1].isalnum() or masked[i - 1] in "_.$")):
+            continue  # inside an earlier call, or a longer identifier
+        try:
+            close = _match_paren(masked, m.end() - 1)
+        except NotImplementedError:
+            break  # unbalanced: Spark's parser reports it
+        inner = _rewrite_calls(s[m.end() : close])  # nested calls first
+        spans = _comma_spans(_mask_literals(inner)) if inner.strip() else []
+        repl = _CALL_HANDLERS[m.group(1).lower()](
+            [inner[a:b].strip() for a, b in spans]
+        )
+        if repl is None:
+            repl = s[i : m.end()] + inner + ")"
+        out += [s[last:i], repl]
+        last = close + 1
+    out.append(s[last:])
     return "".join(out)
 
 
 def translate_sql(sql: str) -> str:
-    """Translate a PostgreSQL/DataFusion-flavored statement to Spark SQL."""
+    """Translate a PostgreSQL/DataFusion-flavored statement to Spark SQL.
+    Comments are blanked first, so text inside one is never rewritten
+    and a quote inside one opens no literal."""
+    sql = _strip_comments(sql)
     if "~" in sql:
         sql = _rewrite_regex_ops(sql)
     if _SIMILAR.search(sql):

@@ -180,6 +180,16 @@ from __future__ import annotations
 import re
 import warnings
 
+from adt_spark.dialect.sqltext import (
+    _comma_spans,
+    _mask_literals,
+    _match_paren,
+    _match_paren_back,
+    _star_item,
+    _strip_comments,
+    _top_level_matches,
+)
+
 #: variance-family rewrite targets: name → (is_sample, is_stddev).
 #: ``var`` is DataFusion's sample-variance spelling — the rewrite
 #: emits only sum/count arithmetic, so the unsupported-by-Spark name
@@ -313,38 +323,6 @@ _NULLS_RE = re.compile(r"\bnulls\s+(first|last)\b", re.IGNORECASE)
 _DESC_RE = re.compile(r"\bdesc\s*$", re.IGNORECASE)
 
 
-def _with_depth(masked: str):
-    """(char, paren-depth) pairs over a literal-MASKED string — the
-    one copy of the depth scan that _split_top_level and the
-    multi-argument-call checks share."""
-    depth = 0
-    for ch in masked:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        yield ch, depth
-
-
-def _split_top_level(src: str) -> list[str]:
-    """Split ``src`` on top-level commas, scanning a literal-masked
-    copy so quoted text can never open/close a fake paren or inject a
-    separator (e.g. ``concat(a, ',')`` is ONE key) — the single
-    splitter behind _pin_null_order / _bare_order_key /
-    _reverse_order (previously three hand-rolled copies that had
-    already diverged on literal masking)."""
-    keys: list[str] = []
-    start = 0
-    i = 0
-    for ch, depth in _with_depth(_mask_literals(src)):
-        if ch == "," and depth == 0:
-            keys.append(src[start:i])
-            start = i + 1
-        i += 1
-    keys.append(src[start:])
-    return keys
-
-
 def _pin_null_order(order_src: str) -> str:
     """Append the SOURCE dialect's default null placement to every
     order key lacking an explicit NULLS modifier.  DataFusion (and
@@ -353,136 +331,16 @@ def _pin_null_order(order_src: str) -> str:
     rewritten frame would put NULL keys at the other end of the
     partition and every frame near them would differ."""
     out = []
-    for k in _split_top_level(order_src):
-        if _NULLS_RE.search(k):
-            out.append(k.strip())
-        elif _DESC_RE.search(k.strip()):
-            out.append(k.strip() + " NULLS FIRST")
+    masked = _mask_literals(order_src)
+    for a, b in _comma_spans(masked):
+        k = order_src[a:b].strip()
+        if _NULLS_RE.search(masked[a:b]):
+            out.append(k)
+        elif _DESC_RE.search(masked[a:b]):
+            out.append(k + " NULLS FIRST")
         else:
-            out.append(k.strip() + " NULLS LAST")
+            out.append(k + " NULLS LAST")
     return ", ".join(out)
-
-
-#: what opens a literal or a comment
-_LIT_OR_COMMENT_RE = re.compile(r"'|--|/\*")
-
-
-def _literal_and_comment_spans(sql: str) -> list[tuple[int, int, bool]]:
-    """(start, end, is_comment) of every single-quoted literal body
-    and every ``--`` / ``/* */`` comment, in order.  A quote inside a
-    comment opens no literal, and ``--`` inside a literal is no
-    comment."""
-    spans = []
-    n = len(sql)
-    i = 0
-    while m := _LIT_OR_COMMENT_RE.search(sql, i):
-        i, tok = m.start(), m.group()
-        if tok == "'":
-            j = sql.find("'", i + 1)
-            while j >= 0 and sql.startswith("''", j):
-                j = sql.find("'", j + 2)
-            j = n if j < 0 else j
-            spans.append((i + 1, j, False))
-            i = j + 1
-        else:
-            end = sql.find("\n" if tok == "--" else "*/", i + 2)
-            end = n if end < 0 else end + (0 if tok == "--" else 2)
-            spans.append((i, end, True))
-            i = end
-    return spans
-
-
-def _blank_spans(sql: str, spans) -> str:
-    """``sql`` with each (start, end) span replaced by as many blanks."""
-    out, last = [], 0
-    for start, end in spans:
-        out += [sql[last:start], " " * (end - start)]
-        last = end
-    out.append(sql[last:])
-    return "".join(out)
-
-
-def _mask_literals(sql: str) -> str:
-    """Same-length copy with single-quoted literal bodies and whole
-    comments blanked, so keyword/paren scanning can't be fooled by
-    quoted or commented text.  Offsets in the mask are offsets in the
-    original."""
-    return _blank_spans(
-        sql, [(a, b) for a, b, _ in _literal_and_comment_spans(sql)]
-    )
-
-
-def _strip_comments(sql: str) -> str:
-    """``sql`` with every comment but a ``/*+ … */`` hint blanked.
-    The passes splice pieces of the statement into new text, and a
-    ``--`` comment spliced before text that was on its next line would
-    swallow that text; the rows a statement returns never depend on
-    its comments.  A comment-free statement comes back unchanged."""
-    if "--" not in sql and "/*" not in sql:
-        return sql
-    return _blank_spans(sql, [
-        (a, b) for a, b, is_comment in _literal_and_comment_spans(sql)
-        if is_comment and not sql.startswith("/*+", a)
-    ])
-
-
-def _blank_parens(s: str) -> str:
-    """Blank everything inside parentheses (positions preserved) so
-    depth-0 keyword scans cannot see subquery / CTE-body innards."""
-    out, depth = [], 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-            out.append("(")
-        elif ch == ")":
-            depth -= 1
-            out.append(")")
-        else:
-            out.append(ch if depth == 0 else " ")
-    return "".join(out)
-
-
-_WITH_RE = re.compile(r"\s*with\b", re.IGNORECASE)
-
-
-def _main_query_start(masked: str) -> int | None:
-    """Offset of the main query in a literal-MASKED statement: 0
-    without a leading ``WITH``; after a ``WITH <cte>[, <cte>…]`` prefix,
-    the first top-level ``SELECT`` (CTE bodies and column lists are
-    blanked, so their SELECTs do not count); None when a WITH prefix
-    has no top-level SELECT after it.  ``sql[:start]`` is the prefix,
-    carried verbatim by the passes that split on it (global_rank,
-    keyed_windows)."""
-    blanked = _blank_parens(masked)
-    if not _WITH_RE.match(blanked):
-        return 0
-    ms = re.search(r"\bselect\b", blanked, re.IGNORECASE)
-    return ms.start() if ms else None
-
-
-def _match_paren(s: str, open_pos: int) -> int:
-    """Index of the ')' matching s[open_pos] == '(' (masked input)."""
-    depth = 0
-    for i in range(open_pos, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise NotImplementedError(f"unbalanced parentheses after offset {open_pos}")
-
-
-def _match_paren_back(s: str, close_pos: int) -> int:
-    depth = 0
-    for i in range(close_pos, -1, -1):
-        if s[i] == ")":
-            depth += 1
-        elif s[i] == "(":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise NotImplementedError(f"unbalanced parentheses before offset {close_pos}")
 
 
 _IV_SECONDS = {"day": 86400, "hour": 3600, "minute": 60, "second": 1}
@@ -630,7 +488,7 @@ def _bare_order_key(order_src: str) -> str:
     modifiers — used by the non-straddling-RANGE rewrites to test key
     nullness.  Numeric RANGE offsets require a single sort key in
     every dialect; a top-level comma (multi-key) refuses loudly."""
-    if len(_split_top_level(order_src)) > 1:
+    if len(_comma_spans(_mask_literals(order_src))) > 1:
         raise _Unsupported(
             "EXCLUDE over a RANGE frame with numeric offsets requires "
             "a single ORDER BY key"
@@ -1433,19 +1291,6 @@ def _rewrite_groups_exclude(sql: str) -> str:
     return out
 
 
-def _top_level_positions(masked: str, word_re: re.Pattern) -> list[int]:
-    """Start offsets of word_re matches at paren depth 0."""
-    depths = []
-    d = 0
-    for ch in masked:
-        if ch == "(":
-            d += 1
-        depths.append(d)
-        if ch == ")":
-            d -= 1
-    return [mm.start() for mm in word_re.finditer(masked) if depths[mm.start()] == 0]
-
-
 _SELECT_RE = re.compile(r"\bselect\b", re.IGNORECASE)
 _FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
 _FORBID_RE = re.compile(
@@ -1462,17 +1307,19 @@ def _wrap_with_dense_rank(sql: str, dr_aliases: dict[tuple[str, str], str]) -> s
     simple shape ``[WITH …] SELECT <list> FROM <relations> [WHERE …]
     [ORDER BY/LIMIT …]`` — anything else raises."""
     masked = _mask_literals(sql)
-    selects = _top_level_positions(masked, _SELECT_RE)
+    selects = _top_level_matches(masked, _SELECT_RE)
     if not selects:
         raise _Unsupported("GROUPS frame: no top-level SELECT to wrap")
-    sel = selects[-1]
+    sel = selects[-1].start()
     if any(sql.find(a, 0, sel) != -1 for a in dr_aliases.values()):
         raise _Unsupported(
             "numeric GROUPS frame inside a CTE/subquery is not supported — "
             "hoist it to the outer SELECT or use the DataFrame API "
             "(see q_window_groups_frame)"
         )
-    froms = [p for p in _top_level_positions(masked, _FROM_RE) if p > sel]
+    froms = [
+        m.start() for m in _top_level_matches(masked, _FROM_RE) if m.start() > sel
+    ]
     if not froms:
         raise _Unsupported("GROUPS frame: SELECT without FROM")
     frm = froms[0]
@@ -1482,32 +1329,23 @@ def _wrap_with_dense_rank(sql: str, dr_aliases: dict[tuple[str, str], str]) -> s
     # reject bare `*` / `t.*` ITEMS (they would leak the injected rank
     # column into the output); `count(*)` inside an expression is fine
     lm = _mask_literals(select_list)
-    item_start = 0
-    d = 0
-    for i, ch in enumerate(lm + ","):
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-        elif ch == "," and d == 0:
-            if re.fullmatch(r"\s*(?:\w+\s*\.\s*)?\*\s*", lm[item_start:i]):
-                raise _Unsupported(
-                    "GROUPS frame with SELECT * is not supported (the "
-                    "injected rank column would change the output schema) "
-                    "— list columns explicitly"
-                )
-            item_start = i + 1
+    if any(_star_item(lm[a:b]) for a, b in _comma_spans(lm)):
+        raise _Unsupported(
+            "GROUPS frame with SELECT * is not supported (the "
+            "injected rank column would change the output schema) "
+            "— list columns explicitly"
+        )
     tail = sql[frm:]
     tail_masked = masked[frm:]
-    bad = _top_level_positions(tail_masked, _FORBID_RE)
+    bad = _top_level_matches(tail_masked, _FORBID_RE)
     if bad:
-        kw = _FORBID_RE.match(tail_masked[bad[0]:]).group(0)
+        kw = bad[0].group(0)
         raise _Unsupported(
             f"numeric GROUPS frame with {kw.upper()} in the same SELECT is "
             "not supported — use the DataFrame API (see q_window_groups_frame)"
         )
-    trailers = _top_level_positions(tail_masked, _TRAILER_RE)
-    cut = trailers[0] if trailers else len(tail)
+    trailers = _top_level_matches(tail_masked, _TRAILER_RE)
+    cut = trailers[0].start() if trailers else len(tail)
     core, trailer = tail[:cut], tail[cut:]
     # The wrap hides the FROM relations inside a subquery, so
     # qualified references (t.col) in the outer select list / trailer
@@ -1583,8 +1421,8 @@ def _reverse_order(order_src: str) -> str:
     frame over the reversed sequence visits exactly the complementary
     suffix."""
     out = []
-    for k in _split_top_level(order_src):
-        k = k.strip()
+    for a, b in _comma_spans(_mask_literals(order_src)):
+        k = order_src[a:b].strip()
         nul = None
         m = re.search(r"(?is)\bnulls\s+(first|last)\s*$", k)
         if m:
@@ -1737,10 +1575,7 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
         # last_value(x, true) most importantly: its NULL semantics
         # have no complement/reversal image here, so pass through
         # (every rewritable aggregate in _UBF_FNS is single-argument)
-        if any(
-            ch == "," and d == 0
-            for ch, d in _with_depth(_mask_literals(args))
-        ):
+        if len(_comma_spans(_mask_literals(args))) > 1:
             continue
         if args == "*" and fn != "count":
             continue

@@ -33,6 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from adt_spark.context import local_frame
+from adt_spark.dialect.sqltext import _comma_spans, _mask_literals
 
 _DELETE = re.compile(
     r"^\s*DELETE\s+FROM\s+delta\.`(?P<path>[^`]+)`\s+WHERE\s+(?P<pred>.+?)\s*;?\s*$",
@@ -119,28 +120,10 @@ def is_delta_dml(sql: str) -> bool:
 
 def _split_assignments(sets: str) -> dict[str, str]:
     """``a = expr, b = expr`` → {a: expr, b: expr}; splits on commas at
-    paren-depth 0 outside string literals."""
-    parts: list[str] = []
-    depth = 0
-    in_str = False
-    buf: list[str] = []
-    for ch in sets:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch in "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(buf))
-                buf = []
-                continue
-        buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
+    paren-depth 0 outside string literals and comments."""
     out: dict[str, str] = {}
-    for part in parts:
+    for a, b in _comma_spans(_mask_literals(sets)):
+        part = sets[a:b]
         col, eq, expr = part.partition("=")
         if not eq:
             raise ValueError(f"malformed SET assignment: {part.strip()!r}")

@@ -34,6 +34,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from adt_spark.context import local_frame
+from adt_spark.dialect.sqltext import _comma_spans, _mask_literals, _match_paren
 
 #: sink format name → (spark write format, default options)
 _WRITE_FORMATS = {
@@ -78,29 +79,12 @@ def _split_source(sql: str) -> tuple[str, str]:
     m = _COPY_HEAD.match(sql)
     rest = sql[m.end():].lstrip()
     if rest.startswith("("):
-        depth = 0
-        i = 0
-        while i < len(rest):
-            ch = rest[i]
-            if ch == "'":
-                # skip string literals ('' escapes respected) — a
-                # paren inside a quoted string must not close depth
-                i += 1
-                while i < len(rest):
-                    if rest[i] == "'":
-                        if i + 1 < len(rest) and rest[i + 1] == "'":
-                            i += 2
-                            continue
-                        break
-                    i += 1
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return rest[1:i], rest[i + 1:]
-            i += 1
-        raise ValueError("unbalanced parentheses in COPY source query")
+        # a paren inside a literal or a comment never closes the query
+        try:
+            close = _match_paren(_mask_literals(rest), 0)
+        except NotImplementedError:
+            raise ValueError("unbalanced parentheses in COPY source query") from None
+        return rest[1:close], rest[close + 1:]
     # bare table name: first whitespace-delimited token
     token = rest.split(None, 1)
     if len(token) != 2:
@@ -127,8 +111,9 @@ def parse_copy(sql: str) -> dict:
         )
     parts = [c.strip() for c in (m.group("parts") or "").split(",") if c.strip()]
     options: dict[str, str] = {}
-    for pair in re.split(r",(?=(?:[^']*'[^']*')*[^']*$)", m.group("opts") or ""):
-        pair = pair.strip()
+    opts = m.group("opts") or ""
+    for a, b in _comma_spans(_mask_literals(opts)):
+        pair = opts[a:b].strip()
         if not pair:
             continue
         kv = pair.split(None, 1)

@@ -1121,3 +1121,61 @@ def test_global_rank_rewrite_drops_its_temp_view(spark, sf_dir):
         assert sorted(map(tuple, frame.collect())) == sorted(
             map(tuple, spark.sql(q).collect())
         ), q
+
+
+@pytest.mark.parametrize(
+    ("stmt", "twin"),
+    [
+        (
+            "SELECT trunc(3.7) AS a -- it's\n, trunc(2.5) AS b",
+            "SELECT trunc(3.7) AS a\n, trunc(2.5) AS b",
+        ),
+        (
+            "SELECT x -- don't\n FROM t WHERE name ~ 'a.*'",
+            "SELECT x\n FROM t WHERE name ~ 'a.*'",
+        ),
+        (
+            "SELECT x /* it's */ FROM t WHERE name ~ 'a.*'",
+            "SELECT x FROM t WHERE name ~ 'a.*'",
+        ),
+        (
+            "SELECT string_to_array(s, ',') -- it's\n , regexp_match(s, 'a') "
+            "FROM t",
+            "SELECT string_to_array(s, ',')\n , regexp_match(s, 'a') FROM t",
+        ),
+    ],
+)
+def test_translate_comment_quote_opens_no_literal(stmt, twin):
+    """An apostrophe inside a ``--`` or ``/* */`` comment flips no
+    literal state: the statement translates exactly like its
+    comment-free twin (up to the blanks the comment leaves)."""
+    want = translate_sql(twin)
+    assert want != twin
+    assert translate_sql(stmt).split() == want.split()
+
+
+@pytest.mark.parametrize(
+    "item",
+    [
+        "lag(s, 1, 'a,b') OVER (ORDER BY k)",
+        "sum(CASE WHEN t = ',' THEN v END) OVER (ORDER BY k)",
+    ],
+)
+def test_global_rank_quoted_comma_argument_engages(spark, item):
+    """A comma inside a quoted argument does not split the call's
+    arguments, so these calls take the global-window rewrite instead
+    of Spark's single-partition window, with the same rows."""
+    from adt_spark.dialect.global_rank import maybe_rewrite_global_rank
+
+    rows = [
+        (k, None if k % 4 == 0 else f"s{k % 3}", "," if k % 2 else ";", k - 5)
+        for k in range(12)
+    ]
+    spark.createDataFrame(rows, "k int, s string, t string, v int") \
+        .createOrReplaceTempView("gr_commas")
+    q = f"SELECT k, {item} AS w FROM gr_commas"
+    df = maybe_rewrite_global_rank(spark, q)
+    assert df is not None, q
+    assert sorted(map(tuple, df.collect())) == sorted(
+        map(tuple, spark.sql(q).collect())
+    )

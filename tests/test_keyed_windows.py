@@ -283,7 +283,7 @@ def test_keyed_cte_refusals(label):
 def test_with_prefix_split_masks_literals():
     """The shared splitter finds the main query's SELECT, not the one
     inside a CTE-body literal."""
-    from adt_spark.dialect.window_frames import _main_query_start, _mask_literals
+    from adt_spark.dialect.sqltext import _main_query_start, _mask_literals
 
     start = _main_query_start(_mask_literals(_LITERAL_DECOY))
     assert _LITERAL_DECOY[start:].startswith("SELECT rid, sum(v)")
@@ -341,7 +341,7 @@ def test_comments_mask_without_literal_flip():
     opens no literal and ``--`` inside a literal is no comment.
     ``_strip_comments`` keeps hints and leaves comment-free text
     untouched."""
-    from adt_spark.dialect.window_frames import _mask_literals, _strip_comments
+    from adt_spark.dialect.sqltext import _mask_literals, _strip_comments
 
     src = "a -- it's\nb /* x ' */ 'c -- d' FROM /* open"
     assert _mask_literals(src) == (

@@ -7,7 +7,12 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from adt_spark.dialect.translate import _split_on_literals, translate_sql
+from adt_spark.dialect.sqltext import (
+    _comma_spans,
+    _literal_segments,
+    _mask_literals,
+)
+from adt_spark.dialect.translate import translate_sql
 from adt_spark.script import split_statements
 from adt_spark.sources._roaring import (
     decode_bitmap_array,
@@ -46,7 +51,85 @@ def test_split_on_literals_reassembles(chunks):
         ("'" + frag.replace("'", "''") + "'") if is_lit else frag
         for frag, is_lit in chunks
     )
-    assert "".join(chunk for chunk, _ in _split_on_literals(sql)) == sql
+    assert "".join(chunk for chunk, _ in _literal_segments(sql)) == sql
+
+
+#: code between literals and comments: no quote, and nothing that can
+#: open a comment with a neighbouring piece (``-``, ``/``, ``*``)
+_code = st.text(
+    alphabet=st.characters(whitelist_categories=("L", "N", "Zs"), whitelist_characters="_,.()=<>\n"),
+    max_size=12,
+)
+_any_text = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs",), whitelist_characters="'-/*(),\n"),
+    max_size=12,
+)
+_piece = st.one_of(
+    st.tuples(st.just("code"), _code),
+    st.tuples(st.just("literal"), _any_text),
+    st.tuples(st.just("line"), _any_text.map(lambda t: t.replace("\n", " "))),
+    st.tuples(st.just("block"), _any_text.map(lambda t: t.replace("*/", "* /"))),
+)
+
+
+def _assemble(pieces):
+    """(sql, keep): the statement and, per character, whether it lies
+    outside every literal body and comment."""
+    sql, keep = [], []
+    for kind, text in pieces:
+        if kind == "code":
+            part, kept = text, [True] * len(text)
+        elif kind == "literal":
+            # the blank keeps two literals apart ('a' 'b', not 'a''b')
+            body = text.replace("'", "''")
+            part, kept = f" '{body}'", [True, True] + [False] * len(body) + [True]
+        elif kind == "line":
+            part, kept = f"--{text}\n", [False] * (len(text) + 2) + [True]
+        else:
+            part, kept = f"/*{text}*/", [False] * (len(text) + 4)
+        sql.append(part)
+        keep += kept
+    return "".join(sql), keep
+
+
+@given(st.lists(_piece, max_size=8))
+@settings(max_examples=200, deadline=None)
+def test_mask_keeps_text_outside_literals_and_comments(pieces):
+    """The mask has the input's length, keeps every character outside
+    literal bodies and comments, and blanks every one inside them."""
+    sql, keep = _assemble(pieces)
+    mask = _mask_literals(sql)
+    assert len(mask) == len(sql)
+    for ch, m, kept in zip(sql, mask, keep):
+        assert m == (ch if kept else " "), (sql, mask)
+
+
+@given(st.lists(_piece, max_size=8))
+@settings(max_examples=200, deadline=None)
+def test_comma_spans_join_back(pieces):
+    """The depth-0 comma spans, rejoined with their commas, give the
+    input back, and every cut is a comma at paren depth 0."""
+    sql, _ = _assemble(pieces)
+    mask = _mask_literals(sql)
+    spans = _comma_spans(mask)
+    assert ",".join(sql[a:b] for a, b in spans) == sql
+    for (_, end), _next in zip(spans, spans[1:]):
+        assert mask[end] == ","
+        assert mask[:end].count("(") == mask[:end].count(")")
+
+
+@given(_code, _any_text, st.sampled_from(["line", "block"]), _code)
+@settings(max_examples=200, deadline=None)
+def test_quote_in_comment_opens_no_literal(before, text, kind, after):
+    """A ``'`` inside a ``--`` or ``/* */`` comment opens no literal:
+    the code after the comment comes through the mask unchanged."""
+    comment = (
+        f"--{text.replace(chr(10), ' ')}'\n" if kind == "line"
+        else f"/*{text.replace('*/', '* /')}'*/"
+    )
+    sql = before + comment + after
+    assert _mask_literals(sql).endswith(after)
+    assert all(not is_lit for _, is_lit in _literal_segments(sql))
 
 
 @given(_sql_fragment)

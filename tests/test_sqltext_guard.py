@@ -1,0 +1,111 @@
+"""One SQL text scanner.
+
+``adt_spark/dialect/sqltext.py`` is the one module that decides what a
+SQL literal, comment and parenthesis are.  Hand-rolled character loops
+elsewhere had already diverged (a quote inside a comment flipped one
+scanner's literal state but not another's), so this guard fails on any
+loop outside ``sqltext.py`` that counts paren depth or toggles quote
+state over characters.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+_PKG = pathlib.Path(__file__).resolve().parent.parent / "adt_spark"
+
+#: the characters a SQL text scanner tests for
+_SCANNED = {"(", ")", "'"}
+
+#: (module, function) loops allowed to test those characters, with the
+#: reason; the scanner itself is the only one today
+_ALLOWED: dict[tuple[str, str | None], str] = {}
+
+
+def _is_char(node: ast.AST) -> bool:
+    """A name or an index (``ch``, ``s[i]``): what a loop over
+    characters compares."""
+    return isinstance(node, (ast.Name, ast.Subscript))
+
+
+def _scans_chars(loop: ast.AST) -> bool:
+    """True when the loop compares a character to a paren or a quote
+    (``ch == "("``, ``s[i] == "'"``, ``ch in "()"``)."""
+    for node in ast.walk(loop):
+        if not isinstance(node, ast.Compare):
+            continue
+        operands = [node.left, *node.comparators]
+        for a, b in zip(operands, operands[1:]):
+            for char, const in ((a, b), (b, a)):
+                if (
+                    _is_char(char)
+                    and isinstance(const, ast.Constant)
+                    and isinstance(const.value, str)
+                    and set(const.value) & _SCANNED
+                ):
+                    return True
+    return False
+
+
+_LOOPS = (ast.For, ast.While, ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _scanner_loops(tree: ast.AST) -> list[tuple[int, str | None]]:
+    """(line, innermost enclosing function name or None) of every loop
+    that scans characters for parens or quotes."""
+    out: list = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, _LOOPS) and _scans_chars(node):
+            out.append((node.lineno, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return out
+
+
+def test_guard_sees_hand_rolled_scanners():
+    """The guard flags the shapes it exists to keep out: a paren-depth
+    loop and a quote toggle."""
+    depth_loop = (
+        "def f(s):\n"
+        "    d = 0\n"
+        "    for ch in s:\n"
+        "        if ch == '(':\n"
+        "            d += 1\n"
+    )
+    quote_toggle = (
+        "def g(s):\n"
+        "    q = False\n"
+        "    i = 0\n"
+        "    while i < len(s):\n"
+        "        if s[i] == \"'\":\n"
+        "            q = not q\n"
+        "        i += 1\n"
+    )
+    assert _scanner_loops(ast.parse(depth_loop)) == [(3, "f")]
+    assert _scanner_loops(ast.parse(quote_toggle)) == [(4, "g")]
+    # comparing a call's result (not a character) is no scan
+    not_a_scan = "def h(t):\n    for p in t:\n        p.strip() == \"'\"\n"
+    assert _scanner_loops(ast.parse(not_a_scan)) == []
+
+
+def test_sqltext_is_the_only_sql_text_scanner():
+    """No module in ``adt_spark/`` but ``dialect/sqltext.py`` has a
+    loop that counts paren depth or toggles quote state; such code
+    calls the shared scanner instead."""
+    found = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "dialect/sqltext.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=rel)
+        for line, fn in _scanner_loops(tree):
+            if (rel, fn) not in _ALLOWED:
+                found.append(f"adt_spark/{rel}:{line} in {fn}")
+    assert not found, found
+    assert _scanner_loops(ast.parse((_PKG / "dialect/sqltext.py").read_text()))

@@ -513,6 +513,9 @@ def test_unsupported_cases_raise_loudly():
         # numeric GROUPS with SELECT *
         "SELECT * , sum(a) OVER (ORDER BY a GROUPS BETWEEN 1 PRECEDING AND "
         "1 FOLLOWING) FROM t",
+        # ... and with a star item under a quoted qualifier
+        "SELECT `d`.*, sum(a) OVER (ORDER BY a GROUPS BETWEEN 1 PRECEDING "
+        "AND 1 FOLLOWING) FROM t d",
         # numeric GROUPS alongside GROUP BY in the same SELECT
         "SELECT g, sum(sum(a)) OVER (ORDER BY g GROUPS BETWEEN 1 PRECEDING "
         "AND 1 FOLLOWING) FROM t GROUP BY g",
