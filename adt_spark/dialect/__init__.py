@@ -12,4 +12,7 @@ closes the flagged gaps:
   Spark SQL does not parse (``~`` regex match, ``::`` casts).
 - ``sqltext``    — the one SQL text scanner (literals, comments, paren
   depth) every textual pass, the DML/COPY parsers and the DDL share.
+- ``overspec``   — the one OVER-spec grammar: ``parse_over`` reads a
+  window body into the model ``window_frames``, ``keyed_windows`` and
+  ``global_rank`` share.
 """

@@ -11,8 +11,10 @@ to the engine, so global windows are common in adt scripts;
 ``datafusion-functions-window``, Cargo.lock:1818, is the inherited
 function set).
 
-This pass detects the sound shape and executes it through the
-two-phase global-window planner,
+This pass detects the sound shape (each call's OVER body read with
+``overspec.parse_over``: no partition, an ORDER BY, and the default
+frame or a literal ROWS frame, taken as the model's signed row
+offsets) and executes it through the two-phase global-window planner,
 ``adt_spark.operators.global_window.plan_global_windows``
 (deterministic range pids → local windows → bounded per-pid state
 re-entered as ≤n_parts-row broadcast joins; boundary-invariant
@@ -21,12 +23,13 @@ distinct order:
 
 - ranks: row_number / rank / dense_rank / percent_rank / cume_dist /
   ntile(k);
-- running aggregates with the default peer-inclusive frame:
+- running aggregates with the default peer-inclusive frame, left out
+  or spelled ``RANGE [BETWEEN] UNBOUNDED PRECEDING [AND CURRENT ROW]``:
   sum / count / min / max / avg (+ the round-10 variance family);
 - bounded-frame aggregates (round-11): sum / count / min / max /
   avg over ``ROWS BETWEEN a PRECEDING AND b FOLLOWING`` (either
   bound may be CURRENT ROW, UNBOUNDED or strictly before / after the
-  current row; literal row counts);
+  current row; literal row counts, a zero offset being CURRENT ROW);
 - offsets: lag / lead (literal j), including the round-11 3-arg
   default-value form;
 - frame values with the default frame (round-10): first_value /
@@ -85,6 +88,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.dialect.overspec import OrderKey, OverSpec, parse_over
 from adt_spark.dialect.sqltext import (
     _blank_parens,
     _comma_spans,
@@ -125,20 +129,8 @@ _FLN_CALL_RE = re.compile(
     re.IGNORECASE,
 )
 
-#: one plain ORDER BY key: [qualifier.]column [ASC|DESC] [NULLS …]
-_KEY_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)"
-    r"(?:\s+(?P<dir>asc|desc))?"
-    r"(?:\s+nulls\s+(?P<nulls>first|last))?\s*$",
-    re.IGNORECASE,
-)
-
-#: trailing direction tokens of an EXPRESSION key
-_KEY_TAIL_RE = re.compile(
-    r"(?:\s+(?P<dir>asc|desc))?"
-    r"(?:\s+nulls\s+(?P<nulls>first|last))?\s*$",
-    re.IGNORECASE,
-)
+#: a plain (possibly qualified) column reference
+_COL_RE = re.compile(r"\s*(?P<col>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*")
 
 #: single relation: name / qualified name / fmt.`path`, optional alias
 _REL_RE = re.compile(
@@ -169,174 +161,68 @@ _view_counter = itertools.count()
 _cached_inner = None
 
 
-def _parse_order_keys(masked_body: str, src_body: str):
-    """ORDER BY body → list of key dicts or None when malformed.
+def _order_keys(keys: tuple[OrderKey, ...]):
+    """Parsed ORDER BY keys → list of key dicts, or None when a key is
+    empty or holds a window / subquery.
 
     Each key: {"kind": "col"|"expr", "ident": dedup identity,
     "src": source expression text, "method": Column sort-method
     name}.  Plain (possibly qualified) column refs stay columns with
     the qualifier stripped; anything else is an expression key
-    carried textually (masked twin checked for window/subquery
-    tokens)."""
-    keys = []
-    for a, b in _comma_spans(masked_body):
-        mpart, spart = masked_body[a:b], src_body[a:b]
-        m = _KEY_RE.match(mpart)
+    carried textually."""
+    out = []
+    for k in keys:
+        method = ("desc" if k.desc else "asc") + (f"_nulls_{k.nulls}" if k.nulls else "")
+        m = _COL_RE.fullmatch(k.expr)
         if m:
-            direction = (m.group("dir") or "asc").lower()
-            nulls = (m.group("nulls") or "").lower()
-            method = direction + (f"_nulls_{nulls}" if nulls else "")
             col = m.group("col").split(".")[-1].lower()
-            keys.append(
-                {"kind": "col", "ident": col, "src": col, "method": method}
-            )
+            out.append({"kind": "col", "ident": col, "src": col, "method": method})
             continue
-        tm = _KEY_TAIL_RE.search(mpart)
-        expr_m = mpart[: tm.start()]
-        expr_s = spart[: tm.start()].strip()
-        if not expr_s or re.search(r"\b(over|select)\b", expr_m, re.IGNORECASE):
+        expr = k.expr
+        if not expr or re.search(r"\b(over|select)\b", _mask_literals(expr), re.IGNORECASE):
             return None
-        direction = (tm.group("dir") or "asc").lower()
-        nulls = (tm.group("nulls") or "").lower()
-        method = direction + (f"_nulls_{nulls}" if nulls else "")
-        keys.append(
-            {
-                "kind": "expr",
-                "ident": " ".join(expr_s.split()),
-                "src": expr_s,
-                "method": method,
-            }
+        out.append(
+            {"kind": "expr", "ident": " ".join(expr.split()), "src": expr, "method": method}
         )
-    return keys
+    return out
 
 
 def _order_ident(keys) -> tuple:
     return tuple((k["ident"], k["method"]) for k in keys)
 
 
-_DEFAULT_FRAME = "range between unbounded preceding and current row"
-
-#: bounded ROWS frames the round-11 bounded-aggregate construction
-#: covers (normalized text → (a_preceding, b_following))
-_BOUNDED_ROWS_FRAMES = [
-    (
-        re.compile(r"^rows between (\d+) preceding and current row$"),
-        lambda m: (int(m.group(1)), 0),
-    ),
-    (
-        re.compile(r"^rows between current row and (\d+) following$"),
-        lambda m: (0, int(m.group(1))),
-    ),
-    (
-        re.compile(r"^rows between (\d+) preceding and (\d+) following$"),
-        lambda m: (int(m.group(1)), int(m.group(2))),
-    ),
-    (
-        re.compile(r"^rows between current row and current row$"),
-        lambda m: (0, 0),
-    ),
-    # the abbreviated form: ROWS j PRECEDING = BETWEEN j PRECEDING
-    # AND CURRENT ROW
-    (re.compile(r"^rows (\d+) preceding$"), lambda m: (int(m.group(1)), 0)),
-    # round-11 second wave: UNBOUNDED sides (None) — the
-    # out-of-partition contribution becomes a prefix/suffix-folded
-    # per-pid totals scalar instead of an edge array.  Note the
-    # row-exclusive cumulative frame (UNBOUNDED PRECEDING .. CURRENT
-    # ROW) differs from the default RANGE frame under tied keys, so
-    # it must route through the ROW-space construction.
-    (
-        re.compile(r"^rows between unbounded preceding and current row$"),
-        lambda m: (None, 0),
-    ),
-    (
-        re.compile(
-            r"^rows between unbounded preceding and (\d+) following$"
-        ),
-        lambda m: (None, int(m.group(1))),
-    ),
-    (
-        re.compile(
-            r"^rows between (\d+) preceding and unbounded following$"
-        ),
-        lambda m: (int(m.group(1)), None),
-    ),
-    (
-        re.compile(
-            r"^rows between current row and unbounded following$"
-        ),
-        lambda m: (0, None),
-    ),
-    (
-        re.compile(
-            r"^rows between unbounded preceding and unbounded following$"
-        ),
-        lambda m: (None, None),
-    ),
-    (
-        re.compile(r"^rows unbounded preceding$"),
-        lambda m: (None, 0),
-    ),
-    # round-11 third wave: NEGATIVE bounds (frames strictly before /
-    # after the current row — including the reversed complements the
-    # moving-start UBF pass emits).  Encoded as signed offsets; the
-    # executor rewrites frame [lo, hi] with hi<0 as the [lo−hi, 0]
-    # aggregate globally LAGGED by −hi (and lo>0 as a LEAD) — the
-    # value of a shifted frame is the unshifted frame's value at the
-    # shifted position.
-    (
-        re.compile(r"^rows between (\d+) preceding and (\d+) preceding$"),
-        lambda m: (int(m.group(1)), -int(m.group(2))),
-    ),
-    (
-        re.compile(
-            r"^rows between unbounded preceding and (\d+) preceding$"
-        ),
-        lambda m: (None, -int(m.group(1))),
-    ),
-    (
-        re.compile(r"^rows between (\d+) following and (\d+) following$"),
-        lambda m: (-int(m.group(1)), int(m.group(2))),
-    ),
-    (
-        re.compile(
-            r"^rows between (\d+) following and unbounded following$"
-        ),
-        lambda m: (-int(m.group(1)), None),
-    ),
-]
-
-
-def _parse_over_order(masked: str, sql: str, over_open: int):
-    """OVER(...) body at ``over_open`` → (keys, spec_close, frame)
-    when it is an unpartitioned ORDER BY with the default frame
-    (frame None) or a supported literal-bounded ROWS frame (frame =
-    (a, b) row counts); (None, close, None) when the call should stay
-    native; raises ValueError on unbalanced parens (whole statement
-    passes through)."""
-    spec_close = _match_paren(masked, over_open)
-    spec_m = masked[over_open + 1 : spec_close]
-    spec_s = sql[over_open + 1 : spec_close]
-    sm = re.match(r"^\s*order\s+by\s+", spec_m, re.IGNORECASE)
-    if sm is None:
-        return None, spec_close, None  # partitioned / OVER() — native
-    body_m, body_s = spec_m[sm.end():], spec_s[sm.end():]
-    fm = re.search(r"\b(range|rows|groups)\b", body_m, re.IGNORECASE)
-    frame = None
-    if fm:
-        frame_s = " ".join(body_m[fm.start():].split()).lower()
-        if frame_s != _DEFAULT_FRAME:
-            for rex, mk in _BOUNDED_ROWS_FRAMES:
-                m2 = rex.match(frame_s)
-                if m2:
-                    frame = mk(m2)
-                    break
-            else:
-                return None, spec_close, None  # unsupported frame
-        body_m, body_s = body_m[: fm.start()], body_s[: fm.start()]
-    keys = _parse_order_keys(body_m, body_s)
-    if keys is None:
-        return None, spec_close, None  # unparseable keys — native path
-    return keys, spec_close, frame
+def _over_order(spec: OverSpec | None, sql: str):
+    """(keys, frame) of an unpartitioned ORDER BY spec with the
+    default frame (frame None) or a literal-bounded ROWS frame (frame
+    = (a, b): rows preceding and following, None for an UNBOUNDED
+    side, negative for a frame strictly after / before the current
+    row); None when the call stays native."""
+    if spec is None or spec.partition is not None or spec.order is None:
+        return None  # partitioned / OVER () / named window — native
+    keys = _order_keys(spec.keys)
+    if keys is None or spec.exclude is not None:
+        return None
+    f = spec.frame
+    if f is None:
+        return keys, None
+    if (f.mode, f.lo, f.hi) == ("range", "unbounded preceding", "current row"):
+        # spelled in words only: a zero offset (… AND 0 PRECEDING) is a
+        # value boundary, which Spark checks against the key's type and
+        # admits under one ORDER BY key only
+        if re.search(r"\d", sql[f.span[0] : f.span[1]]):
+            return None
+        return keys, None
+    # round-11: literal ROWS bounds, UNBOUNDED sides and frames
+    # strictly before / after the current row (the executor rewrites
+    # frame [lo, hi] with hi<0 as the [lo−hi, 0] aggregate globally
+    # LAGGED by −hi, and lo>0 as a LEAD).  The row-exclusive cumulative
+    # frame (UNBOUNDED PRECEDING .. CURRENT ROW) differs from the
+    # default RANGE frame under tied keys, so it routes here too.
+    offsets = f.row_offsets() if f.mode == "rows" else None
+    if offsets is None:
+        return None
+    lo, hi = offsets
+    return keys, (None if lo is None else -lo, hi)
 
 
 def _arg_guard(masked: str, open_pos: int, close_pos: int) -> bool:
@@ -438,22 +324,18 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
     calls = []
     try:
         for m in _RANK_CALL_RE.finditer(masked):
-            over_open = m.end() - 1
-            keys, _close, frame = _parse_over_order(masked, sql, over_open)
-            if keys is None or frame is not None:
-                spec = " ".join(
-                    sql[over_open + 1 : _match_paren(masked, over_open)].split()
-                )
-                if re.match(r"^order\s+by\s+", spec, re.IGNORECASE):
+            spec = parse_over(masked, sql, m.end() - 1)
+            parsed = _over_order(spec, sql)
+            if parsed is None or parsed[1] is not None:
+                if spec is not None and spec.partition is None and spec.order is not None:
                     return None  # framed/odd-keyed ranking — whole stmt native
                 continue  # partitioned ranking — native, stays put
-            close = _match_paren(masked, over_open)
             fn = (m.group("fn") or m.group("ntile")).lower()
             if fn == "ntile":
                 fn = f"ntile({int(m.group('k'))})"
             calls.append(
-                dict(start=m.start(), end=close + 1, family="rank", fn=fn,
-                     keys=keys, arg_src=None, j=None, n=None, frame=None,
+                dict(start=m.start(), end=spec.close + 1, family="rank", fn=fn,
+                     keys=parsed[0], arg_src=None, j=None, n=None, frame=None,
                      ign=False, default_src=None)
             )
         for fam, call_re, group in (
@@ -503,11 +385,10 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                              frame=None, ign=False, default_src=None)
                     )
                     continue
-                keys, spec_close, frame = _parse_over_order(
-                    masked, sql, over_open
-                )
-                if keys is None:
+                parsed = _over_order(parse_over(masked, sql, over_open), sql)
+                if parsed is None:
                     continue  # partitioned / exotic frame — native
+                keys, frame = parsed
                 if not _arg_guard(masked, open_pos, arg_close):
                     return None  # nested window/subquery in the argument
                 fn = m.group(group).lower()
@@ -564,7 +445,7 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                     elif len(parts) != 1:
                         continue  # explicit ignoreNulls argument — native
                 calls.append(
-                    dict(start=m.start(), end=spec_close + 1, family=fam,
+                    dict(start=m.start(), end=spec_close_g + 1, family=fam,
                          fn=fn, keys=keys, arg_src=arg_src, j=j, n=n,
                          frame=frame, ign=ign, default_src=default_src)
                 )
@@ -618,7 +499,7 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 src_item = sql[a:b].strip()
                 if not src_item:
                     return None
-                if _KEY_RE.match(item_m) or _AS_ALIAS_RE.search(item_m):
+                if _COL_RE.fullmatch(item_m) or _AS_ALIAS_RE.search(item_m):
                     continue  # bare column / explicit AS alias — fine
                 return None  # implicit alias or bare expression
         def _call_arg_srcs(c) -> list[str]:
@@ -816,7 +697,7 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 out_items.append(_subst_span(a, b))
             else:
                 item_m = masked[a:b]
-                km = _KEY_RE.match(item_m)
+                km = _COL_RE.fullmatch(item_m)
                 if km:
                     out_items.append(km.group("col").split(".")[-1])
                 else:

@@ -15,7 +15,9 @@ UnboundedFollowingWindowFunctionFrame — O(n²) per partition (measured
 round 12: q_window_exclude_minmax 201 s at sf0.1 vs 0.9 s compressed).
 
 The rewrite, applied AFTER ``rewrite_window_frames`` (so it consumes
-the mechanical EXCLUDE/UBF-free emission):
+the mechanical EXCLUDE/UBF-free emission; ``rewrite_windows`` runs the
+two in order and is what ``translate_sql`` and the window registry
+members call):
 
 1. one parallel ``GROUP BY p, k`` computes per-key partials
    (sum/count/min/max of each aggregate argument),
@@ -66,8 +68,12 @@ passthrough, mirroring window_frames' refusal discipline):
   source, no WHERE/GROUP/ORDER/JOIN/… tail;
 - form B: form A whose source is ``rewrite_window_frames``'s
   dense-rank wrap ``(SELECT *, dense_rank() OVER (PARTITION BY p
-  ORDER BY k NULLS LAST) AS __adt_drN FROM <ident>) <alias>`` with the
-  injected column used ONLY inside OVER clauses.
+  ORDER BY k NULLS LAST) AS __adt_drN FROM <ident>) <ident>`` with the
+  injected column used ONLY inside OVER clauses.  The frame rewrite
+  hands the wrap's partition, key, alias and base relation over as a
+  ``DenseRankWrap`` (``rewrite_windows`` passes it on), so this pass
+  never parses the wrap back out of the text; without one, the source
+  must be form A.
 
 Either form may follow a ``WITH <cte>[, <cte>…]`` prefix, and its
 source identifier may then name a CTE or a table.  The prefix is
@@ -89,7 +95,11 @@ Every window call must share one bare-column PARTITION BY and one
 underlying ORDER BY column (bare, or ``CAST((k) AS <type>)`` as the
 value-range split emits); frames must be RANGE-mode (or absent);
 ROWS/GROUPS frames, IGNORE NULLS, FILTER, DISTINCT aggregates,
-subqueries and nondeterministic arguments all refuse.
+subqueries and nondeterministic arguments all refuse.  The OVER bodies
+are read with ``overspec.parse_over``; the frame's bounds are never
+needed (the compressed emission reuses each body verbatim), so a RANGE
+frame the bound grammar does not read, such as the value split's
+``CAST(… AS DECIMAL(38,18))`` bounds, is accepted as it is.
 
 Scale note: the pass trades one extra (parallel, partial-aggregated)
 shuffle + broadcast join for collapsing the window input from n rows
@@ -105,11 +115,11 @@ import os
 import re
 import warnings
 
+from adt_spark.dialect.overspec import parse_over
 from adt_spark.dialect.sqltext import (
     _comma_spans,
     _main_query_start,
     _mask_literals,
-    _match_paren,
     _star_item,
     _strip_comments,
     _top_level_matches,
@@ -117,16 +127,11 @@ from adt_spark.dialect.sqltext import (
 from adt_spark.dialect.window_frames import (
     _FROM_RE,
     _OVER_RE,
-    _PRE_RE,
     _SELECT_RE,
+    DenseRankWrap,
     _call_before_over,
+    rewrite_window_frames,
 )
-
-#: frame-mode keyword at top level of an OVER body; bounds are NOT
-#: parsed (the compressed emission reuses the body verbatim), so this
-#: also accepts the rewriter's CAST(… AS DECIMAL(38,18)) value-split
-#: bounds that window_frames' own _BOUND grammar predates
-_MODE_RE = re.compile(r"\b(rows|range|groups)\b", re.IGNORECASE)
 
 _SAFE_FNS = {"sum", "count", "min", "max", "first_value", "last_value"}
 
@@ -185,39 +190,33 @@ _CAST_KEY_RE = re.compile(
 )
 _RECURSIVE_RE = re.compile(r"\s*with\s+recursive\b", re.IGNORECASE)
 _ALIAS_END = re.compile(r"\bas\s+([A-Za-z_]\w*|`[^`]+`)\s*$", re.IGNORECASE)
-_ORD_TAIL_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
-_ORD_TAIL_DIR = re.compile(r"\b(asc|desc)\s*$", re.IGNORECASE)
-_WRAP_RE = re.compile(
-    r"^\(\s*select\s+\*\s*,\s*dense_rank\(\)\s+over\s*\("
-    r"partition\s+by\s+([A-Za-z_][\w]*)\s+order\s+by\s+([A-Za-z_][\w]*)"
-    r"\s+nulls\s+last\)\s+as\s+(__adt_dr\d+)\s+from\s+([A-Za-z_][\w]*)"
-    r"\s*\)\s*[A-Za-z_][\w]*$",
-    re.IGNORECASE,
-)
 
 
-def _order_parts(o_txt: str):
-    """order-by text → its underlying column name (the bare
-    identifier, or the column inside a ``CAST((k) AS <type>)``
-    monotone recast), or None when the key shape is unsupported."""
-    expr = o_txt.strip()
-    m = _ORD_TAIL_NULLS.search(expr)
-    if m:
-        expr = expr[: m.start()].rstrip()
-    m = _ORD_TAIL_DIR.search(expr)
-    if m:
-        expr = expr[: m.start()].rstrip()
+def _key_column(expr: str) -> str | None:
+    """An order key's underlying column: the bare identifier, or the
+    column inside a ``CAST((k) AS <type>)`` monotone recast; None when
+    the key shape is unsupported."""
     if _IDENT_ONLY.match(expr):
         return expr
     m = _CAST_KEY_RE.match(expr)
-    if m:
-        return m.group(1)
-    return None
+    return m.group(1) if m else None
 
 
-def compress_keyed_windows(sql: str) -> str | None:
+def rewrite_windows(sql: str) -> str:
+    """The window passes in order: ``rewrite_window_frames``, then the
+    compression of its output, handed the dense-rank wrap the frame
+    rewrite emitted (if any).  The compressed statement, or the frame
+    rewrite's when any gate refuses."""
+    wraps: list[DenseRankWrap] = []
+    framed = rewrite_window_frames(sql, wraps)
+    return compress_keyed_windows(framed, wraps[0] if wraps else None) or framed
+
+
+def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str | None:
     """The compressed statement, or None when any soundness gate
-    refuses (callers fall back to the uncompressed text)."""
+    refuses (callers fall back to the uncompressed text).  ``wrap`` is
+    the dense-rank wrap ``rewrite_window_frames`` emitted for ``sql``
+    (form B); without it the source must be a bare relation (form A)."""
     if os.environ.get("ADT_KEYED_WINDOWS", "1").lower() in ("0", "false", "off"):
         return None
     sql = _strip_comments(sql)
@@ -241,21 +240,28 @@ def compress_keyed_windows(sql: str) -> str | None:
         return None
     from_m = froms[0]
     items = sql[sel_m.end() : from_m.start()]
-    source = sql[from_m.end() :].strip()
+    m_items = masked[sel_m.end() : from_m.start()]
 
-    dr_name = None
-    if _IDENT_ONLY.match(source):
-        base = source
-        wrap_p = wrap_k = None
-    else:
-        wm = _WRAP_RE.match(re.sub(r"\s+", " ", source))
-        if not wm:
+    if wrap is None:
+        base = sql[from_m.end() :].strip()
+        if not _IDENT_ONLY.match(base):
             return None
-        wrap_p, wrap_k, dr_name, base = wm.group(1), wm.group(2), wm.group(3), wm.group(4)
+    else:
+        # the peer index is recomputed below as dense_rank over the
+        # bare key ASC NULLS LAST, so the wrap must rank exactly that
+        key = wrap.keys[0] if len(wrap.keys) == 1 else None
+        if (
+            key is None
+            or key.desc
+            or key.nulls == "first"
+            or not _IDENT_ONLY.match(key.expr)
+            or not _IDENT_ONLY.match(wrap.base)
+        ):
+            return None
+        base = wrap.base
 
     # --- collect window calls in the items ------------------------------
-    m_items = _mask_literals(items)
-    calls = []  # (start, end, fn, args, p, o_txt, frame_txt, key_col)
+    calls = []  # (start, end, fn, args, OVER body)
     part_col = None
     key_col = None
     for om in _OVER_RE.finditer(m_items):
@@ -265,45 +271,34 @@ def compress_keyed_windows(sql: str) -> str | None:
         fn_start, fn, args = cb
         if fn not in _SAFE_FNS:
             return None
-        over_open = om.end() - 1
-        over_close = _match_paren(m_items, over_open)
-        body = items[over_open + 1 : over_close]
-        m_body = _mask_literals(body)
-        modes = _top_level_matches(m_body, _MODE_RE)
-        fm = modes[0] if modes else None
-        frame_txt = None
-        pre = body
-        if fm:
-            if fm.group(1).lower() != "range":
-                return None
-            frame_txt = body[fm.start() :].strip()
-            pre = body[: fm.start()]
-        pm = _PRE_RE.match(_mask_literals(pre))
-        if not pm or not pm.group("p"):
+        spec = parse_over(m_items, items, om.end() - 1)
+        if spec is None or spec.exclude is not None:
             return None
-        p_txt = pre[pm.start("p") : pm.end("p")].strip()
-        if not _IDENT_ONLY.match(p_txt):
+        # RANGE frames only; their bounds stay unread (the compressed
+        # emission reuses the body verbatim), which also admits the
+        # value split's CAST(… AS DECIMAL(38,18)) bounds
+        if spec.frame is not None and spec.frame.mode != "range":
+            return None
+        p_txt = spec.partition
+        if not p_txt or not _IDENT_ONLY.match(p_txt):
             return None
         if part_col is None:
             part_col = p_txt
         elif p_txt.lower() != part_col.lower():
             return None
-        o_txt = None
-        ucol = None
-        if pm.group("o") is not None:
-            o_txt = pre[pm.start("o") : pm.end("o")].strip()
-            if len(_comma_spans(_mask_literals(o_txt))) != 1:
+        if spec.order is not None:
+            if len(spec.keys) != 1:
                 return None  # composite ORDER BY — grain is not one key
-            ucol = _order_parts(o_txt)
+            ucol = _key_column(spec.keys[0].expr)
             if ucol is None:
                 return None
-            if dr_name is not None and ucol.lower() == dr_name.lower():
-                ucol = wrap_k  # the injected peer index derives from wrap_k
+            if wrap is not None and ucol.lower() == wrap.alias.lower():
+                ucol = wrap.keys[0].expr  # the injected peer index ranks this key
             if key_col is None:
                 key_col = ucol
             elif ucol.lower() != key_col.lower():
                 return None
-        elif frame_txt is not None:
+        elif spec.frame is not None:
             return None  # frame without ORDER BY — let Spark refuse it
 
         # --- argument gates ---
@@ -315,7 +310,7 @@ def compress_keyed_windows(sql: str) -> str | None:
         if idents & _NONDET:
             return None
         if fn in ("first_value", "last_value"):
-            if o_txt is None:
+            if spec.order is None:
                 return None  # unordered first/last is tie-order-dependent
             allowed = set(_FV_KEYWORDS)
             if key_col is not None:
@@ -326,7 +321,8 @@ def compress_keyed_windows(sql: str) -> str | None:
                 return None
         if fn == "count" and args.strip() != "*" and not args.strip():
             return None
-        calls.append((fn_start, over_close + 1, fn, args.strip(), o_txt, frame_txt, body))
+        body = items[om.end() : spec.close]
+        calls.append((fn_start, spec.close + 1, fn, args.strip(), body))
     if not calls:
         return None
     if part_col is None:
@@ -335,9 +331,11 @@ def compress_keyed_windows(sql: str) -> str | None:
         # only whole-partition aggregates — a plain groupBy join would do,
         # but nothing in the engine emits that shape alone; refuse.
         return None
-    if dr_name is not None:
-        if wrap_p.lower() != part_col.lower() or key_col.lower() != wrap_k.lower():
-            return None
+    if wrap is not None and (
+        wrap.partition.lower() != part_col.lower()
+        or key_col.lower() != wrap.keys[0].expr.lower()
+    ):
+        return None
 
     # --- partials (dedup by fn-kind + argument text) ---------------------
     partial_fn = {"sum": "sum", "count": "count", "min": "min",
@@ -359,7 +357,7 @@ def compress_keyed_windows(sql: str) -> str | None:
     win_cols: dict[str, str] = {}
     win_sql: list[str] = []
     repls = []  # (start, end, colname)
-    for fn_start, end, fn, args, o_txt, frame_txt, body in calls:
+    for fn_start, end, fn, args, body in calls:
         call_key = re.sub(r"\s+", " ", items[fn_start:end]).lower()
         col = win_cols.get(call_key)
         if col is None:
@@ -397,8 +395,8 @@ def compress_keyed_windows(sql: str) -> str | None:
         bare = star is not None and star.group("qualifier") is None
         out_items.append(f" {base}.*" if bare else new_items[a:b])
     new_items = ",".join(out_items)
-    if dr_name is not None and re.search(
-        rf"\b{re.escape(dr_name)}\b", _mask_literals(new_items), re.IGNORECASE
+    if wrap is not None and re.search(
+        rf"\b{re.escape(wrap.alias)}\b", _mask_literals(new_items), re.IGNORECASE
     ):
         return None  # injected index used outside OVER — not joined back
 
@@ -407,10 +405,10 @@ def compress_keyed_windows(sql: str) -> str | None:
         f"FROM {base} GROUP BY {part_col}, {key_col}"
     )
     win_src = f"({grp}) __kw_g"
-    if dr_name is not None:
+    if wrap is not None:
         win_src = (
             f"(SELECT *, dense_rank() OVER (PARTITION BY {part_col} "
-            f"ORDER BY {key_col} NULLS LAST) AS {dr_name} FROM ({grp})) __kw_g"
+            f"ORDER BY {key_col} NULLS LAST) AS {wrap.alias} FROM ({grp})) __kw_g"
         )
     if any(fn == "sum" for _s, _e, fn, *_rest in calls):
         _warn_reassociation_once()

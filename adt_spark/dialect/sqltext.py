@@ -107,19 +107,20 @@ def _literal_segments(sql: str) -> list[tuple[str, bool]]:
     return out
 
 
+_PAREN_RE = re.compile(r"[()]")
+
+
 def _blank_parens(s: str) -> str:
     """Blank everything inside parentheses (positions preserved) so
-    depth-0 keyword scans cannot see subquery / CTE-body innards."""
-    out, depth = [], 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-            out.append("(")
-        elif ch == ")":
-            depth -= 1
-            out.append(")")
-        else:
-            out.append(ch if depth == 0 else " ")
+    depth-0 keyword scans cannot see subquery / CTE-body innards.  The
+    parens stay; text after an unmatched ``)`` counts as nested."""
+    out, depth, last = [], 0, 0
+    for m in _PAREN_RE.finditer(s):
+        i = m.start()
+        out += [s[last:i] if depth == 0 else " " * (i - last), s[i]]
+        depth += 1 if s[i] == "(" else -1
+        last = i + 1
+    out.append(s[last:] if depth == 0 else " " * (len(s) - last))
     return "".join(out)
 
 

@@ -325,11 +325,10 @@ def translate_sql(sql: str) -> str:
         sql = _rewrite_names(sql)
     if _CALL_RE.search(sql):
         sql = _rewrite_calls(sql)
-    from adt_spark.dialect.keyed_windows import compress_keyed_windows
-    from adt_spark.dialect.window_frames import rewrite_window_frames
+    from adt_spark.dialect.keyed_windows import rewrite_windows
 
-    sql = rewrite_window_frames(sql)
-    # round-12: evaluate low-cardinality RANGE windows over the distinct
-    # (partition, order-key) grain — kills the 3-task parallelism cap and
-    # Spark's O(n²) UnboundedFollowing frames (keyed_windows docstring)
-    return compress_keyed_windows(sql) or sql
+    # GROUPS / EXCLUDE / moving-start frames, then (round-12) evaluate
+    # low-cardinality RANGE windows over the distinct (partition,
+    # order-key) grain — kills the 3-task parallelism cap and Spark's
+    # O(n²) UnboundedFollowing frames (keyed_windows docstring)
+    return rewrite_windows(sql)

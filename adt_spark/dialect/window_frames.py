@@ -179,11 +179,12 @@ from __future__ import annotations
 
 import re
 import warnings
+from dataclasses import dataclass
 
+from adt_spark.dialect.overspec import Frame, OrderKey, OverSpec, parse_over
 from adt_spark.dialect.sqltext import (
     _comma_spans,
     _mask_literals,
-    _match_paren,
     _match_paren_back,
     _star_item,
     _strip_comments,
@@ -241,34 +242,8 @@ def _warn_subtraction_once(fn: str) -> None:
         stacklevel=4,
     )
 
-#: fast gate: statements without these keywords pass through untouched
-_KEY_RE = re.compile(r"\b(groups|exclude)\b", re.IGNORECASE)
 
 _OVER_RE = re.compile(r"\bover\s*\(", re.IGNORECASE)
-
-_BOUND = (
-    r"(?:unbounded\s+preceding|unbounded\s+following|current\s+row"
-    # numeric offsets may be fractional (round-10: the DECIMAL(38,18)
-    # split admits DECIMAL keys, whose natural offsets are decimals)
-    r"|\d+(?:\.\d+)?\s+(?:preceding|following)"
-    # interval units with a discrete key-space step: DAY for DATE
-    # keys (key < k ⇔ key ≤ k − 1 DAY), and HOUR/MINUTE/SECOND —
-    # valid only on TIMESTAMP keys, whose unit step is 1 µs (round-9:
-    # key < k ⇔ key ≤ k − 1 MICROSECOND, exact for Spark's
-    # µs-precision timestamps).  MONTH/YEAR (round-11, r10 verdict
-    # #5) parse too — Spark accepts YearMonthIntervalType RANGE
-    # bounds on DATE/TIMESTAMP keys, so the SUBTRACTION family and
-    # the non-straddling / no-op paths (which emit the user's frame
-    # unchanged) now cover them; only the min/max/first/last VALUE
-    # SPLIT keeps a loud gate, with the precise Spark refusal (see
-    # the split branch).
-    # The quoted alternative admits blanks because the frame regex
-    # runs on the literal-MASKED spec (quote bodies are spaces there);
-    # _parse_spec recovers the real digits from the source by span.
-    r"|interval\s+(?:'[\d\s]*'|\d+)\s+"
-    r"(?:days?|hours?|minutes?|seconds?|months?|years?)\s+"
-    r"(?:preceding|following))"
-)
 
 #: a normalized (lowercased, whitespace-collapsed) INTERVAL DAY bound
 _DAY_BOUND_RE = re.compile(r"^interval\s+(?:'\d+'|\d+)\s+days?\s+(?:preceding|following)$")
@@ -302,45 +277,31 @@ def _bound_kind(b: str) -> str | None:
     if b[0].isdigit():
         return "num"
     return None
-_FRAME_RE = re.compile(
-    rf"\b(?P<mode>rows|range|groups)\s+"
-    rf"(?:between\s+(?P<lo>{_BOUND})\s+and\s+(?P<hi>{_BOUND})|(?P<single>{_BOUND}))",
-    re.IGNORECASE,
-)
-_EXCLUDE_RE = re.compile(
-    r"\s*\bexclude\s+(?P<what>current\s+row|group|ties|no\s+others)\s*$",
-    re.IGNORECASE,
-)
-_PRE_RE = re.compile(
-    r"^\s*(?:partition\s+by\s+(?P<p>.*?))?\s*(?:order\s+by\s+(?P<o>.*?))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 #: alias prefix for injected peer-group-index columns
 _DR = "__adt_dr"
 
-_NULLS_RE = re.compile(r"\bnulls\s+(first|last)\b", re.IGNORECASE)
-_DESC_RE = re.compile(r"\bdesc\s*$", re.IGNORECASE)
 
-
-def _pin_null_order(order_src: str) -> str:
-    """Append the SOURCE dialect's default null placement to every
-    order key lacking an explicit NULLS modifier.  DataFusion (and
+def _pin(key: OrderKey) -> str:
+    """``key`` with the SOURCE dialect's default null placement spelled
+    out when it has no NULLS modifier.  DataFusion (and
     PostgreSQL/DuckDB) default to NULLS LAST for ASC and NULLS FIRST
     for DESC; Spark defaults the opposite way — without pinning, a
     rewritten frame would put NULL keys at the other end of the
     partition and every frame near them would differ."""
-    out = []
-    masked = _mask_literals(order_src)
-    for a, b in _comma_spans(masked):
-        k = order_src[a:b].strip()
-        if _NULLS_RE.search(masked[a:b]):
-            out.append(k)
-        elif _DESC_RE.search(masked[a:b]):
-            out.append(k + " NULLS FIRST")
-        else:
-            out.append(k + " NULLS LAST")
-    return ", ".join(out)
+    if key.nulls:
+        return key.text
+    return f"{key.text} NULLS {'FIRST' if key.desc else 'LAST'}"
+
+
+def _pin_null_order(keys: tuple[OrderKey, ...]) -> str:
+    """The ORDER BY text with every key pinned (``_pin``)."""
+    return ", ".join(_pin(k) for k in keys)
+
+
+def _nulls_first(key: OrderKey) -> bool:
+    """Whether the pinned ``key`` sorts NULLs first."""
+    return key.nulls == "first" or (key.nulls is None and key.desc)
 
 
 _IV_SECONDS = {"day": 86400, "hour": 3600, "minute": 60, "second": 1}
@@ -404,113 +365,29 @@ class _Unsupported(NotImplementedError):
     pass
 
 
-def _parse_spec(spec_masked: str, spec_src: str) -> dict:
-    """Decompose a window spec into pre (partition/order), frame, and
-    exclude parts.  Positions come from the mask, text from the source."""
-    excl = _EXCLUDE_RE.search(spec_masked)
-    exclude = " ".join(excl.group("what").lower().split()) if excl else None
-    frame_zone_end = excl.start() if excl else len(spec_masked)
-    fm = _FRAME_RE.search(spec_masked, 0, frame_zone_end)
-    frame = None
-    pre_end = frame_zone_end
-    if fm:
-        # bound TEXT comes from the SOURCE by span: the regex matched
-        # the literal-masked spec, where a quoted interval magnitude
-        # (INTERVAL '2' DAY) is blanked out
-        lo_g = "lo" if fm.group("lo") else "single"
-        lo = spec_src[fm.start(lo_g): fm.end(lo_g)]
-        hi = (
-            spec_src[fm.start("hi"): fm.end("hi")]
-            if fm.group("hi")
-            else "current row"
-        )
-        # normalized LOWERCASE (like mode/exclude): downstream
-        # comparisons — _straddles, the split-frame empty-half checks
-        # — match literally.  '0 PRECEDING' / '0 FOLLOWING' ARE the
-        # current row (SQL spec): normalizing here keeps _straddles
-        # accurate (a '… AND 0 PRECEDING' frame DOES contain the
-        # current row, so treating its sign as -1 would misroute it
-        # to the non-straddling no-op path — unsound).
-        lo = " ".join(lo.lower().split())
-        hi = " ".join(hi.lower().split())
-        zero_iv = re.compile(
-            r"^interval\s+'?0'?\s+"
-            r"(?:days?|hours?|minutes?|seconds?|months?|years?)\s+"
-            r"(preceding|following)$"
-        )
-        if lo in ("0 preceding", "0 following") or zero_iv.match(lo):
-            lo = "current row"
-        if hi in ("0 preceding", "0 following") or zero_iv.match(hi):
-            hi = "current row"
-        frame = {
-            "mode": fm.group("mode").lower(),
-            "lo": lo,
-            "hi": hi,
-            "span": (fm.start(), fm.end()),
-        }
-        pre_end = fm.start()
-    pre_masked = spec_masked[:pre_end]
-    # frame-ish text _FRAME_RE could not parse (INTERVAL or fractional
-    # RANGE offsets, etc.) must refuse LOUDLY here: left in pre_masked
-    # it would be captured as part of the ORDER BY key and the rewrite
-    # would emit corrupted SQL that dies far downstream
-    if re.search(r"(?i)\b(rows|range|groups)\s+(between|unbounded|current|\d)",
-                 pre_masked):
-        raise _Unsupported(
-            f"unsupported window-frame bounds (fractional / compound "
-            f"INTERVAL offsets are not rewritable; supported units are "
-            f"DAY / HOUR / MINUTE / SECOND / MONTH / YEAR with integer "
-            f"magnitudes): {spec_src!r}"
-        )
-    pm = _PRE_RE.match(pre_masked)
-    if pm is None:
-        raise _Unsupported(f"cannot parse window spec: {spec_src!r}")
-    part = spec_src[pm.start("p"): pm.end("p")].strip() if pm.group("p") else None
-    order = spec_src[pm.start("o"): pm.end("o")].strip() if pm.group("o") else None
-    return {
-        "partition": part,
-        "order": order,
-        "frame": frame,
-        "exclude": exclude,
-        "src": spec_src,
-    }
-
-
-def _frame_text(frame: dict | None, src: str) -> str:
-    if frame is None:
-        return ""
-    s, e = frame["span"]
-    return src[s:e]
-
-
-def _bare_order_key(order_src: str) -> str:
+def _bare_order_key(spec: OverSpec) -> str:
     """The ORDER BY key expression stripped of direction / null-order
     modifiers — used by the non-straddling-RANGE rewrites to test key
     nullness.  Numeric RANGE offsets require a single sort key in
-    every dialect; a top-level comma (multi-key) refuses loudly."""
-    if len(_comma_spans(_mask_literals(order_src))) > 1:
+    every dialect; a multi-key ORDER BY refuses loudly."""
+    if len(spec.keys) > 1:
         raise _Unsupported(
             "EXCLUDE over a RANGE frame with numeric offsets requires "
             "a single ORDER BY key"
         )
-    return re.sub(
-        r"(?is)\s+((asc|desc)(\s+nulls\s+(first|last))?|nulls\s+(first|last))"
-        r"\s*$",
-        "",
-        order_src,
-    ).strip()
+    return spec.keys[0].expr
 
 
-def _straddles(frame: dict | None) -> bool:
+def _straddles(frame: Frame | None) -> bool:
     """True when the frame is guaranteed to contain the current row
     (lo <= 0 <= hi).  No frame clause means the default frame, which
     always contains the current row."""
     if frame is None:
         return True
-    return _bound_sign(frame["lo"]) <= 0 <= _bound_sign(frame["hi"])
+    return _bound_sign(frame.lo) <= 0 <= _bound_sign(frame.hi)
 
 
-def rewrite_window_frames(sql: str) -> str:
+def rewrite_window_frames(sql: str, wraps: list[DenseRankWrap] | None = None) -> str:
     """Rewrite moving-start ``ROWS … AND UNBOUNDED FOLLOWING``
     aggregates into O(n) complements, then GROUPS frames and EXCLUDE
     clauses into Spark-parseable SQL (see module docstring for the
@@ -531,79 +408,97 @@ def rewrite_window_frames(sql: str) -> str:
     rare UNBOUNDED FOLLOWING halves keep Spark's slow-but-consistent
     evaluation; plain user UBF frames (where every rewritten column's
     consistency caveat is the pre-existing tied-ROWS nondeterminism,
-    documented on `_rewrite_moving_start_ubf`) get the O(n) forms."""
-    return _rewrite_groups_exclude(_rewrite_moving_start_ubf(_strip_comments(sql)))
+    documented on `_rewrite_moving_start_ubf`) get the O(n) forms.
+
+    When ``wraps`` is a list, the ``DenseRankWrap`` of a GROUPS rewrite
+    over a bare relation is appended to it (``keyed_windows.
+    rewrite_windows`` hands it to the compression)."""
+    return _rewrite_groups_exclude(
+        _rewrite_moving_start_ubf(_strip_comments(sql)), wraps
+    )
 
 
-def _rewrite_groups_exclude(sql: str) -> str:
+def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
     """The GROUPS / EXCLUDE pass (module docstring bullets 1-7)."""
-    if not _KEY_RE.search(sql):
+    low = sql.lower()
+    if "groups" not in low and "exclude" not in low:
         return sql
     masked = _mask_literals(sql)
-    if not _KEY_RE.search(masked):
-        return sql  # keyword only inside string literals
 
     edits: list[tuple[int, int, str]] = []  # (start, end, replacement)
-    dr_aliases: dict[tuple[str, str], str] = {}  # (partition, order) -> alias
+    # (partition, order keys) -> alias
+    dr_aliases: dict[tuple[str, tuple[OrderKey, ...]], str] = {}
 
     for m in _OVER_RE.finditer(masked):
         open_pos = m.end() - 1
-        close_pos = _match_paren(masked, open_pos)
-        spec_masked = masked[open_pos + 1: close_pos]
-        if not _KEY_RE.search(spec_masked):
+        spec = parse_over(masked, sql, open_pos)
+        if spec is None:
+            continue  # a named window: Spark reports what it cannot run
+        frame = spec.frame
+        if spec.exclude is None and (frame is None or frame.mode != "groups"):
             continue
-        spec = _parse_spec(spec_masked, sql[open_pos + 1: close_pos])
-        frame = spec["frame"]
-        if frame is None and spec["exclude"] in (None, "no others"):
-            # keyword matched something that isn't frame syntax (e.g. a
-            # column named groups) — leave the spec alone
+        if frame is None and spec.exclude == "no others":
             continue
+        close_pos = spec.close
+        spec_src = sql[open_pos + 1 : close_pos]
+        if frame is not None and frame.lo is None:
+            # frame text the grammar cannot read must refuse LOUDLY:
+            # rewriting around it would emit corrupted SQL that dies
+            # far downstream
+            raise _Unsupported(
+                f"unsupported window-frame bounds (fractional / compound "
+                f"INTERVAL offsets are not rewritable; supported units are "
+                f"DAY / HOUR / MINUTE / SECOND / MONTH / YEAR with integer "
+                f"magnitudes): {spec_src!r}"
+            )
 
         # --- GROUPS → RANGE ---------------------------------------------
-        new_frame_text = _frame_text(frame, spec["src"])
-        order_text = spec["order"]
+        new_frame_text = sql[frame.span[0] : frame.span[1]] if frame else ""
+        order_text = spec.order
         dr_order = None  # set when order_text IS a peer-group index
-        if frame is not None and frame["mode"] == "groups":
+        if frame is not None and frame.mode == "groups":
             if order_text is None:
                 raise _Unsupported("GROUPS frame requires ORDER BY")
             # GROUPS offsets must be non-negative INTEGERS (SQL:2016
-            # 7.15 <window frame units>); the extended _BOUND grammar
-            # that admits INTERVAL bounds exists for RANGE frames only
-            # — refuse interval-bounded GROUPS loudly rather than
-            # silently converting invalid SQL into a RANGE frame.
-            for b in (frame["lo"], frame["hi"]):
+            # 7.15 <window frame units>); the extended overspec bound
+            # grammar that admits INTERVAL bounds exists for RANGE
+            # frames only — refuse interval-bounded GROUPS loudly
+            # rather than silently converting invalid SQL into a
+            # RANGE frame.
+            for b in (frame.lo, frame.hi):
                 if _bound_kind(b) not in (None, "num"):
                     raise _Unsupported(
                         f"GROUPS frame offsets must be integers, got "
                         f"{b!r} (INTERVAL bounds are RANGE-frame syntax)"
                     )
                 if b[0].isdigit() and "." in b:
-                    # the round-10 _BOUND grammar admits fractional
-                    # NUMERIC offsets for RANGE frames (DECIMAL keys);
-                    # GROUPS offsets stay non-negative integers
-                    # (SQL:2016 7.15) — refuse, never silently round
+                    # the round-10 overspec bound grammar admits
+                    # fractional NUMERIC offsets for RANGE frames
+                    # (DECIMAL keys); GROUPS offsets stay non-negative
+                    # integers (SQL:2016 7.15) — refuse, never
+                    # silently round
                     raise _Unsupported(
                         f"GROUPS frame offsets must be integers, got {b!r}"
                     )
-            numeric = any(b[0].isdigit() for b in (frame["lo"], frame["hi"]))
+            numeric = any(b[0].isdigit() for b in (frame.lo, frame.hi))
             if numeric:
-                key = (spec["partition"] or "", order_text)
+                key = (spec.partition or "", spec.keys)
                 alias = dr_aliases.setdefault(key, f"{_DR}{len(dr_aliases)}")
                 order_text = alias  # rank values are never NULL: no pinning
                 dr_order = alias
             else:
-                order_text = _pin_null_order(order_text)
-            new_frame_text = f"RANGE BETWEEN {frame['lo']} AND {frame['hi']}"
-        elif order_text is not None and spec["exclude"] not in (None, "no others"):
+                order_text = _pin_null_order(spec.keys)
+            new_frame_text = f"RANGE BETWEEN {frame.lo} AND {frame.hi}"
+        elif order_text is not None and spec.exclude not in (None, "no others"):
             # the EXCLUDE arithmetic reconstructs the spec — keep the
             # source dialect's null placement while we're at it
-            order_text = _pin_null_order(order_text)
+            order_text = _pin_null_order(spec.keys)
 
         if (
             frame is not None
-            and frame["mode"] == "range"
+            and frame.mode == "range"
             and "subday" in {
-                _bound_kind(frame["lo"]), _bound_kind(frame["hi"])
+                _bound_kind(frame.lo), _bound_kind(frame.hi)
             }
         ):
             # Spark requires one interval type across both frame
@@ -612,15 +507,15 @@ def _rewrite_groups_exclude(sql: str) -> str:
             # emitted window, including the subtraction family's base
             # frame — pure unit arithmetic on timestamps
             new_frame_text = (
-                f"RANGE BETWEEN {_to_day_to_second(frame['lo'])} "
-                f"AND {_to_day_to_second(frame['hi'])}"
+                f"RANGE BETWEEN {_to_day_to_second(frame.lo)} "
+                f"AND {_to_day_to_second(frame.hi)}"
             )
-        part_clause = f"PARTITION BY {spec['partition']} " if spec["partition"] else ""
+        part_clause = f"PARTITION BY {spec.partition} " if spec.partition else ""
         order_clause = f"ORDER BY {order_text} " if order_text else ""
         base_w = (part_clause + order_clause + new_frame_text).strip()
 
         # --- EXCLUDE ----------------------------------------------------
-        exclude = spec["exclude"]
+        exclude = spec.exclude
         if exclude in (None, "no others"):
             edits.append((open_pos + 1, close_pos, base_w))
             continue
@@ -649,23 +544,23 @@ def _rewrite_groups_exclude(sql: str) -> str:
             # contained it (DuckDB implements that reading) while
             # PostgreSQL's peers-only removal does not, so no single
             # rewrite is right for both dialects.
-            if exclude == "current row" and frame["mode"] == "rows":
+            if exclude == "current row" and frame.mode == "rows":
                 edits.append((open_pos + 1, close_pos, base_w))
                 continue
             if (
                 exclude in ("current row", "group")
-                and frame["mode"] == "groups"
+                and frame.mode == "groups"
                 and order_text is not None
             ):
                 edits.append((open_pos + 1, close_pos, base_w))
                 continue
             if (
                 exclude in ("current row", "group")
-                and frame["mode"] == "range"
-                and spec["order"] is not None
+                and frame.mode == "range"
+                and spec.order is not None
             ):
                 if "ym" in {
-                    _bound_kind(frame["lo"]), _bound_kind(frame["hi"])
+                    _bound_kind(frame.lo), _bound_kind(frame.hi)
                 }:
                     # Measured (round-11): on a NON-straddling
                     # MONTH/YEAR frame DuckDB's native EXCLUDE
@@ -702,7 +597,7 @@ def _rewrite_groups_exclude(sql: str) -> str:
                     "(see q_window_exclude)"
                 )
         eff_mode = "range" if frame is None else (
-            "range" if frame["mode"] == "groups" else frame["mode"]
+            "range" if frame.mode == "groups" else frame.mode
         )
         if exclude in ("group", "ties") and eff_mode != "range":
             raise _Unsupported(
@@ -730,7 +625,7 @@ def _rewrite_groups_exclude(sql: str) -> str:
         if re.match(r"(?i)^\s*distinct\b", args):
             raise _Unsupported("EXCLUDE with DISTINCT aggregates is not supported")
 
-        korder = _bare_order_key(spec["order"]) if ns_range else None
+        korder = _bare_order_key(spec) if ns_range else None
 
         def _gx(term: str) -> str:
             """Excluded-quantity gate: on a non-straddling RANGE frame
@@ -761,7 +656,7 @@ def _rewrite_groups_exclude(sql: str) -> str:
                 # dense_rank.  RANGE/GROUPS frames stay unsound: peers
                 # sharing the current row's key survive the exclusion
                 # but no frame bound can separate one row from them.
-                if frame is None or frame["mode"] != "rows":
+                if frame is None or frame.mode != "rows":
                     raise _Unsupported(
                         f"EXCLUDE CURRENT ROW on {fn} over a "
                         "RANGE/GROUPS (peer-space) frame has no sound "
@@ -777,7 +672,7 @@ def _rewrite_groups_exclude(sql: str) -> str:
                         "ORDER BY is not supported (Spark requires an "
                         "ordered window for ROWS frames)"
                     )
-                lo, hi = frame["lo"], frame["hi"]
+                lo, hi = frame.lo, frame.hi
                 has_lower = lo not in ("current row", "0 preceding")
                 has_upper = hi not in ("current row", "0 following")
                 wl = (
@@ -829,9 +724,9 @@ def _rewrite_groups_exclude(sql: str) -> str:
                 # of a key-nulled argument is that set EXACTLY;
                 # first/last_value cannot null-skip without changing
                 # semantics, so they refuse.
-                lo_unb = frame["lo"] == "unbounded preceding"
-                hi_unb = frame["hi"] == "unbounded following"
-                nulls_first = "nulls first" in order_text.lower()
+                lo_unb = frame.lo == "unbounded preceding"
+                hi_unb = frame.hi == "unbounded following"
+                nulls_first = _nulls_first(spec.keys[0])
                 away = (lo_unb and not nulls_first) or (hi_unb and nulls_first)
                 if (lo_unb or hi_unb) and away:
                     if fn in ("first_value", "last_value"):
@@ -858,8 +753,8 @@ def _rewrite_groups_exclude(sql: str) -> str:
                 continue
             # the GROUP/TIES guards above already enforced a RANGE (or
             # rewritten-GROUPS) frame and an ORDER BY
-            lo = frame["lo"] if frame is not None else "unbounded preceding"
-            hi = frame["hi"] if frame is not None else "current row"
+            lo = frame.lo if frame is not None else "unbounded preceding"
+            hi = frame.hi if frame is not None else "current row"
             vs_range = False  # value-space split (integer-key RANGE)
             vs_day = False    # … in DATE space (INTERVAL DAY offsets)
             vs_ts = False     # … in TIMESTAMP µs space (sub-day units)
@@ -868,7 +763,7 @@ def _rewrite_groups_exclude(sql: str) -> str:
                 if "num" in kinds and kinds & {"day", "subday", "ym"}:
                     raise _Unsupported(
                         "RANGE frame mixing a numeric and an INTERVAL "
-                        f"offset is not valid SQL: {spec['src']!r}"
+                        f"offset is not valid SQL: {spec_src!r}"
                     )
                 if "ym" in kinds:
                     # Round-11 adjudication (r10 verdict #5), measured
@@ -938,7 +833,7 @@ def _rewrite_groups_exclude(sql: str) -> str:
                     # exactly that, the date analog of integrality).
                     vs_range = True
                 else:
-                    key = (spec["partition"] or "", spec["order"])
+                    key = (spec.partition or "", spec.keys)
                     dr_order = dr_aliases.setdefault(
                         key, f"{_DR}{len(dr_aliases)}"
                     )
@@ -957,13 +852,9 @@ def _rewrite_groups_exclude(sql: str) -> str:
                 # residue (r9 verdict #5; DOUBLE keys stay gated to
                 # integral values by the runtime guard below — distinct
                 # doubles can sit closer than any fixed decimal step)
-                bare = _bare_order_key(spec["order"])
-                mod = re.search(
-                    r"(?is)\s+((asc|desc)(\s+nulls\s+(first|last))?"
-                    r"|nulls\s+(first|last))\s*$",
-                    order_text,
-                )
-                suffix = mod.group(0) if mod else ""
+                bare = _bare_order_key(spec)
+                # the pinned key's ASC/DESC and NULLS suffix
+                suffix = _pin(spec.keys[0])[len(bare):]
                 half_ord = f"CAST(({bare}) AS DECIMAL(38,18)){suffix}"
                 lo_emit = _to_dec38(lo)
                 hi_emit = _to_dec38(hi)
@@ -1026,10 +917,10 @@ def _rewrite_groups_exclude(sql: str) -> str:
                     f"ELSE {fallback} END)"
                 )
             if vs_range:
-                korder = _bare_order_key(spec["order"])
+                korder = _bare_order_key(spec)
                 lo_unb = lo == "unbounded preceding"
                 hi_unb = hi == "unbounded following"
-                nulls_first = "nulls first" in order_text.lower()
+                nulls_first = _nulls_first(spec.keys[0])
                 away = (lo_unb and not nulls_first) or (hi_unb and nulls_first)
                 wfull = part_clause.strip()
                 if (lo_unb or hi_unb) and away:
@@ -1287,7 +1178,9 @@ def _rewrite_groups_exclude(sql: str) -> str:
         out = out[:s] + repl + out[e:]
 
     if dr_aliases:
-        out = _wrap_with_dense_rank(out, dr_aliases)
+        out, wrap = _wrap_with_dense_rank(out, dr_aliases)
+        if wrap is not None and wraps is not None:
+            wraps.append(wrap)
     return out
 
 
@@ -1300,12 +1193,30 @@ _FORBID_RE = re.compile(
 _TRAILER_RE = re.compile(r"\b(order\s+by|limit|offset)\b", re.IGNORECASE)
 
 
-def _wrap_with_dense_rank(sql: str, dr_aliases: dict[tuple[str, str], str]) -> str:
+@dataclass(frozen=True)
+class DenseRankWrap:
+    """The peer-index wrap ``_wrap_with_dense_rank`` emits over one bare
+    relation, with nothing after it: ``FROM (SELECT *, dense_rank() OVER
+    (PARTITION BY <partition> ORDER BY <keys, pinned>) AS <alias> FROM
+    <base>) <base>``.  The keyed compression reads these parts instead
+    of parsing the emitted text."""
+
+    partition: str
+    keys: tuple[OrderKey, ...]
+    alias: str
+    base: str
+
+
+def _wrap_with_dense_rank(
+    sql: str, dr_aliases: dict[tuple[str, tuple[OrderKey, ...]], str]
+) -> tuple[str, DenseRankWrap | None]:
     """Wrap the statement's final SELECT so each needed peer-group
     index (dense_rank over the frame's partition+order) is computed in
     a subquery the rewritten RANGE frame can ORDER BY.  Guarded to the
     simple shape ``[WITH …] SELECT <list> FROM <relations> [WHERE …]
-    [ORDER BY/LIMIT …]`` — anything else raises."""
+    [ORDER BY/LIMIT …]`` — anything else raises.  Returns the wrapped
+    statement and, when it wraps one index over a bare relation and
+    nothing follows, the wrap's parts."""
     masked = _mask_literals(sql)
     selects = _top_level_matches(masked, _SELECT_RE)
     if not selects:
@@ -1355,6 +1266,7 @@ def _wrap_with_dense_rank(sql: str, dr_aliases: dict[tuple[str, str], str]) -> s
     # outer qualified reference is refused loudly (a confusing
     # AnalysisException at execution is not an acceptable failure).
     wrapper = "__adt_w"
+    wrap = None
     m1 = re.match(
         r"(?is)^\s*from\s+([A-Za-z_][\w.]*)"
         r"(?:\s+(?:as\s+)?([A-Za-z_]\w*))?\s*(where\b.*)?$",
@@ -1363,6 +1275,13 @@ def _wrap_with_dense_rank(sql: str, dr_aliases: dict[tuple[str, str], str]) -> s
     if m1 and (m1.group(2) or "").lower() not in ("where",):
         rel, alias = m1.group(1), m1.group(2)
         wrapper = alias or rel.rsplit(".", 1)[-1]
+        # the wrap is the whole main query's source: one SELECT, one
+        # index, a bare relation and nothing after it
+        if len(selects) == 1 and len(dr_aliases) == 1 and not (
+            alias or m1.group(3) or trailer.strip()
+        ):
+            (p, keys), a = next(iter(dr_aliases.items()))
+            wrap = DenseRankWrap(p, keys, a, rel)
     else:
         # identifier.identifier only — a numeric literal like 0.5 is
         # not a qualification (nor is 1.e2); struct-field access is
@@ -1380,14 +1299,14 @@ def _wrap_with_dense_rank(sql: str, dr_aliases: dict[tuple[str, str], str]) -> s
             )
     defs = ", ".join(
         f"dense_rank() OVER ({'PARTITION BY ' + p + ' ' if p else ''}"
-        f"ORDER BY {_pin_null_order(o)}) AS {a}"
-        for (p, o), a in dr_aliases.items()
+        f"ORDER BY {_pin_null_order(keys)}) AS {a}"
+        for (p, keys), a in dr_aliases.items()
     )
-    prefix = sql[:sel]
-    return (
-        f"{prefix}SELECT {select_list.strip()} FROM "
+    wrapped = (
+        f"{sql[:sel]}SELECT {select_list.strip()} FROM "
         f"(SELECT *, {defs} {core.strip()}) {wrapper} {trailer.strip()}"
     ).strip()
+    return wrapped, wrap
 
 
 # ---------------------------------------------------------------------------
@@ -1412,33 +1331,20 @@ def _row_bound(k: int) -> str:
     return f"{-k} PRECEDING"
 
 
-def _reverse_order(order_src: str) -> str:
-    """The exact inverse of Spark's row ordering for ``order_src``:
-    every key's direction AND null placement flipped, with Spark's
-    defaults (ASC → NULLS FIRST, DESC → NULLS LAST) expanded first so
-    the flip is explicit.  Used by the min/max reversal rewrite — a
-    ROWS frame's membership is pure row-sequence, so running the same
+def _reverse_order(keys: tuple[OrderKey, ...]) -> str:
+    """The exact inverse of Spark's row ordering for ``keys``: every
+    key's direction AND null placement flipped, with Spark's defaults
+    (ASC → NULLS FIRST, DESC → NULLS LAST) expanded first so the flip
+    is explicit.  Used by the min/max reversal rewrite — a ROWS
+    frame's membership is pure row-sequence, so running the same
     frame over the reversed sequence visits exactly the complementary
     suffix."""
     out = []
-    for a, b in _comma_spans(_mask_literals(order_src)):
-        k = order_src[a:b].strip()
-        nul = None
-        m = re.search(r"(?is)\bnulls\s+(first|last)\s*$", k)
-        if m:
-            nul = m.group(1).lower()
-            k = k[: m.start()].rstrip()
-        dirn = None
-        m = re.search(r"(?is)\b(asc|desc)\s*$", k)
-        if m:
-            dirn = m.group(1).lower()
-            k = k[: m.start()].rstrip()
-        dirn = dirn or "asc"
-        if nul is None:  # SPARK defaults — this SQL executes on Spark
-            nul = "first" if dirn == "asc" else "last"
-        rdir = "DESC" if dirn == "asc" else "ASC"
-        rnul = "LAST" if nul == "first" else "FIRST"
-        out.append(f"{k} {rdir} NULLS {rnul}")
+    for k in keys:
+        # SPARK defaults — this SQL executes on Spark
+        nulls_first = k.nulls == "first" if k.nulls else not k.desc
+        rdir = "ASC" if k.desc else "DESC"
+        out.append(f"{k.expr} {rdir} NULLS {'LAST' if nulls_first else 'FIRST'}")
     return ", ".join(out)
 
 
@@ -1535,31 +1441,27 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
     edits: list[tuple[int, int, str]] = []
     for m in _OVER_RE.finditer(masked):
         open_pos = m.end() - 1
-        close_pos = _match_paren(masked, open_pos)
-        spec_masked = masked[open_pos + 1 : close_pos]
-        if not _UBF_RE.search(spec_masked):
+        spec = parse_over(masked, sql, open_pos)
+        if spec is None or not _UBF_RE.search(masked, open_pos, spec.close):
             continue
-        try:
-            spec = _parse_spec(spec_masked, sql[open_pos + 1 : close_pos])
-        except _Unsupported:
-            continue
-        frame = spec["frame"]
+        frame = spec.frame
+        # signed row offsets: None for an UNBOUNDED side, and None
+        # overall for an INTERVAL / fractional / misplaced-UNBOUNDED
+        # bound — invalid ROWS syntax the engine's own parser reports
+        # (this pass never raises)
+        offsets = frame.row_offsets() if frame and frame.mode == "rows" else None
         if (
-            frame is None
-            or frame["mode"] != "rows"
-            or frame["hi"] != "unbounded following"
-            # 'unbounded following' as a LOWER bound is invalid SQL in
-            # every dialect but still matches _FRAME_RE — pass it
-            # through so the engine's own parse error surfaces (this
-            # pass never raises)
-            or frame["lo"] in ("unbounded preceding", "unbounded following")
+            offsets is None
+            or offsets[0] is None
+            or offsets[1] is not None
             # EXCLUDE NO OTHERS is the explicit spelling of the
             # default — a ported script using it must still get the
             # O(n) rewrite (the replacement drops the no-op clause)
-            or spec["exclude"] not in (None, "no others")
-            or spec["order"] is None
+            or spec.exclude not in (None, "no others")
+            or spec.order is None
         ):
             continue
+        close_pos = spec.close
         call = _call_before_over(masked, sql, m.start())
         if call is None:
             continue
@@ -1580,17 +1482,12 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
         if args == "*" and fn != "count":
             continue
 
-        lo = frame["lo"]
-        if lo == "current row":
-            delta = 0
-        else:
-            n_txt, dirn = lo.split()
-            delta = int(n_txt) * (1 if dirn == "following" else -1)
+        delta = offsets[0]
 
         part_clause = (
-            f"PARTITION BY {spec['partition']} " if spec["partition"] else ""
+            f"PARTITION BY {spec.partition} " if spec.partition else ""
         )
-        order_text = spec["order"]
+        order_text = spec.order
         w_unb = (
             part_clause + f"ORDER BY {order_text} "
             "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
@@ -1599,14 +1496,14 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
             part_clause + f"ORDER BY {order_text} "
             f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(delta - 1)}"
         ).strip()
+        # the same frame over the REVERSED order visits exactly the
+        # suffix rows (see the mapping docstring)
+        w_rev = (
+            part_clause + f"ORDER BY {_reverse_order(spec.keys)} "
+            f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(-delta)}"
+        ).strip()
         e = args
-        if fn in ("min", "max"):
-            w_rev = (
-                part_clause + f"ORDER BY {_reverse_order(order_text)} "
-                f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(-delta)}"
-            ).strip()
-            repl = f"{fn}({e}) OVER ({w_rev})"
-        elif fn == "count":
+        if fn == "count":
             repl = f"(count({e}) OVER ({w_unb}) - count({e}) OVER ({w_pre}))"
         elif fn == "first_value":
             if delta == 0:
@@ -1615,10 +1512,6 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
                 w_off = (part_clause + f"ORDER BY {order_text}").strip()
                 repl = f"lead({e}, {delta}) OVER ({w_off})"
             else:
-                w_rev = (
-                    part_clause + f"ORDER BY {_reverse_order(order_text)} "
-                    f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(-delta)}"
-                ).strip()
                 repl = f"last_value({e}) OVER ({w_rev})"
         elif fn == "last_value":
             ncnt = f"(count(*) OVER ({w_unb}) - count(*) OVER ({w_pre}))"
@@ -1626,43 +1519,32 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
                 f"(CASE WHEN {ncnt} > 0 THEN last_value({e}) OVER ({w_unb}) "
                 "ELSE NULL END)"
             )
-        elif fn in _VAR_FNS:
-            # Variance is SET-determined, so it rides the same
-            # reversed-order running frame as min/max — Spark's own
-            # numerically stable CentralMomentAgg (Welford) over
-            # exactly the suffix set, evaluated incrementally (moving
-            # END, O(n)).  The moment-algebra complement (n/Σx/Σx²
-            # as total − prefix, the EXCLUDE pass's recipe) was tried
-            # first and MEASURED catastrophically wrong here: on
-            # BIGINT values ~1e8 with true variance ~0.7 it returned
-            # exactly 0.0 for every row (Σx² − (Σx)²/n cancels in
-            # doubles and the 0-clamp launders the garbage), where
-            # this pass REPLACES a working native evaluation — unlike
-            # EXCLUDE, which is a new capability with no baseline, a
-            # silent 100%-wrong answer is never an acceptable trade
-            # for O(n).  ``var`` is DataFusion's sample-variance
-            # spelling; Spark lacks the name, so it maps to var_samp.
+        else:
+            # min / max, sum / avg and the variance family: the native
+            # aggregate over the reversed complementary frame.
+            # sum / avg: unlike the subtraction complement this keeps
+            # Spark's own result type and rounding — a textual rewrite
+            # cannot see column types, and this pass REPLACES a
+            # working native evaluation, so a silent DECIMAL
+            # scale/precision change (sum widens, avg re-derives at
+            # division scale) is never an acceptable trade for O(n);
+            # the reversed frame is O(n) AND type-faithful for every
+            # argument type.
+            # Variance is SET-determined, so it rides the same frame —
+            # Spark's own numerically stable CentralMomentAgg (Welford)
+            # over exactly the suffix set, evaluated incrementally
+            # (moving END, O(n)).  The moment-algebra complement
+            # (n/Σx/Σx² as total − prefix, the EXCLUDE pass's recipe)
+            # was tried first and MEASURED catastrophically wrong
+            # here: on BIGINT values ~1e8 with true variance ~0.7 it
+            # returned exactly 0.0 for every row (Σx² − (Σx)²/n
+            # cancels in doubles and the 0-clamp launders the
+            # garbage), and a silent 100%-wrong answer is never an
+            # acceptable trade for O(n).  ``var`` is DataFusion's
+            # sample-variance spelling; Spark lacks the name, so it
+            # maps to var_samp.
             spark_fn = "var_samp" if fn == "var" else fn
-            w_rev = (
-                part_clause + f"ORDER BY {_reverse_order(order_text)} "
-                f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(-delta)}"
-            ).strip()
             repl = f"{spark_fn}({e}) OVER ({w_rev})"
-        else:  # sum / avg
-            # native aggregate over the reversed complementary frame
-            # (see the mapping docstring): unlike the subtraction
-            # complement this keeps Spark's own result type and
-            # rounding — a textual rewrite cannot see column types,
-            # and this pass REPLACES a working native evaluation, so
-            # a silent DECIMAL scale/precision change (sum widens,
-            # avg re-derives at division scale) is never an
-            # acceptable trade for O(n); the reversed frame is O(n)
-            # AND type-faithful for every argument type
-            w_rev = (
-                part_clause + f"ORDER BY {_reverse_order(order_text)} "
-                f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(-delta)}"
-            ).strip()
-            repl = f"{fn}({e}) OVER ({w_rev})"
         edits.append((fn_start, close_pos + 1, repl))
 
     if not edits:

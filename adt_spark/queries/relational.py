@@ -1190,11 +1190,9 @@ def _sql_frames(spark: SparkSession, sql: str) -> DataFrame:
     refusal gates in adt_spark/dialect/keyed_windows.py; ROWS-frame
     statements pass through compression untouched).  The CTE lives in
     the statement, so no temp view is left in the session catalog."""
-    from adt_spark.dialect.keyed_windows import compress_keyed_windows
-    from adt_spark.dialect.window_frames import rewrite_window_frames
+    from adt_spark.dialect.keyed_windows import rewrite_windows
 
-    rewritten = rewrite_window_frames(sql)
-    return spark.sql(compress_keyed_windows(rewritten) or rewritten)
+    return spark.sql(rewrite_windows(sql))
 
 
 _EXCL_FRAME = (

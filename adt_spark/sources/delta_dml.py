@@ -33,7 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from adt_spark.context import local_frame
-from adt_spark.dialect.sqltext import _comma_spans, _mask_literals
+from adt_spark.dialect.sqltext import _comma_spans, _mask_literals, _top_level_matches
 
 _DELETE = re.compile(
     r"^\s*DELETE\s+FROM\s+delta\.`(?P<path>[^`]+)`\s+WHERE\s+(?P<pred>.+?)\s*;?\s*$",
@@ -116,6 +116,21 @@ def is_delta_dml(sql: str) -> bool:
         or _CLONE.match(sql)
         or _SET_TBLPROPS.match(sql)
     )
+
+
+_WHERE_RE = re.compile(r"\s+WHERE\s+", re.IGNORECASE)
+
+
+def _split_update(m: re.Match) -> tuple[str, str]:
+    """(SET list, predicate) of a matched UPDATE, split at the first
+    WHERE at paren depth 0 outside literals and comments: ``_UPDATE``'s
+    lazy match stops at the first `` WHERE `` in the text, even one
+    inside a string literal."""
+    body = m.string[m.start("sets") : m.end("pred")]
+    where = _top_level_matches(_mask_literals(body), _WHERE_RE)
+    if not where:
+        raise ValueError(f"UPDATE without a WHERE clause: {m.string.strip()!r}")
+    return body[: where[0].start()], body[where[0].end() :]
 
 
 def _split_assignments(sets: str) -> dict[str, str]:
@@ -265,9 +280,8 @@ def execute_delta_dml(spark: SparkSession, sql: str) -> DataFrame:
             spark, [(n, version)], "num_affected_rows bigint, version bigint"
         )
     if m := _UPDATE.match(sql):
-        version, n = update_where(
-            spark, m.group("path"), m.group("pred"), _split_assignments(m.group("sets"))
-        )
+        sets, pred = _split_update(m)
+        version, n = update_where(spark, m.group("path"), pred, _split_assignments(sets))
         return local_frame(
             spark, [(n, version)], "num_affected_rows bigint, version bigint"
         )

@@ -45,6 +45,16 @@ def test_sql_update_multi_assignment(ctx, spark, dtab):
     assert rows[0] == ("s0", 0.0)
 
 
+def test_sql_update_where_inside_literal(ctx, spark, dtab):
+    """SET and WHERE split at the statement's own WHERE, not at one
+    inside a string literal."""
+    res = ctx.sql(f"UPDATE delta.`{dtab}` SET s = 'a WHERE b' WHERE id = 1")
+    assert res.first().num_affected_rows == 1
+    rows = {r.id: r.s for r in read_delta_native(spark, dtab).collect()}
+    assert [i for i, s in rows.items() if s == "a WHERE b"] == [1]
+    assert rows[0] == "s0" and rows[2] == "s2"
+
+
 def test_sql_vacuum_retain(ctx, spark, dtab):
     ctx.sql(f"DELETE FROM delta.`{dtab}` WHERE id = 0")
     assert ctx.sql(f"VACUUM delta.`{dtab}` RETAIN 168 HOURS").first().num_files_deleted == 0

@@ -15,8 +15,9 @@ from __future__ import annotations
 
 import pytest
 
-from adt_spark.dialect.keyed_windows import compress_keyed_windows
-from adt_spark.dialect.window_frames import rewrite_window_frames
+from adt_spark.dialect.keyed_windows import compress_keyed_windows, rewrite_windows
+from adt_spark.dialect.overspec import OrderKey
+from adt_spark.dialect.window_frames import DenseRankWrap, rewrite_window_frames
 
 
 @pytest.fixture(scope="module")
@@ -43,8 +44,8 @@ def _both(spark, sql):
     """(uncompressed rows, compressed rows), sorted, after asserting
     the pass actually fired."""
     rewritten = rewrite_window_frames(sql)
-    compressed = compress_keyed_windows(rewritten)
-    assert compressed is not None, rewritten
+    compressed = rewrite_windows(sql)
+    assert compressed != rewritten, rewritten
     a = spark.sql(rewritten)
     cols = a.columns
     return (
@@ -126,10 +127,16 @@ REFUSALS = {
 }
 
 #: sources other than the bare table: the dense-rank wrap that
-#: rewrite_window_frames emits for GROUPS frames (form B)
+#: rewrite_window_frames emits for GROUPS frames (form B), with the
+#: parts it hands over
 REFUSAL_SOURCES = {
     "fv_rank_col": "(SELECT *, dense_rank() OVER (PARTITION BY p ORDER BY k"
     " NULLS LAST) AS __adt_dr0 FROM kw_matrix_t) _w",
+}
+REFUSAL_WRAPS = {
+    "fv_rank_col": DenseRankWrap(
+        "p", (OrderKey("k", "k", False, None),), "__adt_dr0", "kw_matrix_t"
+    ),
 }
 
 
@@ -137,7 +144,7 @@ REFUSAL_SOURCES = {
 def test_keyed_refusals(spark, label):
     source = REFUSAL_SOURCES.get(label, "kw_matrix_t")
     sql = f"SELECT rid, {REFUSALS[label]} AS x\nFROM {source}"
-    assert compress_keyed_windows(sql) is None
+    assert compress_keyed_windows(sql, REFUSAL_WRAPS.get(label)) is None
 
 
 _STAR_WINDOW = (
@@ -232,6 +239,9 @@ CTE_STATEMENTS = {
     # dense-rank subquery over the CTE name (form B)
     "groups_form_b": f"{_CTE}SELECT rid, sum(v) OVER (PARTITION BY p"
     " ORDER BY k GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS x FROM s",
+    # the default direction spelled out is form B all the same
+    "groups_asc_key": f"{_CTE}SELECT rid, sum(v) OVER (PARTITION BY p"
+    " ORDER BY k ASC GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS x FROM s",
     # the main query reads the second of two CTEs
     "two_ctes": "WITH s AS (SELECT * FROM kw_matrix_t WHERE rid < 14),"
     " u AS (SELECT rid, p, k, v * 2 AS v FROM s)"
@@ -330,8 +340,8 @@ def test_commented_statements_rewrite(spark, kw_table, label):
     comment-free twin and returns the same rows."""
     commented, plain = COMMENTED[label]
     rewritten = rewrite_window_frames(commented)
-    compressed = compress_keyed_windows(rewritten)
-    assert compressed is not None, rewritten
+    compressed = rewrite_windows(commented)
+    assert compressed != rewritten, rewritten
     want = spark.sql(rewrite_window_frames(plain)).orderBy("rid").collect()
     assert spark.sql(compressed).orderBy("rid").collect() == want
 

@@ -8,6 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from adt_spark.dialect.sqltext import (
+    _blank_parens,
     _comma_spans,
     _literal_segments,
     _mask_literals,
@@ -116,6 +117,26 @@ def test_comma_spans_join_back(pieces):
     for (_, end), _next in zip(spans, spans[1:]):
         assert mask[end] == ","
         assert mask[:end].count("(") == mask[:end].count(")")
+
+
+def _blank_parens_by_char(s: str) -> str:
+    """Reference for ``_blank_parens``: one character at a time."""
+    out, depth = [], 0
+    for ch in s:
+        if ch in "()":
+            depth += 1 if ch == "(" else -1
+            out.append(ch)
+        else:
+            out.append(ch if depth == 0 else " ")
+    return "".join(out)
+
+
+@given(st.text(alphabet="ab (),'\n", max_size=40))
+@settings(max_examples=300, deadline=None)
+def test_blank_parens_matches_char_loop(s):
+    """The regex-driven ``_blank_parens`` equals the character loop,
+    unbalanced and unmatched ``)`` input included."""
+    assert _blank_parens(s) == _blank_parens_by_char(s)
 
 
 @given(_code, _any_text, st.sampled_from(["line", "block"]), _code)

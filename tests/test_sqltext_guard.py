@@ -1,4 +1,4 @@
-"""One SQL text scanner.
+"""One SQL text scanner, one OVER-spec grammar.
 
 ``adt_spark/dialect/sqltext.py`` is the one module that decides what a
 SQL literal, comment and parenthesis are.  Hand-rolled character loops
@@ -6,12 +6,19 @@ elsewhere had already diverged (a quote inside a comment flipped one
 scanner's literal state but not another's), so this guard fails on any
 loop outside ``sqltext.py`` that counts paren depth or toggles quote
 state over characters.
+
+Likewise ``adt_spark/dialect/overspec.py`` is the one module that reads
+a window's ``OVER (…)`` body: three passes once kept their own regex
+grammars for it.  The second guard fails on a regex literal outside
+``overspec.py`` that spells a frame mode (``rows|range|groups``) or an
+order key's ``NULLS FIRST | LAST`` suffix.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 _PKG = pathlib.Path(__file__).resolve().parent.parent / "adt_spark"
 
@@ -109,3 +116,80 @@ def test_sqltext_is_the_only_sql_text_scanner():
                 found.append(f"adt_spark/{rel}:{line} in {fn}")
     assert not found, found
     assert _scanner_loops(ast.parse((_PKG / "dialect/sqltext.py").read_text()))
+
+
+#: a regex literal: a string holding a regex escape (``\s``, ``\b``, …)
+_REGEX_ESCAPE = re.compile(r"\\[sbdw]")
+#: what only the OVER-spec grammar spells
+_SPEC_GRAMMAR = (
+    re.compile(r"(?i)(?<![a-z_])(?:rows|range|groups)(?![a-z_])"),
+    re.compile(r"(?i)nulls\\s\+[^)]*?(?:first|last)"),
+)
+
+
+def _spec_grammar_literals(tree: ast.AST) -> list[int]:
+    """Lines of regex literals that spell frame modes or a NULLS
+    FIRST | LAST key suffix."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and _REGEX_ESCAPE.search(node.value)
+        and any(p.search(node.value) for p in _SPEC_GRAMMAR)
+    ]
+
+
+#: the OVER-spec regexes three passes kept before they shared one
+#: grammar (window_frames, global_rank, keyed_windows)
+_FORMER_COPIES = {
+    "window_frames frame-ish check": (
+        're.search(r"(?i)\\b(rows|range|groups)\\s+(between|unbounded|current|\\d)", s)'
+    ),
+    "window_frames._NULLS_RE": (
+        '_NULLS_RE = re.compile(r"\\bnulls\\s+(first|last)\\b", re.IGNORECASE)'
+    ),
+    "global_rank._KEY_TAIL_RE": (
+        "_KEY_TAIL_RE = re.compile(\n"
+        '    r"(?:\\s+(?P<dir>asc|desc))?"\n'
+        '    r"(?:\\s+nulls\\s+(?P<nulls>first|last))?\\s*$",\n'
+        "    re.IGNORECASE,\n)"
+    ),
+    "global_rank._BOUNDED_ROWS_FRAMES": (
+        're.compile(r"^rows between (\\d+) preceding and current row$")'
+    ),
+    "keyed_windows._MODE_RE": (
+        '_MODE_RE = re.compile(r"\\b(rows|range|groups)\\b", re.IGNORECASE)'
+    ),
+    "keyed_windows._ORD_TAIL_NULLS": (
+        '_ORD_TAIL_NULLS = re.compile(r"\\bnulls\\s+(first|last)\\s*$", re.IGNORECASE)'
+    ),
+}
+
+
+def test_guard_sees_former_spec_grammars():
+    """The guard flags each OVER-spec regex the passes used to keep,
+    and not a regex that merely mentions NULLS or GROUP BY."""
+    for label, src in _FORMER_COPIES.items():
+        assert _spec_grammar_literals(ast.parse(src)), label
+    not_spec = (
+        're.compile(r"\\b(group\\s+by|having)\\b")\n'
+        're.match(r"\\s+(?:(?P<nulls>ignore|respect)\\s+nulls\\s+)?over\\s*\\(", s)\n'
+        '"rows of a frame are kept"\n'
+    )
+    assert _spec_grammar_literals(ast.parse(not_spec)) == []
+
+
+def test_overspec_is_the_only_over_spec_grammar():
+    """No module in ``adt_spark/`` but ``dialect/overspec.py`` has a
+    regex literal spelling frame modes or a NULLS FIRST | LAST key
+    suffix; such code reads ``overspec.parse_over``'s model instead."""
+    found = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "dialect/overspec.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=rel)
+        found += [f"adt_spark/{rel}:{line}" for line in _spec_grammar_literals(tree)]
+    assert not found, found
+    assert _spec_grammar_literals(ast.parse((_PKG / "dialect/overspec.py").read_text()))

@@ -1,9 +1,14 @@
-"""Differential test of the window passes against DuckDB.
+"""Differential test of the window passes against DuckDB and against
+Spark with the passes off.
 
 Generated windowed statements run through ``ADTContext.sql`` (the
 dialect passes ``window_frames``, ``keyed_windows`` and
 ``global_rank``, then Spark) and through DuckDB 1.0.0; the rows must
-agree.  The generator covers the function and frame mixes those
+agree.  Where Spark can run a statement without a pass, that run is a
+second reference: the keyed RANGE family also runs as the uncompressed
+frame-rewrite text, and the global family as plain
+``spark.sql(translate_sql(…))`` on Spark's single-partition window.
+The generator covers the function and frame mixes those
 modules' docstrings say they support, over a small table with NULL
 keys, NULL values, tied keys and both sort directions — the method of
 SQLancer's differential testing (Rigger & Su, OSDI 2020).
@@ -218,14 +223,31 @@ def _statement(draw, family: str):
     return spark_sql, duck_sql
 
 
+def _passes_off(spark, family: str, spark_sql: str):
+    """The statement's rows with the family's pass off, or None when
+    Spark cannot run the statement without it."""
+    from adt_spark.dialect.translate import translate_sql
+    from adt_spark.dialect.window_frames import rewrite_window_frames
+
+    if family == "keyed":
+        return spark.sql(rewrite_window_frames(spark_sql)).collect()
+    if family == "global":
+        return spark.sql(translate_sql(spark_sql)).collect()
+    return None
+
+
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
 @given(data=st.data())
 @settings(max_examples=8, derandomize=True, deadline=None)
 def test_window_passes_match_duckdb(engines, family, data):
     """Every generated statement returns DuckDB's rows through
-    ``ADTContext.sql`` (8 statements per family, 40 in all)."""
+    ``ADTContext.sql`` (8 statements per family, 40 in all), and the
+    rows Spark gives with the family's pass off."""
     ctx, con = engines
     spark_sql, duck_sql = data.draw(_statement(family))
     got = _norm(ctx.sql(spark_sql).collect())
     want = _norm(con.execute(duck_sql).fetchall())
     assert got == want, (spark_sql, duck_sql)
+    off = _passes_off(ctx.spark, family, spark_sql)
+    if off is not None:
+        assert got == _norm(off), spark_sql

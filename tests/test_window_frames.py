@@ -659,6 +659,36 @@ def test_interval_frame_bounds_refuse_loudly():
             rewrite_window_frames(q)
 
 
+def test_zero_interval_is_the_current_row_in_range_frames_only():
+    """INTERVAL offsets are RANGE-frame syntax: a zero INTERVAL reads
+    as the current row in a RANGE frame (so the frame straddles it),
+    while a GROUPS frame refuses it like any other INTERVAL offset."""
+    out = rewrite_window_frames(
+        "SELECT sum(a) OVER (ORDER BY d RANGE BETWEEN INTERVAL '0' DAY "
+        "PRECEDING AND CURRENT ROW EXCLUDE CURRENT ROW) AS s FROM t"
+    )
+    assert "EXCLUDE" not in out and "RANGE BETWEEN INTERVAL '0' DAY" in out
+    with pytest.raises(NotImplementedError, match="RANGE-frame syntax"):
+        rewrite_window_frames(
+            "SELECT sum(a) OVER (ORDER BY a GROUPS BETWEEN INTERVAL '0' DAY "
+            "PRECEDING AND 1 FOLLOWING) AS s FROM t"
+        )
+
+
+@pytest.mark.parametrize(
+    "lo", ["1.5 PRECEDING", "INTERVAL '2' DAY PRECEDING", "UNBOUNDED FOLLOWING"]
+)
+def test_moving_start_pass_leaves_invalid_rows_bounds(lo):
+    """A ROWS frame whose start is no row count is invalid SQL: the
+    moving-start UNBOUNDED FOLLOWING pass leaves it to the engine's
+    own error instead of failing in the rewrite."""
+    q = (
+        f"SELECT sum(a) OVER (ORDER BY a ROWS BETWEEN {lo} AND UNBOUNDED "
+        "FOLLOWING) AS s FROM t"
+    )
+    assert rewrite_window_frames(q) == q
+
+
 def test_nonstraddling_range_unbounded_bound_matrix(spark, small_t):
     """Non-straddling RANGE frames with ONE UNBOUNDED bound: a
     NULL-keyed row's frame extends to the partition edge — the WHOLE
