@@ -431,6 +431,164 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+#: The summary files Spark's parquet inference reads before any data
+#: file, in order of preference (``ParquetUtils.inferSchema``).
+_PARQUET_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def _hidden_name(name: str) -> bool:
+    """Spark's file-index name filter
+    (``HadoopFSUtils.shouldFilterOutPathName``): names starting with
+    ``_`` or ``.`` and in-flight ``._COPYING_`` files are not table
+    files, except ``_``-named partition directories (``_k=1``) and
+    the summary files."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return exclude and not name.startswith(_PARQUET_SUMMARIES)
+
+
+def _jclass(spark: SparkSession, name: str):
+    """A py4j proxy for the JVM class ``name``.  ``spark._jvm.a.b.C``
+    resolves every package segment with its own gateway round trip
+    (~0.6 ms for a class five segments deep); a proxy built from the
+    full name makes none."""
+    from py4j.java_gateway import JavaClass
+
+    return JavaClass(name, spark._jvm._gateway_client)
+
+
+def _footer_file(spark: SparkSession, hconf, paths: tuple[str, ...]):
+    """The Hadoop ``FileStatus`` whose footer Spark's inference would
+    read for ``spark.read.parquet(*paths)``, or None when there is no
+    file to read.
+
+    Spark sorts every leaf by path and takes the first
+    ``_common_metadata``, else the first ``_metadata``, else the first
+    data file.  Here the summary files are looked for at the top level
+    of each input path, where parquet-mr's committer writes them, and
+    the walk for a data file visits directories in that sorted order
+    and stops at the first one: a single file costs one ``globStatus``.
+    """
+
+    def entries(statuses, root=False):
+        # (sort key, status) in Spark's path order: a directory's key
+        # ends in "/", which is where its leaves sort
+        out = []
+        for st in statuses or []:
+            key = st.getPath().toString() + ("/" if st.isDirectory() else "")
+            name = key.rstrip("/").rsplit("/", 1)[-1]
+            if (root and key.endswith("/")) or not _hidden_name(name):
+                out.append((key, st))
+        return sorted(out, key=lambda e: e[0])
+
+    listings: dict[str, list] = {}
+
+    def children(key, st):
+        if key not in listings:
+            path = st.getPath()
+            listings[key] = entries(path.getFileSystem(hconf).listStatus(path))
+        return listings[key]
+
+    roots = []
+    for p in paths:
+        jpath = _jclass(spark, "org.apache.hadoop.fs.Path")(p)
+        roots.extend(jpath.getFileSystem(hconf).globStatus(jpath) or [])
+    roots = entries(roots, root=True)
+
+    top = sorted(
+        (c for e in roots for c in (children(*e) if e[0].endswith("/") else [e])),
+        key=lambda e: e[0],
+    )
+    for summary in _PARQUET_SUMMARIES:
+        for key, st in top:
+            if key.endswith("/" + summary):
+                return st
+
+    def first_data(level):
+        for key, st in level:
+            if key.endswith("/"):
+                found = first_data(children(key, st))
+                if found is not None:
+                    return found
+            elif key.rsplit("/", 1)[-1] not in _PARQUET_SUMMARIES:
+                return st
+        return None
+
+    return first_data(roots)
+
+
+def _footer_schema(spark: SparkSession, paths: tuple[str, ...]):
+    """The data schema ``spark.read.parquet(*paths)`` would infer, as
+    a JVM ``StructType``, read from one parquet footer on the driver —
+    no Spark job.
+
+    Spark's inference (``ParquetFileFormat.mergeSchemasInParallel``)
+    submits a one-task job per read, even for a single file, to run
+    ``readSchemaFromFooter`` over the file ``_footer_file`` picks.
+    This runs that same code in the driver JVM: Spark's footer reader,
+    then ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's
+    ``SQLConf`` — so ``nanosAsLong``, ``int96AsTimestamp``,
+    ``binaryAsString`` and ``inferTimestampNTZ`` apply exactly as
+    they do there, and a Spark-written footer's own schema (VARCHAR,
+    nullability) wins over the parquet types.  (The job's converter
+    keeps case sensitivity, field-id reads and the variant-annotation
+    flag at their defaults; a session that sets those confs gets them
+    here.)  The reference's listing table likewise reads the schema
+    in-process (listing.rs:50-158).
+
+    Partition columns are not in the footer; Spark's file index
+    discovers them when the reader is built.  When there is no file to
+    read (a missing path, an empty directory) Spark's own reader is
+    called, so its own error is raised.
+    """
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    status = _footer_file(spark, hconf, paths)
+    if status is None:
+        return spark.read.parquet(*paths)._jdf.schema()
+    spark_pq = "org.apache.spark.sql.execution.datasources.parquet."
+    metadata = _jclass(spark, spark_pq + "ParquetFooterReader").readFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(
+            status, hconf
+        ),
+        _jclass(
+            spark, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS,
+    )
+    return _jclass(spark, spark_pq + "ParquetFileFormat").readSchemaFromFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.Footer")(status.getPath(), metadata),
+        _jclass(spark, spark_pq + "ParquetToSparkSchemaConverter")(state.conf()),
+    )
+
+
+def parquet_schema(spark: SparkSession, *paths: str):
+    """The data schema ``spark.read.parquet(*paths)`` would infer,
+    without its Spark job (see ``_footer_schema``)."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    return _parse_datatype_json_string(_footer_schema(spark, paths).json())
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without its schema-inference
+    job: the schema comes from one footer (``_footer_schema``), and
+    Spark's file index still discovers and types hive partition
+    columns.  The JVM schema goes to the JVM reader as it is, with no
+    round trip through Python.
+
+    A reader with OPTIONS (``mergeSchema`` needs every footer) keeps
+    the plain ``spark.read`` path."""
+    jpaths = _jclass(spark, "org.apache.spark.api.python.PythonUtils").toSeq(
+        list(paths)
+    )
+    reader = spark._jsparkSession.read().schema(_footer_schema(spark, paths))
+    return DataFrame(reader.parquet(jpaths), spark)
+
+
 def _sf_dir_signature(sf_dir: str) -> tuple:
     """Cheap on-disk identity of a testdata directory: (table, mtime,
     size) per present file.  ~10 ``os.stat`` calls — microseconds."""
@@ -449,7 +607,10 @@ def register_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]
     """Register every driver table under ``sf_dir`` as a temp view and
     return the DataFrames keyed by table name.
 
-    Scans stay lazy: registration reads only parquet footers, so
+    Scans stay lazy: registration reads one parquet footer per table,
+    on the driver through :func:`read_parquet`, and submits no Spark
+    job (``spark.read.parquet`` ran a one-task schema-inference job
+    per table: 8 jobs, ~0.3 s, for window_sql's tables at sf0.1).
     Catalyst later prunes columns and pushes filters per query.
 
     Memoized PER SESSION OBJECT (round-11 optimization): resolving ten
@@ -488,7 +649,7 @@ def register_sf_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]
     out: dict[str, DataFrame] = {}
     for table, _mt, _sz in key[1]:
         path = os.path.join(sf_dir, f"{table}.parquet")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if table == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
             # TIMESTAMP(NANOS) read as epoch-nanos (nanosAsLong) →
             # exact integer DIV to µs, then timestamp_micros.

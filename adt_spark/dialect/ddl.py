@@ -45,7 +45,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from adt_spark.context import local_frame
+from adt_spark.context import local_frame, read_parquet
 from adt_spark.dialect.sqltext import _comma_spans, _mask_literals
 
 #: table name -> list of (column, ascending) declared via WITH ORDER.
@@ -261,7 +261,9 @@ def _register_unbounded(spark: SparkSession, spec: dict) -> None:
     conf = _FORMATS[fmt]
     options = {**conf["options"], **(spec["options"] or {})}
     schema = spec["schema"]
-    if schema is None:
+    if schema is None and conf["format"] == "parquet" and not options:
+        schema = read_parquet(spark, spec["location"]).schema
+    elif schema is None:
         reader = spark.read.format(conf["format"])
         for k, v in options.items():
             reader = reader.option(k, v)

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from adt_spark.context import local_frame
+from adt_spark.context import local_frame, read_parquet
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 #: classic single-file checkpoint: N.checkpoint.parquet
@@ -318,7 +318,8 @@ def replay_snapshot(spark: SparkSession, location: str, version: int | None = No
                 else:
                     _apply_action(snap, action)
         else:  # classic (single- or multi-part) and v2-parquet
-            cp = spark.read.parquet(*_local_parquet_paths(location, list(cp_paths)))
+            # parts share one schema by protocol: one footer read, no job
+            cp = read_parquet(spark, *_local_parquet_paths(location, list(cp_paths)))
             _apply_checkpoint_df(spark, snap, cp, location)
         snap.version = cp_version
 
@@ -403,7 +404,7 @@ def _apply_sidecar(spark, snap: _Snapshot, location: str, rel: str) -> None:
     _apply_checkpoint_df(
         spark,
         snap,
-        spark.read.parquet(*_local_parquet_paths(location, [side_path])),
+        read_parquet(spark, *_local_parquet_paths(location, [side_path])),
         location,
     )
 

@@ -51,7 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from adt_spark.context import local_frame
+from adt_spark.context import local_frame, read_parquet
 from adt_spark.sources.delta_native import (
     _hadoop_fs,
     _is_url,
@@ -2581,8 +2581,10 @@ def convert_to_delta(spark, location: str) -> int:
                 f"{list(pvals)} but the table uses {part_cols}"
             )
 
-    # schema (incl. typed partition columns) via Spark's own inference
-    df = spark.read.parquet(location)
+    # schema: the data columns from one footer (Spark's inference
+    # code, run on the driver), partition columns typed by Spark's
+    # partition discovery
+    df = read_parquet(spark, location)
     data_fields = [f for f in df.schema.fields if f.name not in part_cols]
     part_fields = [f for f in df.schema.fields if f.name in part_cols]
     schema = T.StructType(data_fields + part_fields)

@@ -29,6 +29,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from adt_spark.context import read_parquet
+
 #: per-session registration args (original location, pre-mirror) so
 #: ``refresh_table`` can re-resolve object-store tables — see the
 #: snapshot note in ``register_table``.
@@ -87,6 +89,13 @@ def register_table(
     they were actually discovered, mirroring the factory's
     ``validate_partitions`` (listing.rs:118-120).
 
+    A PARQUET table with no declared schema and no OPTIONS reads its
+    schema from one footer on the driver (``context.read_parquet``),
+    as the reference's factory does in-process (listing.rs:50-158):
+    ``CREATE EXTERNAL TABLE … STORED AS PARQUET`` and the CLI's
+    ``view``/``schema`` submit no schema-inference job.  OPTIONS
+    (``mergeSchema`` reads every footer) keep Spark's own inference.
+
     Snapshot semantics for non-Delta ``s3://`` locations: the prefix
     is mirrored through the jar-free gateway ONCE, at registration —
     the view reads that point-in-time snapshot, and later object-store
@@ -142,6 +151,8 @@ def register_table(
                 "tables (the transaction log is authoritative)"
             )
         df = read_delta(spark, location)
+    elif conf["format"] == "parquet" and schema is None and not options:
+        df = read_parquet(spark, location)
     else:
         reader = spark.read.format(conf["format"])
         for k, v in {**conf["options"], **(options or {})}.items():

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adt_spark.context import parquet_schema, read_parquet
 from adt_spark.operators.memo import memoize
 from adt_spark.queries import register, tables
 
@@ -66,7 +67,7 @@ def _open_events_stream(spark: SparkSession, events_path: str) -> DataFrame:
     by exact integer DIV — sub-µs is zero in the data.
     """
     path = _stream_glob(events_path)
-    ts_type = spark.read.parquet(events_path).schema["ts"].dataType
+    ts_type = parquet_schema(spark, events_path)["ts"].dataType
     stream = (
         spark.readStream.schema(streaming_events_schema(ts_type))
         .format("parquet")
@@ -408,11 +409,11 @@ def streaming_docs_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only).
     """
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    static_schema = spark.read.parquet(docs_path).schema
+    corpus = read_parquet(spark, docs_path)
+    static_schema = corpus.schema
     chash = F.md5(F.lower(F.trim(F.col("text"))))
     corpus_hashes = (
-        spark.read.parquet(docs_path)
-        .filter(F.col("doc_id") % 10 != 0)
+        corpus.filter(F.col("doc_id") % 10 != 0)
         .select(chash.alias("chash"))
         .distinct()
     )
@@ -464,9 +465,10 @@ def streaming_docs_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     from adt_spark.operators.dedup import band_keys_projection
 
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    static_schema = spark.read.parquet(docs_path).schema
+    corpus = read_parquet(spark, docs_path)
+    static_schema = corpus.schema
     corpus_bands = band_keys_projection(
-        spark.read.parquet(docs_path).filter(F.col("doc_id") % 10 != 0)
+        corpus.filter(F.col("doc_id") % 10 != 0)
     ).withColumnRenamed("doc_id", "corpus_doc_id")
     stream = (
         spark.readStream.schema(static_schema)
@@ -660,8 +662,9 @@ def streaming_docs_quality_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     records rows-only).
     """
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    static_schema = spark.read.parquet(docs_path).schema
-    corpus = spark.read.parquet(docs_path).filter(F.col("doc_id") % 10 != 0)
+    docs = read_parquet(spark, docs_path)
+    static_schema = docs.schema
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
     stream = (
         spark.readStream.schema(static_schema)
         .parquet(_stream_glob(docs_path))
@@ -782,8 +785,9 @@ def streaming_docs_threshold_ingest(
     # per-source gate untested; % 7 is coprime to 20, so every source
     # appears on both sides
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    static_schema = spark.read.parquet(docs_path).schema
-    corpus = spark.read.parquet(docs_path).filter(F.col("doc_id") % 7 != 0)
+    docs = read_parquet(spark, docs_path)
+    static_schema = docs.schema
+    corpus = docs.filter(F.col("doc_id") % 7 != 0)
     stream = (
         spark.readStream.schema(static_schema)
         .parquet(_stream_glob(docs_path))
@@ -820,7 +824,7 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tables(spark, sf_dir)
     docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
+    schema = parquet_schema(spark, docs_path)
     frac32 = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("prio-"), F.col("doc_id").cast("string"))),

@@ -199,3 +199,22 @@ def test_cli_defaults_delta_and_log_level(spark, tmp_path, capsys):
     from adt_spark.cli import _build_parser
 
     assert _build_parser().parse_args(["view", "x"]).log_level == "off"
+
+
+def test_schema_of_parquet_file_submits_no_job(spark, sf_dir, capsys):
+    """``adt schema <file.parquet>``: the CREATE EXTERNAL TABLE
+    registration reads the footer on the driver, and DESCRIBE is a
+    local command — no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("adt-cli-schema", "adt schema")
+    try:
+        rc = main(
+            ["schema", os.path.join(sf_dir, "lineitem.parquet"), "-f", "parquet"],
+            ctx=_Ctx(spark),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rc == 0
+    assert "l_orderkey" in capsys.readouterr().out
+    assert list(sc.statusTracker().getJobIdsForGroup("adt-cli-schema")) == []
