@@ -49,35 +49,32 @@ bounded-frame variance, nth_value IGNORE NULLS, lag/lead IGNORE
 NULLS, non-literal offsets) are LEFT IN PLACE and evaluate over the view's
 rows — the inner block's rows — unchanged.
 
-Scope (round-10, widened past the round-9 single-relation rule):
+Scope, read from the statement model (``statement.parse_statement``,
+the one parse the keyed-window compression and the frame rewrite read
+too); each call is dispatched on the model's function name:
 
-- one top-level SELECT; the FROM body may be a relation, a
-  ``fmt.`path``` URL table, a parenthesized derived table (GROUP
-  BY / join / anything inside), or a top-level JOIN chain; a WITH
-  prefix is carried verbatim onto the inner statement (split off by
-  ``sqltext._main_query_start``, the splitter the keyed-window
-  compression shares);
+- one top-level SELECT, no DISTINCT, no set operator; the FROM body
+  may be a relation, a ``fmt.`path``` URL table, a parenthesized
+  derived table, or a top-level JOIN chain; a WITH prefix is carried
+  verbatim onto the inner statement;
 - a top-level GROUP BY [HAVING] is supported when every projection
-  item is a bare column, an explicit ``expr AS alias``, or exactly
-  one rewritable window call with an alias (window keys/args may
-  then be aggregate expressions — they are computed inside the
-  aggregated inner block);
-- window ORDER BY keys are arbitrary expressions (plain columns
-  stay qualifier-stripped); every call — RANKING included since
-  round-11 (r10 verdict #4) — may use its own order: the executor
+  item is a bare column, an explicit ``expr AS alias``, or one
+  rewritable window call with an alias (window keys/args may then be
+  aggregate expressions — they are computed inside the aggregated
+  inner block);
+- window ORDER BY keys are arbitrary expressions (plain columns stay
+  qualifier-stripped); every call may use its own order: the executor
   builds one pid assignment per DISTINCT order;
-- no top-level DISTINCT / set ops / ``*`` or ``alias.*`` projection
-  items (a star would leak the injected ``_adt_g*`` columns —
-  ADVICE r9 hardened this from "leading ``*``" to ANY top-level
-  star item).
+- no ``*`` or ``alias.*`` projection item (a star would leak the
+  injected ``_adt_g*`` columns).
 
 Anything else passes through UNTOUCHED, which stays correct, merely
-on the cliff; resolution errors inside the rewrite (ambiguous
-columns from a self-join FROM body, aliases as window keys, …) fall
-back to the native path the same way.  Unlike the GROUPS/EXCLUDE
-rewrites (which refuse loudly because Spark cannot run the original
-at all), the unrewritten global window is semantically fine — so
-the fallback here is pass-through, never an error.
+on the cliff; resolution errors inside the rewrite (ambiguous columns
+from a self-join FROM body, aliases as window keys, …) fall back to
+the native path the same way.  Unlike the GROUPS/EXCLUDE rewrites
+(which refuse loudly because Spark cannot run the original at all),
+the unrewritten global window is semantically fine — so the fallback
+here is pass-through, never an error.
 """
 
 from __future__ import annotations
@@ -88,70 +85,36 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from adt_spark.dialect.overspec import OrderKey, OverSpec, parse_over
-from adt_spark.dialect.sqltext import (
-    _blank_parens,
-    _comma_spans,
-    _main_query_start,
-    _mask_literals,
-    _match_paren,
-    _star_item,
-    _strip_comments,
-)
+from adt_spark.dialect.overspec import OrderKey, OverSpec
+from adt_spark.dialect.sqltext import _mask_literals, _splice, _strip_comments
+from adt_spark.dialect.statement import _has_subquery_or_window, parse_statement
 
 __all__ = ["maybe_rewrite_global_rank"]
 
-_RANK_CALL_RE = re.compile(
-    r"\b(?P<fn>row_number|rank|dense_rank|percent_rank|cume_dist)"
-    r"\s*\(\s*\)\s+over\s*\("
-    r"|\b(?P<ntile>ntile)\s*\(\s*(?P<k>\d+)\s*\)\s+over\s*\(",
-    re.IGNORECASE,
-)
+#: the rewritable window functions by family: ranks, running /
+#: bounded aggregates, offsets, frame values
+_FAMILY = {
+    **dict.fromkeys(
+        ("row_number", "rank", "dense_rank", "percent_rank", "cume_dist", "ntile"), "rank"
+    ),
+    **dict.fromkeys(
+        ("sum", "count", "min", "max", "avg", "var_pop", "var_samp", "variance",
+         "stddev", "stddev_pop", "stddev_samp"),
+        "agg",
+    ),
+    **dict.fromkeys(("lag", "lead"), "off"),
+    **dict.fromkeys(("first_value", "last_value", "nth_value"), "fln"),
+}
+#: the order the families are collected in (it numbers the GROUP-mode
+#: key and argument aliases and picks each order's key text)
+_FAMILY_ORDER = {"rank": 0, "agg": 1, "glob": 1, "off": 2, "fln": 3}
 
-#: running-aggregate window calls (the default-frame family the
-#: two-phase running-agg construction covers); the lookbehind keeps
-#: `checksum(`-style identifiers from matching `sum(`
-_AGG_CALL_RE = re.compile(
-    r"(?<![\w.$])(?P<afn>sum|count|min|max|avg"
-    r"|var_pop|var_samp|variance|stddev|stddev_pop|stddev_samp)\s*\(",
-    re.IGNORECASE,
-)
-
-#: offset window calls (lag/lead)
-_OFF_CALL_RE = re.compile(
-    r"(?<![\w.$])(?P<ofn>lag|lead)\s*\(",
-    re.IGNORECASE,
-)
-
-#: frame-value window calls (round-10: first/last/nth)
-_FLN_CALL_RE = re.compile(
-    r"(?<![\w.$])(?P<ffn>first_value|last_value|nth_value)\s*\(",
-    re.IGNORECASE,
-)
+#: the clauses this pass reads; any other clause stays in the text of
+#: the one before it
+_CLAUSES = ("where", "group by", "having", "order by", "limit")
 
 #: a plain (possibly qualified) column reference
 _COL_RE = re.compile(r"\s*(?P<col>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*")
-
-#: single relation: name / qualified name / fmt.`path`, optional alias
-_REL_RE = re.compile(
-    r"^\s*(?P<rel>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*(?:\.`[^`]*`)?)"
-    r"(?:\s+(?:as\s+)?(?P<alias>[A-Za-z_]\w*))?\s*$",
-    re.IGNORECASE,
-)
-
-#: parenthesized derived table with alias
-_DERIVED_RE = re.compile(
-    r"^\s*\(.*\)\s*(?:as\s+)?(?P<alias>[A-Za-z_]\w*)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-#: top-level (depth-0) blockers inside the MAIN statement body
-_BLOCKERS_TOP = re.compile(
-    r"\b(union|intersect|except|distinct|recursive)\b", re.IGNORECASE
-)
-
-#: explicit `expr AS alias` tail (GROUP-mode non-window items)
-_AS_ALIAS_RE = re.compile(r"\s+as\s+(?P<alias>[A-Za-z_]\w*)\s*$", re.IGNORECASE)
 
 _view_counter = itertools.count()
 
@@ -179,7 +142,7 @@ def _order_keys(keys: tuple[OrderKey, ...]):
             out.append({"kind": "col", "ident": col, "src": col, "method": method})
             continue
         expr = k.expr
-        if not expr or re.search(r"\b(over|select)\b", _mask_literals(expr), re.IGNORECASE):
+        if not expr or _has_subquery_or_window(_mask_literals(expr)):
             return None
         out.append(
             {"kind": "expr", "ident": " ".join(expr.split()), "src": expr, "method": method}
@@ -225,14 +188,6 @@ def _over_order(spec: OverSpec | None, sql: str):
     return keys, (None if lo is None else -lo, hi)
 
 
-def _arg_guard(masked: str, open_pos: int, close_pos: int) -> bool:
-    """True when a call's argument text is safe to re-evaluate (no
-    nested window / subquery)."""
-    return not re.search(
-        r"\b(over|select)\b", masked[open_pos + 1 : close_pos], re.IGNORECASE
-    )
-
-
 def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None:
     """Execute ``sql`` through the two-phase global-window
     constructions when it matches the sound shape (module docstring);
@@ -240,68 +195,38 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
     stripped = _strip_comments(sql).rstrip()
     if stripped.endswith(";"):
         stripped = stripped[:-1]
-    sql = stripped
-    masked = _mask_literals(sql)
-    if not re.search(r"\bover\b", masked, re.IGNORECASE):
+    stmt = parse_statement(stripped)
+    if stmt is None:
+        # unbalanced parens: the rewrite contract is
+        # pass-through-never-error, so Spark's own parser reports it
         return None
-    has_any = (
-        _RANK_CALL_RE.search(masked)
-        or _AGG_CALL_RE.search(masked)
-        or _OFF_CALL_RE.search(masked)
-        or _FLN_CALL_RE.search(masked)
-    )
-    if not has_any:
+    sql, masked = stmt.sql, stmt.masked
+    if not any(c.fn in _FAMILY for c in stmt.calls):
         return None
 
     # --- statement shape ---------------------------------------------
-    main_start = _main_query_start(masked)
-    if main_start is None:
+    core = stmt.select
+    if core is None or core.distinct or core.from_ is None:
         return None
-    cte_src = sql[:main_start]
-    blanked = _blank_parens(masked)
-    body_blanked = blanked[main_start:]
-    if _BLOCKERS_TOP.search(body_blanked):
+    if not masked[core.body[0] : core.body[0] + 1].isspace():
         return None
-    if len(re.findall(r"\bselect\b", body_blanked, re.IGNORECASE)) != 1:
-        return None
-    sm = re.match(r"\s*select\s", body_blanked, re.IGNORECASE)
-    if sm is None:
-        return None
-    fm = re.search(r"\bfrom\b", body_blanked, re.IGNORECASE)
-    if fm is None or fm.start() < sm.end():
-        return None
-    sel_span = (main_start + sm.end(), main_start + fm.start())
-    tail_start = main_start + fm.end()
-
-    clause_pos = {}
-    for kw, pat in (
-        ("where", r"\bwhere\b"),
-        ("group", r"\bgroup\s+by\b"),
-        ("having", r"\bhaving\b"),
-        ("order", r"\border\s+by\b"),
-        ("limit", r"\blimit\b"),
-    ):
-        m = re.search(pat, blanked[tail_start:], re.IGNORECASE)
-        if m:
-            clause_pos[kw] = (tail_start + m.start(), tail_start + m.end())
-    order_kws = [k for k in ("where", "group", "having", "order", "limit")
-                 if k in clause_pos]
-    starts = [clause_pos[k][0] for k in order_kws]
-    if starts != sorted(starts):
+    cte_src = sql[: stmt.main_start]
+    sel_span = (core.body[0] + 1, core.body[1])
+    clauses = [c for c in core.clauses if c.kind in _CLAUSES]
+    kinds = [c.kind for c in clauses]
+    if kinds != sorted(kinds, key=_CLAUSES.index):
         return None  # clauses out of canonical order — malformed
-    if "having" in clause_pos and "group" not in clause_pos:
+    if "having" in kinds and "group by" not in kinds:
         return None
-    bounds = starts + [len(sql)]
-    from_body = sql[tail_start : bounds[0] if starts else len(sql)].strip()
+    ends = [c.start for c in clauses] + [len(sql)]
+    from_body = sql[core.from_[1] : ends[0]].strip()
     if not from_body:
         return None
-    clause_src = {}
-    for i, k in enumerate(order_kws):
-        clause_src[k] = sql[clause_pos[k][1] : bounds[i + 1]].strip()
+    clause_src = {c.kind: sql[c.kw_end : e].strip() for c, e in zip(clauses, ends[1:])}
     where_src = clause_src.get("where")
-    group_src = clause_src.get("group")
+    group_src = clause_src.get("group by")
     having_src = clause_src.get("having")
-    order_src = clause_src.get("order")
+    order_src = clause_src.get("order by")
     limit_src = clause_src.get("limit")
     if limit_src is not None and not re.fullmatch(r"\d+", limit_src):
         return None  # LIMIT ALL / OFFSET forms — out of scope
@@ -311,177 +236,161 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         return None
 
     # --- projection items (ANY top-level star is rejected, ADVICE r9) --
-    sel_masked = masked[sel_span[0] : sel_span[1]]
-    item_spans = [
-        (sel_span[0] + a, sel_span[0] + b) for a, b in _comma_spans(sel_masked)
-    ]
-    for a, b in item_spans:
-        if _star_item(masked[a:b]):
-            return None  # would leak the injected _adt_g* columns
+    if any(item.star for item in core.items):
+        return None  # would leak the injected _adt_g* columns
+    # (spans from the first item's text, as the outer statement reuses it)
+    items = [(max(i.span[0], sel_span[0]), i.span[1], i.alias) for i in core.items]
 
     # --- collect rewritable window calls ------------------------------
-    # every entry: dict(start, end, family, fn, keys, arg_src, j, n)
     calls = []
-    try:
-        for m in _RANK_CALL_RE.finditer(masked):
-            spec = parse_over(masked, sql, m.end() - 1)
+
+    def _collect(call, family, fn, keys, **extra):
+        calls.append(dict(
+            start=call.start, end=call.end, family=family, fn=fn, keys=keys,
+            arg_src=None, j=None, n=None, frame=None, ign=False, default_src=None,
+        ) | extra)
+
+    for call in stmt.calls:
+        fam = _FAMILY.get(call.fn)
+        # the call's ")" is followed by a blank before OVER (or before
+        # IGNORE | RESPECT NULLS); a FILTER clause stays native
+        if fam is None or call.filter or not masked[call.arg_span[1] + 1].isspace():
+            continue
+        spec = call.spec
+        arg_m = masked[call.arg_span[0] : call.arg_span[1]]
+        if fam == "rank":
+            if call.nulls:
+                continue
+            if call.fn == "ntile":
+                if not re.fullmatch(r"\s*\d+\s*", arg_m):
+                    continue
+                fn = f"ntile({int(arg_m)})"
+            elif arg_m.strip():
+                continue
+            else:
+                fn = call.fn
             parsed = _over_order(spec, sql)
             if parsed is None or parsed[1] is not None:
                 if spec is not None and spec.partition is None and spec.order is not None:
                     return None  # framed/odd-keyed ranking — whole stmt native
                 continue  # partitioned ranking — native, stays put
-            fn = (m.group("fn") or m.group("ntile")).lower()
-            if fn == "ntile":
-                fn = f"ntile({int(m.group('k'))})"
-            calls.append(
-                dict(start=m.start(), end=spec.close + 1, family="rank", fn=fn,
-                     keys=parsed[0], arg_src=None, j=None, n=None, frame=None,
-                     ign=False, default_src=None)
-            )
-        for fam, call_re, group in (
-            ("agg", _AGG_CALL_RE, "afn"),
-            ("off", _OFF_CALL_RE, "ofn"),
-            ("fln", _FLN_CALL_RE, "ffn"),
-        ):
-            for m in call_re.finditer(masked):
-                open_pos = m.end() - 1
-                arg_close = _match_paren(masked, open_pos)
-                om = re.match(
-                    r"\s+(?:(?P<nulls>ignore|respect)\s+nulls\s+)?over\s*\(",
-                    masked[arg_close + 1 :],
-                    re.IGNORECASE,
-                )
-                if om is None:
-                    continue  # plain (non-window) call — native
-                nulls_tok = (om.group("nulls") or "").lower()
-                # the arguments, split on the mask: a quoted or nested
-                # comma never splits one
-                parts = [
-                    sql[open_pos + 1 + a : open_pos + 1 + b]
-                    for a, b in _comma_spans(masked[open_pos + 1 : arg_close])
-                ]
-                over_open = arg_close + 1 + om.end() - 1
-                spec_close_g = _match_paren(masked, over_open)
-                if (
-                    fam == "agg"
-                    and not masked[over_open + 1 : spec_close_g].strip()
-                    and not nulls_tok
-                ):
-                    # empty OVER () — whole-input scalar aggregate
-                    # (round-11 second wave): one parallel aggregation
-                    # + typed literal, instead of Spark's
-                    # SinglePartition whole-input window
-                    fn = m.group(group).lower()
-                    if fn not in ("sum", "count", "min", "max", "avg"):
-                        continue  # variance OVER () — native
-                    if not _arg_guard(masked, open_pos, arg_close):
-                        return None
-                    if len(parts) != 1:
-                        continue
-                    calls.append(
-                        dict(start=m.start(), end=spec_close_g + 1,
-                             family="glob", fn=fn, keys=[],
-                             arg_src=parts[0].strip(), j=None, n=None,
-                             frame=None, ign=False, default_src=None)
-                    )
+            _collect(call, "rank", fn, parsed[0])
+            continue
+        if call.qualified:
+            continue  # t.sum(…) is no window call of this family
+        nulls_tok = call.nulls or ""
+        # the arguments, split on the mask: a quoted or nested comma
+        # never splits one
+        parts = [sql[a:b] for a, b in call.args]
+        fn = call.fn
+        if fam == "agg" and not masked[call.open + 1 : call.close].strip() and not nulls_tok:
+            # empty OVER () — whole-input scalar aggregate (round-11
+            # second wave): one parallel aggregation + typed literal,
+            # instead of Spark's SinglePartition whole-input window
+            if fn not in ("sum", "count", "min", "max", "avg"):
+                continue  # variance OVER () — native
+            if _has_subquery_or_window(arg_m):
+                return None
+            if len(parts) != 1:
+                continue
+            _collect(call, "glob", fn, [], arg_src=parts[0].strip())
+            continue
+        parsed = _over_order(spec, sql)
+        if parsed is None:
+            continue  # partitioned / exotic frame — native
+        keys, frame = parsed
+        if _has_subquery_or_window(arg_m):
+            return None  # nested window/subquery in the argument
+        j = n = None
+        ign = nulls_tok == "ignore"
+        default_src = None
+        if fam == "agg":
+            if len(parts) != 1 or ign:
+                continue  # DISTINCT / multi-arg / bad syntax
+            if frame is not None and fn not in (
+                "sum", "count", "min", "max", "avg"
+            ):
+                continue  # bounded-frame variance — native
+            if (
+                frame is not None
+                and frame[0] is not None
+                and frame[1] is not None
+                and frame[0] + frame[1] < 0
+            ):
+                continue  # lo > hi — invalid frame, Spark reports
+            arg_src = parts[0].strip()
+        elif fam == "off":
+            if frame is not None or ign:
+                # explicit frames are ignored by offsets; the
+                # IGNORE NULLS offset form stays native
+                continue
+            arg_src = parts[0].strip()
+            j = 1
+            if len(parts) >= 2:
+                jm = re.match(r"^\s*(\d+)\s*$", parts[1])
+                if jm is None:
+                    continue  # non-literal offset — native
+                j = int(jm.group(1))
+                if j < 1:
+                    continue  # lag(x, 0) is the identity — native
+            if len(parts) == 3:
+                # 3-arg default-value form (round-11)
+                default_src = parts[2].strip()
+                if not default_src:
                     continue
-                parsed = _over_order(parse_over(masked, sql, over_open), sql)
-                if parsed is None:
-                    continue  # partitioned / exotic frame — native
-                keys, frame = parsed
-                if not _arg_guard(masked, open_pos, arg_close):
-                    return None  # nested window/subquery in the argument
-                fn = m.group(group).lower()
-                j = n = None
-                ign = nulls_tok == "ignore"
-                default_src = None
-                if fam == "agg":
-                    if len(parts) != 1 or ign:
-                        continue  # DISTINCT / multi-arg / bad syntax
-                    if frame is not None and fn not in (
-                        "sum", "count", "min", "max", "avg"
-                    ):
-                        continue  # bounded-frame variance — native
-                    if (
-                        frame is not None
-                        and frame[0] is not None
-                        and frame[1] is not None
-                        and frame[0] + frame[1] < 0
-                    ):
-                        continue  # lo > hi — invalid frame, Spark reports
-                    arg_src = parts[0].strip()
-                elif fam == "off":
-                    if frame is not None or ign:
-                        # explicit frames are ignored by offsets; the
-                        # IGNORE NULLS offset form stays native
-                        continue
-                    arg_src = parts[0].strip()
-                    j = 1
-                    if len(parts) >= 2:
-                        jm = re.match(r"^\s*(\d+)\s*$", parts[1])
-                        if jm is None:
-                            continue  # non-literal offset — native
-                        j = int(jm.group(1))
-                        if j < 1:
-                            continue  # lag(x, 0) is the identity — native
-                    if len(parts) == 3:
-                        # 3-arg default-value form (round-11)
-                        default_src = parts[2].strip()
-                        if not default_src:
-                            continue
-                    elif len(parts) > 3:
-                        continue
-                else:  # fln
-                    if frame is not None:
-                        continue  # framed frame-value call — native
-                    arg_src = parts[0].strip()
-                    if fn == "nth_value":
-                        if len(parts) != 2 or ign:
-                            continue  # nth IGNORE NULLS stays native
-                        nm = re.match(r"^\s*(\d+)\s*$", parts[1])
-                        if nm is None or int(nm.group(1)) < 1:
-                            continue  # non-literal / non-positive n — native
-                        n = int(nm.group(1))
-                    elif len(parts) != 1:
-                        continue  # explicit ignoreNulls argument — native
-                calls.append(
-                    dict(start=m.start(), end=spec_close_g + 1, family=fam,
-                         fn=fn, keys=keys, arg_src=arg_src, j=j, n=n,
-                         frame=frame, ign=ign, default_src=default_src)
-                )
-    except (ValueError, NotImplementedError):
-        # unbalanced parens somewhere (_match_paren raises
-        # NotImplementedError; numeric parses raise ValueError) — the
-        # rewrite contract is pass-through-never-error, so fall back
-        # and let Spark's own parser report malformed SQL.
-        return None
+            elif len(parts) > 3:
+                continue
+        else:  # fln
+            if frame is not None:
+                continue  # framed frame-value call — native
+            arg_src = parts[0].strip()
+            if fn == "nth_value":
+                if len(parts) != 2 or ign:
+                    continue  # nth IGNORE NULLS stays native
+                nm = re.match(r"^\s*(\d+)\s*$", parts[1])
+                if nm is None or int(nm.group(1)) < 1:
+                    continue  # non-literal / non-positive n — native
+                n = int(nm.group(1))
+            elif len(parts) != 1:
+                continue  # explicit ignoreNulls argument — native
+        _collect(call, fam, fn, keys, arg_src=arg_src, j=j, n=n, frame=frame,
+                 ign=ign, default_src=default_src)
     if not calls:
         return None
+    calls.sort(key=lambda c: (_FAMILY_ORDER[c["family"]], c["start"]))
     # (round-11, r10 verdict #4: the one-shared-ranking-order
     # restriction is lifted — the execution loop below already builds
     # one pid assignment per DISTINCT order, so two rank orders in one
     # statement each ride their own partitioning)
-    # spans must not overlap (a rank call inside an agg argument would
-    # double-substitute) and must sit inside the projection
-    spans = sorted((c["start"], c["end"]) for c in calls)
-    for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-        if s2 < e1:
-            return None
     for c in calls:
         if c["start"] < sel_span[0] or c["end"] > sel_span[1]:
             return None  # window call outside the projection
+    names = {
+        c["start"]: f"_adt_gw{i}"
+        for i, c in enumerate(sorted(calls, key=lambda c: c["start"]))
+    }
+
+    def _subst_span(a: int, b: int) -> str | None:
+        """The text of [a, b) with its window calls replaced by their
+        columns; None when two calls overlap (a rank call inside an
+        agg argument would double-substitute)."""
+        return _splice(sql[a:b], [
+            (c["start"] - a, c["end"] - a, names[c["start"]])
+            for c in calls
+            if a <= c["start"] and c["end"] <= b
+        ])
 
     group_mode = group_src is not None
 
     # --- GROUP mode: validate items, plan the aggregated inner -------
     # (window keys/args may be aggregate expressions — they must be
     # computed INSIDE the aggregated block, aliased _adt_wk*/_adt_wa*)
-    inner_extra: list[str] = []
     key_alias: dict[str, str] = {}
     arg_alias: dict[str, str] = {}
     if group_mode:
         covered = set()
-        for a, b in item_spans:
+        out_items = []  # the outer statement's select list
+        for a, b, alias in items:
             inside = [c for c in calls if a <= c["start"] and c["end"] <= b]
             item_m = masked[a:b]
             if inside:
@@ -492,49 +401,39 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 # injected _adt_gw* column name would leak).  Leftover
                 # aggregate references in the remainder fail outer
                 # analysis ("not in GROUP BY") and fall back native.
-                if not _AS_ALIAS_RE.search(item_m):
+                substituted = _subst_span(a, b)
+                if alias is None or substituted is None:
                     return None
                 covered.add((a, b))
+                out_items.append(substituted)
             else:
                 src_item = sql[a:b].strip()
                 if not src_item:
                     return None
-                if _COL_RE.fullmatch(item_m) or _AS_ALIAS_RE.search(item_m):
-                    continue  # bare column / explicit AS alias — fine
-                return None  # implicit alias or bare expression
-        def _call_arg_srcs(c) -> list[str]:
-            out = []
-            if c["arg_src"] is not None and c["arg_src"] != "*":
-                out.append(c["arg_src"])
-            if c["default_src"] is not None:
-                out.append(c["default_src"])
-            return out
-
+                km = _COL_RE.fullmatch(item_m)
+                if km is None and alias is None:
+                    return None  # implicit alias or bare expression
+                # bare column / explicit AS alias — fine
+                out_items.append(km.group("col").split(".")[-1] if km else alias)
+        select_text = ", ".join(out_items)
+        # each distinct key and argument once, named in first-use order
+        key_text: dict[str, str] = {}
+        arg_text: dict[str, str] = {}
         for c in calls:
             for k in c["keys"]:
-                if k["ident"] not in key_alias:
-                    key_alias[k["ident"]] = f"_adt_wk{len(key_alias)}"
-            for s in _call_arg_srcs(c):
-                aid = " ".join(s.split())
-                if aid not in arg_alias:
-                    arg_alias[aid] = f"_adt_wa{len(arg_alias)}"
-        for k_ident, k_name in key_alias.items():
-            src = next(
-                k["src"] for c in calls for k in c["keys"]
-                if k["ident"] == k_ident
-            )
-            inner_extra.append(f"{src} AS {k_name}")
-        for a_ident, a_name in arg_alias.items():
-            src = next(
-                s for c in calls for s in _call_arg_srcs(c)
-                if " ".join(s.split()) == a_ident
-            )
-            inner_extra.append(f"{src} AS {a_name}")
+                key_text.setdefault(k["ident"], k["src"])
+            for src in (c["arg_src"], c["default_src"]):
+                if src is not None and src != "*":
+                    arg_text.setdefault(" ".join(src.split()), src)
+        key_alias = {ident: f"_adt_wk{i}" for i, ident in enumerate(key_text)}
+        arg_alias = {ident: f"_adt_wa{i}" for i, ident in enumerate(arg_text)}
+        inner_extra = [f"{key_text[i]} AS {a}" for i, a in key_alias.items()]
+        inner_extra += [f"{arg_text[i]} AS {a}" for i, a in arg_alias.items()]
 
     # --- build the inner statement ------------------------------------
     if group_mode:
         keep_items = [
-            sql[a:b].strip() for a, b in item_spans if (a, b) not in covered
+            sql[a:b].strip() for a, b, _alias in items if (a, b) not in covered
         ]
         inner_sel = ", ".join(keep_items + inner_extra)
         if not inner_sel:
@@ -546,6 +445,9 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         if having_src:
             inner += f" HAVING {having_src}"
     else:
+        select_text = _subst_span(*sel_span)
+        if select_text is None:
+            return None
         inner = f"{cte_src}SELECT * FROM {from_body}"
         if where_src:
             inner += f" WHERE {where_src}"
@@ -571,10 +473,6 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         OrderWindows,
         plan_global_windows,
     )
-
-    names = {}
-    for i, c in enumerate(sorted(calls, key=lambda c: c["start"])):
-        names[c["start"]] = f"_adt_gw{i}"
 
     def _agg_arg(c):
         return None if c["arg_src"] == "*" else _arg_col(c["arg_src"])
@@ -676,48 +574,10 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
     ranked.createOrReplaceTempView(view)
 
     # --- outer statement: substitute calls, keep the rest --------------
-    def _subst_span(a: int, b: int) -> str:
-        repl = sorted(
-            (c["start"], c["end"], names[c["start"]])
-            for c in calls
-            if a <= c["start"] and c["end"] <= b
-        )
-        parts, cur = [], a
-        for s, e, nm in repl:
-            parts.append(sql[cur:s])
-            parts.append(nm)
-            cur = e
-        parts.append(sql[cur:b])
-        return "".join(parts)
-
-    if group_mode:
-        out_items = []
-        for a, b in item_spans:
-            if (a, b) in covered:
-                out_items.append(_subst_span(a, b))
-            else:
-                item_m = masked[a:b]
-                km = _COL_RE.fullmatch(item_m)
-                if km:
-                    out_items.append(km.group("col").split(".")[-1])
-                else:
-                    out_items.append(
-                        _AS_ALIAS_RE.search(item_m).group("alias")
-                    )
-        outer = f"SELECT {', '.join(out_items)} FROM {view}"
-    else:
-        outer = (
-            f"SELECT {_subst_span(sel_span[0], sel_span[1])} FROM {view}"
-        )
-        relm = _REL_RE.match(from_body)
-        derm = _DERIVED_RE.match(from_body) if relm is None else None
-        alias = (relm and relm.group("alias")) or (
-            derm and derm.group("alias")
-        )
-        if alias and alias.lower() not in (
-            "where", "order", "limit", "group", "having",
-        ):
-            outer += f" AS {alias}"
+    outer = f"SELECT {select_text} FROM {view}"
+    source = core.source
+    if not group_mode and source.alias and source.kind in ("relation", "path", "derived"):
+        outer += f" AS {source.alias}"
     if order_src:
         outer += f" ORDER BY {order_src}"
     if limit_src:

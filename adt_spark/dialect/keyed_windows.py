@@ -61,25 +61,23 @@ levels evaluate the same RANGE semantics over the same key multiset,
 so NULL-key rows see identical frames (pinned by
 tests/test_keyed_windows.py's null+ties matrix).
 
-Accepted statement shapes (anything else returns None — a sound
-passthrough, mirroring window_frames' refusal discipline):
+Accepted statement shapes, read from the statement model
+(``statement.parse_statement``, shared with the frame rewrite and the
+global-rank pass); anything else returns None, a sound passthrough:
 
-- form A: ``SELECT <items> FROM <ident>`` — single plain-identifier
-  source, no WHERE/GROUP/ORDER/JOIN/… tail;
-- form B: form A whose source is ``rewrite_window_frames``'s
-  dense-rank wrap ``(SELECT *, dense_rank() OVER (PARTITION BY p
-  ORDER BY k NULLS LAST) AS __adt_drN FROM <ident>) <ident>`` with the
-  injected column used ONLY inside OVER clauses.  The frame rewrite
-  hands the wrap's partition, key, alias and base relation over as a
-  ``DenseRankWrap`` (``rewrite_windows`` passes it on), so this pass
-  never parses the wrap back out of the text; without one, the source
-  must be form A.
+- form A: ``SELECT <items> FROM <ident>`` — one unqualified, unaliased
+  relation and no clause after it (no WHERE/GROUP/ORDER/JOIN/…);
+- form B: form A over ``rewrite_window_frames``'s dense-rank wrap
+  (``FROM (SELECT *, dense_rank() OVER (PARTITION BY p ORDER BY k
+  NULLS LAST) AS __adt_drN FROM <ident>) <ident>``), handed over as a
+  ``DenseRankWrap`` (``rewrite_windows`` passes it on) so this pass
+  never parses the wrap back out of the text; the injected column may
+  appear only inside OVER clauses.
 
-Either form may follow a ``WITH <cte>[, <cte>…]`` prefix, and its
-source identifier may then name a CTE or a table.  The prefix is
-carried verbatim onto the compressed statement and the main query
-passes the same gates; the split is ``sqltext._main_query_start``,
-the one splitter the global-rank pass uses too.  Two prefixes refuse:
+Either form may follow a ``WITH <cte>[, <cte>…]`` prefix (the model's
+``main_start``), whose source identifier may then name a CTE.  The
+prefix is carried verbatim onto the compressed statement.  Two
+prefixes refuse:
 
 - ``WITH RECURSIVE`` — a recursive CTE is not a plain relation;
 - any ``_NONDET`` function anywhere in the prefix — the compressed
@@ -115,23 +113,9 @@ import os
 import re
 import warnings
 
-from adt_spark.dialect.overspec import parse_over
-from adt_spark.dialect.sqltext import (
-    _comma_spans,
-    _main_query_start,
-    _mask_literals,
-    _star_item,
-    _strip_comments,
-    _top_level_matches,
-)
-from adt_spark.dialect.window_frames import (
-    _FROM_RE,
-    _OVER_RE,
-    _SELECT_RE,
-    DenseRankWrap,
-    _call_before_over,
-    rewrite_window_frames,
-)
+from adt_spark.dialect.sqltext import _mask_literals, _splice
+from adt_spark.dialect.statement import _has_subquery_or_window, parse_statement
+from adt_spark.dialect.window_frames import DenseRankWrap, rewrite_window_frames
 
 _SAFE_FNS = {"sum", "count", "min", "max", "first_value", "last_value"}
 
@@ -181,22 +165,19 @@ def _warn_reassociation_once() -> None:
     )
 
 
-_IDENT_ONLY = re.compile(r"^[A-Za-z_][A-Za-z_0-9]*$")
 _IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 _CAST_KEY_RE = re.compile(
     r"^cast\s*\(\s*\(?\s*([A-Za-z_][A-Za-z_0-9]*)\s*\)?\s+as\s+"
     r"[A-Za-z_0-9(),\s]+\)$",
     re.IGNORECASE,
 )
-_RECURSIVE_RE = re.compile(r"\s*with\s+recursive\b", re.IGNORECASE)
-_ALIAS_END = re.compile(r"\bas\s+([A-Za-z_]\w*|`[^`]+`)\s*$", re.IGNORECASE)
 
 
 def _key_column(expr: str) -> str | None:
     """An order key's underlying column: the bare identifier, or the
     column inside a ``CAST((k) AS <type>)`` monotone recast; None when
     the key shape is unsupported."""
-    if _IDENT_ONLY.match(expr):
+    if _IDENT_RE.fullmatch(expr):
         return expr
     m = _CAST_KEY_RE.match(expr)
     return m.group(1) if m else None
@@ -219,33 +200,22 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
     (form B); without it the source must be a bare relation (form A)."""
     if os.environ.get("ADT_KEYED_WINDOWS", "1").lower() in ("0", "false", "off"):
         return None
-    sql = _strip_comments(sql)
-    masked = _mask_literals(sql)
-    start = _main_query_start(masked)
-    if start is None:
+    stmt = parse_statement(sql)
+    core = stmt.select if stmt is not None else None
+    if core is None or core.from_ is None or stmt.recursive:
         return None
-    prefix, sql = sql[:start], sql[start:]
-    m_prefix, masked = masked[:start], masked[start:]
-    if _RECURSIVE_RE.match(m_prefix):
-        return None
+    sql = stmt.sql
+    prefix = sql[: stmt.main_start]
     # the compressed statement reads its source twice (partials and
     # join-back): both reads must see the same rows
-    if {t.lower() for t in _IDENT_RE.findall(m_prefix)} & _NONDET:
+    if {t.lower() for t in _IDENT_RE.findall(stmt.masked[: stmt.main_start])} & _NONDET:
         return None
-
-    # --- split SELECT items / FROM source -------------------------------
-    sel_m = _SELECT_RE.match(masked, len(masked) - len(masked.lstrip()))
-    froms = _top_level_matches(masked, _FROM_RE)
-    if sel_m is None or not froms:
-        return None
-    from_m = froms[0]
-    items = sql[sel_m.end() : from_m.start()]
-    m_items = masked[sel_m.end() : from_m.start()]
 
     if wrap is None:
-        base = sql[from_m.end() :].strip()
-        if not _IDENT_ONLY.match(base):
+        src = core.source
+        if src.kind != "relation" or "." in src.name or src.alias or core.clauses:
             return None
+        base = src.name
     else:
         # the peer index is recomputed below as dense_rank over the
         # bare key ASC NULLS LAST, so the wrap must rank exactly that
@@ -254,8 +224,8 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
             key is None
             or key.desc
             or key.nulls == "first"
-            or not _IDENT_ONLY.match(key.expr)
-            or not _IDENT_ONLY.match(wrap.base)
+            or not _IDENT_RE.fullmatch(key.expr)
+            or not _IDENT_RE.fullmatch(wrap.base)
         ):
             return None
         base = wrap.base
@@ -264,14 +234,16 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
     calls = []  # (start, end, fn, args, OVER body)
     part_col = None
     key_col = None
-    for om in _OVER_RE.finditer(m_items):
-        cb = _call_before_over(m_items, items, om.start())
-        if cb is None:
+    for call in stmt.calls:
+        if not core.body[0] <= call.over < core.body[1]:
+            continue
+        if not call.plain:
             return None
-        fn_start, fn, args = cb
+        fn = call.fn
         if fn not in _SAFE_FNS:
             return None
-        spec = parse_over(m_items, items, om.end() - 1)
+        args = sql[call.arg_span[0] : call.arg_span[1]]
+        spec = call.spec
         if spec is None or spec.exclude is not None:
             return None
         # RANGE frames only; their bounds stay unread (the compressed
@@ -280,7 +252,7 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
         if spec.frame is not None and spec.frame.mode != "range":
             return None
         p_txt = spec.partition
-        if not p_txt or not _IDENT_ONLY.match(p_txt):
+        if not p_txt or not _IDENT_RE.fullmatch(p_txt):
             return None
         if part_col is None:
             part_col = p_txt
@@ -303,8 +275,7 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
 
         # --- argument gates ---
         m_args = _mask_literals(args)
-        low_args = m_args.lower()
-        if re.search(r"\b(select|over|distinct)\b", low_args):
+        if _has_subquery_or_window(m_args) or re.search(r"(?i)\bdistinct\b", m_args):
             return None
         idents = {t.lower() for t in _IDENT_RE.findall(m_args)}
         if idents & _NONDET:
@@ -321,8 +292,8 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
                 return None
         if fn == "count" and args.strip() != "*" and not args.strip():
             return None
-        body = items[om.end() : spec.close]
-        calls.append((fn_start, spec.close + 1, fn, args.strip(), body))
+        body = sql[call.open + 1 : spec.close]
+        calls.append((call.start, call.end, fn, args.strip(), body))
     if not calls:
         return None
     if part_col is None:
@@ -358,43 +329,34 @@ def compress_keyed_windows(sql: str, wrap: DenseRankWrap | None = None) -> str |
     win_sql: list[str] = []
     repls = []  # (start, end, colname)
     for fn_start, end, fn, args, body in calls:
-        call_key = re.sub(r"\s+", " ", items[fn_start:end]).lower()
+        call_key = re.sub(r"\s+", " ", sql[fn_start:end]).lower()
         col = win_cols.get(call_key)
         if col is None:
-            pcol = _partial(fn, args)
-            over = f"OVER ({body.strip()})"
-            if fn == "sum":
-                wexpr = f"sum({pcol}) {over}"
-            elif fn == "count":
-                wexpr = f"COALESCE(sum({pcol}) {over}, 0)"
-            elif fn in ("min", "first_value"):
-                wexpr = f"{'min' if fn == 'min' else 'first_value'}({pcol}) {over}"
-            elif fn == "max":
-                wexpr = f"max({pcol}) {over}"
-            else:  # last_value
-                wexpr = f"last_value({pcol}) {over}"
+            # each function over its partials (a count sums its
+            # per-key counts, never NULL)
+            outer = "sum" if fn == "count" else fn
+            wexpr = f"{outer}({_partial(fn, args)}) OVER ({body.strip()})"
+            if fn == "count":
+                wexpr = f"COALESCE({wexpr}, 0)"
             col = f"__kw_w{len(win_cols)}"
             win_cols[call_key] = col
             win_sql.append(f"{wexpr} AS {col}")
         repls.append((fn_start, end, col))
 
-    new_items = items
-    for start, end, col in sorted(repls, reverse=True):
-        new_items = new_items[:start] + col + new_items[end:]
-    m_new = _mask_literals(new_items)
-    spans = _comma_spans(m_new)
-    for a, b in spans:
-        # an unaliased item would be named after its rewritten text
-        if "__kw_w" in m_new[a:b] and not _ALIAS_END.search(m_new[a:b]):
-            return None
-    # a bare top-level * would also return the joined-back __kw_*
-    # columns: qualify it to the base table's columns
     out_items = []
-    for a, b in spans:
-        star = _star_item(m_new[a:b])
-        bare = star is not None and star.group("qualifier") is None
-        out_items.append(f" {base}.*" if bare else new_items[a:b])
-    new_items = ",".join(out_items)
+    for item in core.items:
+        a, b = item.span
+        inside = [(s - a, e - a, col) for s, e, col in repls if a <= s and e <= b]
+        # an unaliased item would be named after its rewritten text
+        if inside and item.alias is None:
+            return None
+        text = _splice(sql[a:b], inside)
+        if text is None:
+            return None
+        # a bare top-level * would also return the joined-back __kw_*
+        # columns: qualify it to the base table's columns
+        out_items.append(f" {base}.*" if item.star and item.qualifier is None else text)
+    new_items = sql[core.body[0] : core.items[0].span[0]] + ",".join(out_items)
     if wrap is not None and re.search(
         rf"\b{re.escape(wrap.alias)}\b", _mask_literals(new_items), re.IGNORECASE
     ):

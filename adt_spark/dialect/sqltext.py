@@ -12,11 +12,13 @@ characters sit inside a single-quoted literal, inside a ``--`` or
 - ``_strip_comments`` blanks comments (not ``/*+ … */`` hints) before a
   pass splices text; ``_literal_segments`` is the (chunk, is_literal)
   view the regex-operator and name rewrites walk.
-- ``_blank_parens``, ``_match_paren`` / ``_match_paren_back``,
-  ``_comma_spans`` and ``_top_level_matches`` read paren depth;
-  ``_main_query_start`` splits a ``WITH`` prefix off the main query;
-  ``_star_item`` recognizes a ``*`` / ``t.*`` select item (each pass
-  keeps its own policy for what to do with one).
+- ``_blank_parens``, ``_balanced``, ``_match_paren`` /
+  ``_match_paren_back``, ``_comma_spans`` and ``_top_level_matches``
+  read paren depth; ``_star_item`` recognizes a ``*`` / ``t.*`` select
+  item; ``_splice`` applies (start, end, replacement) edits.
+- The statement's shape (WITH prefix, SELECT items, FROM source,
+  clauses, window calls) is read by ``statement.parse_statement`` on
+  top of these helpers.
 
 A quote inside a comment opens no literal, ``--`` inside a literal is no
 comment, and ``''`` inside a literal is an escaped quote.
@@ -152,22 +154,30 @@ def _star_item(masked_item: str) -> re.Match | None:
     return _STAR_ITEM_RE.fullmatch(masked_item)
 
 
-_WITH_RE = re.compile(r"\s*with\b", re.IGNORECASE)
+def _balanced(masked: str) -> bool:
+    """Whether every paren of a literal-MASKED string is matched."""
+    depth = 0
+    for m in _PAREN_RE.finditer(masked):
+        depth += 1 if m.group() == "(" else -1
+        if depth < 0:
+            return False
+    return depth == 0
 
 
-def _main_query_start(masked: str) -> int | None:
-    """Offset of the main query in a literal-MASKED statement: 0
-    without a leading ``WITH``; after a ``WITH <cte>[, <cte>…]`` prefix,
-    the first top-level ``SELECT`` (CTE bodies and column lists are
-    blanked, so their SELECTs do not count); None when a WITH prefix
-    has no top-level SELECT after it.  ``sql[:start]`` is the prefix,
-    carried verbatim by the passes that split on it (global_rank,
-    keyed_windows)."""
-    blanked = _blank_parens(masked)
-    if not _WITH_RE.match(blanked):
-        return 0
-    ms = re.search(r"\bselect\b", blanked, re.IGNORECASE)
-    return ms.start() if ms else None
+def _splice(text: str, edits) -> str | None:
+    """``text`` with each (start, end, replacement) edit applied, or
+    None when two edits overlap (each caller decides what an overlap
+    means for it)."""
+    edits = sorted(edits)
+    for (_s1, e1, _r1), (s2, _e2, _r2) in zip(edits, edits[1:]):
+        if s2 < e1:
+            return None
+    out, last = [], 0
+    for start, end, repl in edits:
+        out += [text[last:start], repl]
+        last = end
+    out.append(text[last:])
+    return "".join(out)
 
 
 def _match_paren(s: str, open_pos: int) -> int:

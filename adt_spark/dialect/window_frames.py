@@ -181,15 +181,9 @@ import re
 import warnings
 from dataclasses import dataclass
 
-from adt_spark.dialect.overspec import Frame, OrderKey, OverSpec, parse_over
-from adt_spark.dialect.sqltext import (
-    _comma_spans,
-    _mask_literals,
-    _match_paren_back,
-    _star_item,
-    _strip_comments,
-    _top_level_matches,
-)
+from adt_spark.dialect.overspec import Frame, OrderKey, OverSpec
+from adt_spark.dialect.sqltext import _mask_literals, _splice, _strip_comments
+from adt_spark.dialect.statement import Statement, WindowCall, parse_statement
 
 #: variance-family rewrite targets: name → (is_sample, is_stddev).
 #: ``var`` is DataFusion's sample-variance spelling — the rewrite
@@ -219,11 +213,8 @@ def _warn_subtraction_once(fn: str) -> None:
     DIVISION scale and rounding — not native avg's (p+4, s+4)
     HALF_UP — so both its declared type and low-order digits can
     differ.  Emitted so a hash-gate divergence is traceable to the
-    rewrite rather than the engine.  (Callers: the EXCLUDE pass only
-    — the moving-start UNBOUNDED FOLLOWING pass switched sum/avg to
-    the type-faithful reversed complementary frame, round-7 ADVICE
-    item 1; EXCLUDE has no working-native baseline to silently
-    change, it is a new capability, so the disclosure suffices.)"""
+    rewrite rather than the engine (the EXCLUDE pass only: it has no
+    working native baseline to silently change)."""
     global _subtraction_warned
     if _subtraction_warned or fn == "count":
         return
@@ -242,8 +233,6 @@ def _warn_subtraction_once(fn: str) -> None:
         stacklevel=4,
     )
 
-
-_OVER_RE = re.compile(r"\bover\s*\(", re.IGNORECASE)
 
 #: a normalized (lowercased, whitespace-collapsed) INTERVAL DAY bound
 _DAY_BOUND_RE = re.compile(r"^interval\s+(?:'\d+'|\d+)\s+days?\s+(?:preceding|following)$")
@@ -297,11 +286,6 @@ def _pin(key: OrderKey) -> str:
 def _pin_null_order(keys: tuple[OrderKey, ...]) -> str:
     """The ORDER BY text with every key pinned (``_pin``)."""
     return ", ".join(_pin(k) for k in keys)
-
-
-def _nulls_first(key: OrderKey) -> bool:
-    """Whether the pinned ``key`` sorts NULLs first."""
-    return key.nulls == "first" or (key.nulls is None and key.desc)
 
 
 _IV_SECONDS = {"day": 86400, "hour": 3600, "minute": 60, "second": 1}
@@ -387,6 +371,100 @@ def _straddles(frame: Frame | None) -> bool:
     return _bound_sign(frame.lo) <= 0 <= _bound_sign(frame.hi)
 
 
+def _call_args(stmt: Statement, call: WindowCall) -> str:
+    """The argument text of the call before OVER."""
+    return stmt.sql[call.arg_span[0] : call.arg_span[1]].strip()
+
+
+def _survivors(exclude: str, total: str, peers: str, row: str, gate) -> str:
+    """A frame quantity (a count, Σx or Σx²) over the rows EXCLUDE
+    keeps: ``total`` over the frame minus the excluded share, ``row``
+    for the current row, ``peers`` for its peer group, and the peers
+    but the current row under TIES.  ``gate`` wraps an excluded share
+    that bites only for NULL-keyed rows (``_gx``)."""
+    if exclude == "current row":
+        return f"{total} - {gate(row)}"
+    if exclude == "group":
+        return f"{total} - {gate(peers)}"
+    return f"{total} - {peers} + {row}"
+
+
+def _null_key_case(
+    fn: str, e: str, korder: str, key: OrderKey, lo: str, hi: str,
+    wfull: str, exclude: str, split: bool, other: str,
+) -> str:
+    """min / max of ``e`` under EXCLUDE GROUP / TIES over a value-offset
+    RANGE frame: ``other`` for a non-NULL key.  A NULL key's frame
+    (measured on both engines) is its null peer group when both bounds
+    are numeric, so only the current row survives TIES and nothing
+    GROUP; an UNBOUNDED bound pointing AWAY from the null placement
+    widens it to the whole partition, whose survivors are the
+    non-NULL-key rows, which a NULL-skipping aggregate of the
+    key-nulled argument reads exactly.  first/last_value cannot
+    null-skip without changing semantics, so that case refuses.
+    ``split``: the frame straddles the current row (the value split),
+    else it lies wholly before or after it."""
+    nulls_first = key.nulls == "first" or (key.nulls is None and key.desc)
+    if (lo == "unbounded preceding" and not nulls_first) or (
+        hi == "unbounded following" and nulls_first
+    ):
+        if fn in ("first_value", "last_value"):
+            raise _Unsupported(
+                f"EXCLUDE {exclude.upper()} on {fn} over "
+                f"{'a value-offset' if split else 'a non-straddling'} "
+                "RANGE frame with an UNBOUNDED bound has no sound rewrite "
+                "for NULL-keyed rows (their frame spans the partition and "
+                "the surviving edge row is position-, not value-, defined) "
+                f"— use {'a GROUPS frame or ' if split else ''}the DataFrame "
+                "API (see q_window_exclude)"
+            )
+        arm = f"{fn}(CASE WHEN ({korder}) IS NULL THEN NULL ELSE {e} END) OVER ({wfull})"
+        if exclude == "ties":
+            arm = f"{'least' if fn == 'min' else 'greatest'}({arm}, ({e}))"
+    else:
+        arm = f"({e})" if exclude == "ties" else "NULL"
+    return f"(CASE WHEN ({korder}) IS NULL THEN {arm} ELSE {other} END)"
+
+
+def _combine_halves(fn: str, e: str, head: str, lo: str, hi: str, bounds, ties: bool) -> str:
+    """min / max / first_value / last_value of ``e`` over the frame
+    minus the current row (ROWS) or its peer group (peer or value
+    space), from the two half-frames on either side of it: ``head`` is
+    the halves' ``PARTITION BY … ORDER BY … ROWS|RANGE`` text, ``lo`` /
+    ``hi`` the frame's normalized bounds, ``bounds`` the emitted (lo,
+    step before, step after, hi).  A lo of CURRENT ROW / 0 PRECEDING
+    starts AT the current row or peer group, so its lower half is
+    empty (likewise the upper).  ``ties`` keeps the current row: it
+    always survives EXCLUDE TIES and sits between the halves."""
+    lo_emit, step_pre, step_fol, hi_emit = bounds
+    has_lower = lo not in ("current row", "0 preceding")
+    has_upper = hi not in ("current row", "0 following")
+    wl = f"{head} BETWEEN {lo_emit} AND {step_pre}"
+    wu = f"{head} BETWEEN {step_fol} AND {hi_emit}"
+    if fn in ("min", "max"):
+        # least/greatest skip NULLs, and an empty half-frame's
+        # aggregate IS NULL — the combine is exact for any orderable
+        # type, no arithmetic involved
+        pick = "least" if fn == "min" else "greatest"
+        low = f"{fn}({e}) OVER ({wl})" if has_lower else "NULL"
+        up = f"{fn}({e}) OVER ({wu})" if has_upper else "NULL"
+        return f"{pick}({low}, {up}, ({e}))" if ties else f"{pick}({low}, {up})"
+    # first/last_value: the half nearer the partition edge wins when
+    # nonempty, count-guarded so an EMPTY near half and a genuinely
+    # NULL first value are not conflated; else the far half
+    if fn == "first_value":
+        near, has_near, far, has_far = wl, has_lower, wu, has_upper
+    else:
+        near, has_near, far, has_far = wu, has_upper, wl, has_lower
+    cnt_near = f"count(*) OVER ({near})" if has_near else "0"
+    v_near = f"{fn}({e}) OVER ({near})" if has_near else "NULL"
+    if ties:
+        fallback = f"({e})"
+    else:
+        fallback = f"{fn}({e}) OVER ({far})" if has_far else "NULL"
+    return f"(CASE WHEN {cnt_near} > 0 THEN {v_near} ELSE {fallback} END)"
+
+
 def rewrite_window_frames(sql: str, wraps: list[DenseRankWrap] | None = None) -> str:
     """Rewrite moving-start ``ROWS … AND UNBOUNDED FOLLOWING``
     aggregates into O(n) complements, then GROUPS frames and EXCLUDE
@@ -423,15 +501,18 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
     low = sql.lower()
     if "groups" not in low and "exclude" not in low:
         return sql
-    masked = _mask_literals(sql)
+    stmt = parse_statement(sql)
+    if stmt is None:
+        return sql  # unbalanced: Spark's parser reports it
+    sql = stmt.sql
 
     edits: list[tuple[int, int, str]] = []  # (start, end, replacement)
     # (partition, order keys) -> alias
     dr_aliases: dict[tuple[str, tuple[OrderKey, ...]], str] = {}
 
-    for m in _OVER_RE.finditer(masked):
-        open_pos = m.end() - 1
-        spec = parse_over(masked, sql, open_pos)
+    for call in stmt.calls:
+        open_pos = call.open
+        spec = call.spec
         if spec is None:
             continue  # a named window: Spark reports what it cannot run
         frame = spec.frame
@@ -460,25 +541,15 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
             if order_text is None:
                 raise _Unsupported("GROUPS frame requires ORDER BY")
             # GROUPS offsets must be non-negative INTEGERS (SQL:2016
-            # 7.15 <window frame units>); the extended overspec bound
-            # grammar that admits INTERVAL bounds exists for RANGE
-            # frames only — refuse interval-bounded GROUPS loudly
-            # rather than silently converting invalid SQL into a
-            # RANGE frame.
+            # 7.15 <window frame units>); the bound grammar's INTERVAL
+            # and fractional offsets are RANGE-frame syntax, so they
+            # refuse loudly rather than become a RANGE frame or round
             for b in (frame.lo, frame.hi):
-                if _bound_kind(b) not in (None, "num"):
-                    raise _Unsupported(
-                        f"GROUPS frame offsets must be integers, got "
-                        f"{b!r} (INTERVAL bounds are RANGE-frame syntax)"
-                    )
-                if b[0].isdigit() and "." in b:
-                    # the round-10 overspec bound grammar admits
-                    # fractional NUMERIC offsets for RANGE frames
-                    # (DECIMAL keys); GROUPS offsets stay non-negative
-                    # integers (SQL:2016 7.15) — refuse, never
-                    # silently round
+                interval = _bound_kind(b) not in (None, "num")
+                if interval or (b[0].isdigit() and "." in b):
                     raise _Unsupported(
                         f"GROUPS frame offsets must be integers, got {b!r}"
+                        + (" (INTERVAL bounds are RANGE-frame syntax)" if interval else "")
                     )
             numeric = any(b[0].isdigit() for b in (frame.lo, frame.hi))
             if numeric:
@@ -523,27 +594,10 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
         ns_range = False  # non-straddling RANGE: key-gated, not a no-op
         if not _straddles(frame):
             # The frame cannot contain the current row (offset 0 is
-            # outside [lo, hi] in the frame's own coordinate space).
-            # EXCLUDE CURRENT ROW and EXCLUDE GROUP are pure REMOVALS
-            # in every reading of the standard, so removing rows that
-            # were never in the frame is a no-op: the base frame IS
-            # the answer, for ANY window function.  That holds
-            # unconditionally in ROW space (CURRENT ROW over ROWS
-            # frames) and in peer-group space (CURRENT ROW / GROUP
-            # over GROUPS frames — even a NULL-keyed row's peer group
-            # sits at offset 0, which the frame excludes).  RANGE
-            # frames with VALUE offsets are NOT a no-op: a NULL-keyed
-            # row's numeric-RANGE frame is its null peer group, which
-            # CONTAINS the current row and all its peers — those rows
-            # fall through to the key-nullness-gated rewrites below.
-            # Still refused: GROUP over ROWS frames (key-sharing
-            # peers can occupy any row offset inside the frame) and
-            # EXCLUDE TIES anywhere non-straddling — SQL:2011's "the
-            # current row together with the non-peer frame rows"
-            # wording ADDS the current row to a frame that never
-            # contained it (DuckDB implements that reading) while
-            # PostgreSQL's peers-only removal does not, so no single
-            # rewrite is right for both dialects.
+            # outside [lo, hi] in its own coordinate space): a no-op in
+            # row and peer-group space, key-gated over value-offset
+            # RANGE frames, refused otherwise (module docstring, the
+            # non-straddling bullet, gives the reasons).
             if exclude == "current row" and frame.mode == "rows":
                 edits.append((open_pos + 1, close_pos, base_w))
                 continue
@@ -611,17 +665,15 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
                 "peers) is not supported — use the DataFrame API"
             )
 
-        # the aggregate call directly before OVER (shared extractor;
-        # None covers named windows, FILTER clauses and IGNORE NULLS
-        # suffixes alike — all unsupported here)
-        call = _call_before_over(masked, sql, m.start())
-        if call is None:
+        # the aggregate call directly before OVER (FILTER clauses and
+        # IGNORE NULLS suffixes are unsupported here)
+        if not call.plain:
             raise _Unsupported(
                 f"EXCLUDE {exclude.upper()} requires a plain aggregate call "
                 "directly before OVER (named windows / FILTER clauses are "
                 "not supported)"
             )
-        fn_start, fn, args = call
+        fn_start, fn, args = call.start, call.fn, _call_args(stmt, call)
         if re.match(r"(?i)^\s*distinct\b", args):
             raise _Unsupported("EXCLUDE with DISTINCT aggregates is not supported")
 
@@ -673,81 +725,21 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
                         "ordered window for ROWS frames)"
                     )
                 lo, hi = frame.lo, frame.hi
-                has_lower = lo not in ("current row", "0 preceding")
-                has_upper = hi not in ("current row", "0 following")
-                wl = (
-                    part_clause + f"ORDER BY {order_text} "
-                    + f"ROWS BETWEEN {lo.upper()} AND 1 PRECEDING"
-                ).strip()
-                wu = (
-                    part_clause + f"ORDER BY {order_text} "
-                    + f"ROWS BETWEEN 1 FOLLOWING AND {hi.upper()}"
-                ).strip()
-                e = args
-                if fn in ("min", "max"):
-                    pick = "least" if fn == "min" else "greatest"
-                    low = f"{fn}({e}) OVER ({wl})" if has_lower else "NULL"
-                    up = f"{fn}({e}) OVER ({wu})" if has_upper else "NULL"
-                    repl = f"{pick}({low}, {up})"
-                else:
-                    # first/last_value: the half nearer the partition
-                    # edge wins when nonempty (count-guarded so an
-                    # empty near half is not conflated with a NULL
-                    # first value), else the far half
-                    if fn == "first_value":
-                        near, has_near, far, has_far = wl, has_lower, wu, has_upper
-                    else:
-                        near, has_near, far, has_far = wu, has_upper, wl, has_lower
-                    cnt_near = f"count(*) OVER ({near})" if has_near else "0"
-                    v_near = f"{fn}({e}) OVER ({near})" if has_near else "NULL"
-                    fallback = f"{fn}({e}) OVER ({far})" if has_far else "NULL"
-                    repl = (
-                        f"(CASE WHEN {cnt_near} > 0 THEN {v_near} "
-                        f"ELSE {fallback} END)"
-                    )
+                repl = _combine_halves(
+                    fn, args, f"{part_clause}ORDER BY {order_text} ROWS", lo, hi,
+                    (lo.upper(), "1 PRECEDING", "1 FOLLOWING", hi.upper()),
+                    ties=False,
+                )
                 edits.append((fn_start, close_pos + 1, repl))
                 continue
             if ns_range:
-                # exclude == "group" here (CURRENT ROW raised above).
-                # A non-NULL key's frame excludes its whole peer group
-                # already (offset 0 is outside it) → base frame.  A
-                # NULL key's frame depends on the bounds (measured on
-                # both engines): with both bounds numeric it is
-                # exactly the null peer group → surviving frame empty
-                # → NULL; with one UNBOUNDED bound the frame extends
-                # to the partition edge — the WHOLE partition when the
-                # unbounded side points AWAY from the null placement
-                # (the nulls sit contiguously at one end), else still
-                # just the null group.  Away case: the surviving rows
-                # are exactly the non-NULL-key rows — for min/max,
-                # NULL-skipping aggregation over the whole partition
-                # of a key-nulled argument is that set EXACTLY;
-                # first/last_value cannot null-skip without changing
-                # semantics, so they refuse.
-                lo_unb = frame.lo == "unbounded preceding"
-                hi_unb = frame.hi == "unbounded following"
-                nulls_first = _nulls_first(spec.keys[0])
-                away = (lo_unb and not nulls_first) or (hi_unb and nulls_first)
-                if (lo_unb or hi_unb) and away:
-                    if fn in ("first_value", "last_value"):
-                        raise _Unsupported(
-                            f"EXCLUDE GROUP on {fn} over a non-straddling "
-                            "RANGE frame with an UNBOUNDED bound has no "
-                            "sound rewrite for NULL-keyed rows (their "
-                            "frame spans the partition and the surviving "
-                            "edge row is position-, not value-, defined) "
-                            "— use the DataFrame API (see q_window_exclude)"
-                        )
-                    wfull = part_clause.strip()
-                    null_arm = (
-                        f"{fn}(CASE WHEN ({korder}) IS NULL THEN NULL "
-                        f"ELSE {args} END) OVER ({wfull})"
-                    )
-                else:
-                    null_arm = "NULL"
-                repl = (
-                    f"(CASE WHEN ({korder}) IS NULL THEN {null_arm} "
-                    f"ELSE {fn}({args}) OVER ({base_w}) END)"
+                # exclude == "group" here (CURRENT ROW raised above):
+                # a non-NULL key's frame already misses its peer group
+                # (offset 0 is outside it), so it keeps the base frame
+                repl = _null_key_case(
+                    fn, args, korder, spec.keys[0], frame.lo, frame.hi,
+                    part_clause.strip(), exclude, False,
+                    f"{fn}({args}) OVER ({base_w})",
                 )
                 edits.append((fn_start, close_pos + 1, repl))
                 continue
@@ -806,41 +798,19 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
                 vs_ts = bool(kinds & {"subday"})
                 vs_day = kinds == {"day"}
                 if kinds:
-                    # Straddling RANGE frame with numeric VALUE offsets:
-                    # in VALUE space, for an INTEGRAL order key, the
-                    # non-peer frame rows are exactly the two value
-                    # half-frames [lo, 1 PRECEDING] and [1 FOLLOWING,
-                    # hi] — key < k ⇔ key ≤ k−1 holds only for integral
-                    # keys, so the emitted SQL carries a runtime guard
-                    # (whole-partition max over a per-row integrality
-                    # check: fractional key, or a key where k±1 == k —
-                    # huge/NaN/infinite doubles — raise_error()s loudly
-                    # instead of silently excluding the wrong rows).
-                    # NULL-keyed rows take the same measured-behavior
-                    # arms as the non-straddling path: both bounds
-                    # numeric → the frame IS the null peer group
-                    # (surviving empty under GROUP, just the current
-                    # row under TIES); one UNBOUNDED bound pointing
-                    # away from the null placement → the frame spans
-                    # the partition (surviving = the non-NULL-key rows,
-                    # plus the current row under TIES).
-                    #
-                    # INTERVAL DAY offsets (vs_day) are the same split
-                    # in DATE space: 1 DAY is the unit step, so
-                    # key < k ⇔ key ≤ k − 1 DAY for DATE keys (and for
-                    # TIMESTAMP keys whose values are all midnight-
-                    # aligned — the runtime guard below enforces
-                    # exactly that, the date analog of integrality).
+                    # Straddling RANGE frame with VALUE offsets: the
+                    # non-peer frame rows are the two value half-frames
+                    # one key-space unit step either side of the peer
+                    # group, exact when every key is a whole number of
+                    # steps — a runtime guard below raise_error()s on
+                    # any key that is not (module docstring, the split
+                    # bullet); NULL-keyed rows take ``_null_key_case``.
                     vs_range = True
                 else:
                     key = (spec.partition or "", spec.keys)
                     dr_order = dr_aliases.setdefault(
                         key, f"{_DR}{len(dr_aliases)}"
                     )
-            # a lo of CURRENT ROW / 0 PRECEDING starts AT the peer
-            # group: the lower half-frame is empty (likewise above)
-            has_lower = lo not in ("current row", "0 preceding")
-            has_upper = hi not in ("current row", "0 following")
             half_ord = order_text if vs_range else dr_order
             lo_emit, hi_emit = lo.upper(), hi.upper()
             if vs_range and not vs_day and not vs_ts:
@@ -876,78 +846,16 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
             else:
                 step_pre = "1 PRECEDING"
                 step_fol = "1 FOLLOWING"
-            wl = (
-                part_clause + f"ORDER BY {half_ord} "
-                + f"RANGE BETWEEN {lo_emit} AND {step_pre}"
-            ).strip()
-            wu = (
-                part_clause + f"ORDER BY {half_ord} "
-                + f"RANGE BETWEEN {step_fol} AND {hi_emit}"
-            ).strip()
             e = args
-            if fn in ("min", "max"):
-                # least/greatest skip NULLs, and an empty half-frame's
-                # aggregate IS NULL — the combine is exact for any
-                # orderable type, no arithmetic involved
-                pick = "least" if fn == "min" else "greatest"
-                low = f"{fn}({e}) OVER ({wl})" if has_lower else "NULL"
-                up = f"{fn}({e}) OVER ({wu})" if has_upper else "NULL"
-                if exclude == "ties":
-                    repl = f"{pick}({low}, {up}, ({e}))"
-                else:
-                    repl = f"{pick}({low}, {up})"
-            else:
-                # first/last_value: take the half-frame nearer the
-                # partition edge, count-guarded so an EMPTY near frame
-                # and a genuinely-NULL first value are not conflated
-                if fn == "first_value":
-                    near, has_near, far, has_far = wl, has_lower, wu, has_upper
-                else:
-                    near, has_near, far, has_far = wu, has_upper, wl, has_lower
-                cnt_near = f"count(*) OVER ({near})" if has_near else "0"
-                v_near = f"{fn}({e}) OVER ({near})" if has_near else "NULL"
-                if exclude == "ties":
-                    # the current row always survives TIES and sits
-                    # between the two halves
-                    fallback = f"({e})"
-                else:
-                    fallback = f"{fn}({e}) OVER ({far})" if has_far else "NULL"
-                repl = (
-                    f"(CASE WHEN {cnt_near} > 0 THEN {v_near} "
-                    f"ELSE {fallback} END)"
-                )
+            repl = _combine_halves(
+                fn, e, f"{part_clause}ORDER BY {half_ord} RANGE", lo, hi,
+                (lo_emit, step_pre, step_fol, hi_emit), ties=exclude == "ties",
+            )
             if vs_range:
                 korder = _bare_order_key(spec)
-                lo_unb = lo == "unbounded preceding"
-                hi_unb = hi == "unbounded following"
-                nulls_first = _nulls_first(spec.keys[0])
-                away = (lo_unb and not nulls_first) or (hi_unb and nulls_first)
                 wfull = part_clause.strip()
-                if (lo_unb or hi_unb) and away:
-                    if fn in ("first_value", "last_value"):
-                        raise _Unsupported(
-                            f"EXCLUDE {exclude.upper()} on {fn} over a "
-                            "value-offset RANGE frame with an UNBOUNDED "
-                            "bound has no sound rewrite for NULL-keyed rows "
-                            "(their frame spans the partition and the "
-                            "surviving edge row is position-, not value-, "
-                            "defined) — use a GROUPS frame or the DataFrame "
-                            "API (see q_window_exclude)"
-                        )
-                    nn_agg = (
-                        f"{fn}(CASE WHEN ({korder}) IS NULL THEN NULL "
-                        f"ELSE {e} END) OVER ({wfull})"
-                    )
-                    if exclude == "ties":
-                        pick = "least" if fn == "min" else "greatest"
-                        null_arm = f"{pick}({nn_agg}, ({e}))"
-                    else:
-                        null_arm = nn_agg
-                else:
-                    null_arm = f"({e})" if exclude == "ties" else "NULL"
-                repl = (
-                    f"(CASE WHEN ({korder}) IS NULL THEN {null_arm} "
-                    f"ELSE {repl} END)"
+                repl = _null_key_case(
+                    fn, e, korder, spec.keys[0], lo, hi, wfull, exclude, True, repl,
                 )
                 if vs_ts:
                     # TIMESTAMP µs split needs NO runtime guard: 1 µs
@@ -1072,8 +980,7 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
                 "use the DataFrame API (see q_window_exclude)"
             )
         _warn_subtraction_once(fn)
-        peer_w = (part_clause + (f"ORDER BY {order_text} " if order_text else "")
-                  + "RANGE BETWEEN CURRENT ROW AND CURRENT ROW").strip()
+        peer_w = f"{part_clause}{order_clause}RANGE BETWEEN CURRENT ROW AND CURRENT ROW"
 
         if fn in _VAR_FNS:
             # Two-pass moment algebra over the SURVIVING rows: with
@@ -1100,19 +1007,11 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
             swp = f"sum({ed}) OVER ({peer_w})"
             sq = f"sum({ed} * {ed}) OVER ({base_w})"
             sqp = f"sum({ed} * {ed}) OVER ({peer_w})"
-            sq_row = f"COALESCE({ed} * {ed}, 0)"
-            if exclude == "current row":
-                n_excl = f"{cw} - {_gx(nn)}"
-                s_excl = f"{sw} - {_gx(f'COALESCE({ed}, 0)')}"
-                s2_excl = f"{sq} - {_gx(sq_row)}"
-            elif exclude == "group":
-                n_excl = f"{cw} - {_gx(cwp)}"
-                s_excl = f"{sw} - {_gx(f'COALESCE({swp}, 0)')}"
-                s2_excl = f"{sq} - {_gx(f'COALESCE({sqp}, 0)')}"
-            else:  # ties
-                n_excl = f"{cw} - {cwp} + {nn}"
-                s_excl = f"{sw} - COALESCE({swp}, 0) + COALESCE({ed}, 0)"
-                s2_excl = f"{sq} - COALESCE({sqp}, 0) + {sq_row}"
+            n_excl = _survivors(exclude, cw, cwp, nn, _gx)
+            s_excl = _survivors(exclude, sw, f"COALESCE({swp}, 0)", f"COALESCE({ed}, 0)", _gx)
+            s2_excl = _survivors(
+                exclude, sq, f"COALESCE({sqp}, 0)", f"COALESCE({ed} * {ed}, 0)", _gx
+            )
             ssq = (
                 f"greatest(({s2_excl}) - (({s_excl}) * ({s_excl}))"
                 f" / ({n_excl}), 0)"
@@ -1135,27 +1034,15 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
         cw = f"count({cnt_arg}) OVER ({base_w})"
         cwp = f"count({cnt_arg}) OVER ({peer_w})"
         nn = "1" if star else f"(CASE WHEN ({e}) IS NULL THEN 0 ELSE 1 END)"
+        n_excl = _survivors(exclude, cw, cwp, nn, _gx)
         if fn == "count":
-            if exclude == "current row":
-                repl = f"({cw} - {_gx(nn)})"
-            elif exclude == "group":
-                repl = f"({cw} - {_gx(cwp)})"
-            else:  # ties
-                repl = f"({cw} - {cwp} + {nn})"
+            repl = f"({n_excl})"
         else:
             if star:
                 raise _Unsupported(f"{fn}(*) is not valid SQL")
             sw = f"sum({e}) OVER ({base_w})"
             swp = f"sum({e}) OVER ({peer_w})"
-            if exclude == "current row":
-                n_excl = f"{cw} - {_gx(nn)}"
-                s_excl = f"{sw} - {_gx(f'COALESCE({e}, 0)')}"
-            elif exclude == "group":
-                n_excl = f"{cw} - {_gx(cwp)}"
-                s_excl = f"{sw} - {_gx(f'COALESCE({swp}, 0)')}"
-            else:  # ties
-                n_excl = f"{cw} - {cwp} + {nn}"
-                s_excl = f"{sw} - COALESCE({swp}, 0) + COALESCE({e}, 0)"
+            s_excl = _survivors(exclude, sw, f"COALESCE({swp}, 0)", f"COALESCE({e}, 0)", _gx)
             if fn == "sum":
                 repl = f"(CASE WHEN {n_excl} = 0 THEN NULL ELSE {s_excl} END)"
             else:  # avg
@@ -1168,14 +1055,9 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
     if not edits:
         return sql
 
-    # non-overlap sanity (nested OVER inside a window spec would overlap)
-    edits.sort()
-    for (s1, e1, _), (s2, _e2, _) in zip(edits, edits[1:]):
-        if s2 < e1:
-            raise _Unsupported("overlapping window rewrites (nested OVER?)")
-    out = sql
-    for s, e, repl in reversed(edits):
-        out = out[:s] + repl + out[e:]
+    out = _splice(sql, edits)
+    if out is None:  # a nested OVER inside a window spec
+        raise _Unsupported("overlapping window rewrites (nested OVER?)")
 
     if dr_aliases:
         out, wrap = _wrap_with_dense_rank(out, dr_aliases)
@@ -1184,13 +1066,10 @@ def _rewrite_groups_exclude(sql: str, wraps: list[DenseRankWrap] | None) -> str:
     return out
 
 
-_SELECT_RE = re.compile(r"\bselect\b", re.IGNORECASE)
-_FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
-_FORBID_RE = re.compile(
-    r"\b(group\s+by|having|qualify|union|intersect|except|window|distinct)\b",
-    re.IGNORECASE,
-)
-_TRAILER_RE = re.compile(r"\b(order\s+by|limit|offset)\b", re.IGNORECASE)
+#: clauses the dense-rank wrap cannot carry into its subquery, and
+#: the ones that stay outside it
+_FORBIDDEN = ("group by", "having", "qualify", "window")
+_TRAILERS = ("order by", "limit", "offset")
 
 
 @dataclass(frozen=True)
@@ -1217,47 +1096,43 @@ def _wrap_with_dense_rank(
     [ORDER BY/LIMIT …]`` — anything else raises.  Returns the wrapped
     statement and, when it wraps one index over a bare relation and
     nothing follows, the wrap's parts."""
-    masked = _mask_literals(sql)
-    selects = _top_level_matches(masked, _SELECT_RE)
-    if not selects:
+    stmt = parse_statement(sql)
+    if not stmt.cores:
         raise _Unsupported("GROUPS frame: no top-level SELECT to wrap")
-    sel = selects[-1].start()
+    core = stmt.cores[-1]
+    sel = core.start
     if any(sql.find(a, 0, sel) != -1 for a in dr_aliases.values()):
         raise _Unsupported(
             "numeric GROUPS frame inside a CTE/subquery is not supported — "
             "hoist it to the outer SELECT or use the DataFrame API "
             "(see q_window_groups_frame)"
         )
-    froms = [
-        m.start() for m in _top_level_matches(masked, _FROM_RE) if m.start() > sel
-    ]
-    if not froms:
+    if core.from_ is None:
         raise _Unsupported("GROUPS frame: SELECT without FROM")
-    frm = froms[0]
-    select_list = sql[sel + len("select"): frm]
-    if _FORBID_RE.match(select_list.lstrip()):
+    frm = core.from_[0]
+    select_list = sql[core.body[0] : frm]
+    if core.distinct:
         raise _Unsupported("GROUPS frame with SELECT DISTINCT is not supported")
     # reject bare `*` / `t.*` ITEMS (they would leak the injected rank
     # column into the output); `count(*)` inside an expression is fine
-    lm = _mask_literals(select_list)
-    if any(_star_item(lm[a:b]) for a, b in _comma_spans(lm)):
+    if any(item.star for item in core.items):
         raise _Unsupported(
             "GROUPS frame with SELECT * is not supported (the "
             "injected rank column would change the output schema) "
             "— list columns explicitly"
         )
-    tail = sql[frm:]
-    tail_masked = masked[frm:]
-    bad = _top_level_matches(tail_masked, _FORBID_RE)
+    bad = [(c.start, c.kw_end) for c in core.clauses if c.kind in _FORBIDDEN] + [
+        op for op in stmt.set_ops if op[0] > sel
+    ]
     if bad:
-        kw = bad[0].group(0)
+        a, b = min(bad)
+        kw = sql[a:b]
         raise _Unsupported(
             f"numeric GROUPS frame with {kw.upper()} in the same SELECT is "
             "not supported — use the DataFrame API (see q_window_groups_frame)"
         )
-    trailers = _top_level_matches(tail_masked, _TRAILER_RE)
-    cut = trailers[0].start() if trailers else len(tail)
-    core, trailer = tail[:cut], tail[cut:]
+    cut = min([c.start for c in core.clauses if c.kind in _TRAILERS], default=len(sql))
+    core_text, trailer = sql[frm:cut], sql[cut:]
     # The wrap hides the FROM relations inside a subquery, so
     # qualified references (t.col) in the outer select list / trailer
     # would stop resolving.  When the core is a single plain relation
@@ -1267,21 +1142,16 @@ def _wrap_with_dense_rank(
     # AnalysisException at execution is not an acceptable failure).
     wrapper = "__adt_w"
     wrap = None
-    m1 = re.match(
-        r"(?is)^\s*from\s+([A-Za-z_][\w.]*)"
-        r"(?:\s+(?:as\s+)?([A-Za-z_]\w*))?\s*(where\b.*)?$",
-        core.strip(),
-    )
-    if m1 and (m1.group(2) or "").lower() not in ("where",):
-        rel, alias = m1.group(1), m1.group(2)
-        wrapper = alias or rel.rsplit(".", 1)[-1]
+    src = core.source
+    if src.kind == "relation":
+        wrapper = src.alias or src.name.rsplit(".", 1)[-1]
         # the wrap is the whole main query's source: one SELECT, one
         # index, a bare relation and nothing after it
-        if len(selects) == 1 and len(dr_aliases) == 1 and not (
-            alias or m1.group(3) or trailer.strip()
+        if len(stmt.cores) == 1 and len(dr_aliases) == 1 and not (
+            src.alias or core.clauses
         ):
             (p, keys), a = next(iter(dr_aliases.items()))
-            wrap = DenseRankWrap(p, keys, a, rel)
+            wrap = DenseRankWrap(p, keys, a, src.name)
     else:
         # identifier.identifier only — a numeric literal like 0.5 is
         # not a qualification (nor is 1.e2); struct-field access is
@@ -1304,7 +1174,7 @@ def _wrap_with_dense_rank(
     )
     wrapped = (
         f"{sql[:sel]}SELECT {select_list.strip()} FROM "
-        f"(SELECT *, {defs} {core.strip()}) {wrapper} {trailer.strip()}"
+        f"(SELECT *, {defs} {core_text.strip()}) {wrapper} {trailer.strip()}"
     ).strip()
     return wrapped, wrap
 
@@ -1346,32 +1216,6 @@ def _reverse_order(keys: tuple[OrderKey, ...]) -> str:
         rdir = "ASC" if k.desc else "DESC"
         out.append(f"{k.expr} {rdir} NULLS {'LAST' if nulls_first else 'FIRST'}")
     return ", ".join(out)
-
-
-def _call_before_over(masked: str, sql: str, over_start: int):
-    """(fn_start, fn, args) of the simple call directly before OVER,
-    or None (named window, FILTER clause, IGNORE NULLS suffix, …) —
-    the non-raising twin of the EXCLUDE section's inline extraction,
-    because for THIS pass an unrecognized shape is a sound
-    passthrough, not an error."""
-    k = over_start - 1
-    while k >= 0 and masked[k].isspace():
-        k -= 1
-    if k < 0 or masked[k] != ")":
-        return None
-    args_close = k
-    args_open = _match_paren_back(masked, args_close)
-    j = args_open - 1
-    while j >= 0 and masked[j].isspace():
-        j -= 1
-    fn_end = j + 1
-    while j >= 0 and (masked[j].isalnum() or masked[j] == "_"):
-        j -= 1
-    fn_start = j + 1
-    fn = sql[fn_start:fn_end].lower()
-    if not fn or fn == "filter":
-        return None
-    return fn_start, fn, sql[args_open + 1 : args_close].strip()
 
 
 def _rewrite_moving_start_ubf(sql: str) -> str:
@@ -1434,15 +1278,17 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
     """
     if not _UBF_RE.search(sql):
         return sql
-    masked = _mask_literals(sql)
+    stmt = parse_statement(sql)
+    if stmt is None:
+        return sql  # unbalanced: Spark's parser reports it
+    masked = stmt.masked
     if not _UBF_RE.search(masked):
         return sql
 
     edits: list[tuple[int, int, str]] = []
-    for m in _OVER_RE.finditer(masked):
-        open_pos = m.end() - 1
-        spec = parse_over(masked, sql, open_pos)
-        if spec is None or not _UBF_RE.search(masked, open_pos, spec.close):
+    for call in stmt.calls:
+        spec = call.spec
+        if spec is None or not _UBF_RE.search(masked, call.open, spec.close):
             continue
         frame = spec.frame
         # signed row offsets: None for an UNBOUNDED side, and None
@@ -1462,10 +1308,9 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
         ):
             continue
         close_pos = spec.close
-        call = _call_before_over(masked, sql, m.start())
-        if call is None:
+        if not call.plain:
             continue
-        fn_start, fn, args = call
+        fn_start, fn, args = call.start, call.fn, _call_args(stmt, call)
         if fn not in _UBF_FNS and fn not in _VAR_FNS:
             continue
         if re.match(r"(?i)^\s*distinct\b", args) or re.search(
@@ -1477,31 +1322,22 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
         # last_value(x, true) most importantly: its NULL semantics
         # have no complement/reversal image here, so pass through
         # (every rewritable aggregate in _UBF_FNS is single-argument)
-        if len(_comma_spans(_mask_literals(args))) > 1:
+        if len(call.args) > 1:
             continue
         if args == "*" and fn != "count":
             continue
 
         delta = offsets[0]
 
-        part_clause = (
-            f"PARTITION BY {spec.partition} " if spec.partition else ""
-        )
-        order_text = spec.order
-        w_unb = (
-            part_clause + f"ORDER BY {order_text} "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
-        ).strip()
-        w_pre = (
-            part_clause + f"ORDER BY {order_text} "
-            f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(delta - 1)}"
-        ).strip()
+        part_clause = f"PARTITION BY {spec.partition} " if spec.partition else ""
+        w_off = f"{part_clause}ORDER BY {spec.order}"
+        prefix = "ROWS BETWEEN UNBOUNDED PRECEDING AND"
+        w_unb = f"{w_off} {prefix} UNBOUNDED FOLLOWING"
+        w_pre = f"{w_off} {prefix} {_row_bound(delta - 1)}"
         # the same frame over the REVERSED order visits exactly the
         # suffix rows (see the mapping docstring)
-        w_rev = (
-            part_clause + f"ORDER BY {_reverse_order(spec.keys)} "
-            f"ROWS BETWEEN UNBOUNDED PRECEDING AND {_row_bound(-delta)}"
-        ).strip()
+        rev = _reverse_order(spec.keys)
+        w_rev = f"{part_clause}ORDER BY {rev} {prefix} {_row_bound(-delta)}"
         e = args
         if fn == "count":
             repl = f"(count({e}) OVER ({w_unb}) - count({e}) OVER ({w_pre}))"
@@ -1509,7 +1345,6 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
             if delta == 0:
                 repl = f"({e})"
             elif delta > 0:
-                w_off = (part_clause + f"ORDER BY {order_text}").strip()
                 repl = f"lead({e}, {delta}) OVER ({w_off})"
             else:
                 repl = f"last_value({e}) OVER ({w_rev})"
@@ -1521,39 +1356,19 @@ def _rewrite_moving_start_ubf(sql: str) -> str:
             )
         else:
             # min / max, sum / avg and the variance family: the native
-            # aggregate over the reversed complementary frame.
-            # sum / avg: unlike the subtraction complement this keeps
-            # Spark's own result type and rounding — a textual rewrite
-            # cannot see column types, and this pass REPLACES a
-            # working native evaluation, so a silent DECIMAL
-            # scale/precision change (sum widens, avg re-derives at
-            # division scale) is never an acceptable trade for O(n);
-            # the reversed frame is O(n) AND type-faithful for every
-            # argument type.
-            # Variance is SET-determined, so it rides the same frame —
-            # Spark's own numerically stable CentralMomentAgg (Welford)
-            # over exactly the suffix set, evaluated incrementally
-            # (moving END, O(n)).  The moment-algebra complement
+            # aggregate over the reversed complementary frame, which
+            # keeps Spark's own result type and rounding (a textual
+            # rewrite cannot see column types) and its numerically
+            # stable moment evaluation.  The moment-algebra complement
             # (n/Σx/Σx² as total − prefix, the EXCLUDE pass's recipe)
-            # was tried first and MEASURED catastrophically wrong
-            # here: on BIGINT values ~1e8 with true variance ~0.7 it
-            # returned exactly 0.0 for every row (Σx² − (Σx)²/n
-            # cancels in doubles and the 0-clamp launders the
-            # garbage), and a silent 100%-wrong answer is never an
-            # acceptable trade for O(n).  ``var`` is DataFusion's
-            # sample-variance spelling; Spark lacks the name, so it
-            # maps to var_samp.
+            # was MEASURED catastrophically wrong here: on BIGINT
+            # values ~1e8 with true variance ~0.7 it returned 0.0 for
+            # every row.  ``var`` is DataFusion's sample-variance
+            # spelling; Spark lacks the name, so it maps to var_samp.
             spark_fn = "var_samp" if fn == "var" else fn
             repl = f"{spark_fn}({e}) OVER ({w_rev})"
         edits.append((fn_start, close_pos + 1, repl))
 
-    if not edits:
-        return sql
-    edits.sort()
-    for (_s1, e1, _), (s2, _e2, _) in zip(edits, edits[1:]):
-        if s2 < e1:  # nested OVER — original is slow but sound
-            return sql
-    out = sql
-    for s, e, repl in reversed(edits):
-        out = out[:s] + repl + out[e:]
-    return out
+    out = _splice(stmt.sql, edits)
+    # overlapping edits: a nested OVER — the original is slow but sound
+    return sql if out is None else out

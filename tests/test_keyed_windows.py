@@ -293,7 +293,8 @@ def test_keyed_cte_refusals(label):
 def test_with_prefix_split_masks_literals():
     """The shared splitter finds the main query's SELECT, not the one
     inside a CTE-body literal."""
-    from adt_spark.dialect.sqltext import _main_query_start, _mask_literals
+    from adt_spark.dialect.sqltext import _mask_literals
+    from adt_spark.dialect.statement import _main_query_start
 
     start = _main_query_start(_mask_literals(_LITERAL_DECOY))
     assert _LITERAL_DECOY[start:].startswith("SELECT rid, sum(v)")

@@ -12,6 +12,13 @@ a window's ``OVER (…)`` body: three passes once kept their own regex
 grammars for it.  The second guard fails on a regex literal outside
 ``overspec.py`` that spells a frame mode (``rows|range|groups``) or an
 order key's ``NULLS FIRST | LAST`` suffix.
+
+And ``adt_spark/dialect/statement.py`` is the one module that splits a
+statement into its SELECTs, select list, FROM source and clauses: the
+three window passes once kept a splitter each.  The third guard fails on
+a regex literal outside ``statement.py`` that spells a statement-clause
+keyword (``select``, ``from``, ``group by``, ``order by``, ``having``,
+``limit``).
 """
 
 from __future__ import annotations
@@ -193,3 +200,122 @@ def test_overspec_is_the_only_over_spec_grammar():
         found += [f"adt_spark/{rel}:{line}" for line in _spec_grammar_literals(tree)]
     assert not found, found
     assert _spec_grammar_literals(ast.parse((_PKG / "dialect/overspec.py").read_text()))
+
+
+#: what only the statement grammar spells: a clause keyword as a word
+#: (a ``\b`` escape right before it counts as a word boundary)
+_CLAUSE_GRAMMAR = (
+    re.compile(r"(?i)(?:(?<=\\b)|(?<![a-z_]))(?:select|from|having|limit)(?![a-z_])"),
+    re.compile(r"(?i)(?:(?<=\\b)|(?<![a-z_]))(?:group|order)\\s[+*]?by(?![a-z_])"),
+)
+
+#: modules allowed to spell clause keywords in a regex, with the reason
+_CLAUSE_ALLOWED = {
+    "dialect/overspec.py": "an OVER body's own PARTITION BY / ORDER BY",
+    "sources/delta_dml.py": (
+        "the DELETE FROM grammar, and the Delta URL pruning's WHERE scan "
+        "(not yet on the statement model)"
+    ),
+}
+
+
+def _clause_grammar_literals(tree: ast.AST) -> list[int]:
+    """Lines of regex literals that spell a statement-clause keyword."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and _REGEX_ESCAPE.search(node.value)
+        and any(p.search(node.value) for p in _CLAUSE_GRAMMAR)
+    ]
+
+
+#: the statement splitters the three window passes kept before they
+#: shared one model
+_FORMER_SPLITTERS = {
+    "window_frames._SELECT_RE": '_SELECT_RE = re.compile(r"\\bselect\\b", re.IGNORECASE)',
+    "window_frames._FROM_RE": '_FROM_RE = re.compile(r"\\bfrom\\b", re.IGNORECASE)',
+    "window_frames._FORBID_RE": (
+        "_FORBID_RE = re.compile(\n"
+        '    r"\\b(group\\s+by|having|qualify|union|intersect|except|window|distinct)\\b",\n'
+        "    re.IGNORECASE,\n)"
+    ),
+    "window_frames._TRAILER_RE": (
+        '_TRAILER_RE = re.compile(r"\\b(order\\s+by|limit|offset)\\b", re.IGNORECASE)'
+    ),
+    "global_rank clause loop": (
+        'for kw, pat in (("group", r"\\bgroup\\s+by\\b"), ("limit", r"\\blimit\\b")):\n'
+        "    pass"
+    ),
+    "global_rank select split": 'sm = re.match(r"\\s*select\\s", body, re.IGNORECASE)',
+}
+
+
+def test_guard_sees_former_statement_splitters():
+    """The guard flags each statement splitter the passes used to keep,
+    and not a regex that merely holds a word containing a keyword or an
+    unrelated SQL word."""
+    for label, src in _FORMER_SPLITTERS.items():
+        assert _clause_grammar_literals(ast.parse(src)), label
+    not_clause = (
+        're.compile(r"\\bover\\s*\\(", re.IGNORECASE)\n'
+        're.compile(r"\\s*distinct\\b")\n'
+        're.compile(r"ZORDER\\s+BY\\s*\\(")\n'
+        're.compile(r"\\bselected_\\w+")\n'
+        '"select the rows from a table"\n'
+    )
+    assert _clause_grammar_literals(ast.parse(not_clause)) == []
+
+
+def test_statement_is_the_only_statement_splitter():
+    """No module in ``adt_spark/`` but ``dialect/statement.py`` (and the
+    listed exceptions) has a regex literal spelling a statement-clause
+    keyword; such code reads ``statement.parse_statement``'s model."""
+    found = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "dialect/statement.py" or rel in _CLAUSE_ALLOWED:
+            continue
+        tree = ast.parse(path.read_text(), filename=rel)
+        found += [f"adt_spark/{rel}:{line}" for line in _clause_grammar_literals(tree)]
+    assert not found, found
+    assert _clause_grammar_literals(ast.parse((_PKG / "dialect/statement.py").read_text()))
+
+
+#: the splitter and call-extractor names the model replaced
+_FORMER_NAMES = {
+    "_call_before_over", "_SELECT_RE", "_FROM_RE", "_FORBID_RE", "_TRAILER_RE",
+    "_IDENT_ONLY", "_REL_RE", "_DERIVED_RE", "_RANK_CALL_RE", "_AGG_CALL_RE",
+    "_OFF_CALL_RE", "_FLN_CALL_RE",
+}
+_WINDOW_PASSES = ("dialect/window_frames.py", "dialect/keyed_windows.py", "dialect/global_rank.py")
+
+
+def _names(tree: ast.AST) -> set[str]:
+    """Every identifier a module binds, reads or imports."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            out.add(node.name)
+        elif isinstance(node, ast.alias):
+            out.add(node.asname or node.name)
+    return out
+
+
+def test_former_splitter_names_are_gone():
+    """The replaced splitters stay gone: none of their names outside
+    ``statement.py``, and no window pass matches parens itself."""
+    found = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "dialect/statement.py":
+            continue
+        names = _names(ast.parse(path.read_text(), filename=rel))
+        banned = set(_FORMER_NAMES)
+        if rel in _WINDOW_PASSES:
+            banned |= {"_match_paren", "_match_paren_back"}
+        found += [f"adt_spark/{rel}: {n}" for n in sorted(names & banned)]
+    assert not found, found
