@@ -168,6 +168,12 @@ class Statement:
     calls: tuple[WindowCall, ...]
 
     @property
+    def nested_select(self) -> bool:
+        """Whether a SELECT sits inside parentheses: a subquery, a
+        derived table or a CTE body."""
+        return len(_SELECT_RE.findall(self.masked)) > len(self.cores)
+
+    @property
     def select(self) -> SelectCore | None:
         """The main query's core when the main query is one SELECT (no
         set operator, nothing before it but the WITH prefix)."""

@@ -33,6 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from adt_spark.context import local_frame
+from adt_spark.dialect.statement import parse_statement
 from adt_spark.dialect.sqltext import _comma_spans, _mask_literals, _top_level_matches
 
 _DELETE = re.compile(
@@ -202,18 +203,9 @@ def rewrite_delta_url_tables(spark: SparkSession, sql: str) -> str:
     sql = _TABLE_CHANGES.sub(sub_tvf, sql)
 
     # Pruning requires the WHERE to provably scope to the delta scan's
-    # RAW columns: exactly one delta URL table AND a single-SELECT
-    # statement (a subquery/CTE could alias or derive a column of the
-    # same name — e.g. SELECT * FROM (SELECT id+1 AS id FROM …) WHERE
-    # id = 5 — and pruning on the raw column would drop matching
-    # files).  In a single SELECT, Spark's WHERE always resolves
-    # against the base relation, never select-list aliases.
-    single_select = len(re.findall(r"\bselect\b", sql, re.IGNORECASE)) == 1
-    skip = (
-        _conjunctive_terms(sql)
-        if single_select and len(_DELTA_URL.findall(sql)) == 1
-        else None
-    )
+    # RAW columns: exactly one delta URL table in a statement that is
+    # one SELECT (see _conjunctive_terms).
+    skip = _conjunctive_terms(sql) if len(_DELTA_URL.findall(sql)) == 1 else None
 
     def sub(m: re.Match[str]) -> str:
         path = m.group("path")
@@ -236,17 +228,24 @@ _TERM_RE = re.compile(_TERM)
 
 
 def _conjunctive_terms(sql: str) -> list[tuple[str, str, object]] | None:
-    """Extract (col, op, value) skip terms from a WHERE clause that is
-    PROVABLY a pure conjunction of simple comparisons; None otherwise."""
-    m = re.search(r"\bWHERE\b(?P<rest>.*)$", sql, re.IGNORECASE | re.DOTALL)
-    if not m:
+    """Extract (col, op, value) skip terms from the WHERE clause of a
+    statement that is ONE top-level SELECT — no set operator, no WITH,
+    no subquery (a subquery or CTE could alias or derive a column of
+    the same name — e.g. SELECT * FROM (SELECT id+1 AS id FROM …) WHERE
+    id = 5 — and pruning on the raw column would drop matching files;
+    in a single SELECT, Spark's WHERE always resolves against the base
+    relation, never select-list aliases) — when that clause is
+    PROVABLY a pure conjunction of simple comparisons; None otherwise.
+    The clause span comes from the statement model, so keywords inside
+    literals and comments neither end the clause nor count as SELECTs."""
+    st = parse_statement(sql)
+    core = st.select if st is not None and st.main_start == 0 else None
+    if core is None or st.nested_select:
         return None
-    clause = re.split(
-        r"\b(?:GROUP\s+BY|ORDER\s+BY|LIMIT|HAVING|WINDOW|UNION|INTERSECT|EXCEPT)\b",
-        m.group("rest"),
-        maxsplit=1,
-        flags=re.IGNORECASE,
-    )[0].strip().rstrip(";").strip()
+    where = next((c for c in core.clauses if c.kind == "where"), None)
+    if where is None:
+        return None
+    clause = st.sql[where.kw_end : where.end].strip().rstrip(";").strip()
     if not clause:
         return None
     parts = re.split(r"\s+AND\s+", clause, flags=re.IGNORECASE)

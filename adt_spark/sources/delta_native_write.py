@@ -43,6 +43,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import tempfile
 import time
 import uuid
 
@@ -532,6 +534,81 @@ def _atomic_write(path: str, lines: list[dict], spark=None) -> None:
         os.remove(tmp)
 
 
+def _commit(
+    spark, location: str, version: int, ts: int, operation: str, params: dict,
+    actions: list[dict],
+) -> int:
+    """THE commit builder: prepend the ``commitInfo`` to ``actions``
+    and publish ``_delta_log/<version>.json`` atomically; returns
+    ``version``."""
+    info = {
+        "commitInfo": {
+            "timestamp": ts,
+            "operation": operation,
+            "operationParameters": params,
+            "engineInfo": "adt-spark native delta writer",
+        }
+    }
+    _atomic_write(_log_path(location, version), [info, *actions], spark)
+    return version
+
+
+def _add(
+    path: str, pvals: dict, size: int, ts: int, data_change: bool = True,
+    stats: str | None = None, dv: dict | None = None,
+) -> dict:
+    """An ``add`` action (``stats`` and the deletion vector when given)."""
+    add = {
+        "path": path,
+        "partitionValues": pvals,
+        "size": size,
+        "modificationTime": ts,
+        "dataChange": data_change,
+    }
+    if stats:
+        add["stats"] = stats
+    if dv is not None:
+        add["deletionVector"] = dv
+    return {"add": add}
+
+
+def _remove(rel: str, pvals: dict, ts: int, data_change: bool = True) -> dict:
+    """A ``remove`` action (the tombstone VACUUM later reclaims)."""
+    return {
+        "remove": {
+            "path": rel,
+            "deletionTimestamp": ts,
+            "dataChange": data_change,
+            "partitionValues": pvals,
+        }
+    }
+
+
+def _metadata(
+    schema: T.StructType, partition_columns: list[str], configuration: dict,
+    ts: int, table_id: str | None = None,
+) -> dict:
+    """A ``metaData`` action; a new table id unless ``table_id``."""
+    return {
+        "metaData": {
+            "id": table_id or str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema.json(),
+            "partitionColumns": partition_columns,
+            "configuration": configuration,
+            "createdTime": ts,
+        }
+    }
+
+
+def _dv_enabled(configuration: dict | None) -> bool:
+    """Whether a table configuration turns deletion vectors on."""
+    return (
+        str((configuration or {}).get("delta.enableDeletionVectors", "false")).lower()
+        == "true"
+    )
+
+
 #: characters Hive/Spark escape in partition directory names
 #: (ExternalCatalogUtils.escapePathName char set + control chars)
 _HIVE_ESCAPE_CHARS = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {chr(0x7F)}
@@ -560,60 +637,21 @@ def _rel_dirname(pvals: dict, order: list[str] | None = None) -> str:
     )
 
 
-def _pvals_from_segments(
-    segs: list[str], partition_by: list[str], name: str
-) -> dict[str, str]:
+def _pvals_from_segments(segs: list[str]) -> dict[str, str | None]:
     """``col=value`` directory segments → RAW partitionValues.
 
     Spark's partitioned write hive-escapes special characters in the
     directory names (``p=x%25y`` for value ``x%y``); the log's
-    ``partitionValues`` must carry the unescaped value.
+    ``partitionValues`` must carry the unescaped value.  Segments
+    without ``=`` name no partition and are skipped.
     """
-    pvals: dict[str, str] = {}
+    pvals: dict[str, str | None] = {}
     for seg in segs:
-        k, _, v = seg.partition("=")
-        # hive-encoded nulls arrive as __HIVE_DEFAULT_PARTITION__
-        pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else _hive_unescape(v)
-    missing = [c for c in partition_by if c not in pvals]
-    if missing:
-        raise DeltaWriteError(f"staged file {name} missing partition dirs {missing}")
+        k, eq, v = seg.partition("=")
+        if eq:
+            # hive-encoded nulls arrive as __HIVE_DEFAULT_PARTITION__
+            pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else _hive_unescape(v)
     return pvals
-
-
-def _collect_staged_files(staging: str, partition_by: list[str]) -> list[tuple[str, dict]]:
-    """(staged path, RAW partitionValues) for every part file."""
-    out: list[tuple[str, dict]] = []
-    for root, _dirs, files in os.walk(staging):
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, staging)
-            segs = [] if rel_dir == "." else rel_dir.split(os.sep)
-            out.append(
-                (os.path.join(root, name), _pvals_from_segments(segs, partition_by, name))
-            )
-    return out
-
-
-def _collect_staged_files_url(
-    spark, staging: str, partition_by: list[str]
-) -> list[tuple[str, dict, int]]:
-    """URL-scheme staging listing: (qualified file URL, RAW
-    partitionValues, size) via a recursive Hadoop FS listing."""
-    _jvm, p, fs = _hadoop_fs(spark, staging)
-    prefix = fs.makeQualified(p).toString().rstrip("/")
-    out: list[tuple[str, dict, int]] = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        url = st.getPath().toString()
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel = url[len(prefix):].strip("/")
-        segs = rel.split("/")[:-1]
-        out.append((url, _pvals_from_segments(segs, partition_by, name), st.getLen()))
-    return out
 
 
 def _type_no_meta(dt):
@@ -712,300 +750,184 @@ def _physical_projection(snap):
     return phys_of, T.StructType(data_fields_phys), to_logical, to_physical
 
 
-def _dml_projection(snap, data_schema):
+def _data_fields(snap) -> list[T.StructField]:
+    """The table's DATA fields: every column but the partition columns."""
+    return [f for f in snap.schema.fields if f.name not in snap.partition_columns]
+
+
+def _dml_projection(snap):
     """(read_schema, to_logical, to_physical) for a DML scan — the
     physical mapping for mapped tables, identity for direct-name
     tables (the common case keeps its exact round-1 plan)."""
     if snap.column_mapping_mode == "none":
-        return data_schema, (lambda df, extra=(): df), (lambda df: df)
+        return T.StructType(_data_fields(snap)), (lambda df, extra=(): df), (lambda df: df)
     _phys_of, read_schema, to_logical, to_physical = _physical_projection(snap)
     return read_schema, to_logical, to_physical
 
 
-def _stage_local_adds(
-    df: DataFrame,
-    staging: str,
-    partition_by: list[str],
-    finalize,
-    *,
-    ts: int | None = None,
-    fixed_pvals: dict | None = None,
-    data_change: bool = True,
-) -> list[dict]:
-    """THE local staging loop (round-8 review finding 6: previously
-    three diverging copies): distributed parquet write into
-    ``staging``, then for every kept part file — empty parts dropped,
-    footer statistics read locally — publish it via
-    ``finalize(staged_abs, final_rel) -> None`` (os.rename for local
-    tables, a direct boto3 upload for s3://) and emit the add action.
-    ``partition_by`` derives partitionValues from the staged dir
-    names; ``fixed_pvals`` pins them.  Always removes the staging
-    tree."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    ts = int(time.time() * 1000) if ts is None else ts
-    adds: list[dict] = []
-    try:
-        for staged, staged_pvals in _collect_staged_files(staging, partition_by):
-            meta = pq.ParquetFile(staged).metadata
-            if meta.num_rows == 0:
-                os.remove(staged)
-                continue
-            pvals = staged_pvals if partition_by else dict(fixed_pvals or {})
-            rel_dir = _rel_dirname(pvals, partition_by or None)
-            final_rel = (
-                (rel_dir + "/" if rel_dir else "")
-                + f"part-{uuid.uuid4().hex}.parquet"
-            )
-            size = os.path.getsize(staged)
-            stats = _file_stats(meta)
-            finalize(staged, final_rel)
-            adds.append(
-                {
-                    "add": {
-                        "path": final_rel,
-                        "partitionValues": pvals,
-                        "size": size,
-                        "modificationTime": ts,
-                        "dataChange": data_change,
-                        "stats": stats,
-                    }
-                }
-            )
-    finally:
-        for root, dirs, files in os.walk(staging, topdown=False):
-            for name in files:
-                os.remove(os.path.join(root, name))
-            for name in dirs:
-                os.rmdir(os.path.join(root, name))
-        if os.path.isdir(staging):
-            os.rmdir(staging)
-    return adds
+def _physical_partition_columns(snap) -> list[str]:
+    """The partition columns under their physical names: the keys of
+    a mapped table's partitionValues and partition directories."""
+    if snap.column_mapping_mode == "none":
+        return list(snap.partition_columns)
+    phys_of = _physical_projection(snap)[0]
+    return [phys_of[c] for c in snap.partition_columns]
 
 
-def _stage_local_upload_s3(
-    df: DataFrame,
-    location: str,
-    partition_by: list[str],
-    *,
-    ts: int | None = None,
-    fixed_pvals: dict | None = None,
-    data_change: bool = True,
-) -> list[dict]:
-    """``s3://`` staging for the jar-free boto3 gateway: executors
-    write parquet to a LOCAL temp dir (they have no S3 connector),
-    the driver reads footers locally and uploads each kept part
-    directly to its FINAL object name — S3 has no rename, so the
-    Hadoop path's staged-rename shape would cost a server-side copy
-    per file.  Upload-then-commit keeps Delta's guarantee: objects
-    without a committed add action are invisible garbage, exactly as
-    on every other store.  (Cluster note: staging lands on the
-    driver's local disk — the gateway is a metadata/DML path, not a
-    bulk-load path, and one logical write's uploads share the
-    ADT_S3_UPLOAD_LIMIT driver byte budget; see s3_store's module
-    docstring.)"""
-    import tempfile
+# ---------------------------------------------------------------------------
+# Staging: one loop over a two-implementation filesystem seam
+# ---------------------------------------------------------------------------
 
+
+class _LocalStaging:
+    """Staging on the driver's filesystem: ``os.walk`` listing and
+    pyarrow footer reads; ``publish(staged, final_rel)`` moves a part
+    file to its final name (``os.rename`` into a local table, the
+    boto3 upload into an ``s3://`` table)."""
+
+    def __init__(self, root: str, publish):
+        self.root = root
+        self.publish = publish
+
+    def files(self) -> list[tuple[str, list[str], int]]:
+        """(staged path, partition-dir segments, size) per part file."""
+        out = []
+        for root, _dirs, names in os.walk(self.root):
+            rel_dir = os.path.relpath(root, self.root)
+            segs = [] if rel_dir == "." else rel_dir.split(os.sep)
+            for name in names:
+                if name.endswith(".parquet"):
+                    path = os.path.join(root, name)
+                    out.append((path, segs, os.path.getsize(path)))
+        return out
+
+    def footer(self, path: str):
+        return pq.ParquetFile(path).metadata
+
+    def drop(self, path: str) -> None:
+        os.remove(path)
+
+    def cleanup(self) -> None:
+        if os.path.isdir(self.root):
+            shutil.rmtree(self.root)
+
+
+class _HadoopStaging:
+    """Staging through the Hadoop FileSystem for URL-scheme tables
+    (s3a://, viewfs://, …): executors write the staged parquet
+    remotely; the driver lists recursively, reads footers only
+    (``_fs_parquet_meta`` — never the data pages) and renames within
+    the same store."""
+
+    def __init__(self, spark, location: str):
+        self.spark = spark
+        self.location = location
+        self.root = _url_join(location, f"_staging-{uuid.uuid4().hex}")
+        jvm, self._root_p, self.fs = _hadoop_fs(spark, self.root)
+        self.Path = jvm.org.apache.hadoop.fs.Path
+
+    def files(self) -> list[tuple[str, list[str], int]]:
+        prefix = self.fs.makeQualified(self._root_p).toString().rstrip("/")
+        out = []
+        it = self.fs.listFiles(self._root_p, True)
+        while it.hasNext():
+            st = it.next()
+            url = st.getPath().toString()
+            if url.endswith(".parquet"):
+                segs = url[len(prefix):].strip("/").split("/")[:-1]
+                out.append((url, segs, st.getLen()))
+        return out
+
+    def footer(self, url: str):
+        return _fs_parquet_meta(self.spark, url)
+
+    def drop(self, url: str) -> None:
+        self.fs.delete(self.Path(url), False)
+
+    def publish(self, url: str, final_rel: str) -> None:
+        final_p = self.Path(_url_join(self.location, final_rel))
+        self.fs.mkdirs(final_p.getParent())
+        if not self.fs.rename(self.Path(url), final_p):
+            raise DeltaWriteError(f"rename failed: {url} -> {final_rel}")
+
+    def cleanup(self) -> None:
+        self.fs.delete(self._root_p, True)
+
+
+def _staging_for(spark, location: str):
+    """The staging seam for ``location``'s store.  ``s3://`` tables
+    (the jar-free boto3 gateway) stage on the driver's LOCAL disk —
+    executors have no S3 connector — and upload each kept part
+    directly to its final object name: S3 has no rename, so a staged
+    rename would cost a server-side copy per file.  Upload-then-commit
+    keeps Delta's guarantee (objects without a committed add are
+    invisible garbage, as on every store).  One staging's uploads
+    share one ADT_S3_UPLOAD_LIMIT driver byte budget (the gateway is a
+    metadata/DML path, not a bulk-load path; see s3_store's module
+    docstring)."""
     from adt_spark.sources import s3_store
 
-    budget = [0]
-    return _stage_local_adds(
-        df,
-        tempfile.mkdtemp(prefix="adt-s3-stage-"),
-        partition_by,
-        lambda staged, final_rel: s3_store.upload_file(
-            staged, _url_join(location, final_rel), budget
-        ),
-        ts=ts,
-        fixed_pvals=fixed_pvals,
-        data_change=data_change,
-    )
+    if not _is_url(location):
+
+        def _rename(staged: str, final_rel: str) -> None:
+            final_abs = os.path.join(location, *final_rel.split("/"))
+            os.makedirs(os.path.dirname(final_abs), exist_ok=True)
+            os.rename(staged, final_abs)
+
+        return _LocalStaging(os.path.join(location, f"_staging-{uuid.uuid4().hex}"), _rename)
+    if s3_store.is_native_s3(location):
+        budget = [0]
+        return _LocalStaging(
+            tempfile.mkdtemp(prefix="adt-s3-stage-"),
+            lambda staged, final_rel: s3_store.upload_file(
+                staged, _url_join(location, final_rel), budget
+            ),
+        )
+    return _HadoopStaging(spark, location)
 
 
-def _rename_into_table(location: str):
-    """finalize callback for same-filesystem staging: hard move the
-    staged part to its final in-table name."""
-    def _fin(staged: str, final_rel: str) -> None:
-        final_abs = os.path.join(location, *final_rel.split("/"))
-        os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-        os.rename(staged, final_abs)
-    return _fin
-
-
-def _stage_and_collect(
-
-    df: DataFrame,
-    location: str,
-    partition_by: list[str],
-    data_change: bool = True,
-) -> list[dict]:
-    """Distributed parquet write into a staging dir, then move every
-    part file to its final UUID name and return the add actions (with
-    full per-file statistics).  Shared by write_delta_native and
-    optimize_zorder.  URL locations run the same shape through the
-    Hadoop FS (_stage_and_collect_url): executors write the staged
-    parquet remotely, the driver renames within the same store and
-    reads only footers."""
-    if _is_url(location):
-        from adt_spark.sources import s3_store
-
-        if s3_store.is_native_s3(location):
-            return _stage_local_upload_s3(
-                df, location, partition_by, data_change=data_change
-            )
-        return _stage_and_collect_url(df, location, partition_by, data_change)
-    return _stage_local_adds(
-        df,
-        os.path.join(location, f"_staging-{uuid.uuid4().hex}"),
-        partition_by,
-        _rename_into_table(location),
-        data_change=data_change,
-    )
-
-
-def _stage_and_collect_url(
-    df: DataFrame,
-    location: str,
-    partition_by: list[str],
-    data_change: bool = True,
-) -> list[dict]:
-    """_stage_and_collect through the Hadoop FileSystem for URL-scheme
-    table locations (s3a://, viewfs://, …): identical staging shape,
-    with driver-side IO limited to a recursive listing, per-file
-    footer reads (_fs_parquet_meta — never the data pages), renames
-    within the same store, and the staging-dir delete."""
-    spark = df.sparkSession
-    staging = _url_join(location, f"_staging-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-
-    adds: list[dict] = []
-    _jvm, staging_p, fs = _hadoop_fs(spark, staging)
-    Path = _jvm.org.apache.hadoop.fs.Path
-    try:
-        for staged_url, pvals, size in _collect_staged_files_url(
-            spark, staging, partition_by
-        ):
-            meta = _fs_parquet_meta(spark, staged_url)
-            if meta.num_rows == 0:
-                fs.delete(Path(staged_url), False)
-                continue
-            rel_dir = _rel_dirname(pvals, partition_by) if partition_by else ""
-            final_rel = (rel_dir + "/" if rel_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
-            final_url = _url_join(location, final_rel)
-            final_p = Path(final_url)
-            fs.mkdirs(final_p.getParent())
-            if not fs.rename(Path(staged_url), final_p):
-                raise DeltaWriteError(f"rename failed: {staged_url} -> {final_url}")
-            adds.append(
-                {
-                    "add": {
-                        "path": final_rel,
-                        "partitionValues": pvals,
-                        "size": int(size),
-                        "modificationTime": int(time.time() * 1000),
-                        "dataChange": data_change,
-                        "stats": _file_stats(meta),
-                    }
-                }
-            )
-    finally:
-        fs.delete(staging_p, True)
-    return adds
-
-
-def _stage_into_table(
+def _stage(
     df: DataFrame,
     location: str,
     ts: int,
-    *,
     partition_by: list[str] | None = None,
     fixed_pvals: dict | None = None,
     data_change: bool = True,
 ) -> list[dict]:
-    """Stage ``df`` as parquet and move every part file into the table
-    under a fresh UUID name, returning the add actions — the ONE
-    staging engine the copy-on-write DML rewrites share (DELETE /
-    UPDATE / MERGE).  ``partition_by`` derives partitionValues from
-    the staged directory names; ``fixed_pvals`` pins them (a
-    single-partition-group rewrite).  Local paths use os.*; URL-scheme
-    locations go through the Hadoop FileSystem (remote staging
-    listing, footer-only statistics reads, same-store renames)."""
+    """THE staging loop of every data-writing operation (WRITE,
+    OPTIMIZE, the copy-on-write rewrites, the DV paths' appends): a
+    distributed parquet write into a staging dir — every executor
+    writes its partition in parallel — then, per part file, drop it
+    when empty, read its footer statistics, publish it under a fresh
+    ``part-<uuid>`` name and build its ``add`` action.
+    ``partition_by`` derives partitionValues from the staged directory
+    names; ``fixed_pvals`` pins them (a one-partition-group rewrite;
+    its key order names the directories).  Always removes the staging
+    tree."""
     partition_by = list(partition_by or [])
+    staging = _staging_for(df.sparkSession, location)
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(staging.root)
     adds: list[dict] = []
-
-    def _add(final_rel: str, pvals: dict, size: int, meta) -> None:
-        adds.append(
-            {
-                "add": {
-                    "path": final_rel,
-                    "partitionValues": pvals,
-                    "size": int(size),
-                    "modificationTime": ts,
-                    "dataChange": data_change,
-                    "stats": _file_stats(meta),
-                }
-            }
-        )
-
-    def _final_rel(pvals: dict) -> str:
-        rel_dir = _rel_dirname(pvals)
-        return (rel_dir + "/" if rel_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
-
-    if _is_url(location):
-        from adt_spark.sources import s3_store
-
-        if s3_store.is_native_s3(location):
-            return _stage_local_upload_s3(
-                df,
-                location,
-                partition_by,
-                ts=ts,
-                fixed_pvals=fixed_pvals,
-                data_change=data_change,
-            )
-        spark = df.sparkSession
-        staging = _url_join(location, f"_staging-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-        _jvm, staging_p, fs = _hadoop_fs(spark, staging)
-        Path = _jvm.org.apache.hadoop.fs.Path
-        try:
-            for staged_url, staged_pvals, size in _collect_staged_files_url(
-                spark, staging, partition_by
-            ):
-                meta = _fs_parquet_meta(spark, staged_url)
-                if meta.num_rows == 0:
-                    fs.delete(Path(staged_url), False)
-                    continue
-                pvals = staged_pvals if partition_by else dict(fixed_pvals or {})
-                final_rel = _final_rel(pvals)
-                final_p = Path(_url_join(location, final_rel))
-                fs.mkdirs(final_p.getParent())
-                if not fs.rename(Path(staged_url), final_p):
-                    raise DeltaWriteError(
-                        f"rename failed: {staged_url} -> {final_rel}"
-                    )
-                _add(final_rel, pvals, size, meta)
-        finally:
-            fs.delete(staging_p, True)
-        return adds
-
-    return _stage_local_adds(
-        df,
-        os.path.join(location, f"_staging-{uuid.uuid4().hex}"),
-        partition_by,
-        _rename_into_table(location),
-        ts=ts,
-        fixed_pvals=fixed_pvals,
-        data_change=data_change,
-    )
+    try:
+        for staged, segs, size in staging.files():
+            meta = staging.footer(staged)
+            if meta.num_rows == 0:
+                staging.drop(staged)
+                continue
+            pvals = _pvals_from_segments(segs) if partition_by else dict(fixed_pvals or {})
+            missing = [c for c in partition_by if c not in pvals]
+            if missing:
+                raise DeltaWriteError(f"staged file {staged} missing partition dirs {missing}")
+            rel_dir = _rel_dirname(pvals, partition_by or None)
+            final_rel = (rel_dir + "/" if rel_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
+            staging.publish(staged, final_rel)
+            adds.append(_add(final_rel, pvals, int(size), ts, data_change, _file_stats(meta)))
+    finally:
+        staging.cleanup()
+    return adds
 
 
 def write_delta_native(
@@ -1075,7 +997,7 @@ def write_delta_native(
                 f"partition mismatch: table has {snap.partition_columns}, "
                 f"write requested {partition_by}"
             )
-        evolved_meta = None
+        evolved_schema = None
         # Same-name columns must keep their declared types regardless
         # of merge_schema — staging parquet under a divergent physical
         # type would corrupt future snapshot reads (the ADVICE-item
@@ -1122,7 +1044,7 @@ def write_delta_native(
                 for f in df.schema.fields
                 if f.name not in table_fields
             ]
-            evolved = T.StructType(list(snap.schema.fields) + new_fields)
+            evolved_schema = T.StructType(list(snap.schema.fields) + new_fields)
             # null-fill table columns the write lacks; order to the
             # evolved schema so staged parquet matches it exactly
             df = df.select(
@@ -1130,23 +1052,13 @@ def write_delta_native(
                     F.col(f.name)
                     if f.name in df.columns
                     else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in evolved.fields
+                    for f in evolved_schema.fields
                 ]
             )
-            evolved_meta = {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": evolved.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": snap.configuration,
-                    "createdTime": int(time.time() * 1000),
-                }
-            }
     else:
         snap = None
         version = 0
-        evolved_meta = None
+        evolved_schema = None
 
     if snap is not None:
         _enforce_constraints(df, snap, mode)
@@ -1155,59 +1067,35 @@ def write_delta_native(
     # parquet field ids for id mode — Spark writes them from the
     # parquet.field.id schema metadata) and key partition dirs by the
     # physical name; the log's partitionValues are physical-keyed in
-    # mapped tables, which is exactly what _collect_staged_files will
-    # read back from the directory names.
+    # mapped tables, which is exactly what the staging loop reads back
+    # from the directory names.
     if snap is not None and snap.column_mapping_mode != "none":
-        phys_of, _schema, _to_logical, to_physical = _physical_projection(snap)
+        _read_schema, _to_logical, to_physical = _dml_projection(snap)
         df = to_physical(df)
-        partition_by = [phys_of[c] for c in partition_by]
+        partition_by = _physical_partition_columns(snap)
 
-    adds = _stage_and_collect(df, location, partition_by)
-
-    # 3. assemble the commit
     ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode.upper(), "partitionBy": json.dumps(partition_by)},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
+    adds = _stage(df, location, ts, partition_by)
+
+    # assemble the commit
+    params = {"mode": mode.upper(), "partitionBy": json.dumps(partition_by)}
+    actions: list[dict] = []
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": int(txn[1]), "lastUpdated": ts}})
     # data columns first, partition columns last (reader appends them,
     # matching reference deltatable.rs:136-189 field order)
     if not exists:
         actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
+        actions.append(_metadata(df.schema, partition_by, {}, ts))
+    if evolved_schema is not None:
         actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": df.schema.json(),
-                    "partitionColumns": partition_by,
-                    "configuration": {},
-                    "createdTime": ts,
-                }
-            }
-        )
-    if evolved_meta is not None:
-        actions.append(evolved_meta)
-    if mode == "overwrite" and snap is not None:
-        for path, (pvals, _dv) in snap.files.items():
-            actions.append(
-                {
-                    "remove": {
-                        "path": path,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                        "partitionValues": pvals,
-                    }
-                }
+            _metadata(
+                evolved_schema, snap.partition_columns, snap.configuration, ts,
+                snap.table_id,
             )
+        )
+    if mode == "overwrite" and snap is not None:
+        actions.extend(_remove(path, pvals, ts) for path, (pvals, _dv) in snap.files.items())
     actions.extend(adds)
 
     if mode == "append" and snap is not None:
@@ -1218,8 +1106,7 @@ def write_delta_native(
         # underneath us (delta-spark's ConcurrentAppend resolution).
         for attempt in range(4):
             try:
-                _atomic_write(_log_path(location, version), actions, df.sparkSession)
-                return version
+                return _commit(df.sparkSession, location, version, ts, "WRITE", params, actions)
             except DeltaWriteError as exc:
                 if "concurrent commit" not in str(exc) or attempt == 3:
                     raise
@@ -1238,8 +1125,7 @@ def write_delta_native(
                     ) from exc
                 snap = newsnap
                 version = newsnap.version + 1
-    _atomic_write(_log_path(location, version), actions, df.sparkSession)
-    return version
+    return _commit(df.sparkSession, location, version, ts, "WRITE", params, actions)
 
 
 def write_checkpoint(spark, location: str) -> int:
@@ -1273,14 +1159,10 @@ def write_checkpoint(spark, location: str) -> int:
         }
     )
     meta_rows.append(
-        {
-            "id": snap.table_id or str(uuid.uuid4()),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": snap.schema.json(),
-            "partitionColumns": snap.partition_columns,
-            "configuration": snap.configuration or {},
-            "createdTime": int(time.time() * 1000),
-        }
+        _metadata(
+            snap.schema, snap.partition_columns, snap.configuration or {},
+            int(time.time() * 1000), snap.table_id,
+        )["metaData"]
     )
     txn_rows = [
         {"appId": app, "version": int(v)}
@@ -1471,6 +1353,78 @@ def write_checkpoint(spark, location: str) -> int:
     return n
 
 
+# ---------------------------------------------------------------------------
+# DML: one match scan, one copy-on-write rewrite
+# ---------------------------------------------------------------------------
+
+
+def _match_scan(
+    spark, location: str, snap, restrict, positions: bool = False
+) -> dict[str, object]:
+    """THE match scan of DELETE / UPDATE / MERGE, copy-on-write and
+    deletion-vector routes alike: ONE distributed scan of every live
+    file, read through ``_dml_projection`` (identity for unmapped
+    tables) and tagged with its file, narrowed by ``restrict`` (a
+    predicate filter or a key join), grouped by file.  Returns the
+    log-relative path of every file with a match → its match count,
+    or with ``positions`` its sorted matching row positions (the
+    parquet reader's ``_metadata.row_index``, the ordinal the DV spec
+    addresses)."""
+    from pyspark.sql import functions as F
+
+    all_paths = _scan_abs(location, list(snap.files))
+    if not all_paths:
+        return {}
+    read_schema, to_logical, _to_physical = _dml_projection(snap)
+    scan = spark.read.schema(read_schema).parquet(*all_paths).withColumn(
+        "_f", F.input_file_name()
+    )
+    extra, agg = ("_f",), F.count("*")
+    if positions:
+        scan = scan.withColumn("_pos", F.col("_metadata.row_index"))
+        extra, agg = ("_f", "_pos"), F.sort_array(F.collect_list("_pos"))
+    rows = restrict(to_logical(scan, extra=extra)).groupBy("_f").agg(agg.alias("_m")).collect()
+    # input_file_name() yields a file: URI — resolve back to the log's
+    # relative path by suffix match (unique: rel paths include the
+    # partition dirs)
+    return {_rel_from_uri(r._f, snap.files): r._m for r in rows}
+
+
+def _refuse_dv_files(snap, operation: str) -> None:
+    """Copy-on-write rewrites refuse files carrying deletion vectors:
+    rewriting them would silently resurrect DV-deleted rows."""
+    for path, (_pvals, dv) in snap.files.items():
+        if dv is not None:
+            raise DeltaWriteError(
+                f"{operation} cannot rewrite {path}: it carries a deletion "
+                "vector (use the delta-spark path for DV tables)"
+            )
+
+
+def _rewrite(spark, location: str, snap, touched, ts: int, transform) -> list[dict]:
+    """THE copy-on-write rewrite of DELETE / UPDATE / MERGE: the
+    ``touched`` files, grouped by partition values (keeps pvals
+    exact), each group's logical rows passed through
+    ``transform(rows, pvals)`` and staged back under physical names.
+    Returns the touched files' removes followed by the adds."""
+    read_schema, to_logical, to_physical = _dml_projection(snap)
+    groups: dict[tuple, list[str]] = {}
+    for rel in touched:
+        groups.setdefault(tuple(sorted(snap.files[rel][0].items())), []).append(rel)
+    removes: list[dict] = []
+    adds: list[dict] = []
+    for key, rels in groups.items():
+        pvals = dict(key)
+        rows = to_logical(
+            spark.read.schema(read_schema).parquet(*_scan_abs(location, rels))
+        )
+        adds.extend(
+            _stage(to_physical(transform(rows, pvals)), location, ts, fixed_pvals=pvals)
+        )
+        removes.extend(_remove(rel, pvals, ts) for rel in rels)
+    return removes + adds
+
+
 def delete_where(spark, location: str, predicate: str) -> tuple[int, int]:
     """Copy-on-write ``DELETE FROM <table> WHERE <predicate>`` for the
     native writer; returns (committed version, rows deleted).
@@ -1493,93 +1447,21 @@ def delete_where(spark, location: str, predicate: str) -> tuple[int, int]:
 
     snap = replay_snapshot(spark, location)
     _check_writable(snap, "delete")
-    if (
-        str((snap.configuration or {}).get("delta.enableDeletionVectors", "false")).lower()
-        == "true"
-    ):
+    if _dv_enabled(snap.configuration):
         # delta-spark's selection rule: the table property routes
         # DELETE through deletion vectors (no file rewrites)
         return _delete_with_dvs(spark, location, predicate, snap)
-    part_cols = snap.partition_columns
-    data_fields = [f for f in snap.schema.fields if f.name not in part_cols]
-    data_schema = T.StructType(data_fields)
-    read_schema, to_logical, to_physical = _dml_projection(snap, data_schema)
-
-    for path, (_pvals, dv) in snap.files.items():
-        if dv is not None:
-            raise DeltaWriteError(
-                f"delete_where cannot rewrite {path}: it carries a deletion "
-                "vector (use the delta-spark path for DV tables)"
-            )
-
-    all_paths = _scan_abs(location, list(snap.files))
-    if not all_paths:
+    _refuse_dv_files(snap, "delete_where")
+    hits = _match_scan(spark, location, snap, lambda df: df.filter(F.expr(predicate)))
+    if not hits:
         return snap.version, 0
-
-    # 1. one scan, predicate pushed down → files containing matches
-    matches = (
-        to_logical(
-            spark.read.schema(read_schema)
-            .parquet(*all_paths)
-            .withColumn("_f", F.input_file_name()),
-            extra=("_f",),
-        )
-        .filter(F.expr(predicate))
-        .groupBy("_f")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    if not matches:
-        return snap.version, 0
-    n_deleted = sum(r.n for r in matches)
-    # input_file_name() yields a file: URI — resolve back to the log's
-    # relative path by suffix match (unique: rel paths include the
-    # partition dirs).
-    touched_rel = {_rel_from_uri(r._f, snap.files) for r in matches}
-
-    # 2. rewrite touched files per partition group (keeps pvals exact)
     ts = int(time.time() * 1000)
-    version = snap.version + 1
-    adds: list[dict] = []
-    removes: list[dict] = []
     keep = F.coalesce(F.expr(predicate), F.lit(False)) == F.lit(False)
-    groups: dict[tuple, list[str]] = {}
-    for rel in touched_rel:
-        pvals = snap.files[rel][0]
-        groups.setdefault(tuple(sorted(pvals.items())), []).append(rel)
-    for key, rels in groups.items():
-        pvals = dict(key)
-        kept = to_physical(
-            to_logical(
-                spark.read.schema(read_schema)
-                .parquet(*_scan_abs(location, rels))
-            ).filter(keep)
-        )
-        adds.extend(_stage_into_table(kept, location, ts, fixed_pvals=pvals))
-        for rel in rels:
-            removes.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                        "partitionValues": pvals,
-                    }
-                }
-            )
-
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ] + removes + adds
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version, int(n_deleted)
+    actions = _rewrite(spark, location, snap, hits, ts, lambda rows, _pv: rows.filter(keep))
+    version = _commit(
+        spark, location, snap.version + 1, ts, "DELETE", {"predicate": predicate}, actions
+    )
+    return version, int(sum(hits.values()))
 
 
 def vacuum(spark, location: str, retain_hours: float = 168.0) -> list[str]:
@@ -1682,9 +1564,7 @@ def update_where(
     snap = replay_snapshot(spark, location)
     _check_writable(snap, "update")
     part_cols = snap.partition_columns
-    data_fields = [f for f in snap.schema.fields if f.name not in part_cols]
-    data_schema = T.StructType(data_fields)
-    read_schema, to_logical, to_physical = _dml_projection(snap, data_schema)
+    data_fields = _data_fields(snap)
     data_names = {f.name for f in data_fields}
     bad = set(assignments) - data_names
     if bad:
@@ -1713,39 +1593,14 @@ def update_where(
                 "(cross-partition row movement) — use read + overwrite"
             )
     gens_data = [g for g in gens if g[0] in data_names]
-    if (
-        str((snap.configuration or {}).get("delta.enableDeletionVectors", "false")).lower()
-        == "true"
-    ):
+    if _dv_enabled(snap.configuration):
         return _update_with_dvs(spark, location, predicate, assignments, snap, gens_data)
-    for path, (_pvals, dv) in snap.files.items():
-        if dv is not None:
-            raise DeltaWriteError(
-                f"update_where cannot rewrite {path}: it carries a deletion vector"
-            )
-    all_paths = _scan_abs(location, list(snap.files))
-    if not all_paths:
+    _refuse_dv_files(snap, "update_where")
+    hits = _match_scan(spark, location, snap, lambda df: df.filter(F.expr(predicate)))
+    if not hits:
         return snap.version, 0
-
-    matches = (
-        to_logical(
-            spark.read.schema(read_schema)
-            .parquet(*all_paths)
-            .withColumn("_f", F.input_file_name()),
-            extra=("_f",),
-        )
-        .filter(F.expr(predicate))
-        .groupBy("_f")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    if not matches:
-        return snap.version, 0
-    n_updated = sum(r.n for r in matches)
-    touched_rel = {_rel_from_uri(r._f, snap.files) for r in matches}
 
     ts = int(time.time() * 1000)
-    version = snap.version + 1
     hit = F.coalesce(F.expr(predicate), F.lit(False))
     from adt_spark.sources.delta_native import _with_partition_cols
 
@@ -1797,8 +1652,9 @@ def update_where(
 
     if _table_constraints(snap):
         # CHECK the post-SET values of the rows this UPDATE touches.
+        read_schema, to_logical, _to_physical = _dml_projection(snap)
         pieces = []
-        for rel in touched_rel:
+        for rel in hits:
             scan = to_logical(
                 spark.read.schema(read_schema).parquet(*_scan_abs(location, [rel]))
             )
@@ -1811,47 +1667,14 @@ def update_where(
         for p in pieces[1:]:
             changed = changed.unionByName(p)
         _enforce_constraints(changed, snap, "update")
-    adds: list[dict] = []
-    removes: list[dict] = []
-    groups: dict[tuple, list[str]] = {}
-    for rel in touched_rel:
-        groups.setdefault(tuple(sorted(snap.files[rel][0].items())), []).append(rel)
-    for key, rels in groups.items():
-        pvals = dict(key)
-        updated = to_physical(
-            _transform_group(
-                to_logical(
-                    spark.read.schema(read_schema)
-                    .parquet(*_scan_abs(location, rels))
-                ),
-                pvals,
-            ).select(*data_col_names)
-        )
-        adds.extend(_stage_into_table(updated, location, ts, fixed_pvals=pvals))
-        for rel in rels:
-            removes.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                        "partitionValues": pvals,
-                    }
-                }
-            )
-
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ] + removes + adds
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version, int(n_updated)
+    actions = _rewrite(
+        spark, location, snap, hits, ts,
+        lambda rows, pvals: _transform_group(rows, pvals).select(*data_col_names),
+    )
+    version = _commit(
+        spark, location, snap.version + 1, ts, "UPDATE", {"predicate": predicate}, actions
+    )
+    return version, int(sum(hits.values()))
 
 
 def merge_upsert(
@@ -1879,10 +1702,6 @@ def merge_upsert(
 
     snap = replay_snapshot(spark, location)
     _check_writable(snap, "merge")
-    part_cols = snap.partition_columns
-    data_fields = [f for f in snap.schema.fields if f.name not in part_cols]
-    data_schema = T.StructType(data_fields)
-    read_schema, to_logical, to_physical = _dml_projection(snap, data_schema)
     if source.schema.fieldNames() != [f.name for f in snap.schema.fields]:
         raise DeltaWriteError(
             f"merge source schema {source.schema.fieldNames()} must match "
@@ -1891,15 +1710,9 @@ def merge_upsert(
     missing = [k for k in key_cols if k not in source.columns]
     if missing:
         raise DeltaWriteError(f"merge key columns missing from source: {missing}")
-    dv_mode = (
-        str((snap.configuration or {}).get("delta.enableDeletionVectors", "false")).lower()
-        == "true"
-    )
-    for path, (_pvals, dv) in snap.files.items():
-        if dv is not None and not dv_mode:
-            raise DeltaWriteError(
-                f"merge_upsert cannot rewrite {path}: it carries a deletion vector"
-            )
+    dv_mode = _dv_enabled(snap.configuration)
+    if not dv_mode:
+        _refuse_dv_files(snap, "merge_upsert")
 
     # Delta's MERGE errors when multiple source rows match one target
     # row; with a keyed upsert that means duplicate keys in the source
@@ -1928,10 +1741,7 @@ def merge_upsert(
     _enforce_constraints(source, snap, "merge")
     _validate_generated(source, _generated_fields(snap), "merge")
 
-    if (
-        str((snap.configuration or {}).get("delta.enableDeletionVectors", "false")).lower()
-        == "true"
-    ):
+    if dv_mode:
         return _merge_with_dvs(spark, location, source, key_cols, snap)
 
     # MERGE source keys are unbounded (a backfill MERGE can carry
@@ -1939,32 +1749,15 @@ def merge_upsert(
     # broadcasts only when the runtime size allows, instead of a
     # forced hint that would OOM the driver on a large source
     keys = source.select(*key_cols).distinct()
-    all_paths = _scan_abs(location, list(snap.files))
     ts = int(time.time() * 1000)
-    version = snap.version + 1
     n_source = source.count()
-
-    touched_rel: set[str] = set()
-    n_replaced = 0
-    if all_paths:
-        matches = (
-            to_logical(
-                spark.read.schema(read_schema)
-                .parquet(*all_paths)
-                .withColumn("_f", F.input_file_name()),
-                extra=("_f",),
-            )
-            .join(keys, key_cols)
-            .groupBy("_f")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        n_replaced = int(sum(r.n for r in matches))
-        touched_rel = {_rel_from_uri(r._f, snap.files) for r in matches}
+    hits = _match_scan(spark, location, snap, lambda df: df.join(keys, key_cols))
     # inserted = source rows whose KEY matched no target row; with
     # duplicate keys in the TARGET, n_source - n_replaced would go
     # negative (one source row can replace several target rows)
+    read_schema, to_logical, to_physical = _dml_projection(snap)
     n_matched_keys = 0
+    all_paths = _scan_abs(location, list(snap.files))
     if all_paths:
         n_matched_keys = (
             keys.join(
@@ -1974,63 +1767,21 @@ def merge_upsert(
             ).count()
         )
 
-    adds: list[dict] = []
-    removes: list[dict] = []
-
-    def _stage_group(df: DataFrame, pvals: dict, partition_by: list[str]) -> None:
-        adds.extend(
-            _stage_into_table(
-                df, location, ts, partition_by=partition_by, fixed_pvals=pvals
-            )
-        )
-
     # 1. rewrite touched files with matched rows removed
-    groups: dict[tuple, list[str]] = {}
-    for rel in touched_rel:
-        groups.setdefault(tuple(sorted(snap.files[rel][0].items())), []).append(rel)
-    for key, rels in groups.items():
-        pvals = dict(key)
-        kept = to_physical(
-            to_logical(
-                spark.read.schema(read_schema)
-                .parquet(*_scan_abs(location, rels))
-            ).join(keys, key_cols, "left_anti")
-        )
-        _stage_group(kept, pvals, [])
-        for rel in rels:
-            removes.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                        "partitionValues": pvals,
-                    }
-                }
-            )
-
+    actions = _rewrite(
+        spark, location, snap, hits, ts,
+        lambda rows, _pv: rows.join(keys, key_cols, "left_anti"),
+    )
     # 2. the full source lands as new files (replacements + inserts);
     # mapped tables stage under physical names + physical partition dirs
-    if snap.column_mapping_mode != "none":
-        phys_of = _physical_projection(snap)[0]
-        _stage_group(
-            to_physical(source), {}, [phys_of[c] for c in part_cols]
-        )
-    else:
-        _stage_group(source, {}, part_cols)
-
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {"matchedPredicates": json.dumps(key_cols)},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ] + removes + adds
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version, n_replaced, int(n_source - n_matched_keys)
+    actions += _stage(
+        to_physical(source), location, ts, partition_by=_physical_partition_columns(snap)
+    )
+    version = _commit(
+        spark, location, snap.version + 1, ts, "MERGE",
+        {"matchedPredicates": json.dumps(key_cols)}, actions,
+    )
+    return version, int(sum(hits.values())), int(n_source - n_matched_keys)
 
 
 # ---------------------------------------------------------------------------
@@ -2153,35 +1904,13 @@ def _optimize_commit(spark, location: str, snap, df: DataFrame, params: dict) ->
     """Shared OPTIMIZE commit: stage the rewritten data, then one
     atomic remove-all + add-all commit with ``dataChange: false`` on
     both sides (rows identical; only physical layout changed)."""
-    adds = _stage_and_collect(
-        df, location, list(snap.partition_columns), data_change=False
-    )
-    version = snap.version + 1
     ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": params,
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
+    adds = _stage(df, location, ts, list(snap.partition_columns), data_change=False)
+    removes = [
+        _remove(path, pvals, ts, data_change=False)
+        for path, (pvals, _dv) in snap.files.items()
     ]
-    for path, (pvals, _dv) in snap.files.items():
-        actions.append(
-            {
-                "remove": {
-                    "path": path,
-                    "deletionTimestamp": ts,
-                    "dataChange": False,
-                    "partitionValues": pvals,
-                }
-            }
-        )
-    actions.extend(adds)
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version
+    return _commit(spark, location, snap.version + 1, ts, "OPTIMIZE", params, removes + adds)
 
 
 def optimize_compact(spark, location: str, target_mb: int = 128) -> int:
@@ -2257,61 +1986,28 @@ def restore_table(spark, location: str, to_version: int) -> tuple[int, int, int]
             )
 
     ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": to_version},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
     # schema/partitioning follow the target version
-    actions.append(
-        {
-            "metaData": {
-                "id": target.table_id or cur.table_id,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": target.schema.json(),
-                "partitionColumns": target.partition_columns,
-                "configuration": target.configuration,
-                "createdTime": ts,
-            }
-        }
-    )
-    n_added = n_removed = 0
-    for rel, (pvals, dv) in target.files.items():
-        if rel not in cur.files:
-            add = {
-                "path": rel,
-                "partitionValues": pvals,
-                "size": target.file_sizes.get(rel, 0),
-                "modificationTime": ts,
-                "dataChange": True,
-            }
-            if dv is not None:
-                add["deletionVector"] = dv
-            if st := target.file_stats.get(rel):
-                add["stats"] = st
-            actions.append({"add": add})
-            n_added += 1
-    for rel, (pvals, _dv) in cur.files.items():
-        if rel not in target.files:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": ts,
-                        "dataChange": True,
-                        "partitionValues": pvals,
-                    }
-                }
+    actions: list[dict] = [
+        _metadata(
+            target.schema, target.partition_columns, target.configuration, ts,
+            target.table_id or cur.table_id,
+        )
+    ]
+    added = [rel for rel in target.files if rel not in cur.files]
+    removed = [rel for rel in cur.files if rel not in target.files]
+    for rel in added:
+        pvals, dv = target.files[rel]
+        actions.append(
+            _add(
+                rel, pvals, target.file_sizes.get(rel, 0), ts,
+                stats=target.file_stats.get(rel), dv=dv,
             )
-            n_removed += 1
-    version = cur.version + 1
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version, n_added, n_removed
+        )
+    actions.extend(_remove(rel, cur.files[rel][0], ts) for rel in removed)
+    version = _commit(
+        spark, location, cur.version + 1, ts, "RESTORE", {"version": to_version}, actions
+    )
+    return version, len(added), len(removed)
 
 
 def describe_history(spark, location: str) -> list[dict]:
@@ -2388,62 +2084,42 @@ def add_constraint(spark, location: str, name: str, expr: str) -> int:
             f"CHECK ({expr})"
         )
     conf[key] = expr
-    ts = int(time.time() * 1000)
-    version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name.lower(), "expr": expr},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
     proto = snap.protocol or {}
     features = set(proto.get("writerFeatures") or [])
+    upgrade = None
     if proto.get("minWriterVersion", 2) >= 7 or features:
         # table-features protocol: the constraint obliges writers via
         # the checkConstraints FEATURE, which must be enumerated
         if "checkConstraints" not in features:
             rf, wf = _implied_features(proto)
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": proto.get("minReaderVersion", 1),
-                        "minWriterVersion": proto.get("minWriterVersion", 7),
-                        **(
-                            {"readerFeatures": sorted(rf)}
-                            if proto.get("minReaderVersion", 1) >= 3
-                            else {}
-                        ),
-                        "writerFeatures": sorted(wf | {"checkConstraints"}),
-                    }
-                }
-            )
+            upgrade = {
+                "minReaderVersion": proto.get("minReaderVersion", 1),
+                "minWriterVersion": proto.get("minWriterVersion", 7),
+                **(
+                    {"readerFeatures": sorted(rf)}
+                    if proto.get("minReaderVersion", 1) >= 3
+                    else {}
+                ),
+                "writerFeatures": sorted(wf | {"checkConstraints"}),
+            }
     elif proto.get("minWriterVersion", 2) < 3:
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": 3,
-                }
-            }
-        )
-    actions.append(
-        {
-            "metaData": {
-                "id": snap.table_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": conf,
-                "createdTime": ts,
-            }
-        }
+        upgrade = {"minReaderVersion": proto.get("minReaderVersion", 1), "minWriterVersion": 3}
+    return _alter(
+        spark, location, snap, "ADD CONSTRAINT", {"name": name.lower(), "expr": expr},
+        conf, upgrade,
     )
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version
+
+
+def _alter(
+    spark, location: str, snap, operation: str, params: dict, conf: dict,
+    protocol: dict | None = None,
+) -> int:
+    """A metadata-only commit: the table's ``metaData`` with
+    configuration ``conf``, after a ``protocol`` upgrade when given."""
+    ts = int(time.time() * 1000)
+    actions = [{"protocol": protocol}] if protocol else []
+    actions.append(_metadata(snap.schema, snap.partition_columns, conf, ts, snap.table_id))
+    return _commit(spark, location, snap.version + 1, ts, operation, params, actions)
 
 
 def drop_constraint(spark, location: str, name: str, if_exists: bool = False) -> int:
@@ -2460,30 +2136,7 @@ def drop_constraint(spark, location: str, name: str, if_exists: bool = False) ->
             return snap.version
         raise DeltaWriteError(f"no such constraint {name!r}")
     del conf[key]
-    ts = int(time.time() * 1000)
-    version = snap.version + 1
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name.lower()},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.table_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": conf,
-                "createdTime": ts,
-            }
-        },
-    ]
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version
+    return _alter(spark, location, snap, "DROP CONSTRAINT", {"name": name.lower()}, conf)
 
 
 def convert_to_delta(spark, location: str) -> int:
@@ -2499,6 +2152,8 @@ def convert_to_delta(spark, location: str) -> int:
     read-and-rewrite: the commit is metadata proportional to the FILE
     COUNT — the data itself never moves.
     """
+    from adt_spark.sources import s3_store
+
     is_url = _is_url(location)
     if is_url:
         existing, cps = _list_log(location, spark)
@@ -2509,65 +2164,51 @@ def convert_to_delta(spark, location: str) -> int:
         if os.path.isdir(log_dir) and os.listdir(log_dir):
             raise DeltaWriteError(f"{location} is already a Delta table")
 
-    # discover data files + hive partition values from the layout
-    from adt_spark.sources import s3_store as _s3
-
-    rels: list[tuple[str, dict]] = []
-    if is_url and _s3.is_native_s3(location):
-        bkt, key = _s3._split(location)
+    # discover data files from the layout: (relative path, size, footer)
+    # on the table's store
+    convert_budget = [0]  # ONE materialization budget across all footers
+    if is_url and s3_store.is_native_s3(location):
+        bkt, key = s3_store._split(location)
         base = f"s3://{bkt}/{key}".rstrip("/") + "/"
-        for url, _size in _s3.list_prefix(location):
-            rel = url[len(base):]
-            segs = rel.split("/")
-            if any(s.startswith(("_", ".")) for s in segs):
-                continue
-            if not segs[-1].endswith(".parquet"):
-                continue
-            pvals = {}
-            for part in segs[:-1]:
-                if "=" in part:
-                    k, _, v = part.partition("=")
-                    pvals[k] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__" else _hive_unescape(v)
-                    )
-            rels.append((rel, pvals))
+        listed = [url[len(base):] for url, _size in s3_store.list_prefix(location)]
+
+        def _footer(rel: str):
+            local = s3_store.materialize(_url_join(location, rel), convert_budget)
+            return os.path.getsize(local), pq.ParquetFile(local).metadata
+
     elif is_url:
-        _jvm, root_p, fs = _hadoop_fs(spark, location)
+        jvm, root_p, fs = _hadoop_fs(spark, location)
         prefix = fs.makeQualified(root_p).toString().rstrip("/")
+        listed = []
         it = fs.listFiles(root_p, True)
         while it.hasNext():
-            st = it.next()
-            rel = st.getPath().toString()[len(prefix):].strip("/")
-            segs = rel.split("/")
-            # prune _delta_log/_staging/hidden files anywhere in the path
-            if any(s.startswith(("_", ".")) for s in segs):
-                continue
-            if not segs[-1].endswith(".parquet"):
-                continue
-            pvals = {}
-            for part in segs[:-1]:
-                if "=" in part:
-                    k, _, v = part.partition("=")
-                    pvals[k] = (
-                        None if v == "__HIVE_DEFAULT_PARTITION__" else _hive_unescape(v)
-                    )
-            rels.append((rel, pvals))
+            listed.append(it.next().getPath().toString()[len(prefix):].strip("/"))
+
+        def _footer(rel: str):
+            url = _url_join(location, rel)
+            size = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(url)).getLen()
+            return size, _fs_parquet_meta(spark, url)
+
     else:
+        listed = []
         for root, dirs, files in os.walk(location):
             dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for name in files:
-                if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                    continue
-                abs_path = os.path.join(root, name)
-                rel = os.path.relpath(abs_path, location)
-                pvals = {}
-                for part in rel.split(os.sep)[:-1]:
-                    if "=" in part:
-                        k, _, v = part.partition("=")
-                        pvals[k] = (
-                            None if v == "__HIVE_DEFAULT_PARTITION__" else _hive_unescape(v)
-                        )
-                rels.append((rel.replace(os.sep, "/"), pvals))
+            listed += [
+                os.path.relpath(os.path.join(root, name), location).replace(os.sep, "/")
+                for name in files
+            ]
+
+        def _footer(rel: str):
+            abs_path = os.path.join(location, *rel.split("/"))
+            return os.path.getsize(abs_path), pq.ParquetFile(abs_path).metadata
+
+    rels: list[tuple[str, dict]] = []
+    for rel in listed:
+        segs = rel.split("/")
+        # prune _delta_log/_staging/hidden files anywhere in the path
+        if any(s.startswith(("_", ".")) for s in segs) or not segs[-1].endswith(".parquet"):
+            continue
+        rels.append((rel, _pvals_from_segments(segs[:-1])))
     if not rels:
         raise DeltaWriteError(f"no parquet files under {location} to convert")
 
@@ -2591,63 +2232,20 @@ def convert_to_delta(spark, location: str) -> int:
 
     ts = int(time.time() * 1000)
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "CONVERT",
-                "operationParameters": {"numFiles": len(rels)},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        },
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema.json(),
-                "partitionColumns": part_cols,
-                "configuration": {},
-                "createdTime": ts,
-            }
-        },
+        _metadata(schema, part_cols, {}, ts),
     ]
-    from adt_spark.sources import s3_store
-
-    convert_budget = [0]  # ONE materialization budget across all footers
     for rel, pvals in rels:
-        if is_url and s3_store.is_native_s3(location):
-            local = s3_store.materialize(_url_join(location, rel), convert_budget)
-            meta = pq.ParquetFile(local).metadata
-            size = os.path.getsize(local)
-        elif is_url:
-            url = _url_join(location, rel)
-            meta = _fs_parquet_meta(spark, url)
-            size = fs.getFileStatus(_jvm.org.apache.hadoop.fs.Path(url)).getLen()
-        else:
-            abs_path = os.path.join(location, *rel.split("/"))
-            meta = pq.ParquetFile(abs_path).metadata
-            size = os.path.getsize(abs_path)
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    # JSON null for null partitions (the log convention
-                    # every other writer path here uses; the hive string
-                    # is a DIRECTORY-name encoding only)
-                    "partitionValues": pvals,
-                    "size": int(size),
-                    "modificationTime": ts,
-                    "dataChange": True,
-                    "stats": _file_stats(meta),
-                }
-            }
-        )
+        size, meta = _footer(rel)
+        # JSON null for null partitions (the log convention every other
+        # writer path here uses; the hive string is a DIRECTORY-name
+        # encoding only)
+        actions.append(_add(rel, pvals, int(size), ts, stats=_file_stats(meta)))
     if is_url:
         _fs_mkdirs(spark, _url_join(location, "_delta_log"))
     else:
         os.makedirs(log_dir, exist_ok=True)
-    _atomic_write(_log_path(location, 0), actions, spark)
-    return 0
+    return _commit(spark, location, 0, ts, "CONVERT", {"numFiles": len(rels)}, actions)
 
 
 def shallow_clone(
@@ -2701,48 +2299,27 @@ def shallow_clone(
                 (parts.scheme, parts.netloc, quote(parts.path, safe="/"), "", "")
             )
         return quote(os.path.join(src_abs, rel), safe="/")
+
     ts = int(time.time() * 1000)
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src,
-                    "sourceVersion": snap.version,
-                },
-                "engineInfo": "adt-spark native delta writer",
-            }
-        },
         {"protocol": snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),  # a clone is a NEW table
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": snap.configuration or {},
-                "createdTime": ts,
-            }
-        },
+        # a clone is a NEW table: a fresh table id
+        _metadata(snap.schema, snap.partition_columns, snap.configuration or {}, ts),
     ]
     for rel, (pvals, dv) in snap.files.items():
-        add = {
-            "path": _encoded_abs(rel),
-            "partitionValues": pvals,
-            "size": snap.file_sizes.get(rel, 0),
-            "modificationTime": ts,
-            "dataChange": True,
-            **({"stats": snap.file_stats[rel]} if rel in snap.file_stats else {}),
-        }
-        if dv is not None:
-            add["deletionVector"] = dv  # inline: location-independent
-        actions.append({"add": add})
+        # an inline DV is location-independent
+        actions.append(
+            _add(
+                _encoded_abs(rel), pvals, snap.file_sizes.get(rel, 0), ts,
+                stats=snap.file_stats.get(rel), dv=dv,
+            )
+        )
     if log_dir is not None:
         os.makedirs(log_dir, exist_ok=True)
     else:
         _fs_mkdirs(spark, _url_join(dst, "_delta_log"))
-    _atomic_write(_log_path(dst, 0), actions, spark)
+    params = {"source": src, "sourceVersion": snap.version}
+    _commit(spark, dst, 0, ts, "CLONE", params, actions)
     return 0, len(snap.files)
 
 
@@ -2789,46 +2366,20 @@ def set_tblproperties(spark, location: str, props: dict[str, str]) -> int:
     _check_writable(snap, "alter")
     conf = dict(snap.configuration or {})
     conf.update({str(k): str(v) for k, v in props.items()})
-    ts = int(time.time() * 1000)
-    version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {"properties": json.dumps(props)},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
-    dv_on = str(conf.get("delta.enableDeletionVectors", "false")).lower() == "true"
     proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    if dv_on and "deletionVectors" not in set(proto.get("writerFeatures") or []):
+    upgrade = None
+    if _dv_enabled(conf) and "deletionVectors" not in set(proto.get("writerFeatures") or []):
         rf, wf = _implied_features(proto)
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(rf | {"deletionVectors"}),
-                    "writerFeatures": sorted(wf | {"deletionVectors"}),
-                }
-            }
-        )
-    actions.append(
-        {
-            "metaData": {
-                "id": snap.table_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": conf,
-                "createdTime": ts,
-            }
+        upgrade = {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": sorted(rf | {"deletionVectors"}),
+            "writerFeatures": sorted(wf | {"deletionVectors"}),
         }
+    return _alter(
+        spark, location, snap, "SET TBLPROPERTIES", {"properties": json.dumps(props)},
+        conf, upgrade,
     )
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version
 
 
 def _dv_mask_actions(
@@ -2845,32 +2396,18 @@ def _dv_mask_actions(
     for rel, positions in sorted(by_file.items()):
         pvals, old_dv = snap.files[rel]
         already = set(decode_dv(old_dv, location)) if old_dv is not None else set()
-        fresh = [p for p in positions if p not in already]
+        fresh = [int(p) for p in positions if p not in already]
         if not fresh:
             continue
         n_fresh += len(fresh)
-        merged = sorted(already | set(fresh))
+        actions.append(_remove(rel, pvals, ts))
         actions.append(
-            {
-                "remove": {
-                    "path": rel,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                    "partitionValues": pvals,
-                }
-            }
+            _add(
+                rel, pvals, snap.file_sizes.get(rel, 0), ts,
+                stats=snap.file_stats.get(rel),
+                dv=encode_inline_dv(sorted(already | set(fresh))),
+            )
         )
-        add = {
-            "path": rel,
-            "partitionValues": pvals,
-            "size": snap.file_sizes.get(rel, 0),
-            "modificationTime": ts,
-            "dataChange": True,
-            "deletionVector": encode_inline_dv(merged),
-        }
-        if st := snap.file_stats.get(rel):
-            add["stats"] = st
-        actions.append({"add": add})
     return actions, n_fresh
 
 
@@ -2883,58 +2420,18 @@ def _delete_with_dvs(
     POSITIONS per file as an inline roaring bitmap on a re-added
     ``add`` — the data files never move, so delete cost is
     proportional to the MATCHES, not to the bytes of the touched
-    files.  Existing DVs union with the new positions.
-
-    Positions come from the parquet reader's ``_metadata.row_index``
-    (the same physical row ordinal the DV spec addresses).
-    """
+    files.  Existing DVs union with the new positions."""
     from pyspark.sql import functions as F
 
-    part_cols = snap.partition_columns
-    data_fields = [f for f in snap.schema.fields if f.name not in part_cols]
-    data_schema = T.StructType(data_fields)
-    read_schema, to_logical, _to_physical = _dml_projection(snap, data_schema)
-    all_paths = _scan_abs(location, list(snap.files))
-    if not all_paths:
-        return snap.version, 0
-
-    hits = (
-        to_logical(
-            spark.read.schema(read_schema)
-            .parquet(*all_paths)
-            .withColumn("_f", F.input_file_name())
-            .withColumn("_pos", F.col("_metadata.row_index")),
-            extra=("_f", "_pos"),
-        )
-        .filter(F.expr(predicate))
-        .groupBy("_f")
-        .agg(F.sort_array(F.collect_list("_pos")).alias("_ps"))
-        .collect()
+    hits = _match_scan(
+        spark, location, snap, lambda df: df.filter(F.expr(predicate)), positions=True
     )
-    if not hits:
-        return snap.version, 0
-    by_file: dict[str, list[int]] = {
-        _rel_from_uri(r._f, snap.files): [int(p) for p in r._ps] for r in hits
-    }
-
     ts = int(time.time() * 1000)
-    version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate, "deletionVectors": True},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
-    mask_actions, n_deleted = _dv_mask_actions(location, snap, by_file, ts)
+    actions, n_deleted = _dv_mask_actions(location, snap, hits, ts)
     if n_deleted == 0:
         return snap.version, 0
-    actions.extend(mask_actions)
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version, n_deleted
+    params = {"predicate": predicate, "deletionVectors": True}
+    return _commit(spark, location, snap.version + 1, ts, "DELETE", params, actions), n_deleted
 
 
 def _update_with_dvs(
@@ -2954,7 +2451,6 @@ def _update_with_dvs(
             "DV-based UPDATE on column-mapped tables is not supported "
             "(disable delta.enableDeletionVectors or use delta-spark)"
         )
-    part_cols = snap.partition_columns
     hit = F.coalesce(F.expr(predicate), F.lit(False))
     visible = read_delta_native(spark, location)
     post = visible.filter(hit).select(
@@ -2969,45 +2465,17 @@ def _update_with_dvs(
         post = post.withColumn(name, F.expr(ge).cast(dt))
     _enforce_constraints(post, snap, "update")
 
-    # pre-update positions per file (raw scan; minus already-deleted)
-    data_fields = [f for f in snap.schema.fields if f.name not in part_cols]
-    read_schema = T.StructType(data_fields)
-    all_paths = _scan_abs(location, list(snap.files))
-    if not all_paths:
-        return snap.version, 0
-    hits = (
-        spark.read.schema(read_schema)
-        .parquet(*all_paths)
-        .withColumn("_f", F.input_file_name())
-        .withColumn("_pos", F.col("_metadata.row_index"))
-        .filter(F.expr(predicate))
-        .groupBy("_f")
-        .agg(F.sort_array(F.collect_list("_pos")).alias("_ps"))
-        .collect()
+    # pre-update positions per file (minus already-deleted)
+    hits = _match_scan(
+        spark, location, snap, lambda df: df.filter(F.expr(predicate)), positions=True
     )
-    by_file: dict[str, list[int]] = {
-        _rel_from_uri(r._f, snap.files): [int(p) for p in r._ps] for r in hits
-    }
-
     ts = int(time.time() * 1000)
-    version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate, "deletionVectors": True},
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
-    mask_actions, n_updated = _dv_mask_actions(location, snap, by_file, ts)
+    actions, n_updated = _dv_mask_actions(location, snap, hits, ts)
     if n_updated == 0:
         return snap.version, 0
-    actions.extend(mask_actions)
-    actions.extend(_stage_and_collect(post, location, part_cols))
-    _atomic_write(_log_path(location, version), actions, spark)
-    return version, n_updated
+    actions.extend(_stage(post, location, ts, snap.partition_columns))
+    params = {"predicate": predicate, "deletionVectors": True}
+    return _commit(spark, location, snap.version + 1, ts, "UPDATE", params, actions), n_updated
 
 
 def _merge_with_dvs(
@@ -3016,59 +2484,26 @@ def _merge_with_dvs(
     """MERGE via deletion vectors: matched target rows are masked
     with DVs (no rewrite) and the full source appends as new files in
     one atomic commit — merge cost ∝ matched rows + source size."""
-    from pyspark.sql import functions as F
+    from adt_spark.sources.delta_native import read_delta_native
 
     if snap.column_mapping_mode != "none":
         raise DeltaWriteError(
             "DV-based MERGE on column-mapped tables is not supported "
             "(disable delta.enableDeletionVectors or use delta-spark)"
         )
-    part_cols = snap.partition_columns
-    data_fields = [f for f in snap.schema.fields if f.name not in part_cols]
-    read_schema = T.StructType(data_fields)
     keys = source.select(*key_cols).distinct()
-    all_paths = _scan_abs(location, list(snap.files))
     n_source = source.count()
-
-    by_file: dict[str, list[int]] = {}
-    if all_paths:
-        hits = (
-            spark.read.schema(read_schema)
-            .parquet(*all_paths)
-            .withColumn("_f", F.input_file_name())
-            .withColumn("_pos", F.col("_metadata.row_index"))
-            .join(keys, key_cols)
-            .groupBy("_f")
-            .agg(F.sort_array(F.collect_list("_pos")).alias("_ps"))
-            .collect()
-        )
-        for r in hits:
-            by_file[_rel_from_uri(r._f, snap.files)] = [int(p) for p in r._ps]
-
+    hits = _match_scan(
+        spark, location, snap, lambda df: df.join(keys, key_cols), positions=True
+    )
     ts = int(time.time() * 1000)
-    version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "predicate": json.dumps(key_cols),
-                    "deletionVectors": True,
-                },
-                "engineInfo": "adt-spark native delta writer",
-            }
-        }
-    ]
-    mask_actions, n_replaced = _dv_mask_actions(location, snap, by_file, ts)
+    actions, n_replaced = _dv_mask_actions(location, snap, hits, ts)
     # inserted = source rows whose key matched no VISIBLE target row
     # (duplicate target keys would otherwise drive the count negative)
-    from adt_spark.sources.delta_native import read_delta_native
-
     n_matched_keys = keys.join(
         read_delta_native(spark, location), key_cols, "left_semi"
     ).count()
-    actions.extend(mask_actions)
-    actions.extend(_stage_and_collect(source, location, part_cols))
-    _atomic_write(_log_path(location, version), actions, spark)
+    actions.extend(_stage(source, location, ts, snap.partition_columns))
+    params = {"predicate": json.dumps(key_cols), "deletionVectors": True}
+    version = _commit(spark, location, snap.version + 1, ts, "MERGE", params, actions)
     return version, n_replaced, int(n_source - n_matched_keys)

@@ -166,6 +166,54 @@ def test_sql_where_drives_file_skipping(ctx, spark, tmp_path):
     assert sorted(r.id for r in rows_or.collect()) == [0, 1] + list(range(205, 210))
 
 
+def test_sql_pruning_reads_the_statement_model(spark, tmp_path):
+    """A clause keyword inside a string literal neither counts as a
+    second SELECT nor ends the WHERE: the statement prunes to the one
+    file holding id 105."""
+    t = str(tmp_path / "dsqlkw")
+    for lo in (0, 100, 200):
+        write_delta_native(
+            spark.range(lo, lo + 10).repartition(1).selectExpr("id", "'select' AS note"),
+            t,
+            mode="append",
+        )
+
+    from adt_spark.sources.delta_dml import rewrite_delta_url_tables
+
+    pruned_sql = rewrite_delta_url_tables(
+        spark, f"SELECT id FROM delta.`{t}` WHERE id = 105 AND note = 'select'"
+    )
+    view = pruned_sql.split("FROM ")[1].split()[0]
+    assert len(spark.table(view).inputFiles()) == 1
+    assert [r.id for r in spark.sql(pruned_sql).collect()] == [105]
+
+
+@pytest.mark.parametrize(
+    "sql, terms",
+    [
+        (
+            "SELECT * FROM delta.`p` WHERE id = 5 AND note = 'select'",
+            [("id", "=", 5), ("note", "=", "select")],
+        ),
+        (
+            "SELECT * FROM delta.`p` WHERE id >= 1.5 -- order by x\nLIMIT 3;",
+            [("id", ">=", 1.5)],
+        ),
+        ("SELECT * FROM delta.`p` WHERE note = 'a' ORDER BY id", [("note", "=", "a")]),
+        ("SELECT * FROM (SELECT id + 1 AS id FROM delta.`p`) WHERE id = 5", None),
+        ("SELECT * FROM delta.`p` WHERE id IN (SELECT 1)", None),
+        ("WITH c AS (SELECT * FROM delta.`p`) SELECT * FROM c WHERE id = 5", None),
+        ("SELECT id FROM delta.`p` WHERE id = 5 UNION SELECT 1", None),
+        ("SELECT * FROM delta.`p` WHERE id = 5 OR id = 6", None),
+        ("SELECT * FROM delta.`p`", None),
+    ],
+)
+def test_pruning_terms(sql, terms):
+    from adt_spark.sources.delta_dml import _conjunctive_terms
+
+    assert _conjunctive_terms(sql) == terms
+
+
 def test_sql_table_changes_tvf(ctx, spark, tmp_path):
     """table_changes(delta.`path`, start[, end]) in SQL binds the
     native Change Data Feed (delta-spark's TVF spelling)."""

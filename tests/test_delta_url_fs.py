@@ -122,8 +122,8 @@ def test_url_convert_clone_checkpoint(spark, viewfs, tmp_path):
 
 def test_url_cow_dml_roundtrip(spark, viewfs, tmp_path):
     """Copy-on-write DELETE/UPDATE/MERGE on a URL table (no DV
-    property): rewrites stage remotely through _stage_into_table's
-    Hadoop-FS branch and the commit is conditional-put."""
+    property): rewrites stage remotely through the staging loop's
+    Hadoop-FS seam and the commit is conditional-put."""
     import adt_spark.sources.delta_native_write as w
 
     loc = f"{viewfs}/t9"

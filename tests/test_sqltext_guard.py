@@ -212,10 +212,7 @@ _CLAUSE_GRAMMAR = (
 #: modules allowed to spell clause keywords in a regex, with the reason
 _CLAUSE_ALLOWED = {
     "dialect/overspec.py": "an OVER body's own PARTITION BY / ORDER BY",
-    "sources/delta_dml.py": (
-        "the DELETE FROM grammar, and the Delta URL pruning's WHERE scan "
-        "(not yet on the statement model)"
-    ),
+    "sources/delta_dml.py": "the DELETE FROM grammar",
 }
 
 
