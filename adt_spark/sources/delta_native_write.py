@@ -1406,11 +1406,19 @@ def _rewrite(spark, location: str, snap, touched, ts: int, transform) -> list[di
     ``touched`` files, grouped by partition values (keeps pvals
     exact), each group's logical rows passed through
     ``transform(rows, pvals)`` and staged back under physical names.
+    Each group's partition values are keyed in the table's partition
+    column order, which names the directories as an append does.
     Returns the touched files' removes followed by the adds."""
     read_schema, to_logical, to_physical = _dml_projection(snap)
+    rank = {c: i for i, c in enumerate(_physical_partition_columns(snap))}
+
+    def _in_table_order(kv):
+        return rank.get(kv[0], len(rank)), kv[0]
+
     groups: dict[tuple, list[str]] = {}
     for rel in touched:
-        groups.setdefault(tuple(sorted(snap.files[rel][0].items())), []).append(rel)
+        key = tuple(sorted(snap.files[rel][0].items(), key=_in_table_order))
+        groups.setdefault(key, []).append(rel)
     removes: list[dict] = []
     adds: list[dict] = []
     for key, rels in groups.items():

@@ -1886,3 +1886,43 @@ def test_golden_nested_dml_roundtrip(spark, tmp_path):
     assert {inner.field(i).name for i in range(inner.num_fields)} == {
         _GP["author"], _GP["score"]
     }
+
+
+def test_dml_rewrites_keep_the_partition_directory_order(spark, tmp_path):
+    """Copy-on-write rewrites name partition directories in the
+    table's partition-column order, as appends do: a rewrite under
+    ``day=…/region=…`` next to ``region=…/day=…`` makes the table
+    directory unreadable as hive-partitioned parquet
+    (CONFLICTING_PARTITION_COLUMN_NAMES)."""
+    from adt_spark.sources.delta_native_write import (
+        delete_where,
+        merge_upsert,
+        update_where,
+    )
+
+    loc = str(tmp_path / "porder")
+    schema = "id long, x int, region string, day string"
+    write_delta_native(
+        spark.createDataFrame(
+            [(1, 10, "r1", "d1"), (2, 20, "r1", "d2"), (3, 30, "r2", "d1"),
+             (4, 40, "r1", "d2"), (5, 50, "r2", "d1")],
+            schema,
+        ).coalesce(1),
+        loc,
+        partition_by=["region", "day"],
+    )
+    delete_where(spark, loc, "id = 2")
+    update_where(spark, loc, "x >= 30", {"x": "x + 1"})
+    merge_upsert(spark, loc, spark.createDataFrame([(1, 11, "r1", "d1")], schema), ["id"])
+    snap = replay_snapshot(spark, loc)
+    assert snap.version == 3
+    assert all(p.startswith("region=") and "/day=" in p for p in snap.files), sorted(
+        snap.files
+    )
+    # the directory (live and removed files alike) reads as one
+    # hive-partitioned parquet dataset
+    assert spark.read.parquet(loc).columns == ["id", "x", "region", "day"]
+    got = read_delta_native(spark, loc).select("id", "x", "region", "day")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 11, "r1", "d1"), (3, 31, "r2", "d1"), (4, 41, "r1", "d2"), (5, 51, "r2", "d1"),
+    ]
