@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -8,6 +9,20 @@ TESTDATA = os.environ.get("ADT_TESTDATA_ROOT", "/root/testdata")
 #: sf0.001 keeps the suite fast; set ADT_TEST_SF=sf0.01 for the
 #: driver-equivalent scale before committing.
 SF_DIR = os.path.join(TESTDATA, os.environ.get("ADT_TEST_SF", "sf0.001"))
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    """Collects the ids of the Spark jobs submitted inside the block."""
+    sc = spark.sparkContext
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

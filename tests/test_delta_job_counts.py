@@ -10,9 +10,9 @@ it shows up in a benchmark.
 
 from __future__ import annotations
 
-import contextlib
-
 from adt_spark.sources import delta_native_write as w
+
+from conftest import _job_group
 
 #: jobs per operation, recorded from the writer before its staging
 #: loop, match scan and commit builder were shared
@@ -25,20 +25,6 @@ _PINNED = {
 }
 
 _SCHEMA = "id long, x int, region string, day string"
-
-
-@contextlib.contextmanager
-def _job_group(spark, group):
-    """Collects the ids of the Spark jobs submitted inside the block."""
-    sc = spark.sparkContext
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(spark, rows):

@@ -11,7 +11,6 @@ and (c) that a path with no file fails as Spark's reader fails.
 
 from __future__ import annotations
 
-import contextlib
 import glob
 import os
 
@@ -22,27 +21,13 @@ from pyspark.sql import types as T
 
 from adt_spark.context import SF_TABLES, read_parquet, register_sf_tables
 
-from conftest import TESTDATA
+from conftest import TESTDATA, _job_group
 
 _TESTDATA_FILES = sorted(
     f
     for sf in ("sf0.001", "sf0.01")
     for f in glob.glob(os.path.join(TESTDATA, sf, "*.parquet"))
 )
-
-
-@contextlib.contextmanager
-def _job_group(spark, group):
-    """Collects the ids of the Spark jobs submitted inside the block."""
-    sc = spark.sparkContext
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _same_schema(spark, *paths):
